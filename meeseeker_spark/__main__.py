@@ -4,7 +4,14 @@ local keyed store, hermetic (fixture or file-backed sources, parquet
 sinks). ``sync`` wraps the streaming pipeline with the reference's
 crash-restart backoff loop (bin/meeseeker:25-33 → supervision.py).
 
+Every store ``sync`` and ``schedule`` write (OUT/ops, its ``_meta`` HWM
+sibling, OUT/channels, OUT/schedules) is a manifest store
+(manifest.ManifestStore); ``compact`` and ``expire --gc`` fold them in
+place.
+
     python -m meeseeker_spark sync --blocks DIR [--vops DIR] --out DIR
+    python -m meeseeker_spark compact --ops DIR [--schedules DIR]
+    python -m meeseeker_spark schedule --schedules DIR --out DIR
     python -m meeseeker_spark find block 3044538 --store DIR
     python -m meeseeker_spark find trx <id40> --store DIR
     python -m meeseeker_spark scan 'hive:*:vote' --store DIR
@@ -24,6 +31,20 @@ import sys
 def _spark():
     from .session import get_spark
     return get_spark(app_name="meeseeker-cli")
+
+
+def _fold_in_place(spark, path: str | None, sort_cols: tuple) -> int:
+    """Compact a manifest store in place, then gc with one version of
+    grace for readers of the superseded manifest (the leftover version
+    goes on the next pass; without gc N cycles kept ~N full copies).
+    Returns files folded; 0 for a path with no committed manifest."""
+    from .manifest import ManifestStore, is_manifest_store
+    if not path or not is_manifest_store(path):
+        return 0
+    ms = ManifestStore(spark, path)
+    n = ms.compact(sort_cols=sort_cols)
+    ms.gc(keep_versions=2)
+    return n
 
 
 def _print_rows(df, limit: int = 100) -> int:
@@ -76,51 +97,16 @@ def main(argv: list[str] | None = None) -> int:
                     help="blocks behind head considered reversible in "
                          "--mode irreversible (default: one 21-witness "
                          "round)")
-    ps.add_argument("--store-impl", choices=("dirs", "manifest"),
-                    default="manifest",
-                    help="sink layout: manifest-committed store (default; "
-                         "atomic commits, batch-id idempotence, file-level "
-                         "TTL) or legacy batch_id=N dirs")
 
     pm = sub.add_parser("compact",
-                        help="fold micro-batch dirs into the OpsStore layout")
+                        help="fold a sink's per-trigger manifest files "
+                             "in place (ops, _meta HWM, channels)")
     pm.add_argument("--ops", required=True)
-    pm.add_argument("--store", required=True)
     pm.add_argument("--schedules",
-                    help="also fold the witness-schedule publish log's "
-                         "per-trigger dirs (publish-once key dedup)")
+                    help="also fold the witness-schedule publish log")
     pm.add_argument("--channels",
                     help="channels store of the same sink (default: the "
-                         "'channels' sibling of --ops when present); "
-                         "dirs layout folds its batch dirs into "
-                         "<channels>_store, manifest layout compacts in "
-                         "place — without this the channel sink is the "
-                         "one per-trigger surface compact never bounds")
-    pm.add_argument("--skip-channels", action="store_true",
-                    help="leave the channels sink untouched (dir-layout "
-                         "consumers reading the channels dir directly "
-                         "would otherwise need channel_events_view with "
-                         "the <channels>_store path after the fold)")
-
-    pg = sub.add_parser(
-        "migrate",
-        help="rewrite a legacy batch_id=N dir sink into manifest stores "
-             "in place — the ops store, its <ops>_meta HWM sibling, and "
-             "the channels store (recorded batch ids keep checkpointed "
-             "replays idempotent)")
-    pg.add_argument("--ops", required=True)
-    pg.add_argument("--channels",
-                    help="channels store of the same sink (default: the "
                          "'channels' sibling of --ops when present)")
-    pg.add_argument("--store",
-                    help="separate compacted ops store a prior `compact` "
-                         "produced; its rows are absorbed into the "
-                         "migrated manifest and the dir removed (a "
-                         "manifest reader takes no store_path, so "
-                         "leaving it behind strands the compacted bulk)")
-    pg.add_argument("--channels-store",
-                    help="separate compacted channels store to absorb, "
-                         "same contract as --store")
 
     pw = sub.add_parser("schedule",
                         help="witness-schedule publisher (publish-once)")
@@ -168,7 +154,8 @@ def main(argv: list[str] | None = None) -> int:
     pe = sub.add_parser("expire",
                         help="TTL retention delete (expire_keys analog); "
                              "routes by store layout: manifest commit swap "
-                             "or partition-preserving rename protocol")
+                             "or, for a chain=-partitioned store, the "
+                             "partition-preserving rename protocol")
     pe.add_argument("--store", required=True)
     pe.add_argument("--ttl", type=int, default=None,
                     help="seconds (default 86400; -1 = never expire)")
@@ -380,7 +367,7 @@ def main(argv: list[str] | None = None) -> int:
                 q = P.start_engine_ingest(
                     stream,
                     f"{a.out}/ops", f"{a.out}/channels", f"{a.out}/ckpt",
-                    chain=chain, store_impl=a.store_impl)
+                    chain=chain)
             else:
                 start_at = None
                 if a.at_block is not None:
@@ -406,8 +393,7 @@ def main(argv: list[str] | None = None) -> int:
                     ops, f"{a.out}/ops", f"{a.out}/channels",
                     f"{a.out}/ckpt", mode=a.mode,
                     lib_lag=(P.REVERSIBLE_LAG_BLOCKS if a.lib_lag is None
-                             else a.lib_lag),
-                    store_impl=a.store_impl)
+                             else a.lib_lag))
             q.awaitTermination()
             return P.last_block_num(spark, f"{a.out}/ops")
 
@@ -416,133 +402,58 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if a.cmd == "compact":
-        from .manifest import is_manifest_store
         from .streaming import pipeline as P
 
         spark = _spark()
-        n_sched = (P.compact_schedule_log(spark, a.schedules)
-                   if a.schedules else 0)
-        sched_note = (f"; folded {n_sched} schedule publish dirs"
-                      if n_sched else "")
-
-        # the channel sink was the one per-trigger surface compact never
-        # bounded (r15 durability review): compact_channel_store existed
-        # but had NO CLI caller, and the manifest-layout channels store
-        # had no compaction/gc at all — per-trigger files and the
-        # recorded batch-id list grew with stream age on both layouts
-        channels = a.channels
-        if channels is None and not a.skip_channels:
-            sib = os.path.join(os.path.dirname(a.ops.rstrip("/")),
-                               "channels")
-            channels = sib if os.path.isdir(sib) else None
-        chan_note = ""
-        if channels and not a.skip_channels:
-            if is_manifest_store(channels):
-                from .manifest import ManifestStore
-                n_chan = ManifestStore(spark, channels).compact(
-                    sort_cols=("channel", "block_num"))
-                ManifestStore(spark, channels).gc(keep_versions=2)
-                chan_note = (f"; folded {n_chan} channel manifest "
-                             "files in place" if n_chan else "")
-            else:
-                chan_store = channels.rstrip("/") + "_store"
-                n_chan = P.compact_channel_store(spark, channels,
-                                                 chan_store)
-                chan_note = (f"; folded {n_chan} channel batch dirs "
-                             f"into {chan_store} (read them back with "
-                             "channel_events_view(..., store_path="
-                             f"{chan_store!r}))" if n_chan else "")
-
-        if is_manifest_store(a.ops):
-            # manifest layout compacts in place (one commit folding the
-            # accumulated per-batch files); --store is a dirs-layout
-            # concept and must not silently produce nothing
-            from .manifest import ManifestStore
-            ms_ops = ManifestStore(spark, a.ops)
-            n = ms_ops.compact(sort_cols=("block_num",))
-            # gc with one version of grace (r15 self-review: compact
-            # rewrote the full ops table each cycle but never collected
-            # the superseded files — N cycles retained ~N full copies)
-            ms_ops.gc(keep_versions=2)
-            n_meta = P.compact_meta(spark, a.ops)
-            print(f"compacted {n} manifest files in place "
-                  f"(--store ignored: manifest stores compact in place)"
-                  + (f"; folded {n_meta} _meta HWM files" if n_meta
-                     else "") + sched_note + chan_note)
-            return 0
-        n = P.compact_stream_store(spark, a.ops, a.store)
-        # the _meta HWM sibling accumulates one row per trigger (the
-        # reference overwrites ONE key); fold it alongside (r14)
-        n_meta = P.compact_meta(spark, a.ops)
-        print(f"compacted {n} batch dirs"
-              + (f"; folded {n_meta} _meta HWM dirs" if n_meta else "")
-              + sched_note + chan_note)
-        return 0
-
-    if a.cmd == "migrate":
-        from .manifest import migrate_sink_to_manifest
-
         channels = a.channels
         if channels is None:
             sib = os.path.join(os.path.dirname(a.ops.rstrip("/")),
-                                "channels")
+                               "channels")
             channels = sib if os.path.isdir(sib) else None
-        channels_store = a.channels_store
-        if channels_store is None and channels:
-            # compact's own convention (r15 self-review: compact folds
-            # channel batch dirs into this sibling BY DEFAULT, so a
-            # compacted-then-migrated sink silently stranded its entire
-            # channel history unless the operator re-derived the path)
-            sib = channels.rstrip("/") + "_store"
-            channels_store = sib if os.path.isdir(sib) else None
-        counts = migrate_sink_to_manifest(
-            _spark(), a.ops, channels, store_path=a.store,
-            channels_store_path=channels_store)
-        print("migrated " + ", ".join(
-            f"{k}={v}" for k, v in counts.items()))
+        n = _fold_in_place(spark, a.ops, ("block_num",))
+        # the _meta HWM sibling accumulates one row per trigger (the
+        # reference overwrites ONE key); fold it alongside (r14)
+        n_meta = P.compact_meta(spark, a.ops)
+        n_chan = _fold_in_place(spark, channels, ("channel", "block_num"))
+        n_sched = _fold_in_place(spark, a.schedules,
+                                 ("next_shuffle_block_num",))
+        print(f"compacted {n} manifest files in place"
+              + (f"; folded {n_meta} _meta HWM files" if n_meta else "")
+              + (f"; folded {n_chan} channel manifest files in place"
+                 if n_chan else "")
+              + (f"; folded {n_sched} schedule publish files"
+                 if n_sched else ""))
         return 0
 
     if a.cmd == "expire":
-        from .manifest import ManifestStore, is_manifest_store
         from .retention import expire as _expire
         from .schemas import DEFAULT_TTL_S
 
         ttl = DEFAULT_TTL_S if a.ttl is None else a.ttl
         spark = _spark()
-        # retention.expire dispatches on layout itself; only the
-        # manifest-specific --gc extras need the probe here
+        # retention.expire dispatches on layout itself; --gc is a
+        # manifest-only extra (a no-op on a chain=-partitioned store)
         n = _expire(spark, a.store, ttl_s=ttl)
-        if a.gc and is_manifest_store(a.store):
-            ms = ManifestStore(spark, a.store)
-            ms.compact(sort_cols=("block_num",))
-            # one version of grace for concurrent readers (the same
-            # rule the maintenance folds apply); the leftover version
-            # is collected by the next --gc pass
-            ms.gc(keep_versions=2)
+        if a.gc:
+            _fold_in_place(spark, a.store, ("block_num",))
         print(f"expired {n} rows")
         return 0
 
     if a.cmd == "schedule":
+        from .manifest import ManifestStore, is_manifest_store
         from .streaming import pipeline as P
 
         spark = _spark()
+        sched_dir = f"{a.out}/schedules"
         q = P.start_schedule_publisher(
             P.read_schedule_stream(spark, a.schedules),
-            f"{a.out}/schedules", f"{a.out}/ckpt")
+            sched_dir, f"{a.out}/ckpt")
         q.awaitTermination()
-        sched_dir = f"{a.out}/schedules"
-        batches = ([d for d in os.listdir(sched_dir)
-                    if d.startswith("batch_id=")]
-                   if os.path.isdir(sched_dir) else [])
-        if not batches:
-            # a cadence invocation before the first schedule arrives
-            # commits zero batches — the glob read crashed instead of
-            # reporting the (normal) empty run (r15 review; the screen
-            # command already guards its own first-run case)
-            print("published 0 schedules")
-            return 0
-        n = (spark.read.option("basePath", sched_dir)
-             .parquet(*[f"{sched_dir}/{d}" for d in batches]).count())
+        # a cadence invocation before the first schedule arrives commits
+        # nothing — report the (normal) empty run, not a read error
+        # (r15 review)
+        n = (ManifestStore(spark, sched_dir).df().count()
+             if is_manifest_store(sched_dir) else 0)
         print(f"published {n} schedules")
         return 0
 
@@ -702,17 +613,16 @@ def main(argv: list[str] | None = None) -> int:
         # shuffled array (or a different schedule-object id for the
         # same boundary) would otherwise grade as TWO rows for one
         # round — making "skipped = rounds − graded rows" go negative.
-        # The survivor is DETERMINISTIC (r15 review): on a publish-log
-        # capture (batch_id=N dirs) the batch id is read and the newest
-        # batch wins — the exact rule ScheduleStore's reader and
-        # compact_schedule_log apply, so a stream verifies identically
-        # through a raw capture and the compacted publish log even when
-        # a replay carried a different payload; a raw capture falls
-        # back to the payload total order (still deterministic).
-        from .query import read_schedule_batches
-        scheds = read_schedule_batches(spark, a.schedules,
-                                       WITNESS_SCHEDULES)
-        if scheds is None:   # a raw (non-publish-log) capture
+        # The survivor is DETERMINISTIC (r15 review): the publish log
+        # (a manifest store) carries each row's batch id and the newest
+        # batch wins — the exact rule ScheduleStore's reader applies, so
+        # the log verifies identically before and after compaction even
+        # when a republish carried a different payload; a raw capture
+        # falls back to the payload total order (still deterministic).
+        from .manifest import ManifestStore, is_manifest_store
+        if is_manifest_store(a.schedules):
+            scheds = ManifestStore(spark, a.schedules).df()
+        else:   # a raw (non-publish-log) capture
             scheds = spark.read.schema(WITNESS_SCHEDULES) \
                 .parquet(a.schedules)
         scheds = newest_by_key(scheds, "next_shuffle_block_num")

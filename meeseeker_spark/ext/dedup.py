@@ -883,8 +883,8 @@ def incremental_embedding_dups(new_emb: DataFrame, corpus_emb: DataFrame,
                                id_col: str = "vec_id",
                                vec_col: str = "embedding",
                                max_bucket: int | None = 10_000,
-                               corpus_buckets: DataFrame | None = None,
-                               arrow: bool = False) -> DataFrame:
+                               corpus_buckets: DataFrame | None = None
+                               ) -> DataFrame:
     """Batch-vs-corpus embedding near-dup screen: which NEW vectors are
     near-duplicates (cosine ≥ threshold) of something already ingested —
     the ANN twin of ``incremental_near_dups``, for pipelines that dedup
@@ -968,27 +968,6 @@ def incremental_embedding_dups(new_emb: DataFrame, corpus_emb: DataFrame,
     vb = ec.select(F.col(id_col).alias("corpus_id"),
                    F.col("_nv").alias("_vb"))
     joined = cand.join(va, "new_id").join(vb, "corpus_id")
-    if arrow:
-        # Arrow verify dot (r16, VERDICT r15 item 5) — built, proven
-        # BIT-identical (exact_pair_dot's cumsum reproduces the HOF
-        # fold's left-to-right IEEE adds; round + threshold stay in
-        # Spark), and REJECTED as the default on measurement: once the
-        # signature spread landed, interleaved A/Bs read arrow
-        # 2.89/2.25/2.39/2.44 vs HOF 2.15/1.99/2.31/2.10 s at sf0.1
-        # (and a wash at sf1; the lsh headline lost 1.96-2.63 vs
-        # 1.60-1.69) — shipping the two vectors per CANDIDATE PAIR
-        # across the Python boundary costs more than vectorizing the
-        # dot saves at every measured scale.  Kept behind the flag with
-        # its bit-identity pins as the documented boundary-audited
-        # alternative (guide §1.1).
-        from .similarity import exact_pair_dot
-        scored = exact_pair_dot(
-            joined.select("new_id", "corpus_id", "_va", "_vb"),
-            "_va", "_vb")
-        return (scored.select(
-            "new_id", "corpus_id",
-            F.round(F.col("_dot"), 4).alias("sim"))
-            .where(F.col("sim") >= threshold))
     return (
         joined
         .select("new_id", "corpus_id",

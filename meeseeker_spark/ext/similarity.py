@@ -134,89 +134,6 @@ def normalized(emb: DataFrame, id_col: str = "vec_id",
     return e.repartition(n_parts, F.col(id_col))
 
 
-def exact_pair_dot(df: DataFrame, a_col: str, b_col: str,
-                   out_col: str = "_dot") -> DataFrame:
-    """Arrow twin of ``dot()`` over already-joined vector pairs:
-    replaces the interpreted ``aggregate(zip_with(...))`` per-pair dot
-    with ONE mapInArrow crossing whose summation is BIT-IDENTICAL to
-    the HOF's left-to-right fold — ``np.cumsum`` produces every partial
-    sum sequentially (acc = (…(0+x₀)+x₁…)+xₙ, IEEE adds in the same
-    order), unlike ``np.sum``/``@`` whose pairwise/BLAS summation can
-    flip 4-dp rounding vs the DuckDB oracle (the r6 lesson that kept
-    the HOF in place).  Bit-identity is pinned by
-    test_exact_pair_dot_bit_identity; callers keep F.round + threshold
-    in Spark so ALL rounding semantics stay JVM-side.
-
-    Returns df's other columns + ``out_col`` (double).  Exactness
-    escape hatches mirror the JVM semantics: a NULL vector, a NULL
-    element, or length-mismatched pair yields NULL (zip_with pads with
-    null → null product → null sum).  Guide §4.1/§4.2: only the columns
-    crossing are shipped (callers select first), and the kernel is one
-    vectorized elementwise-multiply + cumsum per batch."""
-    import numpy as np
-    import pyarrow as pa
-
-    keep = [c for c in df.columns if c not in (a_col, b_col)]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields if f.name in keep
-    ) + f", {out_col} double"
-
-    def _dots(it):
-        for rb in it:
-            ia = rb.schema.get_field_index(a_col)
-            ib = rb.schema.get_field_index(b_col)
-            ca, cb = rb.column(ia), rb.column(ib)
-            n = rb.num_rows
-            oa = ca.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            ob = cb.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            la, lb = np.diff(oa), np.diff(ob)
-            clean = (ca.null_count == 0 and cb.null_count == 0
-                     and ca.values.null_count == 0
-                     and cb.values.null_count == 0)
-            uniform = (n > 0 and clean
-                       and (la == la[0]).all() and (lb == la[0]).all())
-            if uniform and la[0] > 0:
-                d = int(la[0])
-                va = ca.values.to_numpy(zero_copy_only=False)
-                vb = cb.values.to_numpy(zero_copy_only=False)
-                A = va[oa[0]:oa[-1]].reshape(n, d)
-                B = vb[ob[0]:ob[-1]].reshape(n, d)
-                P = A * B
-                # replicate the fold's 0.0 seed (r16 review): the JVM
-                # aggregate computes 0.0 + p0, which turns a -0.0 first
-                # product into +0.0; bare cumsum would keep -0.0 and
-                # break the pinned bit-identity on all-negative-zero
-                # rows.  p0 + 0.0 == 0.0 + p0 for every double incl.
-                # signed zeros, so seeding in place is exact.
-                P[:, 0] += 0.0
-                dots = np.cumsum(P, axis=1)[:, -1]
-                dot_arr = pa.array(dots, type=pa.float64())
-            else:
-                # ragged / null-bearing batch: exact per-row fold with
-                # the JVM's null semantics (any null / length mismatch
-                # → NULL; zip_with pads the shorter side with null)
-                rows_a = ca.to_pylist()
-                rows_b = cb.to_pylist()
-                out: list[float | None] = []
-                for xa, xb in zip(rows_a, rows_b):
-                    if (xa is None or xb is None or len(xa) != len(xb)
-                            or any(x is None for x in xa)
-                            or any(x is None for x in xb)):
-                        out.append(None)
-                        continue
-                    acc = 0.0
-                    for x, y in zip(xa, xb):
-                        acc = acc + x * y
-                    out.append(acc)
-                dot_arr = pa.array(out, type=pa.float64())
-            cols = [rb.column(rb.schema.get_field_index(c)) for c in keep]
-            yield pa.RecordBatch.from_arrays(
-                cols + [dot_arr], names=keep + [out_col])
-
-    return df.mapInArrow(_dots, out_schema)
-
-
 def cosine_topk(emb: DataFrame, query_ids: list[int] | None = None,
                 k: int = 5, id_col: str = "vec_id",
                 vec_col: str = "embedding",

@@ -1,13 +1,12 @@
 """Manifest-committed parquet store — the Delta-equivalent commit protocol
 (VERDICT r3 item 7; SURVEY §4 O-3 upgrade path).
 
-The hermetic container has no Delta/Iceberg, so the ops sink's idempotence
-is dir-rename-by-batch_id and TTL retention is a partition rename dance
-(retention.py).  Both protocols work and are crash-tested, but each
-hand-rolls its own recovery.  This module subsumes them with the one
-primitive a transactional table actually needs: **readers only see files
-listed in the newest committed manifest, and a manifest commit is a single
-atomic rename**.
+Without Delta/Iceberg, this module is the ONE commit protocol every
+per-trigger streaming sink writes through (ops, channels, ``_meta``, the
+witness-schedule publish log, the block-channel publisher).  It rests on
+the one primitive a transactional table actually needs: **readers only
+see files listed in the newest committed manifest, and a manifest commit
+is a single atomic rename**.
 
 Layout:
 
@@ -22,14 +21,14 @@ Protocol:
   no reader ever sees (Spark is never pointed at ``data/`` itself); re-run
   and ``gc()`` clean it.  No ``.old`` roll-back/forward cases remain — the
   store is ALWAYS in exactly the state of its newest manifest.
-- IDEMPOTENT APPEND: ``append(df, batch_id=…)`` records the batch id in
-  the manifest; a retried foreachBatch sees its id committed and becomes a
-  no-op (exactly-once without dir overwrite semantics).
+- IDEMPOTENT APPEND: ``append(df, batch_id)`` records the batch id in the
+  manifest; a retried foreachBatch sees its id committed and becomes a
+  no-op (exactly-once without overwrite semantics).
 - TTL EXPIRE: rewrite ONLY the files that contain expired rows (file set
   found via ``input_file_name``); every untouched file is re-referenced,
   not rewritten — byte-identical, and cheaper than the partition-level
-  rewrite in retention.py (a partition with one hot file rewrites one
-  file, not the partition).
+  rewrite retention.py applies to plain ``chain=``-partitioned stores (a
+  partition with one hot file rewrites one file, not the partition).
 - GC: delete data files not referenced by the kept manifest tail.  Safe at
   any time; crashes between commit and gc only leave garbage, never lose
   referenced data.
@@ -59,16 +58,15 @@ _DATA_DIR = "data"
 
 
 def is_manifest_store(path: str) -> bool:
-    """THE layout probe — every reader/writer that dispatches on
-    dirs-vs-manifest uses this, so the marker dir name has one home.
+    """THE layout probe — every reader that dispatches between a manifest
+    store and a plain ``chain=``-partitioned store (OpsStore.write's
+    layout) uses this, so the marker dir name has one home.
 
     A path counts as a manifest store only once a version is COMMITTED
     (a ``v*.json`` exists), not when the marker dir appears (ADVICE r6):
     ManifestStore() eagerly creates ``_manifest/`` at construction, so a
-    marker-dir probe would flip the layout for every reader during
-    migration staging — and permanently after a pre-commit crash —
-    turning the documented "readers see only the untouched batch dirs
-    until the commit rename" window into a mixed-layout refusal."""
+    marker-dir probe would report a store whose first commit crashed
+    (or has not landed yet) as readable."""
     mdir = os.path.join(path, _MANIFEST_DIR)
     if not os.path.isdir(mdir):
         return False
@@ -267,15 +265,15 @@ class ManifestStore:
     def compact(self, sort_cols: tuple[str, ...] = (),
                 target_file_bytes: int = 128 * 1024 * 1024) -> int:
         """Fold the accumulated per-commit small files into one fresh
-        commit (the manifest answer to compact_stream_store — OPTIMIZE in
-        Delta terms).  Output file count is sized from the store's actual
-        bytes (``target_file_bytes`` per file, Delta's default bin size),
-        so a thousand trigger-sized files fold to a handful.  Optional
-        ``sort_cols`` cluster rows within the rewritten files so min/max
-        row-group pruning stays sharp (columns absent from the schema are
-        skipped).  Returns the number of files folded (0 = single file
-        already).  Readers are never disturbed: the swap is one manifest
-        commit, and the old files remain until ``gc()``.
+        commit (OPTIMIZE in Delta terms).  Output file count is sized
+        from the store's actual bytes (``target_file_bytes`` per file,
+        Delta's default bin size), so a thousand trigger-sized files
+        fold to a handful.  Optional ``sort_cols`` cluster rows within
+        the rewritten files so min/max row-group pruning stays sharp
+        (columns absent from the schema are skipped).  Returns the
+        number of files folded (0 = single file already).  Readers are
+        never disturbed: the swap is one manifest commit, and the old
+        files remain until ``gc()``.
 
         Compaction also PRUNES the recorded batch ids to the replayable
         tail (r14 review): the list otherwise grows one int per trigger
@@ -309,15 +307,14 @@ class ManifestStore:
 
     def sink(self):
         """foreachBatch function writing each micro-batch as one manifest
-        commit — the replacement for the ``batch_id=N`` dir-overwrite
-        idempotence scheme: a replayed batch (crash after commit, before
-        checkpoint) short-circuits on its recorded batch id, so admission
-        is exactly-once with no overwrite semantics and no recovery scan.
+        commit: a replayed batch (crash after commit, before checkpoint)
+        short-circuits on its recorded batch id, so admission is
+        exactly-once with no overwrite semantics and no recovery scan.
 
             stream.writeStream.foreachBatch(store.sink())...
         """
         def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            self.append(batch_df, batch_id=batch_id)
+            self.append(batch_df, batch_id)
         return _sink
 
     # -- maintenance --------------------------------------------------------
@@ -359,188 +356,3 @@ class ManifestStore:
                 os.unlink(os.path.join(self._mdir(), f))
         return deleted
 
-
-def migrate_dirs_to_manifest(spark: SparkSession, path: str) -> int:
-    """One-shot migration of a ``batch_id=N`` dir-layout sink into a
-    ManifestStore AT THE SAME PATH — the operational bridge now that the
-    streaming sinks default to the manifest layout (a pre-existing dirs
-    store cannot just keep ingesting: the writers refuse mixed layouts).
-
-    Rewrites the union of the batch dirs into one manifest commit,
-    recording every migrated batch id — so a checkpointed stream resumed
-    against the migrated store with ``store_impl="manifest"`` replays its
-    in-flight batch into a recorded-id short-circuit instead of a double
-    append (the dir scheme's overwrite idempotence carries over).
-    Returns the number of batch dirs absorbed.
-
-    Crash-safety: the manifest commit is the atomic cut-over; before it,
-    readers see only the untouched batch dirs.  Between the commit and
-    the batch-dir cleanup the path holds BOTH layouts, which every
-    reader/writer refuses LOUDLY (no silent double-count) — re-running
-    this function finishes the cleanup, but only after verifying BY
-    CONTENT that every leftover dir's rows are already in the committed
-    table (``exceptAll`` per leftover union): a batch id alone proves
-    nothing, because a dirs-writer resumed on a FRESH checkpoint restarts
-    ids at 0 and could collide with committed ids while carrying new
-    rows.  Rows not covered → refuse loudly, never delete.
-    Single-writer assumption, like every maintenance job here.
-    """
-    batches = sorted(d for d in os.listdir(path)
-                     if d.startswith("batch_id=")) if os.path.isdir(path) \
-        else []
-    has_manifest = is_manifest_store(path)
-    if not batches:
-        if has_manifest:
-            return 0                       # already migrated / clean store
-        raise FileNotFoundError(f"{path} has no batch_id=N dirs to migrate")
-    ids = [int(d.split("=", 1)[1]) for d in batches]
-    store = ManifestStore(spark, path)
-    # Does the NATIVE manifest writer for this store carry batch_id as a
-    # physical data column?  The sink's _meta HWM rows do (pipeline
-    # withColumn's it before the write — compact_meta's manifest fold
-    # aggregates max(batch_id) over it), so the migrated files must too:
-    # dropping the partition column here left a migrated _meta store
-    # whose first `compact` crashed on an unresolvable batch_id (r15
-    # durability review).  The dir files themselves answer the question
-    # — a dirs writer writes the df as-is, so a physical batch_id in
-    # the files means the native manifest rows would carry one.  The
-    # basePath read SHADOWS the physical column with the dir-derived
-    # partition value (same value by construction), so cast it back to
-    # the physical type instead of dropping it.
-    phys = spark.read.parquet(os.path.join(path, batches[0])).schema
-    keep_batch = "batch_id" in phys.fieldNames()
-
-    def _shape(df):
-        if keep_batch:
-            return df.withColumn(
-                "batch_id",
-                F.col("batch_id").cast(phys["batch_id"].dataType))
-        return df.drop("batch_id")
-
-    if has_manifest and store.current_version():
-        # crash window: commit landed, cleanup didn't.  Verify by
-        # CONTENT before deleting — a batch id proves nothing in
-        # EITHER direction: a colliding id can come from a fresh-
-        # checkpoint dirs-writer carrying new rows (silent data loss
-        # if trusted), and an ABSENT id can be the crash leftover
-        # itself after compaction pruned the recorded ids to the
-        # replayable tail (ADVICE r14: the id-membership gate turned
-        # the documented crash recovery into a false 're-ingest'
-        # refusal).  Every leftover dir takes the same exceptAll
-        # check: fully covered → delete; any uncovered row → refuse.
-        committed = store.df()
-        leftover = _shape(
-            spark.read.option("basePath", path)
-            .parquet(*[os.path.join(path, d) for d in batches])
-        ).select(*committed.columns)
-        uncovered = leftover.exceptAll(committed).count()
-        if uncovered:
-            raise RuntimeError(
-                f"{path}: leftover batch dirs {ids} carry {uncovered} "
-                "row(s) NOT in the committed table — a dirs-writer ran "
-                "against the migrated store (a fresh checkpoint "
-                "restarts ids at 0, so id collisions mean nothing); "
-                "re-ingest those batches explicitly (refusing to "
-                "delete)")
-        for d in batches:
-            shutil.rmtree(os.path.join(path, d))
-        return len(batches)
-    df = _shape(spark.read.option("basePath", path)
-                .parquet(*[os.path.join(path, d) for d in batches]))
-    base = store._read_manifest()["version"]
-    staged = store._stage(df)
-    store._commit(staged, ids, base)       # atomic cut-over
-    for d in batches:
-        shutil.rmtree(os.path.join(path, d))
-    return len(batches)
-
-
-def _absorb_compacted_store(spark: SparkSession, manifest_path: str,
-                            store_path: str,
-                            key_col: str | None) -> int:
-    """Fold a pre-compaction separate store (compact_stream_store /
-    compact_channel_store output) into the migrated manifest at
-    ``manifest_path``, then delete it (r15 durability review: without
-    this, a deployment that had ever run ``compact`` migrated only the
-    residual batch dirs — the compacted BULK of the data became
-    unreachable, because every manifest-layout reader refuses a
-    ``store_path`` argument by design).  Returns rows absorbed.
-
-    Idempotent across crashes: with ``key_col`` (the keyed ops store)
-    only rows whose key is not already committed are appended
-    (anti-join — the batch-dir version of a key wins, matching
-    compact's own key-idempotent dedup); without one (the append-only
-    channels store) the full-row remainder (``exceptAll``) is appended.
-    A re-run after a crash between the append commit and the store
-    delete finds an empty remainder and just finishes the delete."""
-    ms = ManifestStore(spark, manifest_path)
-    store_df = spark.read.parquet(store_path)
-    if ms.current_version():
-        committed = ms.df()
-        store_df = store_df.select(*committed.columns)
-        remainder = (store_df.join(committed.select(key_col).distinct(),
-                                   key_col, "left_anti")
-                     if key_col else store_df.exceptAll(committed))
-    else:
-        remainder = store_df
-    n = remainder.count()
-    if n:
-        ms.append(remainder)
-    shutil.rmtree(store_path)
-    return n
-
-
-def migrate_sink_to_manifest(spark: SparkSession, ops_path: str,
-                             channels_path: str | None = None,
-                             store_path: str | None = None,
-                             channels_store_path: str | None = None) -> dict:
-    """Migrate a WHOLE legacy dir-layout sink — the ops store, its
-    ``<ops>_meta`` HWM sibling, and (when given) the channels store —
-    because a sink is three dirs-layout stores, and a stream resumed
-    with the manifest default aborts on the FIRST un-migrated one
-    (the mixed-layout refusal in the batch writer).  ``store_path`` /
-    ``channels_store_path`` name the separate compacted stores an
-    earlier ``compact`` produced; their rows are absorbed into the
-    migrated manifests and the store dirs removed (see
-    _absorb_compacted_store — a migrated manifest cannot take a
-    store_path at read time, so leaving them behind stranded the bulk
-    of the data).  Returns {store: dirs_absorbed} plus
-    {store_rows, channels_store_rows} when stores were absorbed."""
-    # explicit no-dirs probe instead of catching FileNotFoundError
-    # (r15 self-review: the catch also swallowed ManifestStore.df()'s
-    # broken-manifest error from the content-verification branch,
-    # bypassing the designed loud refusal and mutating sibling stores
-    # before failing with a misleading message)
-    has_dirs = os.path.isdir(ops_path) and any(
-        d.startswith("batch_id=") for d in os.listdir(ops_path))
-    if has_dirs or is_manifest_store(ops_path):
-        out = {"ops": migrate_dirs_to_manifest(spark, ops_path)}
-    elif store_path and os.path.isdir(store_path):
-        # fully-compacted sink: every batch dir already folded into the
-        # separate store — the absorb below creates the manifest
-        out = {"ops": 0}
-    else:
-        raise FileNotFoundError(
-            f"{ops_path} has no batch_id=N dirs to migrate")
-    for label, p in (("meta", ops_path + "_meta"), ("channels",
-                                                    channels_path)):
-        if p and os.path.isdir(p) and (
-                is_manifest_store(p)
-                or any(d.startswith("batch_id=") for d in os.listdir(p))):
-            out[label] = migrate_dirs_to_manifest(spark, p)
-        else:
-            out[label] = 0
-    if store_path and os.path.isdir(store_path):
-        out["store_rows"] = _absorb_compacted_store(
-            spark, ops_path, store_path, "key")
-    if channels_store_path and os.path.isdir(channels_store_path):
-        if not channels_path:
-            # silent skip here would strand the channel history the
-            # caller explicitly asked to absorb (r15 self-review)
-            raise ValueError(
-                "channels_store_path given without channels_path — the "
-                "absorbed rows need a channels manifest to land in; "
-                "pass the sink's channels dir")
-        out["channels_store_rows"] = _absorb_compacted_store(
-            spark, channels_path, channels_store_path, None)
-    return out

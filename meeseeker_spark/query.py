@@ -25,10 +25,9 @@ from .keys import glob_to_filter, parse_key
 def newest_by_key(df: DataFrame, key: str,
                   batch_col: str = "batch_id") -> DataFrame:
     """Deterministic last-writer-wins key dedup (r15, shared by
-    ScheduleStore.df, compact_schedule_log and ``verify --witness``):
-    keep the row with the highest ``batch_col`` per key — the sink
-    replays a trigger with ``mode("overwrite")``, so the newest write is
-    the authoritative one.  Without a batch column (a raw capture), or
+    ScheduleStore.df and ``verify --witness``): keep the row with the
+    highest ``batch_col`` per key — the newest publish is the
+    authoritative one.  Without a batch column (a raw capture), or
     on equal batches, the total struct order over the payload breaks the
     tie, so two readers of the same store always agree — never
     ``dropDuplicates``' partition-order luck.  One shuffle on the key,
@@ -40,26 +39,6 @@ def newest_by_key(df: DataFrame, key: str,
             .agg(F.max(F.struct(*ordered)).alias("_newest"))
             .select(key, *[F.col(f"_newest.{c}").alias(c)
                            for c in others]))
-
-
-def read_schedule_batches(spark: SparkSession, path: str,
-                          schema) -> DataFrame | None:
-    """Read a witness-schedule publish log's ``batch_id=N`` dirs with
-    ``batch_id`` as a column (the newest_by_key ordering input), or
-    ``None`` when the path holds no batch dirs.  ONE home for the
-    layout recipe (r15 review): ScheduleStore.df and ``verify
-    --witness`` both read this layout, and two inline copies could
-    silently diverge on which replayed duplicate wins."""
-    import pyspark.sql.types as T
-    batches = ([d for d in os.listdir(path)
-                if d.startswith("batch_id=")]
-               if os.path.isdir(path) else [])
-    if not batches:
-        return None
-    full = T.StructType(list(schema.fields)
-                        + [T.StructField("batch_id", T.LongType())])
-    return (spark.read.option("basePath", path).schema(full)
-            .parquet(*[os.path.join(path, d) for d in batches]))
 
 
 class OpsStore:
@@ -187,7 +166,8 @@ class OpsStore:
     # -- C4: reset (bulk delete by chain prefix) ------------------------------
 
     def reset(self, chain: str = "all") -> None:
-        """Bulk delete by chain prefix.  Dir layout: partition drop —
+        """Bulk delete by chain prefix.  ``chain=``-partitioned layout
+        (OpsStore.write): partition drop —
         the scale-correct delete (no rewrite); `all` truncates the
         store.  Manifest layout: one atomic overwrite commit of the
         surviving rows (`all` commits the empty table, which — unlike
@@ -219,37 +199,15 @@ class OpsStore:
         additive surface outside reset's key-drop contract.
 
         The keep filter is NULL-safe (ADVICE r6): ``chain != 'x'``
-        alone would silently drop NULL-chain rows that the dir layout's
-        partition drop never touched.  A store with no committed data
-        resets as a no-op, matching the dirs rmtree path.
+        alone would silently drop NULL-chain rows that the partition
+        drop never touched.  A store with no committed data resets as a
+        no-op, matching the rmtree path.
 
-        Layout dispatch for a CHAIN-specific reset (r15 durability
-        review): a raw streaming batch-dirs sink is REFUSED loudly
-        (chain is a data column there — the partition drop would delete
-        nothing while the sync-state drop below still destroyed the HWM
-        and pending rows); an un-partitioned loose-file store is
-        rewritten in place (atomic exchange swap, retention.expire's
-        protocol) instead of the old silent nothing-deleted no-op."""
+        An un-partitioned loose-file store is rewritten in place for a
+        CHAIN-specific reset (atomic exchange swap, retention.expire's
+        protocol) instead of a silent nothing-deleted no-op (r15
+        durability review)."""
         from .manifest import ManifestStore, is_manifest_store
-        if (chain != "all" and not is_manifest_store(self.path)
-                and os.path.isdir(self.path)
-                and any(d.startswith("batch_id=")
-                        for d in os.listdir(self.path))):
-            # r15 durability review: a chain-specific reset on a raw
-            # dirs-layout streaming sink (batch_id=N dirs — chain is a
-            # DATA column there, not a chain= partition) used to fall
-            # through to the partition-drop branch, delete NOTHING, and
-            # still destroy the _meta HWM and _pending staging dirs —
-            # every key stayed readable while the next sync made a
-            # fresh-start decision over data that was never deleted,
-            # and pending irreversible rows were silently lost.  Refuse
-            # BEFORE touching sync state (expire has the same guard).
-            raise ValueError(
-                f"{self.path} is a raw streaming batch-dirs sink "
-                "(batch_id=N dirs): a chain-specific reset cannot drop "
-                "a chain= partition that does not exist there. Run "
-                "compact first (then reset the compacted store), or "
-                "reset 'all' to truncate the sink.")
         self._drop_sync_state()
         if is_manifest_store(self.path):
             ms = ManifestStore(self.spark, self.path)
@@ -304,7 +262,7 @@ class OpsStore:
 
 class ScheduleStore:
     """Keyed scan surface over the witness-schedule publish log
-    (start_schedule_publisher's ``batch_id=N`` dirs).
+    (start_schedule_publisher's manifest store).
 
     The reference only PUBLISHES schedules (witness_schedule_job.rb:60,
     channel ``{chain}:witness:schedule``) and stores nothing; this view
@@ -325,6 +283,7 @@ class ScheduleStore:
         self.chain = chain
 
     def df(self) -> DataFrame:
+        from .manifest import ManifestStore, is_manifest_store
         from .schemas import WITNESS_SCHEDULES
         import pyspark.sql.types as T
 
@@ -332,18 +291,15 @@ class ScheduleStore:
             [f for f in WITNESS_SCHEDULES.fields
              if f.name in ("id", "next_shuffle_block_num",
                            "current_shuffled_witnesses")])
-        batched = read_schedule_batches(self.spark, self.path, pub_schema)
-        if batched is not None:
+        if is_manifest_store(self.path):
             # key-dedup: next_shuffle_block_num is the publish-once
-            # boundary, so duplicates can only come from the two
-            # at-least-once windows (a checkpoint-wiped replay; a
-            # compact_schedule_log fold that crashed between rename-in
-            # and the older-dir delete) — the reader absorbs both (r14).
+            # boundary, so duplicates can only come from a
+            # checkpoint-wiped republish — the reader absorbs it (r14).
             # The survivor is DETERMINISTIC (r15): newest batch_id wins
-            # (newest_by_key), matching the sink's mode('overwrite')
-            # replay semantics — the same rule the fold and the verify
-            # CLI apply, so all three surfaces agree on the survivor.
-            raw = newest_by_key(batched, "next_shuffle_block_num")
+            # (newest_by_key), the same rule the verify CLI applies, so
+            # both surfaces agree on the survivor.
+            raw = newest_by_key(ManifestStore(self.spark, self.path).df(),
+                                "next_shuffle_block_num")
         else:
             raw = self.spark.createDataFrame([], pub_schema)
         return raw.select(

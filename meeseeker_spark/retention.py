@@ -7,15 +7,15 @@ equivalents:
 
 - retention delete: drop rows whose ``ingested_at`` fell past the TTL.
   On Delta/Iceberg this is a metadata DELETE; here the DEFAULT protocol is
-  the manifest-committed store (manifest.ManifestStore, the streaming
-  sink's default layout): ``expire`` detects a ``_manifest`` dir and
+  the manifest-committed store (manifest.ManifestStore, the layout every
+  streaming sink writes): ``expire`` detects a committed ``_manifest`` and
   delegates — only files containing expired rows are rewritten, the swap
   is one atomic manifest rename, and there is no recovery protocol at all.
-  For plain partitioned parquet WITHOUT a manifest (a pre-existing dump,
-  or a sink run with ``store_impl="dirs"``) the rename-aside fallback
-  below applies: a rewrite of ONLY the ``chain=`` partitions that
-  actually contain expired rows — untouched partitions keep their exact
-  files (asserted byte-identical in tests).  The swap is crash-safe by
+  For plain ``chain=``-partitioned parquet WITHOUT a manifest (the
+  ``query.OpsStore.write`` batch layout) the rename-aside fallback below
+  applies: a rewrite of ONLY the ``chain=`` partitions that actually
+  contain expired rows — untouched partitions keep their exact files
+  (asserted byte-identical in tests).  The swap is crash-safe by
   ordering: live rows are written to a hidden ``.tmp`` dir, the old
   partition is renamed aside to a hidden ``.old`` dir, the tmp renamed in,
   and only then is the old copy deleted.  A crash at any point leaves every
@@ -90,9 +90,9 @@ def _swap_in(path: str, what: str) -> None:
     the filesystem supports it (concurrent readers see either the old
     store or the new one, never a missing path; the superseded rows
     land in ``.tmp`` and are deleted), else the loud two-rename
-    fallback.  ONE home for the protocol (r15 self-review: expire,
-    chain-reset and compact_stream_store each hand-rolled the same ~15
-    lines, a drift hazard for any future protocol fix)."""
+    fallback.  ONE home for the protocol (r15 self-review: expire and
+    chain-reset each hand-rolled the same ~15 lines, a drift hazard for
+    any future protocol fix)."""
     if _exchange(path, path + ".tmp"):
         shutil.rmtree(path + ".tmp")       # now the superseded rows
     else:
@@ -151,7 +151,7 @@ def expire(spark: SparkSession, path: str, ttl_s: int = DEFAULT_TTL_S,
     Rows with NULL ``ingested_at`` never expire — NULL means "no recorded
     ingest time", and silently deleting them would be uncounted data loss.
 
-    A manifest-committed store (the streaming sink's default layout) is
+    A manifest-committed store (the streaming sinks' layout) is
     detected by its ``_manifest`` dir and delegated to
     ``ManifestStore.expire`` — one commit protocol owns retention there.
     Otherwise: one counting job (expired rows per chain) decides which
@@ -165,19 +165,6 @@ def expire(spark: SparkSession, path: str, ttl_s: int = DEFAULT_TTL_S,
     from .manifest import ManifestStore, is_manifest_store
     if is_manifest_store(path):
         return ManifestStore(spark, path).expire(ttl_s, now=now)
-    if os.path.isdir(path) and any(
-            d.startswith("batch_id=") for d in os.listdir(path)):
-        # r15 review: a raw per-trigger batch-dirs sink (no manifest, no
-        # chain= partitions) fell into the whole-store swap below, which
-        # rewrites the rows as LOOSE part files — destroying the
-        # batch_id=N layout its readers (_batched_view) require and the
-        # replay-overwrite idempotence of in-flight triggers.  Refuse
-        # loudly; compaction folds these dirs into an expirable layout.
-        raise ValueError(
-            f"{path} is a raw streaming batch-dirs sink (batch_id=N "
-            "dirs): expiring it in place would flatten the layout its "
-            "readers and checkpoint replay depend on. Run compact "
-            "first, then expire the compacted store.")
     _recover(path)
     now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     cutoff_s = _epoch_s(now - dt.timedelta(seconds=ttl_s))

@@ -15,9 +15,10 @@ Choices mapped from the reference:
 - HWM (:78) → the checkpoint; plus an explicit per-batch _meta row for
   wire-compat with `find`/resume consumers.
 - exactly-once: the reference is at-least-once on restart, idempotent only
-  by key re-SET. We do the same but better: batch writes land under
-  ``batch_id=N`` subdirs, so a retried batch overwrites itself (parquet-level
-  idempotence without Delta).
+  by key re-SET. We do the same but better: every per-trigger output is one
+  ``manifest.ManifestStore`` commit that records the trigger's batch id, so
+  a retried batch short-circuits on its own id (sink idempotence keyed on
+  the epoch id, without Delta).  Readers see only committed manifests.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..channels import block_channels, engine_channels, op_channels
 from ..flatten import flatten_blocks, flatten_engine_blocks, flatten_virtual_ops
-from ..manifest import is_manifest_store as _is_manifest
+from ..manifest import ManifestStore, is_manifest_store
 from ..schemas import BLOCKS, ENGINE_BLOCKS, VIRTUAL_OPS, WITNESS_SCHEDULES
 
 VOP_LATENESS = "18 seconds"   # Σ(retry × BLOCK_INTERVAL), see SURVEY §4.5
@@ -190,13 +191,12 @@ def _irreversible_gate(batch_df: DataFrame, pending: str, lib_lag: int,
     A replay AFTER the commit (crash in the window between ``commit()``
     and Structured Streaming's checkpoint commit — the standard
     at-least-once window) must NOT recompute: the swapped pending dir no
-    longer holds the rows that were folded into this batch, so a
-    recomputed ``final_df`` would be missing them, and under the legacy
-    ``dirs`` store the batch_id=N overwrite would destroy the only
-    remaining copy (r13 review — silent data loss; the manifest store
-    was safe only because its recorded batch id short-circuits the
-    append).  ``commit()`` therefore stamps the new pending dir with the
-    batch id that produced it; a replay seeing its own stamp returns
+    longer holds the rows that were folded into this batch, and a
+    recomputed split would stage this batch's young rows into pending a
+    second time (the output appends themselves short-circuit on their
+    recorded batch id, but the pending swap has no such guard).
+    ``commit()`` therefore stamps the new pending dir with the batch id
+    that produced it; a replay seeing its own stamp returns
     ``(None, None)`` and the caller skips every output — by protocol
     order the stamp exists only after all of them landed.
 
@@ -325,22 +325,14 @@ def _irreversible_gate(batch_df: DataFrame, pending: str, lib_lag: int,
 def start_ingest(ops_stream: DataFrame, ops_path: str, channels_path: str,
                  checkpoint: str, available_now: bool = True,
                  channel_fn=op_channels, mode: str = "head",
-                 lib_lag: int = REVERSIBLE_LAG_BLOCKS,
-                 store_impl: str = "manifest") -> StreamingQuery:
+                 lib_lag: int = REVERSIBLE_LAG_BLOCKS) -> StreamingQuery:
     """foreachBatch sink: keyed op append + channel fan-out + _meta HWM.
 
-    ``store_impl="manifest"`` (default): each output goes through a
-    ``manifest.ManifestStore`` — the batch id is recorded in the
-    manifest, so a replayed batch short-circuits rather than
-    overwriting, and downstream maintenance (TTL, gc, compaction) is a
-    manifest swap with no rename-recovery protocol.  This is the ONE
-    commit protocol owning the graded paths (VERDICT r5 item 5).
-    ``store_impl="dirs"`` is the legacy fallback: writes go to
-    ``batch_id=N`` subdirectories → a replayed batch after a crash
-    overwrites its own output (idempotent at-least-once ⇒ effectively
-    exactly-once for readers of `ops_view`).  The readers
-    (``ops_view``/``channel_events_view``/``last_block_num``) detect the
-    layout, so the choice is operational, not semantic.
+    Each output is one ``manifest.ManifestStore`` append in protocol
+    order (ops, channels, ``_meta``), each recording the batch id, so a
+    replayed batch short-circuits on every output it already committed
+    instead of writing it twice, and downstream maintenance (TTL, gc,
+    compaction) is a manifest swap with no rename-recovery protocol.
 
     ``channel_fn`` derives the fan-out rows from each batch — mainnet
     ``op_channels`` by default; the sidechain ingest passes the fuller
@@ -356,7 +348,6 @@ def start_ingest(ops_stream: DataFrame, ops_path: str, channels_path: str,
     from ..resume import STREAM_MODES
     if mode not in STREAM_MODES:
         raise ValueError(f"Unknown stream mode: {mode}")
-    _write = _batch_writer(store_impl)
 
     stream_id_cache: list[str | None] = []
 
@@ -383,21 +374,12 @@ def start_ingest(ops_stream: DataFrame, ops_path: str, channels_path: str,
                 # replay of a batch whose pending commit already landed —
                 # by protocol order every output landed before it, so the
                 # whole trigger is a no-op (recomputing would re-split
-                # against the ALREADY-swapped pending dir and, under the
-                # dirs store, overwrite away the folded-in rows)
+                # against the ALREADY-swapped pending dir)
                 return
         batch_df = batch_df.persist()
         try:
-            _write(
-                batch_df.dropDuplicates(["key"])
-                .withColumn("ingested_at", F.current_timestamp()),
-                ops_path, batch_id)
-            _write(channel_fn(batch_df), channels_path, batch_id)
-            hwm = batch_df.agg(
-                F.first("chain").alias("chain"),
-                F.max("block_num").alias("last_block_num"),
-            ).withColumn("batch_id", F.lit(batch_id))
-            _write(hwm, ops_path + "_meta", batch_id)
+            _commit_outputs(batch_df, channel_fn(batch_df), ops_path,
+                            channels_path, batch_id)
         except BaseException:
             if commit is not None:
                 commit.abort()   # release the gate's cache on failure
@@ -416,97 +398,37 @@ def start_ingest(ops_stream: DataFrame, ops_path: str, channels_path: str,
     return writer.start()
 
 
-def _has_batch_dirs(path: str) -> bool:
-    return os.path.isdir(path) and any(
-        d.startswith("batch_id=") for d in os.listdir(path))
+def _commit_outputs(ops: DataFrame, channels: DataFrame, ops_path: str,
+                    channels_path: str, batch_id: int) -> None:
+    """The per-trigger commit shared by the mainnet and engine sinks:
+    ops, channels, then the ``_meta`` HWM row, each one manifest append
+    recording ``batch_id`` — a reader never sees the HWM ahead of the
+    rows it covers."""
+    spark = ops.sparkSession
+    ManifestStore(spark, ops_path).append(
+        ops.dropDuplicates(["key"])
+        .withColumn("ingested_at", F.current_timestamp()), batch_id)
+    ManifestStore(spark, channels_path).append(channels, batch_id)
+    hwm = ops.agg(
+        F.first("chain").alias("chain"),
+        F.max("block_num").alias("last_block_num"),
+    ).withColumn("batch_id", F.lit(batch_id))
+    ManifestStore(spark, ops_path + "_meta").append(hwm, batch_id)
 
 
-def _batch_writer(store_impl: str):
-    """The per-micro-batch output writer shared by the mainnet and engine
-    sinks.  ``dirs``: overwrite a ``batch_id=N`` subdir (replay overwrites
-    itself).  ``manifest``: ManifestStore.append with the batch id
-    recorded (replay short-circuits).  Both REFUSE to write into a path
-    already carrying the other layout — a mixed store would silently hide
-    the other layout's rows from the layout-detecting readers."""
-    if store_impl not in ("dirs", "manifest"):
-        raise ValueError(f"Unknown store_impl: {store_impl}")
-
-    def _write(df: DataFrame, path: str, batch_id: int) -> None:
-        if store_impl == "manifest":
-            if _has_batch_dirs(path):
-                raise RuntimeError(
-                    f"{path} already holds batch_id=N dirs; refusing to "
-                    "start a manifest layout on top (readers would hide "
-                    "the dir-layout rows). Compact or migrate first.")
-            from ..manifest import ManifestStore
-            ManifestStore(df.sparkSession, path).append(df, batch_id=batch_id)
-        else:
-            if _is_manifest(path):
-                raise RuntimeError(
-                    f"{path} is a manifest store; refusing to write "
-                    "batch_id=N dirs into it (readers would never see "
-                    "them). Pass store_impl='manifest'.")
-            df.write.mode("overwrite").parquet(
-                os.path.join(path, f"batch_id={batch_id}"))
-
-    return _write
+def _committed(spark: SparkSession, path: str) -> DataFrame:
+    """The committed table of one sink output.  Probes before opening so
+    a reader never creates the store dirs; raises FileNotFoundError
+    until the first commit."""
+    if not is_manifest_store(path):
+        raise FileNotFoundError(f"{path} has no committed manifest version")
+    return ManifestStore(spark, path).df()
 
 
-def _batched_view(spark: SparkSession, batch_path: str,
-                  store_path: str | None) -> DataFrame:
-    """Union of a sink's ``batch_id=N`` micro-batch dirs with an optional
-    compacted store — the shared shape behind ops_view and
-    channel_events_view (one uninterrupted table across maintenance
-    cycles).  A manifest-committed sink (start_ingest
-    ``store_impl="manifest"``) is detected by its ``_manifest`` dir and
-    read through the manifest instead; a path carrying BOTH layouts (or a
-    manifest plus a separate compacted store) is refused loudly rather
-    than silently hiding one side's rows."""
-    if _is_manifest(batch_path):
-        if _has_batch_dirs(batch_path):
-            raise RuntimeError(
-                f"{batch_path} holds BOTH a _manifest and batch_id=N dirs "
-                "— mixed layouts cannot be read consistently; migrate one "
-                "into the other first.")
-        if store_path and os.path.exists(store_path):
-            raise RuntimeError(
-                "store_path is a dir-layout concept; a manifest store "
-                "already carries its whole history — compact it with "
-                "ManifestStore.compact() instead.")
-        from ..manifest import ManifestStore
-        return ManifestStore(spark, batch_path).df()
-    batches = ([d for d in os.listdir(batch_path)
-                if d.startswith("batch_id=")]
-               if os.path.exists(batch_path) else [])
-    parts: list[DataFrame] = []
-    if batches:
-        parts.append(
-            spark.read.option("basePath", batch_path)
-            .parquet(*[os.path.join(batch_path, d) for d in batches])
-            .drop("batch_id"))
-    if store_path and os.path.exists(store_path):
-        store = spark.read.parquet(store_path)
-        if parts:
-            store = store.select(*parts[0].columns)
-        parts.append(store)
-    if not parts:
-        raise FileNotFoundError(
-            f"no batch dirs under {batch_path} and no compacted store")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def ops_view(spark: SparkSession, ops_path: str,
-             store_path: str | None = None) -> DataFrame:
+def ops_view(spark: SparkSession, ops_path: str) -> DataFrame:
     """Reader view over the streamed store; key-dedup guards the one
-    non-idempotent corner (same op in two batches via vop replay).
-
-    With ``store_path`` (the compacted OpsStore dir, see
-    compact_stream_store) the view unions compacted history with the
-    batch dirs that accumulated since the last compaction."""
-    return _batched_view(spark, ops_path, store_path).dropDuplicates(["key"])
+    non-idempotent corner (same op in two batches via vop replay)."""
+    return _committed(spark, ops_path).dropDuplicates(["key"])
 
 
 def resolve_stream_start(spark: SparkSession, blocks_dir: str, ops_path: str,
@@ -579,81 +501,6 @@ def resolve_engine_stream_start(spark: SparkSession, engine_dir: str,
         DEFAULT_TTL_S if ttl_s is None else ttl_s)
 
 
-def compact_stream_store(spark: SparkSession, ops_path: str,
-                         store_path: str) -> int:
-    """Fold accumulated ``batch_id=N`` micro-batch dirs into the
-    chain-partitioned OpsStore layout (query.OpsStore.write: range-
-    partitioned, block-sorted files) — the small-files maintenance job
-    every long-running file-sink stream needs.  A day of 3 s triggers is
-    ~29k batch dirs; left alone, ``ops_view``'s listing + footer reads
-    become the query bottleneck long before data size does.  The reference
-    has no analog (Redis has no files); this is Spark-operational, the
-    same job Delta calls OPTIMIZE.
-
-    Returns the number of batch dirs consumed (0 = nothing to do).
-
-    Crash-safe by ordering, like retention.expire: the merged store is
-    written to a hidden ``.tmp`` dir, atomically EXCHANGED with the old
-    store (renameat2 — concurrent ops_view readers see either store,
-    never a missing path; loud two-rename fallback where the filesystem
-    lacks the call), THEN the superseded rows + consumed batch dirs are
-    deleted.  A crash at any point loses nothing: batch dirs are only
-    removed after the swap lands, and re-compacting a batch dir that
-    survived a crash is a no-op (key-idempotent dedup).  Single-writer
-    assumption (one maintenance job at a time), same as retention.
-    """
-    tmp_store = store_path + ".tmp"
-    old_store = store_path + ".old"
-    # recovery preamble: roll a crashed swap forward/back
-    if os.path.exists(old_store):
-        if os.path.exists(store_path):
-            shutil.rmtree(old_store)          # swap done; delete was lost
-        else:
-            os.rename(old_store, store_path)  # crash between renames
-    if os.path.exists(tmp_store):
-        shutil.rmtree(tmp_store)              # incomplete rewrite
-
-    if not os.path.exists(ops_path):
-        return 0
-    batches = sorted(d for d in os.listdir(ops_path)
-                     if d.startswith("batch_id="))
-    if not batches:
-        return 0
-
-    new = (
-        spark.read.option("basePath", ops_path)
-        .parquet(*[os.path.join(ops_path, d) for d in batches])
-        .drop("batch_id")
-        .dropDuplicates(["key"])
-    )
-    if os.path.exists(store_path):
-        old = spark.read.parquet(store_path)
-        merged = new.unionByName(old.select(*new.columns)) \
-            .dropDuplicates(["key"])
-    else:
-        merged = new
-
-    from ..query import OpsStore
-    OpsStore.write(merged, tmp_store)
-    if os.path.exists(store_path):
-        # atomic renameat2 exchange (r15 durability review): the old
-        # two-rename swap left a window where ops_view's
-        # os.path.exists(store_path) read False and a concurrent reader
-        # silently saw ONLY the residual batch dirs — the same
-        # reader-visible hole VERDICT r14 item 4 closed in
-        # retention.expire, with the same loud fallback when the
-        # filesystem lacks the call.  After the exchange tmp_store
-        # holds the superseded OLD rows; the recovery preamble above
-        # discards a leftover tmp either way.
-        from ..retention import _swap_in
-        _swap_in(store_path, "compact")
-    else:
-        os.rename(tmp_store, store_path)
-    for d in batches:
-        shutil.rmtree(os.path.join(ops_path, d))
-    return len(batches)
-
-
 def compact_meta(spark: SparkSession, ops_path: str) -> int:
     """Fold the ``<ops>_meta`` HWM store to one row per chain (r14
     review).  The reference's HWM is ONE key, overwritten per block
@@ -664,235 +511,51 @@ def compact_meta(spark: SparkSession, ops_path: str) -> int:
     data.  Folding is safe at any moment: the folded row IS the running
     per-chain max, so readers see the same answer before, during and
     after, and a crash mid-cleanup that leaves stale older rows changes
-    nothing (monotone max).  Returns files/dirs folded (0 = compact
-    already).
+    nothing (monotone max).  Returns files folded (0 = compact already).
 
-    Manifest layout: one overwrite commit that KEEPS the replayable
-    batch-id tail (so a checkpointed replay of the newest trigger still
-    short-circuits) + gc.  Dirs layout: the older dirs fold into the
-    SECOND-newest ``batch_id=N`` dir via the same rename-aside protocol
-    as retention/_pending (write ``.foldtmp`` → aside → rename in →
-    drop aside + dominated older dirs); the newest dir stays raw so a
-    same-checkpoint replay's ``mode("overwrite")`` of it cannot destroy
-    folded rows (ADVICE r14 — the dirs twin of the manifest tail).
-    Every crash window either leaves dominated rows (no reader change)
-    or a recoverable aside the next run rolls forward — and because the
-    newest dir is never the swap target, the mid-swap window where the
-    fold target is briefly absent does not even regress the HWM: the
-    untouched newest dir carries the global (monotone) max."""
+    One overwrite commit that KEEPS the replayable batch-id tail (so a
+    checkpointed replay of the newest trigger still short-circuits),
+    then gc."""
     meta_path = ops_path + "_meta"
-    if not os.path.exists(meta_path):
+    if not is_manifest_store(meta_path):
         return 0
-    folded_cols = ("chain", "last_block_num")
-    if _is_manifest(meta_path):
-        from ..manifest import ManifestStore
-        ms = ManifestStore(spark, meta_path)
-        try:
-            cur = ms.df()
-        except FileNotFoundError:
-            return 0
-        n = len(ms.files())
-        if n <= 1:
-            return 0
-        folded = (cur.groupBy("chain")
-                  .agg(F.max("last_block_num").alias("last_block_num"),
-                       F.max("batch_id").alias("batch_id"))
-                  .coalesce(1))
-        m = ms._read_manifest()
-        ids = m["batch_ids"]
-        if ids:     # same replayable-tail rule as ManifestStore.compact
-            ids = [i for i in ids if i >= max(ids) - 1]
-        staged = ms._stage(folded)
-        ms._commit(staged, ids, m["version"])
-        # keep_versions=2: one version of grace for a reader that
-        # resolved the just-superseded manifest before this commit —
-        # gc fused to the commit with keep_versions=1 unlinked files a
-        # concurrent last_block_num probe had already pinned (r15
-        # durability review).  The leftover version is collected by the
-        # NEXT maintenance pass, so growth stays bounded at one stale
-        # version per store.
-        ms.gc(keep_versions=2)
-        return n
-    return _fold_batch_dirs(
-        spark, meta_path,
-        lambda df: df.groupBy("chain")
-        .agg(F.max("last_block_num").alias("last_block_num"))
-        .select(*folded_cols))
-
-
-def _fold_batch_dirs(spark: SparkSession, path: str, fold_fn) -> int:
-    """The dirs-layout fold shared by compact_meta and
-    compact_schedule_log: read every ``batch_id=N`` dir EXCEPT the
-    newest, apply ``fold_fn`` (a per-store row reduction —
-    max-per-chain for _meta, key-dedup for the schedule log), and swap
-    the result in as the SECOND-newest batch dir via rename-aside
-    (``.foldtmp`` → aside → rename-in → drop aside + older dirs).
-    Crash recovery preamble rolls an interrupted swap forward (aside
-    without its target → restore; orphan tmp → discard).
-
-    The newest dir is NEVER part of the fold (ADVICE r14, high): the
-    dirs-layout sinks write ``mode("overwrite")`` into
-    ``batch_id=<id>``, so a same-checkpoint replay of the newest
-    trigger (crash after the batch wrote, before the checkpoint
-    commit — the standard at-least-once window) re-overwrites
-    ``batch_id=<max>`` with ONLY its own rows.  Folding into that dir
-    would let the replay silently destroy every folded older row; the
-    manifest branch survives this exact window by keeping the
-    replayable batch-id tail, and this is the dirs equivalent.  The
-    fold target is the second-newest dir, whose id can never replay
-    (batch ids are monotone within one checkpoint and trigger N+1 only
-    runs after commit N landed).  Overlap between the untouched newest
-    dir and a folded row set is absorbed by the readers (monotone max
-    for _meta; publish-once key dedup for ScheduleStore).
-
-    Blast-radius note (r15 review): the swap victim is always a single
-    RAW trigger dir — on every fold after the first, the previously
-    folded history dir carries the smallest batch id, making it a fold
-    INPUT in ``fold_set[:-1]``, still on disk through the swap and
-    deleted only after its rows landed in the new target.  The
-    mid-swap window therefore hides at most one trigger's rows, same
-    exposure before and after the newest-dir protection."""
-    for d in list(os.listdir(path)):
-        if d.startswith(".foldold-"):
-            tgt = os.path.join(path, d[len(".foldold-"):])
-            src = os.path.join(path, d)
-            if os.path.exists(tgt):
-                shutil.rmtree(src)
-            else:
-                os.rename(src, tgt)
-        elif d == ".foldtmp":
-            shutil.rmtree(os.path.join(path, d))
-    if not _has_batch_dirs(path):
+    ms = ManifestStore(spark, meta_path)
+    n = len(ms.files())
+    if n <= 1:
         return 0
-    batches = sorted((d for d in os.listdir(path)
-                      if d.startswith("batch_id=")),
-                     key=lambda d: int(d.split("=")[1]))
-    if len(batches) <= 2:
-        # one raw dir to protect + at most one fold target already in
-        # place — nothing foldable (and this makes a completed fold's
-        # re-run a true no-op)
-        return 0
-    fold_set = batches[:-1]
-    # batch_id stays visible to fold_fn (r15 review): the schedule fold
-    # needs it to pick the same newest-batch survivor as the readers —
-    # an arbitrary dropDuplicates here could permanently keep a STALE
-    # replayed payload after the fresh row's dir is deleted below.
-    # Each fold_fn drops/aggregates it away before the write.
-    folded = fold_fn(
-        spark.read.option("basePath", path)
-        .parquet(*[os.path.join(path, d) for d in fold_set])
-    ).coalesce(1)
-    tmp = os.path.join(path, ".foldtmp")
-    folded.write.mode("overwrite").parquet(tmp)
-    target = os.path.join(path, fold_set[-1])
-    aside = os.path.join(path, ".foldold-" + fold_set[-1])
-    os.rename(target, aside)
-    os.rename(tmp, target)
-    shutil.rmtree(aside)
-    for d in fold_set[:-1]:
-        shutil.rmtree(os.path.join(path, d))
-    return len(fold_set)
+    folded = (ms.df().groupBy("chain")
+              .agg(F.max("last_block_num").alias("last_block_num"),
+                   F.max("batch_id").alias("batch_id"))
+              .coalesce(1))
+    m = ms._read_manifest()
+    ids = m["batch_ids"]
+    if ids:     # same replayable-tail rule as ManifestStore.compact
+        ids = [i for i in ids if i >= max(ids) - 1]
+    staged = ms._stage(folded)
+    ms._commit(staged, ids, m["version"])
+    # keep_versions=2: one version of grace for a reader that resolved
+    # the just-superseded manifest before this commit — gc fused to the
+    # commit with keep_versions=1 unlinked files a concurrent
+    # last_block_num probe had already pinned (r15 durability review).
+    # The leftover version is collected by the NEXT maintenance pass,
+    # so growth stays bounded at one stale version per store.
+    ms.gc(keep_versions=2)
+    return n
 
 
-def compact_schedule_log(spark: SparkSession, schedules_path: str) -> int:
-    """Fold the witness-schedule publish log's per-trigger ``batch_id=N``
-    dirs into one (r14): the publisher commits ~one dir per 63 s round
-    (witness_schedule_job.rb:41-62 cadence) — ~500k dirs/year of listing
-    + footer reads for every ScheduleStore scan.  This is the FOURTH and
-    last per-trigger sink to get a maintenance fold (ops:
-    compact_stream_store, channels: compact_channel_store, HWM:
-    compact_meta).  Rows are distinct data keyed by the publish-once
-    boundary, so the fold is a key-dedup (newest_by_key — the same
-    deterministic newest-batch-wins rule ScheduleStore's reader
-    applies, so folding never flips which payload a duplicate key
-    resolves to), not a max — which is exactly
-    why the newest dir must stay OUT of the fold (ADVICE r14, high): a
-    same-checkpoint replay overwrites ``batch_id=<max>`` with only its
-    own schedule rows, and a fold that had moved older rows into that
-    dir would lose them all.  The shared fold targets the second-newest
-    dir instead; the one crash window that can surface duplicates (fold
-    landed, older-dir delete lost) is absorbed by ScheduleStore's key
-    dedup, and the mid-swap window HIDES (never loses) the target's
-    rows until the recovery preamble restores them — same exposure as
-    compact_stream_store's own swap.  Returns dirs folded (0 = compact
-    already)."""
-    if not os.path.exists(schedules_path):
-        return 0
-    from ..query import newest_by_key
-    return _fold_batch_dirs(
-        spark, schedules_path,
-        lambda df: newest_by_key(df, "next_shuffle_block_num"))
-
-
-def compact_channel_store(spark: SparkSession, channels_path: str,
-                          store_path: str, writers: int = 8) -> int:
-    """Channels analog of compact_stream_store: fold per-trigger
-    channel_events batch dirs into a kind-partitioned, channel-clustered
-    layout (range-partitioned and sorted on (channel, block_num), so a
-    consumer's ``filter(channel = X)`` prunes to a handful of row groups
-    instead of listing thousands of micro-batch dirs).
-
-    Unlike the keyed op store there is NO key identity here — channel
-    events are append-only notifications — so batches are appended, not
-    merged, and compaction history never rewrites.  Crash semantics:
-    batch dirs are removed only after the append commits; a crash between
-    commit and removal re-appends those batches on the next run —
-    at-least-once, exactly the reference's own channel guarantee on
-    restart (publishes replay after a crash; README.md:13 notifications
-    are advisory).  Consumers needing exactly-once dedup on
-    (channel, kind, key, block_num) downstream.
-    """
-    if not os.path.exists(channels_path):
-        return 0
-    batches = sorted(d for d in os.listdir(channels_path)
-                     if d.startswith("batch_id="))
-    if not batches:
-        return 0
-    ev = (
-        spark.read.option("basePath", channels_path)
-        .parquet(*[os.path.join(channels_path, d) for d in batches])
-        .drop("batch_id")
-    )
-    (
-        ev.repartitionByRange(writers, "channel", "block_num")
-        .sortWithinPartitions("channel", "block_num")
-        .write.partitionBy("kind").mode("append").parquet(store_path)
-    )
-    for d in batches:
-        shutil.rmtree(os.path.join(channels_path, d))
-    return len(batches)
-
-
-def channel_events_view(spark: SparkSession, channels_path: str,
-                        store_path: str | None = None) -> DataFrame:
-    """One uninterrupted channel_events table across maintenance cycles:
-    compacted history ∪ batch dirs written since (append-only: no dedup)."""
-    return _batched_view(spark, channels_path, store_path)
+def channel_events_view(spark: SparkSession,
+                        channels_path: str) -> DataFrame:
+    """The committed channel_events table (append-only: no dedup)."""
+    return _committed(spark, channels_path)
 
 
 def last_block_num(spark: SparkSession, ops_path: str) -> int | None:
     """The explicit HWM probe (reference: GET {chain}:meeseeker:last_block_num)."""
-    meta_path = ops_path + "_meta"
-    if not os.path.exists(meta_path):
+    try:
+        meta = _committed(spark, ops_path + "_meta")
+    except FileNotFoundError:
         return None
-    if _is_manifest(meta_path):
-        from ..manifest import ManifestStore
-        try:
-            meta = ManifestStore(spark, meta_path).df()
-        except FileNotFoundError:
-            return None
-        row = meta.agg(F.max("last_block_num").alias("m")).first()
-        return row["m"] if row and row["m"] is not None else None
-    # list before globbing: a crash can leave the _meta dir existing
-    # with no committed batch subdir yet, and the bare glob would raise
-    # instead of reporting "no HWM" (r12 review — the rebuild-on-total-
-    # expiry class: walk the listing, then read)
-    if not _has_batch_dirs(meta_path):
-        return None
-    row = (
-        spark.read.option("basePath", meta_path).parquet(meta_path + "/batch_id=*")
-        .agg(F.max("last_block_num").alias("m")).first()
-    )
+    row = meta.agg(F.max("last_block_num").alias("m")).first()
     return row["m"] if row and row["m"] is not None else None
 
 
@@ -917,8 +580,7 @@ def read_engine_stream(spark: SparkSession, engine_dir: str,
 def start_engine_ingest(engine_stream: DataFrame, ops_path: str,
                         channels_path: str, checkpoint: str,
                         chain: str = "hive_engine",
-                        available_now: bool = True,
-                        store_impl: str = "manifest") -> StreamingQuery:
+                        available_now: bool = True) -> StreamingQuery:
     """Engine store + full sidechain channel fan-out ({chain}:{contract},
     {chain}:{contract}:{action}, {chain}:[virtual_]transaction,
     {chain}:block — follower_job.rb:44-50,77,81-82) + _meta HWM
@@ -929,26 +591,14 @@ def start_engine_ingest(engine_stream: DataFrame, ops_path: str,
     Structured Streaming forbids on unbounded inputs but is fine on each
     micro-batch DataFrame — and a micro-batch holds whole files = whole
     blocks, so the (block_num, trx_id)-keyed window sees every trx of a
-    block and ordinals match batch mode exactly.
-
-    ``store_impl`` as in start_ingest: ``manifest`` (default;
-    ManifestStore commits, batch-id short-circuit) or ``dirs``
-    (batch_id=N overwrite idempotence, the legacy fallback)."""
-    _write = _batch_writer(store_impl)
+    block and ordinals match batch mode exactly.  Commits exactly like
+    start_ingest (ops, channels, ``_meta``; batch-id short-circuit)."""
 
     def _sink(raw_batch: DataFrame, batch_id: int) -> None:
         ops = flatten_engine_blocks(raw_batch, chain).persist()
         try:
-            _write(
-                ops.dropDuplicates(["key"])
-                .withColumn("ingested_at", F.current_timestamp()),
-                ops_path, batch_id)
-            _write(engine_channels(ops), channels_path, batch_id)
-            hwm = ops.agg(
-                F.first("chain").alias("chain"),
-                F.max("block_num").alias("last_block_num"),
-            ).withColumn("batch_id", F.lit(batch_id))
-            _write(hwm, ops_path + "_meta", batch_id)
+            _commit_outputs(ops, engine_channels(ops), ops_path,
+                            channels_path, batch_id)
         finally:
             ops.unpersist()
 
@@ -970,15 +620,14 @@ def start_block_channel_publisher(blocks_stream: DataFrame, out_path: str,
     block_follower_job.rb:60-76): header fields ride in the payload when
     the gate is on, bare {block_num} when off.  The reference pays an extra
     get_block_header RPC per block for this; here the header is already in
-    the block row, so the gate only shapes the payload."""
+    the block row, so the gate only shapes the payload.  Each trigger is
+    one ManifestStore append recording its batch id; read the log back
+    with ``channel_events_view``."""
     channel_rows = block_channels(blocks_stream, chain, include_header)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out_path, f"batch_id={batch_id}"))
-
     writer = (
-        channel_rows.writeStream.foreachBatch(_sink)
+        channel_rows.writeStream
+        .foreachBatch(ManifestStore(channel_rows.sparkSession,
+                                    out_path).sink())
         .option("checkpointLocation", checkpoint)
     )
     if available_now:
@@ -1011,11 +660,19 @@ def schedule_publish_once(sched_stream: DataFrame) -> DataFrame:
 
 def start_schedule_publisher(sched_stream: DataFrame, out_path: str,
                              checkpoint: str) -> StreamingQuery:
+    """Publish-once log: each trigger is one ManifestStore append whose
+    rows carry their ``batch_id`` as a physical column (as ``_meta``
+    rows do) — the ordering input of ScheduleStore's newest_by_key."""
     deduped = schedule_publish_once(sched_stream)
+    log = ManifestStore(sched_stream.sparkSession, out_path)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out_path, f"batch_id={batch_id}"))
+        if not log.append(batch_df.withColumn("batch_id", F.lit(batch_id)),
+                          batch_id):
+            # a replayed batch short-circuits the append, but the
+            # publish-once dedup is stateful: Spark refuses to commit a
+            # batch whose state stores never ran, so drain it
+            batch_df.write.format("noop").mode("overwrite").save()
 
     return (
         deduped.writeStream.outputMode("update")

@@ -19,9 +19,8 @@ re-hashed, so per-batch candidate generation costs the batch, not the
 accumulated history; candidate VERIFICATION pushes the per-trigger id
 set into the doc_id-sorted corpus store (row-group pruning), so the
 text read also follows the batch.  Batch writes land under
-``batch_id=N`` subdirs (same parquet-level idempotence scheme as the
-ops sink — a retried batch overwrites itself, so admission is
-exactly-once without Delta).
+``batch_id=N`` subdirs (a retried batch overwrites itself, so admission
+is exactly-once without Delta).
 
 Remaining O(history) term and its fix: with the default dir layout the
 band join SHUFFLES the full index each trigger (skinny (id, band)
@@ -335,8 +334,7 @@ def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
 
     # layout marker: toggling index_table between runs (or reusing a
     # table name whose rows survive an out_dir wipe) would silently
-    # screen against an incomplete/stale index — refuse loudly instead,
-    # like pipeline._batch_writer does for store layouts.
+    # screen against an incomplete/stale index — refuse loudly instead.
     marker = os.path.join(out_dir, "_index_layout.json")
     os.makedirs(out_dir, exist_ok=True)
     if os.path.exists(marker):

@@ -256,17 +256,20 @@ def test_cli_verify_witness_publish_log_and_null_payload(
         spark, tmp_path_factory, capsys):
     """r15 review hardening of `verify --witness`:
 
-    (a) On a publish-log capture (batch_id=N dirs) a payload-divergent
-    replayed duplicate resolves to the NEWEST batch's row — the same
-    rule ScheduleStore and compact_schedule_log apply — even when the
-    stale payload sorts higher in the raw payload order, so the verdict
-    matches what any reader of the same log would grade.
+    (a) On the publish log (a manifest store whose rows carry their
+    batch id) a payload-divergent republished duplicate resolves to the
+    NEWEST batch's row — the same rule ScheduleStore applies — even when
+    the stale payload sorts higher in the raw payload order, so the
+    verdict matches what any reader of the same log would grade.
 
     (b) A capture row with a NULL scheduled-witness array is UNGRADABLE
     (ok/penalty go NULL); that must be a loud 125, not a silent pass —
     NULL-skipping aggregation previously reported the round as checked
     and clean."""
+    from pyspark.sql import functions as F
+
     from meeseeker_spark.__main__ import main
+    from meeseeker_spark.manifest import ManifestStore
     from meeseeker_spark.schemas import BLOCKS, WITNESS_SCHEDULES
     from meeseeker_spark.verify import witness_rounds
 
@@ -281,16 +284,19 @@ def test_cli_verify_witness_publish_log_and_null_payload(
     want_penalty = sum(r["penalty"] for r in
                        rounds.where("NOT ok").collect())
 
-    # (a) stale divergent payload in an OLD batch dir; the corrected
-    # full set in a NEWER one.  "zzz..." sorts the stale payload HIGHEST
-    # in raw payload order, so only batch-id precedence can pick fresh.
+    # (a) stale divergent payload in an OLD batch; the corrected full
+    # set in a NEWER one.  "zzz..." sorts the stale payload HIGHEST in
+    # raw payload order, so only batch-id precedence can pick fresh.
     stale = dict(fx.witness_schedules[0])
     stale["current_shuffled_witnesses"] = (
         ["zzz_phantom"] + stale["current_shuffled_witnesses"][1:])
-    _write_batches([stale], "witness_schedules",
-                   str(d / "log" / "batch_id=0"), 1)
-    _write_batches(fx.witness_schedules, "witness_schedules",
-                   str(d / "log" / "batch_id=5"), 1)
+    _write_batches([stale], "witness_schedules", str(d / "stale"), 1)
+    log = ManifestStore(spark, str(d / "log"))
+    for batch_id, src in ((0, d / "stale"), (5, d / "scheds")):
+        log.append(spark.read.schema(WITNESS_SCHEDULES).parquet(str(src))
+                   .select("id", "next_shuffle_block_num",
+                           "current_shuffled_witnesses")
+                   .withColumn("batch_id", F.lit(batch_id)), batch_id)
     rc = main(["verify", "--witness", "--blocks", str(d / "blocks"),
                "--schedules", str(d / "log")])
     out = capsys.readouterr().out
@@ -469,25 +475,20 @@ def test_cli_schedule(spark, tmp_path_factory, capsys):
                  "--schedules", str(d / "out" / "schedules"),
                  "--chain", "steem"]) == 1   # default label is hive
     capsys.readouterr()
-    # r14: compact --schedules folds the publish log's per-trigger dirs
-    # (plant two duplicate batch dirs to give the fold work, as crashed
-    # folds' duplicate windows would).  The numerically-newest dir is
-    # never folded — it is the one a same-checkpoint replay overwrites
-    # (ADVICE r14) — so two dirs remain: the fold target + the
-    # protected newest.
-    import shutil as _sh
+    # r14: compact --schedules folds the publish log's per-trigger
+    # commits in place (plant two republished duplicates to give the
+    # fold work); the reader's key dedup answers identically after
+    from pyspark.sql import functions as F
+
+    from meeseeker_spark.manifest import ManifestStore
     slog = str(d / "out" / "schedules")
-    src_dir = next(x for x in os.listdir(slog) if x.startswith("batch_id="))
-    for planted in ("batch_id=998", "batch_id=999"):
-        _sh.copytree(os.path.join(slog, src_dir),
-                     os.path.join(slog, planted))
+    ms = ManifestStore(spark, slog)
+    for planted in (998, 999):
+        ms.append(ms.df().withColumn("batch_id", F.lit(planted)), planted)
     assert main(["compact", "--ops", str(d / "store"),
-                 "--store", str(d / "store_fold"),
                  "--schedules", slog]) == 0
-    assert "folded 2 schedule publish dirs" in capsys.readouterr().out
-    assert len([x for x in os.listdir(slog)
-                if x.startswith("batch_id=")]) == 2
-    rows3 = None
+    assert "schedule publish files" in capsys.readouterr().out
+    assert len(ms.files()) == 1
     assert main(["scan", "hive:witness:schedule:*",
                  "--store", str(d / "store"), "--schedules", slog]) == 0
     rows3 = [_json.loads(ln) for ln in capsys.readouterr().out.splitlines()
@@ -504,30 +505,37 @@ def test_cli_schedule(spark, tmp_path_factory, capsys):
 
 def test_cli_engine_sync_and_compact(spark, tmp_path_factory, capsys):
     """`sync --chain hive_engine` parity (Rakefile:58-62 dispatch) with E7
-    auto-detection, then `compact` folds the streamed store into the
-    OpsStore layout and the 6-segment engine glob scans it."""
+    auto-detection, then `compact` folds the streamed manifest store in
+    place and the 6-segment engine glob scans it."""
     import json as _json
 
     from meeseeker_spark.__main__ import main
+    from meeseeker_spark.manifest import ManifestStore
 
     fx = fixtures.generate(n_blocks=42, seed=11)
     d = tmp_path_factory.mktemp("cliengine")
-    _write_batches(fx.engine_blocks, "engine_blocks",
-                   str(d / "engine_blocks"), 2)
-
-    assert main(["sync", "--chain", "hive_engine",
-                 "--blocks", str(d / "engine_blocks"),
-                 "--out", str(d / "out"),
-                 "--store-impl", "dirs"]) == 0   # dirs→OpsStore compact path
+    half = len(fx.engine_blocks) // 2
+    # two syncs on one checkpoint: the second resumes with the late
+    # half, so the sink holds one commit per sync for compact to fold
+    for i, part in enumerate((fx.engine_blocks[:half],
+                              fx.engine_blocks[half:])):
+        _write_batches(part, "engine_blocks", str(d / f"eb{i}"), 1)
+        for f in os.listdir(d / f"eb{i}"):
+            os.renames(d / f"eb{i}" / f, d / "engine_blocks" / f"{i}-{f}")
+        assert main(["sync", "--chain", "hive_engine",
+                     "--blocks", str(d / "engine_blocks"),
+                     "--out", str(d / "out")]) == 0
     out = capsys.readouterr().out
     assert f"synced through block {fx.engine_blocks[-1]['blockNumber']}" in out
 
-    assert main(["compact", "--ops", str(d / "out" / "ops"),
-                 "--store", str(d / "store")]) == 0
-    assert (d / "store" / "chain=hive_engine").exists()
+    store = str(d / "out" / "ops")
+    assert len(ManifestStore(spark, store).files()) > 1
+    assert main(["compact", "--ops", store]) == 0
+    assert "compacted" in capsys.readouterr().out
+    assert len(ManifestStore(spark, store).files()) == 1
 
     assert main(["scan", "hive_engine:*:tokens:transfer",
-                 "--store", str(d / "store")]) == 0
+                 "--store", store]) == 0
     lines = [ln for ln in capsys.readouterr().out.splitlines() if ln.strip()]
     rows = [_json.loads(ln) for ln in lines if ln.startswith("{")]
     assert rows and all(
@@ -535,7 +543,7 @@ def test_cli_engine_sync_and_compact(spark, tmp_path_factory, capsys):
 
     # D2 engine reconciliation through the CLI: the freshly-synced store
     # must reconcile exactly against its own source blocks (exit 0)
-    assert main(["verify", "--engine", "--store", str(d / "store"),
+    assert main(["verify", "--engine", "--store", store,
                  "--blocks", str(d / "engine_blocks")]) == 0
     assert "0 mismatched" in capsys.readouterr().out
 
@@ -689,24 +697,56 @@ def test_cli_prepare(tmp_path_factory, capsys):
     assert packed.count() == corpus.count()
 
 
-def test_cli_sync_manifest_store_impl(spark, tmp_path_factory, capsys):
-    """`sync --store-impl manifest` end-to-end: manifest-committed store,
-    HWM through the layout-aware probe, scan via compacted OpsStore
-    equivalence is out of scope here — ops_view IS the reader."""
+def test_cli_manifest_round_trip(spark, tmp_path_factory, capsys):
+    """The CLI round trip on the sink's own manifest stores, with no
+    materialized copy in between: sync (head, then irreversible into a
+    second sink), compact in place, find/scan straight off the sink,
+    expire --gc, then reset — which drops the HWM so the next sync is a
+    fresh start."""
     from meeseeker_spark.__main__ import main
+    from meeseeker_spark.manifest import ManifestStore
 
     fx = fixtures.generate(n_blocks=21, seed=17)
     d = tmp_path_factory.mktemp("climanifest")
     _write_batches(fx.blocks, "blocks", str(d / "blocks"), 2)
     assert main(["sync", "--blocks", str(d / "blocks"),
-                 "--out", str(d / "out"), "--store-impl", "manifest"]) == 0
+                 "--out", str(d / "out")]) == 0
     out = capsys.readouterr().out
     assert f"synced through block {fx.blocks[-1]['block_num']}" in out
-    assert (d / "out" / "ops" / "_manifest").exists()
-    assert not list((d / "out" / "ops").glob("batch_id=*"))
-    view = P.ops_view(spark, str(d / "out" / "ops"))
+    store = str(d / "out" / "ops")
+    view = P.ops_view(spark, store)
     expected_real = [o for o in fx.ops_expected if o["trx_id"] != "0" * 40]
     assert view.count() == len(expected_real)
+
+    # irreversible mode holds the youngest --lib-lag blocks back
+    assert main(["sync", "--blocks", str(d / "blocks"),
+                 "--out", str(d / "out_irr"), "--mode", "irreversible",
+                 "--lib-lag", "5"]) == 0
+    tip = fx.blocks[-1]["block_num"]
+    irr = P.last_block_num(spark, str(d / "out_irr" / "ops"))
+    assert f"synced through block {irr}" in capsys.readouterr().out
+    assert irr <= tip - 5
+    pending = spark.read.parquet(str(d / "out_irr" / "ops_pending"))
+    assert pending.agg({"block_num": "min"}).first()[0] > tip - 5
+
+    assert main(["compact", "--ops", store]) == 0
+    assert "compacted" in capsys.readouterr().out
+    assert len(ManifestStore(spark, store).files()) == 1
+    assert P.last_block_num(spark, store) == tip
+
+    blk = str(expected_real[0]["block_num"])
+    assert main(["find", "block", blk, "--store", store]) == 0
+    assert f"hive:{blk}:" in capsys.readouterr().out
+    assert main(["scan", "hive:*:vote", "--store", store]) == 0
+    capsys.readouterr()
+
+    assert main(["expire", "--store", store, "--gc"]) == 0
+    assert "expired 0 rows" in capsys.readouterr().out
+    assert P.ops_view(spark, store).count() == len(expected_real)
+
+    assert main(["reset", "hive", "--store", store]) == 0
+    assert main(["scan", "hive:*", "--store", store]) == 1   # emptied
+    assert P.last_block_num(spark, store) is None
 
 
 def test_cli_prepare_optin_flags(tmp_path_factory, capsys):
@@ -841,48 +881,6 @@ def test_cli_prepare_temperature(tmp_path_factory, capsys):
     corpus = spark.read.parquet(str(d / "out" / "corpus"))
     assert corpus.count() == report["mixed"]
     assert "copy" in corpus.columns
-
-
-def test_cli_migrate_dirs_store(spark, tmp_path_factory, capsys):
-    """`migrate --ops` upgrades the WHOLE legacy dirs sink in place —
-    ops + the <ops>_meta HWM sibling + the channels store — and the
-    acceptance bar is a RESUMED checkpointed sync on the manifest
-    default: late blocks must ingest with no mixed-layout refusal and
-    no doubles."""
-    from meeseeker_spark.__main__ import main
-
-    fx = fixtures.generate(n_blocks=21, seed=13)
-    d = tmp_path_factory.mktemp("climigrate")
-    half = len(fx.blocks) // 2
-    _write_batches(fx.blocks[:half], "blocks", str(d / "blocks"), 2)
-    assert main(["sync", "--blocks", str(d / "blocks"),
-                 "--out", str(d / "out"), "--store-impl", "dirs"]) == 0
-    capsys.readouterr()
-    before = sorted(r["key"] for r in
-                    P.ops_view(spark, str(d / "out" / "ops")).collect())
-    assert main(["migrate", "--ops", str(d / "out" / "ops")]) == 0
-    assert "migrated" in capsys.readouterr().out
-    for sub in ("ops", "ops_meta", "channels"):
-        assert (d / "out" / sub / "_manifest").exists(), sub
-        assert not list((d / "out" / sub).glob("batch_id=*")), sub
-    after = sorted(r["key"] for r in
-                   P.ops_view(spark, str(d / "out" / "ops")).collect())
-    assert after == before and after
-
-    # the real acceptance: resume the SAME checkpoint post-migration
-    # with the manifest default — late blocks land, nothing doubled
-    _write_batches(fx.blocks[half:], "blocks", str(d / "blocks2"), 1)
-    for f in (d / "blocks2").glob("*.parquet"):
-        os.rename(f, d / "blocks" / ("late-" + f.name))
-    assert main(["sync", "--blocks", str(d / "blocks"),
-                 "--out", str(d / "out")]) == 0
-    resumed = P.ops_view(spark, str(d / "out" / "ops"))
-    keys = [r["key"] for r in resumed.collect()]
-    expected_real = [o for o in fx.ops_expected if o["trx_id"] != "0" * 40]
-    assert sorted(keys) == sorted(o["key"] for o in expected_real)
-    assert len(keys) == len(set(keys))
-    assert P.last_block_num(spark, str(d / "out" / "ops")) \
-        == fx.blocks[-1]["block_num"]
 
 
 def test_cli_screen(spark, tmp_path_factory, capsys):
@@ -1151,55 +1149,18 @@ def test_cli_screen_retention_rebuild_drill(spark, tmp_path_factory,
 
 def test_cli_compact_bounds_the_channel_sink(spark, tmp_path_factory,
                                              capsys):
-    """r15 durability review: compact_channel_store existed but had NO
-    CLI caller, and the manifest-layout channels store had no
-    compaction at all — the channel sink was the one per-trigger
-    surface `compact` never bounded, growing files (and, on manifest,
-    the recorded batch-id list) with stream age.  `compact` now folds
-    the channels sibling by default on BOTH layouts."""
-    import json as _json
-
+    """r15 durability review: the channels store had no compaction at
+    all — the channel sink was the one per-trigger surface `compact`
+    never bounded, growing files and the recorded batch-id list with
+    stream age.  `compact` now folds the channels sibling by default."""
     from meeseeker_spark.__main__ import main
     from meeseeker_spark.manifest import ManifestStore, is_manifest_store
     from meeseeker_spark.streaming import pipeline as P
 
     fx = fixtures.generate(n_blocks=42, seed=13)
 
-    # dirs layout: channel batch dirs fold into the <channels>_store
-    d = tmp_path_factory.mktemp("clichancompact")
-    _write_batches(fx.blocks, "blocks", str(d / "blocks"), 3)
-    assert main(["sync", "--blocks", str(d / "blocks"),
-                 "--out", str(d / "out"), "--store-impl", "dirs"]) == 0
-    capsys.readouterr()
-    chan = str(d / "out" / "channels")
-    want = P.channel_events_view(spark, chan).count()
-    assert want > 0
-    assert main(["compact", "--ops", str(d / "out" / "ops"),
-                 "--store", str(d / "store")]) == 0
-    out = capsys.readouterr().out
-    assert "channel batch" in out
-    assert not [x for x in os.listdir(chan) if x.startswith("batch_id=")]
-    got = P.channel_events_view(spark, chan, chan + "_store").count()
-    assert got == want
-
-    # migrate after compact: the compacted ops store AND the
-    # <channels>_store sibling (compact's own default destination) are
-    # absorbed into the manifests by default — without the derivation a
-    # compacted-then-migrated sink silently stranded its entire channel
-    # history (r15 self-review)
-    assert main(["migrate", "--ops", str(d / "out" / "ops"),
-                 "--store", str(d / "store")]) == 0
-    mig_out = capsys.readouterr().out
-    assert "store_rows" in mig_out and "channels_store_rows" in mig_out
-    assert not os.path.exists(str(d / "store"))
-    assert not os.path.exists(chan + "_store")
-    assert ManifestStore(spark, chan).df().count() == want
-    ops_rows = ManifestStore(spark, str(d / "out" / "ops")).df().count()
-    assert ops_rows > 0
-
-    # manifest layout (the default): the channels manifest compacts in
-    # place — fewer committed files, batch ids pruned to the tail, rows
-    # intact
+    # the channels manifest compacts in place — fewer committed files,
+    # batch ids pruned to the tail, rows intact
     d2 = tmp_path_factory.mktemp("clichancompact_m")
     _write_batches(fx.blocks, "blocks", str(d2 / "blocks"), 3)
     assert main(["sync", "--blocks", str(d2 / "blocks"),
@@ -1211,8 +1172,7 @@ def test_cli_compact_bounds_the_channel_sink(spark, tmp_path_factory,
     pre_files = len(ms.files())
     pre_rows = ms.df().count()
     assert pre_files > 1
-    assert main(["compact", "--ops", str(d2 / "out" / "ops"),
-                 "--store", str(d2 / "ignored")]) == 0
+    assert main(["compact", "--ops", str(d2 / "out" / "ops")]) == 0
     out2 = capsys.readouterr().out
     assert "channel manifest" in out2
     assert len(ms.files()) < pre_files

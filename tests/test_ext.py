@@ -6609,59 +6609,6 @@ def test_exact_prescreen_split_matches_exact_join(spark):
     assert inline <= join_maybe
 
 
-def test_exact_pair_dot_bit_identity(spark):
-    """r16 Arrow verify dot: exact_pair_dot must be BIT-identical to the
-    interpreted aggregate(zip_with(...)) fold — including null/ragged
-    semantics (null vector, null element, length mismatch → NULL; empty
-    arrays → 0.0) — so the 4-dp rounding downstream can never flip."""
-    from pyspark.sql import Row
-
-    from meeseeker_spark.ext.similarity import dot, exact_pair_dot
-
-    rows = [
-        Row(i=1, a=[1.0, 2.0, 3.0], b=[4.0, 5.0, 6.0]),
-        Row(i=2, a=[0.1, 0.2], b=[0.3, 0.7]),
-        Row(i=3, a=[1e-17, 1.0, -1e-17], b=[1.0, 1e-17, 1.0]),  # order-sensitive
-        Row(i=4, a=[], b=[]),                                   # empty → 0.0
-        Row(i=8, a=[0.0, 0.0], b=[-1.0, -1.0]),  # -0.0 products: the JVM
-        # fold's 0.0 seed yields +0.0; the kernel must too (r16 review)
-        Row(i=5, a=[1.0, 2.0], b=[1.0, 2.0, 3.0]),              # ragged → NULL
-        Row(i=6, a=None, b=[1.0]),                              # null vec → NULL
-        Row(i=7, a=[1.0, None], b=[1.0, 1.0]),                  # null elem → NULL
-    ]
-    df = spark.createDataFrame(
-        rows, "i int, a array<double>, b array<double>")
-    jvm = {r["i"]: r["d"] for r in
-           df.select("i", dot(F.col("a"), F.col("b")).alias("d")).collect()}
-    arrow = {r["i"]: r["_dot"] for r in
-             exact_pair_dot(df.select("i", "a", "b"), "a", "b").collect()}
-    # exact equality, bit-for-bit (None == None included)
-    import struct
-
-    def bits(x):
-        return None if x is None else struct.pack("<d", x)
-    assert {k: bits(v) for k, v in jvm.items()} == \
-           {k: bits(v) for k, v in arrow.items()}
-
-
-def test_incremental_embedding_dups_arrow_parity(spark):
-    """The arrow verify path must reproduce the HOF path EXACTLY on the
-    full fixture candidate set (ids and 4-dp sims bit-equal) — the
-    strongest form of the boundary audit VERDICT r15 item 5 asked for:
-    with bit-identical dots there is no boundary to drift across."""
-    from meeseeker_spark.ext.dedup import incremental_embedding_dups
-    from meeseeker_spark.tables import load
-
-    emb = load(spark, SF, "embeddings")
-    new = emb.where(F.col("vec_id") % 5 == 0)
-    corpus = emb.where(F.col("vec_id") % 5 != 0)
-    a = sorted(tuple(r) for r in incremental_embedding_dups(
-        new, corpus, arrow=True).collect())
-    b = sorted(tuple(r) for r in incremental_embedding_dups(
-        new, corpus, arrow=False).collect())
-    assert a == b and len(a) > 0
-
-
 def test_connected_components_string_ids_both_regimes(spark):
     """r16 type-contract hardening (VERDICT r15 item 3): string-keyed
     graphs must work through BOTH regimes and agree.  The driver

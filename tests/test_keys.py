@@ -216,14 +216,18 @@ def test_glob_unified_surface_fuzz(spark, ops, tmp_path_factory):
     vocabulary below now draws those shapes every run)."""
     import random
 
+    from pyspark.sql import functions as F
+
+    from meeseeker_spark.manifest import ManifestStore
     from meeseeker_spark.query import OpsStore, UnifiedStore
 
     d = tmp_path_factory.mktemp("unifuzz")
     rows = [(i, 4200 + 21 * i, [f"w{i}", f"w{i+1}"]) for i in range(6)]
-    (spark.createDataFrame(
-        rows, "id bigint, next_shuffle_block_num bigint, "
-              "current_shuffled_witnesses array<string>")
-     .write.parquet(str(d / "sched" / "batch_id=0")))
+    ManifestStore(spark, str(d / "sched")).append(
+        spark.createDataFrame(
+            rows, "id bigint, next_shuffle_block_num bigint, "
+                  "current_shuffled_witnesses array<string>")
+        .withColumn("batch_id", F.lit(0)), 0)
     OpsStore.write(ops, str(d / "ops"))
     u = UnifiedStore(spark, str(d / "ops"), str(d / "sched"))
     keys = [r["key"] for r in u.df().select("key").collect()]

@@ -258,7 +258,7 @@ def test_cli_expire_both_layouts(spark, tmp_path, capsys):
     assert "expired 1 rows" in capsys.readouterr().out
     assert sorted(r["id"] for r in m.df().collect()) == [2]
 
-    # dir layout (chain-partitioned, retention.expire path)
+    # chain=-partitioned layout (retention.expire's rename protocol)
     d = tmp_path / "dstore"
     df = spark.createDataFrame(
         [("hive", 1, old), ("hive", 2, None)],
@@ -279,37 +279,6 @@ def test_gc_survives_version_gap(spark, tmp_path):
     s.gc(keep_versions=1)                            # drops v1, v2 json
     assert s.gc(keep_versions=2) >= 0                # window spans the gap
     assert sorted(r["id"] for r in s.df().collect()) == [0, 1, 2]
-
-
-def test_mixed_layout_refused(spark, tmp_path):
-    """A path carrying both batch_id=N dirs and a _manifest is refused by
-    writers and readers instead of silently hiding one side (review r4)."""
-    from meeseeker_spark.streaming.pipeline import (_batch_writer,
-                                                    _batched_view)
-
-    p = tmp_path / "store"
-    _batch_writer("dirs")(_rows(spark, [1]), str(p), 0)
-    with pytest.raises(RuntimeError, match="batch_id=N dirs"):
-        _batch_writer("manifest")(_rows(spark, [2]), str(p), 1)
-
-    m = tmp_path / "mstore"
-    _batch_writer("manifest")(_rows(spark, [1]), str(m), 0)
-    with pytest.raises(RuntimeError, match="manifest store"):
-        _batch_writer("dirs")(_rows(spark, [2]), str(m), 1)
-
-    # reader guard: a hand-mixed dir is refused loudly — but only once a
-    # manifest version is COMMITTED.  A bare _manifest marker (e.g. a
-    # migration crashed before its commit rename, ADVICE r6) leaves the
-    # dirs layout readable instead of bricking the store until re-run.
-    os.makedirs(p / "_manifest")
-    assert [r["id"] for r in _batched_view(spark, str(p), None).collect()] \
-        == [1]
-    ManifestStore(spark, str(p)).append(_rows(spark, [9]))
-    with pytest.raises(RuntimeError, match="BOTH"):
-        _batched_view(spark, str(p), None)
-    os.makedirs(tmp_path / "store2x")
-    with pytest.raises(RuntimeError, match="compact it"):
-        _batched_view(spark, str(m), str(tmp_path / "store2x"))
 
 
 def test_manifest_random_op_sequences(spark, tmp_path_factory):
@@ -421,74 +390,6 @@ def test_time_travel_horizon_after_gc(spark, tmp_path):
     # v4 is inside the kept window: its files survived gc
     assert sorted(r["id"] for r in s.df(version=4).collect()) == [0, 1, 2, 3]
     assert [r["id"] for r in s.df().collect()] == [99]
-
-
-def test_migrate_dirs_to_manifest(spark, tmp_path):
-    """Legacy batch_id=N sink → manifest store at the same path: rows
-    preserved, batch ids recorded (so a replayed batch short-circuits),
-    and the commit-landed-cleanup-lost crash window finishes on
-    re-run."""
-    from meeseeker_spark.manifest import migrate_dirs_to_manifest
-
-    path = str(tmp_path / "legacy")
-    for bid, ids in ((0, [1, 2]), (1, [3]), (2, [4, 5, 6])):
-        _rows(spark, ids).write.parquet(os.path.join(path, f"batch_id={bid}"))
-
-    assert migrate_dirs_to_manifest(spark, path) == 3
-    s = ManifestStore(spark, path)
-    assert sorted(r["id"] for r in s.df().collect()) == [1, 2, 3, 4, 5, 6]
-    assert "batch_id" not in s.df().columns
-    assert s.committed_batch_ids() == {0, 1, 2}
-    assert not [d for d in os.listdir(path) if d.startswith("batch_id=")]
-    # carried-over idempotence: a checkpoint replay of batch 1 is a no-op
-    assert s.append(_rows(spark, [99]), batch_id=1) is False
-    assert sorted(r["id"] for r in s.df().collect()) == [1, 2, 3, 4, 5, 6]
-    # idempotent re-run on a clean store
-    assert migrate_dirs_to_manifest(spark, path) == 0
-
-    # crash window: commit landed but a batch dir survived → re-run
-    # verifies the dir's rows are already committed, then deletes it
-    _rows(spark, [4, 5, 6]).write.parquet(os.path.join(path, "batch_id=2"))
-    assert migrate_dirs_to_manifest(spark, path) == 1
-    assert sorted(r["id"] for r in s.df().collect()) == [1, 2, 3, 4, 5, 6]
-
-    # a COLLIDING batch id carrying NEW rows (a dirs-writer resumed on
-    # a fresh checkpoint restarts ids at 0) must be refused, not
-    # silently deleted — the id alone proves nothing
-    _rows(spark, [7]).write.parquet(os.path.join(path, "batch_id=2"))
-    with pytest.raises(RuntimeError, match="NOT in the committed table"):
-        migrate_dirs_to_manifest(spark, path)
-    # the data is still there for explicit re-ingest
-    assert os.path.isdir(os.path.join(path, "batch_id=2"))
-    import shutil as _sh
-    _sh.rmtree(os.path.join(path, "batch_id=2"))
-
-    # a stray POST-migration dirs-writer batch (id beyond the committed
-    # set) carrying NEW rows is refused loudly too — by CONTENT, same
-    # gate as the colliding-id case
-    _rows(spark, [8]).write.parquet(os.path.join(path, "batch_id=9"))
-    with pytest.raises(RuntimeError, match="NOT in the committed table"):
-        migrate_dirs_to_manifest(spark, path)
-    _sh.rmtree(os.path.join(path, "batch_id=9"))
-
-    # ADVICE r14: after compact() prunes the recorded batch ids to the
-    # replayable tail, a migration-crash leftover whose id fell OUT of
-    # the committed set must still reach the content-verified delete —
-    # id membership alone must not trigger the 're-ingest' refusal
-    s.append(_rows(spark, [10]), batch_id=7)
-    s.compact()                       # prunes ids to the {max-1, max} tail
-    assert 0 not in s.committed_batch_ids()
-    _rows(spark, [1, 2]).write.parquet(os.path.join(path, "batch_id=0"))
-    assert migrate_dirs_to_manifest(spark, path) == 1      # covered → clean
-    assert sorted(r["id"] for r in s.df().collect()) == [1, 2, 3, 4, 5, 6, 10]
-    assert not [d for d in os.listdir(path) if d.startswith("batch_id=")]
-
-
-def test_migrate_nothing_to_do(spark, tmp_path):
-    from meeseeker_spark.manifest import migrate_dirs_to_manifest
-
-    with pytest.raises(FileNotFoundError):
-        migrate_dirs_to_manifest(spark, str(tmp_path / "missing"))
 
 
 def test_retention_api_delegates_to_manifest(spark, tmp_path):
@@ -639,99 +540,6 @@ def test_manifest_cas_two_process_race(spark, tmp_path):
     survivor.gc()
     assert not any(os.path.exists(os.path.join(path, f)) for f in loser)
     assert {r["id"] for r in survivor.df().collect()} == {1, 2} | winner_rows
-
-
-def test_migrate_meta_keeps_physical_batch_id(spark, tmp_path):
-    """r15 durability review: the sink's _meta HWM rows carry batch_id
-    as a PHYSICAL data column (compact_meta's manifest fold aggregates
-    max(batch_id) over it), but migration dropped the column with the
-    partition dir — the migrated store's first compact crashed on an
-    unresolvable batch_id.  Migration now keeps the column exactly when
-    the dir files carry it physically (an ops store, which doesn't,
-    still migrates without one)."""
-    from meeseeker_spark.manifest import migrate_dirs_to_manifest
-    from meeseeker_spark.streaming.pipeline import compact_meta
-
-    ops = str(tmp_path / "ops")
-    meta = ops + "_meta"
-    for b in range(3):
-        (spark.createDataFrame([("hive", 100 + b)],
-                               "chain string, last_block_num long")
-         .withColumn("batch_id", F.lit(b))
-         .write.parquet(os.path.join(meta, f"batch_id={b}")))
-    assert migrate_dirs_to_manifest(spark, meta) == 3
-    s = ManifestStore(spark, meta)
-    assert "batch_id" in s.df().columns
-    # the previously-crashing maintenance pass now folds cleanly
-    assert compact_meta(spark, ops) == 3
-    row = s.df().collect()
-    assert len(row) == 1 and row[0]["last_block_num"] == 102
-    # an ops-shaped store (no physical batch_id) still drops the
-    # partition column on migration, matching the native writer
-    path2 = str(tmp_path / "ops2")
-    for b in range(2):
-        (spark.createDataFrame([(f"k{b}", "hive")],
-                               "key string, chain string")
-         .write.parquet(os.path.join(path2, f"batch_id={b}")))
-    assert migrate_dirs_to_manifest(spark, path2) == 2
-    assert "batch_id" not in ManifestStore(spark, path2).df().columns
-
-
-def test_migrate_absorbs_compacted_store(spark, tmp_path):
-    """r15 durability review: a deployment that ran `compact` before
-    migrating holds the BULK of its data in a separate store dir — and
-    a migrated manifest refuses store_path at read time, stranding it.
-    migrate_sink_to_manifest now absorbs the store (key-anti-join: the
-    batch-dir version of a key wins), removes the dir, and is
-    idempotent across a crash between the append commit and the
-    delete."""
-    import shutil as _sh
-
-    from meeseeker_spark.manifest import migrate_sink_to_manifest
-    from meeseeker_spark.query import OpsStore
-
-    ops = str(tmp_path / "ops")
-    store = str(tmp_path / "store")
-    ddl = "key string, chain string, block_num long, trx_id string, trx_index long"
-    # compacted history: keys a..c
-    OpsStore.write(spark.createDataFrame(
-        [(f"hive:{i}:t:0:vote", "hive", i, "t", 0) for i in (1, 2, 3)],
-        ddl), store)
-    # residual batch dirs: key 3 again (newer copy) + key 4
-    (spark.createDataFrame(
-        [("hive:3:t:0:vote", "hive", 3, "t", 0),
-         ("hive:4:t:0:vote", "hive", 4, "t", 0)], ddl)
-     .write.parquet(os.path.join(ops, "batch_id=0")))
-
-    counts = migrate_sink_to_manifest(spark, ops, store_path=store)
-    assert counts["ops"] == 1
-    assert counts["store_rows"] == 2          # keys 1,2 (3 was committed)
-    assert not os.path.exists(store)
-    got = sorted(r["block_num"]
-                 for r in ManifestStore(spark, ops).df().collect())
-    assert got == [1, 2, 3, 4]
-
-    # crash window: append landed, store delete lost → re-run absorbs
-    # nothing new and just finishes the delete
-    OpsStore.write(spark.createDataFrame(
-        [(f"hive:{i}:t:0:vote", "hive", i, "t", 0) for i in (1, 2)],
-        ddl), store)
-    counts2 = migrate_sink_to_manifest(spark, ops, store_path=store)
-    assert counts2["store_rows"] == 0
-    assert not os.path.exists(store)
-    assert sorted(r["block_num"] for r in
-                  ManifestStore(spark, ops).df().collect()) == [1, 2, 3, 4]
-
-    # fully-compacted sink (no batch dirs at all): the absorb creates
-    # the manifest instead of FileNotFoundError
-    ops2 = str(tmp_path / "ops_full")
-    store2 = str(tmp_path / "store_full")
-    OpsStore.write(spark.createDataFrame(
-        [("hive:9:t:0:vote", "hive", 9, "t", 0)], ddl), store2)
-    c3 = migrate_sink_to_manifest(spark, ops2, store_path=store2)
-    assert c3["ops"] == 0 and c3["store_rows"] == 1
-    assert [r["block_num"] for r in
-            ManifestStore(spark, ops2).df().collect()] == [9]
 
 
 def test_maintenance_gc_leaves_one_version_of_grace(spark, tmp_path):

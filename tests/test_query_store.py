@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from meeseeker_spark import fixtures, retention
 from meeseeker_spark.flatten import flatten_engine_blocks, flatten_ops_with_virtual
+from meeseeker_spark.manifest import ManifestStore
 from meeseeker_spark.query import OpsStore
 from meeseeker_spark.schemas import BLOCKS, ENGINE_BLOCKS, VIRTUAL_OPS
 
@@ -393,7 +394,8 @@ def test_unified_store_schedule_scan(spark, tmp_path_factory, store):
     sdf = spark.createDataFrame(
         rows, "id bigint, next_shuffle_block_num bigint, "
               "current_shuffled_witnesses array<string>")
-    sdf.write.parquet(str(d / "batch_id=0"))
+    ManifestStore(spark, str(d)).append(
+        sdf.withColumn("batch_id", F.lit(0)), 0)
 
     u = UnifiedStore(spark, store.path, str(d))
     got = u.scan("hive:witness:schedule:*").collect()
@@ -420,19 +422,18 @@ def test_schedule_store_dedup_survivor_is_newest_batch(
         spark, tmp_path_factory):
     """Key-dedup determinism (r14 VERDICT watch-item b): if a replay ever
     republishes the SAME next_shuffle_block_num with a DIFFERENT payload,
-    the survivor is the newest batch_id's row — the sink's
-    mode('overwrite') replay semantics — never an arbitrary pick."""
+    the survivor is the newest batch_id's row — the newest publish —
+    never an arbitrary pick."""
     from meeseeker_spark.query import ScheduleStore
 
     d = tmp_path_factory.mktemp("scheddedup")
     ddl = ("id bigint, next_shuffle_block_num bigint, "
            "current_shuffled_witnesses array<string>")
-    spark.createDataFrame(
-        [(1, 4200, ["stale_w1"]), (2, 4221, ["w2"])], ddl,
-    ).write.parquet(str(d / "batch_id=3"))
-    spark.createDataFrame(
-        [(1, 4200, ["fresh_w1", "fresh_w2"])], ddl,
-    ).write.parquet(str(d / "batch_id=7"))
+    log = ManifestStore(spark, str(d))
+    for batch_id, rows in ((3, [(1, 4200, ["stale_w1"]), (2, 4221, ["w2"])]),
+                           (7, [(1, 4200, ["fresh_w1", "fresh_w2"])])):
+        log.append(spark.createDataFrame(rows, ddl)
+                   .withColumn("batch_id", F.lit(batch_id)), batch_id)
 
     got = {r["block_num"]: r["value"]
            for r in ScheduleStore(spark, str(d)).df().collect()}
@@ -442,27 +443,6 @@ def test_schedule_store_dedup_survivor_is_newest_batch(
     again = {r["block_num"]: r["value"]
              for r in ScheduleStore(spark, str(d)).df().collect()}
     assert got == again
-
-
-def test_expire_refuses_raw_batch_dirs_sink(spark, tmp_path_factory):
-    """r15 review: a raw per-trigger batch_id=N sink has neither a
-    manifest nor chain= partitions, so it fell into the whole-store
-    swap — which flattens the layout _batched_view and checkpoint
-    replay depend on (silent reader data loss).  expire must refuse
-    loudly and point at compact."""
-    import pytest as _pytest
-
-    from meeseeker_spark.retention import expire
-
-    d = tmp_path_factory.mktemp("rawsink")
-    spark.createDataFrame(
-        [(1, "k1")], "block_num long, key string",
-    ).write.parquet(str(d / "out" / "batch_id=0"))
-    with _pytest.raises(ValueError, match="compact"):
-        expire(spark, str(d / "out"), ttl_s=1)
-    # the layout is untouched by the refusal
-    import os as _os
-    assert _os.path.isdir(d / "out" / "batch_id=0")
 
 
 def test_flatten_engine_chain_name_enforced(spark):
@@ -670,40 +650,6 @@ def test_expire_null_chain_partition(spark, tmp_path_factory):
     # no swap remnants
     assert not [x for x in _os.listdir(str(d / "store"))
                 if x.startswith((".tmp_", ".old_"))]
-
-
-def test_chain_reset_refuses_raw_batch_dirs_sink(spark, tmp_path_factory):
-    """r15 durability review: a chain-specific reset on a raw streaming
-    batch-dirs sink used to fall into the partition-drop branch, delete
-    NOTHING (chain is a data column there), and still destroy the _meta
-    HWM and _pending staging dirs — keys stayed readable while the next
-    sync made a fresh-start decision and pending irreversible rows were
-    silently lost.  Refused loudly now, BEFORE sync state is touched;
-    `reset all` still truncates."""
-    import os as _os
-
-    d = tmp_path_factory.mktemp("reset_batchdirs")
-    path = str(d / "ops")
-    ddl = ("key string, chain string, block_num long, trx_id string, "
-           "trx_index long")
-    (spark.createDataFrame(
-        [("hive:1:t:0:vote", "hive", 1, "t", 0)], ddl)
-     .write.parquet(_os.path.join(path, "batch_id=0")))
-    _os.makedirs(path + "_meta")
-    _os.makedirs(path + "_pending")
-
-    st = OpsStore(spark, path)
-    with pytest.raises(ValueError, match="compact first"):
-        st.reset("hive")
-    # the refusal fired BEFORE the sync-state drop: both dirs survive
-    assert _os.path.isdir(path + "_meta")
-    assert _os.path.isdir(path + "_pending")
-    assert _os.path.isdir(_os.path.join(path, "batch_id=0"))
-    # truncate is still available
-    st.reset("all")
-    assert not _os.listdir(path)
-    assert not _os.path.exists(path + "_meta")
-    assert not _os.path.exists(path + "_pending")
 
 
 def test_chain_reset_rewrites_unpartitioned_store(spark, tmp_path_factory):

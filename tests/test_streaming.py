@@ -48,10 +48,8 @@ def test_stream_matches_batch(spark, fx, tmp_path_factory):
     got = P.ops_view(spark, str(d / "ops"))
     assert sorted(r["key"] for r in got.collect()) == sorted(
         o["key"] for o in fx.ops_expected)
-    # default sink is manifest-committed; multiple micro-batches happened
-    # (one manifest commit per batch, no batch_id= dirs anywhere)
+    # one manifest commit per micro-batch; multiple micro-batches happened
     from meeseeker_spark.manifest import ManifestStore
-    assert not glob.glob(str(d / "ops" / "batch_id=*"))
     v = ManifestStore(spark, str(d / "ops")).current_version()
     assert v and v > 1
     # channel fan-out landed
@@ -131,9 +129,8 @@ def test_schedule_publish_once(spark, fx, tmp_path_factory):
         P.read_schedule_stream(spark, str(d / "in")),
         str(d / "out"), str(d / "ckpt"))
     q.awaitTermination(120)
-    out = spark.read.option("basePath", str(d / "out")).parquet(
-        str(d / "out") + "/batch_id=*")
-    rows = out.collect()
+    from meeseeker_spark.manifest import ManifestStore
+    rows = ManifestStore(spark, str(d / "out")).df().collect()
     assert len(rows) == len(fx.witness_schedules)
     assert (sorted(r["next_shuffle_block_num"] for r in rows)
             == sorted(s["next_shuffle_block_num"] for s in fx.witness_schedules))
@@ -243,29 +240,25 @@ def test_pending_swap_recovery(tmp_path):
     assert os.path.isdir(base) and not os.path.exists(base + ".old")
 
 
-@pytest.mark.parametrize("store_impl", ["dirs", "manifest"])
 def test_irreversible_replay_after_commit_keeps_folded_rows(
-        spark, fx, tmp_path_factory, store_impl):
+        spark, fx, tmp_path_factory):
     """Regression (r13 review): a batch replayed AFTER its pending-dir
     commit but BEFORE the checkpoint commit (the standard at-least-once
     window) used to recompute its split against the already-swapped
     pending dir — the rows folded in from the old pending set vanished
-    from the recomputed final_df, and under the legacy ``dirs`` store
-    the batch_id=N overwrite destroyed the only remaining copy (silent
-    data loss; the default manifest store was safe only via its
-    recorded-batch-id short-circuit).  The commit now stamps the pending
+    from the recomputed final_df.  The commit now stamps the pending
     dir with its producing batch id and a replay seeing its own stamp
-    skips the whole trigger.
+    skips the whole trigger (the output appends would short-circuit on
+    their recorded batch ids anyway; the stamp also keeps the pending
+    swap from running twice).
 
     The replay is authentic: after the folding run completes, the
     checkpoint's commits/N marker for the last batch is deleted —
     Structured Streaming then replays exactly that batch from its
-    offsets log on restart.
+    offsets log on restart."""
+    from meeseeker_spark.manifest import ManifestStore
 
-    Parametrized over both store layouts: ``dirs`` exercises the stamp
-    fix itself; ``manifest`` (the default) turns the 'was already safe
-    via its recorded-batch-id short-circuit' claim into a pin."""
-    d = tmp_path_factory.mktemp(f"irrev_replay_{store_impl}")
+    d = tmp_path_factory.mktemp("irrev_replay")
     half = len(fx.blocks) // 2
     _write_batches(fx.blocks[:half], "blocks", str(d / "blocks"), 1)
     LAG = 5
@@ -275,7 +268,7 @@ def test_irreversible_replay_after_commit_keeps_folded_rows(
             P.read_block_stream(spark, str(d / "blocks")), None)
         q = P.start_ingest(ops, str(d / "ops"), str(d / "channels"),
                            str(d / "ckpt"), mode="irreversible",
-                           lib_lag=LAG, store_impl=store_impl)
+                           lib_lag=LAG)
         q.awaitTermination(120)
 
     run()                                    # batch 0: tail rows pend
@@ -295,7 +288,7 @@ def test_irreversible_replay_after_commit_keeps_folded_rows(
             P.channel_events_view(spark, str(d / "channels")).collect())
         meta = sorted(
             tuple(r) for r in
-            P._batched_view(spark, str(d / "ops") + "_meta", None).collect())
+            ManifestStore(spark, str(d / "ops") + "_meta").df().collect())
         return ops, chans, meta
 
     before = snapshot()
@@ -320,23 +313,23 @@ def test_irreversible_replay_after_commit_keeps_folded_rows(
     assert snapshot() == before
 
 
-@pytest.mark.parametrize("store_impl", ["dirs", "manifest"])
 def test_irreversible_replay_before_commit_all_sinks_converge(
-        spark, fx, tmp_path_factory, store_impl, monkeypatch):
+        spark, fx, tmp_path_factory, monkeypatch):
     """The other replay window (VERDICT r13 item 1): a crash AFTER every
     output landed but BEFORE the pending-dir commit — Structured
     Streaming replays the batch against the UNCHANGED pending dir, so
-    the recomputed split is identical and the rewrite is idempotent
-    (batch_id=N overwrite under ``dirs``; recorded-batch-id
-    short-circuit under ``manifest``).  Pin it end-to-end by comparing
-    ALL THREE sinks (ops keys, channel rows, _meta rows) of a crashed-
-    then-recovered run against a crash-free control run.
+    the recomputed split is identical and every output append
+    short-circuits on its recorded batch id.  Pin it end-to-end by
+    comparing ALL THREE sinks (ops keys, channel rows, _meta rows) of a
+    crashed-then-recovered run against a crash-free control run.
 
     The crash is authentic: the sink's ``commit()`` raises on the
     designated batch, failing the trigger after the ops/channel/_meta
     writes completed, exactly the pre-commit half of the at-least-once
     window."""
-    d = tmp_path_factory.mktemp(f"irrev_precommit_{store_impl}")
+    from meeseeker_spark.manifest import ManifestStore
+
+    d = tmp_path_factory.mktemp("irrev_precommit")
     half = len(fx.blocks) // 2
     LAG = 5
 
@@ -351,8 +344,7 @@ def test_irreversible_replay_before_commit_all_sinks_converge(
                 P.read_block_stream(spark, str(root / "blocks")), None)
             q = P.start_ingest(ops, str(root / "ops"),
                                str(root / "channels"), str(root / "ckpt"),
-                               mode="irreversible", lib_lag=LAG,
-                               store_impl=store_impl)
+                               mode="irreversible", lib_lag=LAG)
             q.awaitTermination(120)
 
         run()                            # batch 0: tail rows pend
@@ -381,8 +373,8 @@ def test_irreversible_replay_before_commit_all_sinks_converge(
                      P.ops_view(spark, str(root / "ops")).collect())
         chans = sorted(tuple(r) for r in P.channel_events_view(
             spark, str(root / "channels")).collect())
-        meta = sorted(tuple(r) for r in P._batched_view(
-            spark, str(root / "ops") + "_meta", None).collect())
+        meta = sorted(tuple(r) for r in ManifestStore(
+            spark, str(root / "ops") + "_meta").df().collect())
         return ops, chans, meta
 
     control = scenario(d / "control", crash=False)
@@ -826,9 +818,8 @@ def test_engine_stream_ingest(spark, fx, tmp_path_factory):
     want_rows = sorted(tuple(o[c] for c in cols)
                        for o in fx.engine_ops_expected)
     assert got_rows == want_rows
-    # default sink is manifest-committed; multiple micro-batches happened
+    # one manifest commit per micro-batch; multiple micro-batches happened
     from meeseeker_spark.manifest import ManifestStore
-    assert not glob.glob(str(d / "ops" / "batch_id=*"))
     v = ManifestStore(spark, str(d / "ops")).current_version()
     assert v and v > 1
 
@@ -857,18 +848,34 @@ def test_engine_stream_ingest(spark, fx, tmp_path_factory):
 def test_block_channel_header_gate(spark, fx, tmp_path_factory):
     """MEESEEKER_INCLUDE_BLOCK_HEADER ingest gate (meeseeker.rb:97,
     block_follower_job.rb:60-76): header fields ride in the {chain}:block
-    payload when on; bare {block_num} when off."""
+    payload when on; bare {block_num} when off.  Each trigger is one
+    manifest commit; a checkpoint-wiped replay short-circuits on the
+    recorded batch ids instead of publishing twice."""
     import json as _json
+    import shutil
+
+    from meeseeker_spark.manifest import ManifestStore
+
     d = tmp_path_factory.mktemp("blkchan")
     _write_batches(fx.blocks, "blocks", str(d / "blocks"), 2)
 
     for sub, include in (("with_hdr", True), ("no_hdr", False)):
-        q = P.start_block_channel_publisher(
-            P.read_block_stream(spark, str(d / "blocks")),
-            str(d / sub), str(d / f"ckpt_{sub}"), include_header=include)
-        q.awaitTermination(120)
-        rows = spark.read.option("basePath", str(d / sub)).parquet(
-            str(d / sub) + "/batch_id=*").collect()
+        def run():
+            q = P.start_block_channel_publisher(
+                P.read_block_stream(spark, str(d / "blocks"),
+                                    max_files_per_trigger=1),
+                str(d / sub), str(d / f"ckpt_{sub}"),
+                include_header=include)
+            q.awaitTermination(120)
+
+        run()
+        v = ManifestStore(spark, str(d / sub)).current_version()
+        # one commit per trigger = per block file
+        assert v == len(glob.glob(str(d / "blocks" / "*.parquet")))
+        shutil.rmtree(d / f"ckpt_{sub}")          # full replay
+        run()
+        assert ManifestStore(spark, str(d / sub)).current_version() == v
+        rows = P.channel_events_view(spark, str(d / sub)).collect()
         assert len(rows) == len(fx.blocks)
         payload = _json.loads(rows[0]["payload"])
         assert rows[0]["channel"] == "hive:block"
@@ -876,110 +883,6 @@ def test_block_channel_header_gate(spark, fx, tmp_path_factory):
             assert {"block_num", "previous", "witness"} <= payload.keys()
         else:
             assert set(payload.keys()) == {"block_num"}
-
-
-def test_compact_stream_store(spark, fx, tmp_path_factory):
-    """Small-files maintenance: micro-batch dirs fold into the chain-
-    partitioned OpsStore layout; nothing lost, idempotent, queryable, and
-    the combined view bridges compacted history with post-compaction
-    batches."""
-    import os
-    import shutil
-
-    from meeseeker_spark.query import OpsStore
-
-    d = tmp_path_factory.mktemp("compact")
-    _write_batches(fx.blocks, "blocks", str(d / "blocks"), 4)
-    q = P.start_ingest(
-        P.streaming_ops(
-            P.read_block_stream(spark, str(d / "blocks"),
-                                max_files_per_trigger=1), None),
-        str(d / "ops"), str(d / "channels"), str(d / "ckpt"),
-        store_impl="dirs")   # this test exercises the dirs-layout fallback
-    q.awaitTermination(120)
-
-    want = sorted(o["key"] for o in fx.ops_expected
-                  if o["trx_id"] != "0" * 40)  # real ops only (no vops fed)
-    store = str(d / "store")
-    n = P.compact_stream_store(spark, str(d / "ops"), store)
-    assert n > 1
-    # batch dirs consumed; compacted store holds exactly the streamed keys
-    assert not any(x.startswith("batch_id=")
-                   for x in os.listdir(str(d / "ops")))
-    got = sorted(r["key"] for r in spark.read.parquet(store).collect())
-    assert got == want
-    # chain-partitioned layout → OpsStore queries work (partition pruning)
-    st = OpsStore(spark, store)
-    assert st.scan("hive:*:vote").count() > 0
-    # idempotent: nothing left to compact
-    assert P.compact_stream_store(spark, str(d / "ops"), store) == 0
-
-    # re-stream the same blocks under a FRESH checkpoint: new batch dirs
-    # appear, and the combined view bridges store + batches without doubles
-    q2 = P.start_ingest(
-        P.streaming_ops(
-            P.read_block_stream(spark, str(d / "blocks")), None),
-        str(d / "ops"), str(d / "channels"), str(d / "ckpt2"),
-        store_impl="dirs")
-    q2.awaitTermination(120)
-    combined = P.ops_view(spark, str(d / "ops"), store)
-    assert sorted(r["key"] for r in combined.select("key").collect()) == want
-
-    # crash recovery: leftover .old with missing store rolls back
-    os.rename(store, store + ".old")
-    n3 = P.compact_stream_store(spark, str(d / "ops"), store)
-    assert os.path.exists(store) and not os.path.exists(store + ".old")
-    got3 = sorted(r["key"] for r in spark.read.parquet(store).collect())
-    assert got3 == want and n3 >= 1
-
-
-def test_compact_channel_store(spark, fx, tmp_path_factory):
-    """Channel fan-out compaction: append-only fold into a kind-partitioned
-    channel-clustered layout; counts preserved, channel filters push down,
-    view bridges store + later batches."""
-    import os
-
-    d = tmp_path_factory.mktemp("chancompact")
-    _write_batches(fx.blocks, "blocks", str(d / "blocks"), 4)
-    q = P.start_ingest(
-        P.streaming_ops(
-            P.read_block_stream(spark, str(d / "blocks"),
-                                max_files_per_trigger=1), None),
-        str(d / "ops"), str(d / "channels"), str(d / "ckpt"),
-        store_impl="dirs")   # this test exercises the dirs-layout fallback
-    q.awaitTermination(120)
-
-    raw = spark.read.option("basePath", str(d / "channels")).parquet(
-        str(d / "channels") + "/batch_id=*")
-    want_total = raw.count()
-    want_vote = raw.where("channel = 'hive:op:vote'").count()
-    assert want_vote > 0
-
-    store = str(d / "chstore")
-    n = P.compact_channel_store(spark, str(d / "channels"), store)
-    assert n > 1
-    assert not any(x.startswith("batch_id=")
-                   for x in os.listdir(str(d / "channels")))
-    got = spark.read.parquet(store)
-    assert got.count() == want_total
-    # kind partitioning on disk + channel filter pushed to the scan
-    assert (d2 := [x for x in os.listdir(store) if x.startswith("kind=")])
-    plan = got.where("channel = 'hive:op:vote'")._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "channel" in plan
-    assert got.where("channel = 'hive:op:vote'").count() == want_vote
-    # idempotent when nothing new
-    assert P.compact_channel_store(spark, str(d / "channels"), store) == 0
-
-    # later batches bridge through the view
-    q2 = P.start_ingest(
-        P.streaming_ops(
-            P.read_block_stream(spark, str(d / "blocks")), None),
-        str(d / "ops"), str(d / "channels"), str(d / "ckpt2"),
-        store_impl="dirs")
-    q2.awaitTermination(120)
-    view = P.channel_events_view(spark, str(d / "channels"), store)
-    assert view.count() == want_total * 2  # append-only: both copies visible
 
 
 def test_streaming_dedup_screen(spark, tmp_path_factory):
@@ -1083,12 +986,11 @@ def test_normalize_ts_handles_both_fixture_encodings(spark):
                         ("ts",)).columns == ["other"]
 
 
-def test_manifest_store_impl_matches_dirs(spark, fx, tmp_path_factory):
-    """start_ingest(store_impl='manifest'): same rows, HWM, and channel
-    fan-out as the dir layout, through the layout-detecting readers; a
-    checkpoint-wiped replay short-circuits on recorded batch ids instead
-    of re-committing (the dir scheme's overwrite guarantee, subsumed by
-    the manifest)."""
+def test_ingest_checkpoint_wipe_replay_short_circuits(spark, fx,
+                                                      tmp_path_factory):
+    """start_ingest: same rows as batch flatten, plus HWM and channel
+    fan-out; a checkpoint-wiped replay short-circuits on the recorded
+    batch ids instead of re-committing."""
     import shutil
 
     from meeseeker_spark.manifest import ManifestStore
@@ -1101,7 +1003,7 @@ def test_manifest_store_impl_matches_dirs(spark, fx, tmp_path_factory):
             P.read_block_stream(spark, str(d / "blocks"),
                                 max_files_per_trigger=1), None)
         q = P.start_ingest(ops, str(d / "ops"), str(d / "channels"),
-                           str(d / "ckpt"), store_impl="manifest")
+                           str(d / "ckpt"))
         q.awaitTermination(120)
 
     run()
@@ -1116,8 +1018,6 @@ def test_manifest_store_impl_matches_dirs(spark, fx, tmp_path_factory):
     assert P.last_block_num(spark, str(d / "ops")) \
         == fx.blocks[-1]["block_num"]
     assert P.channel_events_view(spark, str(d / "channels")).count() > 0
-    # no batch_id dirs — everything is manifest-committed
-    assert not glob.glob(str(d / "ops" / "batch_id=*"))
     n_versions = ManifestStore(spark, str(d / "ops")).current_version()
     assert n_versions and n_versions > 1     # one commit per micro-batch
 
@@ -1131,15 +1031,14 @@ def test_manifest_store_impl_matches_dirs(spark, fx, tmp_path_factory):
 
 def test_engine_manifest_store_impl(spark, fx, tmp_path_factory):
     """Sidechain ingest through the manifest layout: same flatten output
-    and HWM as the dir scheme, read through the layout-aware views."""
+    as batch flatten_engine_blocks, and the HWM."""
     d = tmp_path_factory.mktemp("engmanifest")
     _write_batches(fx.engine_blocks, "engine_blocks", str(d / "blocks"), 3)
 
     q = P.start_engine_ingest(
         P.read_engine_stream(spark, str(d / "blocks"),
                              max_files_per_trigger=1),
-        str(d / "ops"), str(d / "channels"), str(d / "ckpt"),
-        store_impl="manifest")
+        str(d / "ops"), str(d / "channels"), str(d / "ckpt"))
     q.awaitTermination(120)
 
     from meeseeker_spark.flatten import flatten_engine_blocks
@@ -1149,7 +1048,6 @@ def test_engine_manifest_store_impl(spark, fx, tmp_path_factory):
     got = P.ops_view(spark, str(d / "ops"))
     assert (sorted(r["key"] for r in got.collect())
             == sorted(r["key"] for r in batch.collect()))
-    assert not glob.glob(str(d / "ops" / "batch_id=*"))
     assert P.last_block_num(spark, str(d / "ops")) \
         == max(b["blockNumber"] for b in fx.engine_blocks)
 
@@ -2420,14 +2318,11 @@ def test_engine_resume_tip_age_session_tz_independent(spark,
         [(100, "2020-01-01T00:00:00", [], [])], schema=ENGINE_BLOCKS)
     blocks.write.parquet(str(d / "engine"))
     # an existing HWM, so the decision hinges purely on tip age
-    spark.createDataFrame(
-        [("hive_engine", 90, 0)],
-        "chain string, last_block_num bigint, batch_id bigint"
-    ).write.parquet(str(d / "ops_meta" / "batch_id=0"))
+    from meeseeker_spark.manifest import ManifestStore
     ops_path = str(d / "ops")
-    import os as _os
-    _os.rename(d / "ops_meta", d / "ops_meta_x")
-    _os.rename(d / "ops_meta_x", str(d / "ops") + "_meta")
+    ManifestStore(spark, ops_path + "_meta").append(spark.createDataFrame(
+        [("hive_engine", 90, 0)],
+        "chain string, last_block_num bigint, batch_id bigint"), 0)
 
     # 2h-stale tip, 1h ttl → fresh sync at tip+1; a -4h session-tz skew
     # under the old parse clamps the age to 0 → wrong resume-at-91
@@ -2445,8 +2340,9 @@ def test_engine_resume_tip_age_session_tz_independent(spark,
 
 def test_last_block_num_empty_meta_dir_is_none(spark, tmp_path_factory):
     """Regression (r12 review): a crash can leave <ops>_meta existing
-    with no committed batch subdir; the HWM probe must report None (no
-    high-water mark), not raise on an empty glob."""
+    with no committed manifest version (its first commit crashed after
+    staging); the HWM probe must report None (no high-water mark), not
+    raise."""
     import os as _os
 
     from meeseeker_spark.streaming.pipeline import last_block_num
@@ -2455,59 +2351,48 @@ def test_last_block_num_empty_meta_dir_is_none(spark, tmp_path_factory):
     ops_path = str(d / "ops")
     _os.makedirs(ops_path + "_meta")
     assert last_block_num(spark, ops_path) is None
+    _os.makedirs(os.path.join(ops_path + "_meta", "_manifest"))
+    _os.makedirs(os.path.join(ops_path + "_meta", "data", "commit-x"))
+    assert last_block_num(spark, ops_path) is None
 
 
-@pytest.mark.parametrize("store_impl", ["dirs", "manifest"])
-def test_compact_meta_folds_hwm(spark, fx, tmp_path_factory, store_impl):
+def test_compact_meta_folds_hwm(spark, fx, tmp_path_factory):
     """r14 review: the _meta HWM store appends one row per micro-batch
     (replay idempotence) while the reference overwrites ONE key per
     chain (block_follower_job.rb:78,111) — a long-running stream's
     max-probe cost grows with stream AGE.  compact_meta folds it to one
     row per chain: the HWM answer is identical before and after, a
-    second run is a no-op, and (manifest) the replayable batch-id tail
-    survives so the newest trigger's checkpointed replay still
-    short-circuits instead of doubling rows."""
-    d = tmp_path_factory.mktemp(f"compact_meta_{store_impl}")
+    second run is a no-op, and the replayable batch-id tail survives so
+    the newest trigger's checkpointed replay still short-circuits
+    instead of doubling rows."""
+    from meeseeker_spark.manifest import ManifestStore
+
+    d = tmp_path_factory.mktemp("compact_meta")
     _write_batches(fx.blocks, "blocks", str(d / "blocks"), 3)
     ops = P.streaming_ops(
         P.read_block_stream(spark, str(d / "blocks"),
                             max_files_per_trigger=1), None)
     q = P.start_ingest(ops, str(d / "ops"), str(d / "channels"),
-                       str(d / "ckpt"), store_impl=store_impl)
+                       str(d / "ckpt"))
     q.awaitTermination(120)
 
     meta = str(d / "ops") + "_meta"
+    ms = ManifestStore(spark, meta)
     hwm_before = P.last_block_num(spark, str(d / "ops"))
     assert hwm_before is not None
-    rows_before = P._batched_view(spark, meta, None).count()
-    assert rows_before >= 3                       # one per trigger
+    assert ms.df().count() >= 3                   # one per trigger
 
     n = P.compact_meta(spark, str(d / "ops"))
     assert n >= 2
     assert P.last_block_num(spark, str(d / "ops")) == hwm_before
-    folded = P._batched_view(spark, meta, None).collect()
-    if store_impl == "manifest":
-        assert len(folded) == 1                   # one chain in the fixture
-        assert folded[0]["last_block_num"] == hwm_before
-    else:
-        # dirs: the newest raw dir stays OUT of the fold (a replayed
-        # trigger overwrites it — ADVICE r14), so the view holds the
-        # folded row plus the newest trigger's own row; the HWM (a
-        # monotone max) is identical either way
-        assert len(folded) == 2
-        assert max(r["last_block_num"] for r in folded) == hwm_before
+    folded = ms.df().collect()
+    assert len(folded) == 1                       # one chain in the fixture
+    assert folded[0]["last_block_num"] == hwm_before
     assert P.compact_meta(spark, str(d / "ops")) == 0   # already compact
 
-    if store_impl == "manifest":
-        from meeseeker_spark.manifest import ManifestStore
-        ms = ManifestStore(spark, meta)
-        assert len(ms.files()) == 1
-        ids = ms.committed_batch_ids()
-        assert ids and ids == {i for i in ids if i >= max(ids) - 1}
-    else:
-        dirs = [x for x in os.listdir(meta) if x.startswith("batch_id=")]
-        assert len(dirs) == 2                     # fold target + newest raw
-        assert not [x for x in os.listdir(meta) if x.startswith(".fold")]
+    assert len(ms.files()) == 1
+    ids = ms.committed_batch_ids()
+    assert ids and ids == {i for i in ids if i >= max(ids) - 1}
 
     # replay of the NEWEST trigger after compaction: delete its
     # checkpoint commit marker and restart — the HWM answer must not
@@ -2522,267 +2407,163 @@ def test_compact_meta_folds_hwm(spark, fx, tmp_path_factory, store_impl):
         P.streaming_ops(
             P.read_block_stream(spark, str(d / "blocks"),
                                 max_files_per_trigger=1), None),
-        str(d / "ops"), str(d / "channels"), str(d / "ckpt"),
-        store_impl=store_impl)
+        str(d / "ops"), str(d / "channels"), str(d / "ckpt"))
     q.awaitTermination(120)
     assert P.last_block_num(spark, str(d / "ops")) == hwm_before
-    assert P._batched_view(spark, meta, None).count() <= 2
+    assert ms.df().count() == 1                   # the replay short-circuited
 
 
-def test_compact_meta_dirs_crash_recovery(spark, fx, tmp_path_factory):
-    """The dirs-layout fold is the rename-aside family: plant each
-    crash remnant (.foldtmp orphan; .foldold- aside with its target
-    missing) and assert the next run rolls it forward with the HWM
-    intact."""
-    import shutil
-
-    d = tmp_path_factory.mktemp("compact_meta_crash")
-    _write_batches(fx.blocks, "blocks", str(d / "blocks"), 3)
-    q = P.start_ingest(
-        P.streaming_ops(
-            P.read_block_stream(spark, str(d / "blocks"),
-                                max_files_per_trigger=1), None),
-        str(d / "ops"), str(d / "channels"), str(d / "ckpt"),
-        store_impl="dirs")
-    q.awaitTermination(120)
-    meta = str(d / "ops") + "_meta"
-    hwm = P.last_block_num(spark, str(d / "ops"))
-
-    # crash window 1: .foldtmp written, nothing renamed → discarded
-    os.makedirs(os.path.join(meta, ".foldtmp"))
-    assert P.compact_meta(spark, str(d / "ops")) >= 2
-    assert P.last_block_num(spark, str(d / "ops")) == hwm
-
-    # crash window 2: fold TARGET renamed aside, rename-in lost → the
-    # preamble restores it.  Mid-crash the newest raw dir (never part
-    # of the fold) still answers the HWM — the monotone max lives in
-    # the newest trigger's own row.
-    target_dir = min((x for x in os.listdir(meta)
-                      if x.startswith("batch_id=")),
-                     key=lambda x: int(x.split("=")[1]))
-    os.rename(os.path.join(meta, target_dir),
-              os.path.join(meta, ".foldold-" + target_dir))
-    assert P.last_block_num(spark, str(d / "ops")) == hwm   # mid-crash view
-    assert P.compact_meta(spark, str(d / "ops")) == 0       # restore only
-    assert P.last_block_num(spark, str(d / "ops")) == hwm
-    assert len([x for x in os.listdir(meta)
-                if x.startswith("batch_id=")]) == 2
-
-
-def test_compact_schedule_log(spark, fx, tmp_path_factory):
-    """r14: the schedule publish log accumulates one batch_id=N dir per
-    trigger (~500k/year at round cadence) — fold it to one dir on the
-    publish-once key.  The ScheduleStore answers identically before and
-    after; a crashed fold's remnants roll forward; a planted duplicate
-    (the fold-landed/delete-lost window) is absorbed by the reader's
-    key dedup."""
-    import shutil
-
-    from meeseeker_spark.query import ScheduleStore
-
-    d = tmp_path_factory.mktemp("sched_fold")
-    # one schedule per file → one batch dir per schedule (maxFiles=1)
-    _write_batches(fx.witness_schedules, "witness_schedules",
-                   str(d / "in"), len(fx.witness_schedules))
+def _publish_one_per_trigger(spark, d):
+    """Publish every fixture schedule, one file (= one trigger, one
+    manifest commit) each, into ``d/out`` with checkpoint ``d/ckpt``."""
     q = P.start_schedule_publisher(
         P.read_schedule_stream(spark, str(d / "in"),
                                max_files_per_trigger=1),
         str(d / "out"), str(d / "ckpt"))
     q.awaitTermination(120)
-    n_dirs = len([x for x in os.listdir(d / "out")
-                  if x.startswith("batch_id=")])
-    assert n_dirs >= 2
-    before = sorted(tuple(r) for r in
-                    ScheduleStore(spark, str(d / "out")).df().collect())
+
+
+def test_compact_schedule_log(spark, fx, tmp_path_factory):
+    """r14: the schedule publish log accumulates one commit per trigger
+    (~500k/year at round cadence) — ``compact --schedules`` folds it to
+    one file in place.  The ScheduleStore answers identically before and
+    after, the batch-id tail is kept for a replay of the newest trigger,
+    and a second run is a no-op."""
+    from meeseeker_spark.__main__ import main
+    from meeseeker_spark.manifest import ManifestStore
+    from meeseeker_spark.query import ScheduleStore
+
+    d = tmp_path_factory.mktemp("sched_fold")
+    _write_batches(fx.witness_schedules, "witness_schedules",
+                   str(d / "in"), len(fx.witness_schedules))
+    _publish_one_per_trigger(spark, d)
+    out = str(d / "out")
+    ms = ManifestStore(spark, out)
+    n_files = len(ms.files())
+    assert n_files >= 2
+    before = sorted(tuple(r) for r in ScheduleStore(spark, out).df().collect())
     assert len(before) == len(fx.witness_schedules)
 
-    # the newest raw dir stays out of the fold (ADVICE r14: a replayed
-    # trigger overwrites batch_id=<max> — folding into it would let the
-    # replay destroy every folded row), so n_dirs-1 dirs fold and TWO
-    # dirs remain: the fold target + the protected newest
-    assert P.compact_schedule_log(spark, str(d / "out")) == n_dirs - 1
-    assert len([x for x in os.listdir(d / "out")
-                if x.startswith("batch_id=")]) == 2
-    after = sorted(tuple(r) for r in
-                   ScheduleStore(spark, str(d / "out")).df().collect())
+    args = ["compact", "--ops", str(d / "no_ops"), "--schedules", out]
+    assert main(args) == 0
+    assert len(ms.files()) == 1
+    ids = ms.committed_batch_ids()
+    assert ids and ids == {i for i in ids if i >= max(ids) - 1}
+    after = sorted(tuple(r) for r in ScheduleStore(spark, out).df().collect())
     assert after == before
-    assert P.compact_schedule_log(spark, str(d / "out")) == 0  # idempotent
-
-    # crash drill: rename the fold target aside (mid-swap crash) — the
-    # next run's preamble restores it with nothing lost
-    folded_dir = min((x for x in os.listdir(d / "out")
-                      if x.startswith("batch_id=")),
-                     key=lambda x: int(x.split("=")[1]))
-    os.rename(os.path.join(d / "out", folded_dir),
-              os.path.join(d / "out", ".foldold-" + folded_dir))
-    assert P.compact_schedule_log(spark, str(d / "out")) == 0
-    assert (sorted(tuple(r) for r in
-                   ScheduleStore(spark, str(d / "out")).df().collect())
-            == before)
-
-    # duplicate-window drill: copy the fold target as an older batch id
-    # — the reader dedups on the publish-once key, and the next fold
-    # collapses the duplicates back into the target
-    shutil.copytree(os.path.join(d / "out", folded_dir),
-                    os.path.join(d / "out", "batch_id=0"))
-    assert (sorted(tuple(r) for r in
-                   ScheduleStore(spark, str(d / "out")).df().collect())
-            == before)
-    assert P.compact_schedule_log(spark, str(d / "out")) == 2
-    assert (sorted(tuple(r) for r in
-                   ScheduleStore(spark, str(d / "out")).df().collect())
-            == before)
+    v = ms.current_version()
+    assert main(args) == 0                        # already compact
+    assert ms.current_version() == v
 
 
 def test_compact_schedule_log_replay_survival(spark, fx, tmp_path_factory):
     """ADVICE r14 (high), end-to-end: compact --schedules, then a
     same-checkpoint replay of the NEWEST trigger (delete its commit
     marker, restart the publisher — the crash-after-write,
-    before-checkpoint-commit window).  The replay re-overwrites
-    ``batch_id=<max>`` with only its own rows; under the pre-fix fold
-    (older rows folded INTO that dir) every older schedule silently
-    vanished.  With the newest dir protected, the store answers
-    identically."""
+    before-checkpoint-commit window).  The replay short-circuits on its
+    recorded batch id (compaction keeps the replayable tail), so no
+    manifest version is added and the store answers identically."""
+    from meeseeker_spark.manifest import ManifestStore
     from meeseeker_spark.query import ScheduleStore
 
     d = tmp_path_factory.mktemp("sched_replay")
     _write_batches(fx.witness_schedules, "witness_schedules",
                    str(d / "in"), len(fx.witness_schedules))
-    q = P.start_schedule_publisher(
-        P.read_schedule_stream(spark, str(d / "in"),
-                               max_files_per_trigger=1),
-        str(d / "out"), str(d / "ckpt"))
-    q.awaitTermination(120)
-    n_dirs = len([x for x in os.listdir(d / "out")
-                  if x.startswith("batch_id=")])
-    assert n_dirs >= 3
-    before = sorted(tuple(r) for r in
-                    ScheduleStore(spark, str(d / "out")).df().collect())
+    _publish_one_per_trigger(spark, d)
+    out = str(d / "out")
+    ms = ManifestStore(spark, out)
+    assert len(ms.files()) >= 3
+    before = sorted(tuple(r) for r in ScheduleStore(spark, out).df().collect())
 
-    assert P.compact_schedule_log(spark, str(d / "out")) == n_dirs - 1
-
+    assert ms.compact() >= 3
+    v = ms.current_version()
     commits = sorted(int(x) for x in os.listdir(d / "ckpt" / "commits")
                      if x.isdigit())
+    assert commits[-1] in ms.committed_batch_ids()
     os.remove(d / "ckpt" / "commits" / str(commits[-1]))
     crc = d / "ckpt" / "commits" / f".{commits[-1]}.crc"
     if crc.exists():
         os.remove(crc)
-    q = P.start_schedule_publisher(
-        P.read_schedule_stream(spark, str(d / "in"),
-                               max_files_per_trigger=1),
-        str(d / "out"), str(d / "ckpt"))
-    q.awaitTermination(120)
+    _publish_one_per_trigger(spark, d)
+    assert ms.current_version() == v              # replay short-circuited
     assert (sorted(tuple(r) for r in
-                   ScheduleStore(spark, str(d / "out")).df().collect())
-            == before)
+                   ScheduleStore(spark, out).df().collect()) == before)
 
 
 def test_compact_schedule_log_fold_is_deterministic(
         spark, fx, tmp_path_factory):
-    """r15 review: the fold must keep the same newest-batch survivor as
-    ScheduleStore's reader when a replayed duplicate carries a DIVERGENT
-    payload — an arbitrary dropDuplicates could permanently fold the
-    STALE row in and delete the fresh one.  The stale payload here sorts
-    HIGHEST in raw payload order, so only batch-id precedence passes."""
+    """r15 review: compaction must keep the same newest-batch survivor
+    as ScheduleStore's reader when a republished duplicate carries a
+    DIVERGENT payload — the folded file keeps every row's physical
+    ``batch_id``, so the reader's newest_by_key still sees the
+    precedence.  The stale payload here sorts HIGHEST in raw payload
+    order, so only batch-id precedence passes."""
+    from meeseeker_spark.manifest import ManifestStore
     from meeseeker_spark.query import ScheduleStore
 
     d = tmp_path_factory.mktemp("sched_fold_det")
+    out = str(d / "out")
     fresh = fx.witness_schedules[0]
     stale = dict(fresh)
     stale["current_shuffled_witnesses"] = ["zzz_replaced"]
     other = fx.witness_schedules[1]
-    _write_batches([stale], "witness_schedules",
-                   str(d / "out" / "batch_id=0"), 1)
-    _write_batches([fresh], "witness_schedules",
-                   str(d / "out" / "batch_id=5"), 1)
-    _write_batches([other], "witness_schedules",
-                   str(d / "out" / "batch_id=9"), 1)
+    ms = ManifestStore(spark, out)
+    cols = ["id", "next_shuffle_block_num", "current_shuffled_witnesses"]
+    for batch_id, row in ((0, stale), (5, fresh), (9, other)):
+        ms.append(spark.createDataFrame(
+            [tuple(row[c] for c in cols) + (batch_id,)],
+            "id bigint, next_shuffle_block_num bigint, "
+            "current_shuffled_witnesses array<string>, batch_id int"),
+            batch_id)
 
     key = fresh["next_shuffle_block_num"]
     before = {r["block_num"]: r["value"]
-              for r in ScheduleStore(spark, str(d / "out")).df().collect()}
+              for r in ScheduleStore(spark, out).df().collect()}
     assert "zzz_replaced" not in before[key]      # reader: newest wins
 
-    # dirs 0 and 5 fold (into 5); the newest stays protected
-    assert P.compact_schedule_log(spark, str(d / "out")) == 2
+    assert ms.compact(sort_cols=("next_shuffle_block_num",)) >= 3
+    assert len(ms.files()) == 1
     after = {r["block_num"]: r["value"]
-             for r in ScheduleStore(spark, str(d / "out")).df().collect()}
+             for r in ScheduleStore(spark, out).df().collect()}
     assert after == before                        # fold flipped nothing
     assert "zzz_replaced" not in after[key]
 
 
-def test_schedule_fold_crash_between_rename_in_and_delete(
+def test_schedule_log_crash_before_commit_leaves_no_row(
         spark, fx, tmp_path_factory, monkeypatch):
-    """VERDICT r14 item 3: inject a crash BETWEEN the fold's rename-in
-    and the older-dir delete (both sub-windows: the aside delete and
-    the older-batch-dir sweep).  ScheduleStore must answer identically
-    mid-crash (dot-dir invisibility + publish-once key dedup) and a
-    re-run must complete the fold.  The schedule publish log is a
-    dirs-only sink (the publisher has no manifest mode), so this is the
-    full layout matrix — the manifest analog is compact_meta's own
-    drill."""
-    import shutil as _sh
-
+    """A publisher trigger that dies after staging its files but before
+    the manifest commit leaves nothing visible: ScheduleStore reads
+    empty, a restart on the same checkpoint replays the batch and
+    publishes every schedule exactly once, and gc reclaims the crashed
+    attempt's orphan files."""
+    from meeseeker_spark.manifest import ManifestStore
     from meeseeker_spark.query import ScheduleStore
 
-    d = tmp_path_factory.mktemp("sched_fold_crash")
+    d = tmp_path_factory.mktemp("sched_crash")
     _write_batches(fx.witness_schedules, "witness_schedules",
-                   str(d / "in"), len(fx.witness_schedules))
-    q = P.start_schedule_publisher(
-        P.read_schedule_stream(spark, str(d / "in"),
-                               max_files_per_trigger=1),
-        str(d / "out"), str(d / "ckpt"))
-    q.awaitTermination(120)
+                   str(d / "in"), 1)
     out = str(d / "out")
-    assert len([x for x in os.listdir(out)
-                if x.startswith("batch_id=")]) >= 3
-    before = sorted(tuple(r) for r in
-                    ScheduleStore(spark, out).df().collect())
 
-    real_rmtree = _sh.rmtree
+    def boom(self, *a, **k):
+        raise RuntimeError("injected crash before commit")
 
-    # window A: rename-in landed, aside delete lost
-    def boom_aside(p, *a, **k):
-        if ".foldold-" in str(p):
-            raise OSError("injected crash: aside delete")
-        return real_rmtree(p, *a, **k)
+    monkeypatch.setattr(ManifestStore, "_commit", boom)
+    with pytest.raises(Exception, match="injected crash"):
+        _publish_one_per_trigger(spark, d)
+    monkeypatch.undo()
+    assert ScheduleStore(spark, out).df().count() == 0
+    staged = glob.glob(os.path.join(out, "data", "*", "*.parquet"))
+    assert staged                                  # the orphan exists
 
-    monkeypatch.setattr(P.shutil, "rmtree", boom_aside)
-    with pytest.raises(OSError, match="aside delete"):
-        P.compact_schedule_log(spark, out)
-    monkeypatch.setattr(P.shutil, "rmtree", real_rmtree)
-    # mid-crash: folded target + aside + every older dir on disk — the
-    # reader sees no change (aside is dot-prefixed; duplicates between
-    # the folded target and the older dirs dedup on the key)
-    assert (sorted(tuple(r) for r in
-                   ScheduleStore(spark, out).df().collect()) == before)
-    # re-run completes: preamble drops the aside, the fold re-folds
-    assert P.compact_schedule_log(spark, out) >= 1
-
-    # window B: aside deleted, older-dir sweep lost
-    folded_dir = min((x for x in os.listdir(out)
-                      if x.startswith("batch_id=")),
-                     key=lambda x: int(x.split("=")[1]))
-    _sh.copytree(os.path.join(out, folded_dir),
-                 os.path.join(out, "batch_id=0"))
-
-    def boom_older(p, *a, **k):
-        base = os.path.basename(str(p))
-        if base.startswith("batch_id="):
-            raise OSError("injected crash: older-dir delete")
-        return real_rmtree(p, *a, **k)
-
-    monkeypatch.setattr(P.shutil, "rmtree", boom_older)
-    with pytest.raises(OSError, match="older-dir delete"):
-        P.compact_schedule_log(spark, out)
-    monkeypatch.setattr(P.shutil, "rmtree", real_rmtree)
-    assert (sorted(tuple(r) for r in
-                   ScheduleStore(spark, out).df().collect()) == before)
-    assert P.compact_schedule_log(spark, out) >= 1
-    assert (sorted(tuple(r) for r in
-                   ScheduleStore(spark, out).df().collect()) == before)
-    assert len([x for x in os.listdir(out)
-                if x.startswith("batch_id=")]) == 2
+    _publish_one_per_trigger(spark, d)         # same checkpoint
+    got = ScheduleStore(spark, out).df().collect()
+    assert (sorted(r["block_num"] for r in got)
+            == sorted(s["next_shuffle_block_num"]
+                      for s in fx.witness_schedules))
+    ms = ManifestStore(spark, out)
+    assert ms.current_version() == 1
+    assert ms.gc() == len(staged)
+    assert ScheduleStore(spark, out).df().count() == len(got)
 
 
 def test_screen_marker_torn_and_stream_identity(spark, tmp_path_factory):
