@@ -142,7 +142,7 @@ def _sf1_orchestrate() -> None:
         env = dict(os.environ,
                    SPARK_GRAFT_BENCH_SF1_LANE="worker",
                    SPARK_GRAFT_CPUS=cpus,
-                   SPARK_GRAFT_SF_DIR=_sf1_dir())
+                   SPARK_GRAFT_SF1_DIR=_sf1_dir())
         out = subprocess.run(
             [sys.executable, str(REPO / "bench.py")],
             env=env, capture_output=True, text=True)

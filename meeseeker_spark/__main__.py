@@ -147,21 +147,20 @@ def main(argv: list[str] | None = None) -> int:
                          "its rows already, so this only names the "
                          "schedule keys)")
 
-    pr = sub.add_parser("reset", help="drop a chain partition (or all)")
+    pr = sub.add_parser("reset", help="delete a chain's rows (or all)")
     pr.add_argument("chain", nargs="?", default="all")
     pr.add_argument("--store", required=True)
 
     pe = sub.add_parser("expire",
-                        help="TTL retention delete (expire_keys analog); "
-                             "routes by store layout: manifest commit swap "
-                             "or, for a chain=-partitioned store, the "
-                             "partition-preserving rename protocol")
+                        help="TTL retention delete (expire_keys analog): "
+                             "rewrites only files holding expired rows, "
+                             "in one manifest commit")
     pe.add_argument("--store", required=True)
     pe.add_argument("--ttl", type=int, default=None,
                     help="seconds (default 86400; -1 = never expire)")
     pe.add_argument("--gc", action="store_true",
-                    help="manifest layout only: also delete unreferenced "
-                         "data files and fold small commits")
+                    help="also delete unreferenced data files and fold "
+                         "small commits")
 
     pv = sub.add_parser("verify",
                         help="D1/D2 reconciliation vs a blocks dir, or "
@@ -426,14 +425,13 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if a.cmd == "expire":
-        from .retention import expire as _expire
+        from .manifest import open_committed
         from .schemas import DEFAULT_TTL_S
 
         ttl = DEFAULT_TTL_S if a.ttl is None else a.ttl
         spark = _spark()
-        # retention.expire dispatches on layout itself; --gc is a
-        # manifest-only extra (a no-op on a chain=-partitioned store)
-        n = _expire(spark, a.store, ttl_s=ttl)
+        ms = open_committed(spark, a.store)
+        n = ms.expire(ttl) if ms else 0
         if a.gc:
             _fold_in_place(spark, a.store, ("block_num",))
         print(f"expired {n} rows")

@@ -3524,13 +3524,12 @@ def ngram_repetition_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rae et al. 2021 Table A1): per doc the top-{2,3,4}-gram and
     duplicated-{5..10}-gram character-mass fractions — the
     machine-generated-text signals gopher_rules' line family doesn't
-    carry.  Since r11 the battery never leaves the row: per-n sorted
-    gram arrays folded by a run-length struct accumulator — ZERO
-    shuffles, no Generate (plan-pinned), wins 1.3-1.4× locally over
-    the r10 stacked-explode form at every SF and removes its
-    corpus-scale gram-string exchange entirely (measured record in
-    SCALING.md; stacked kept as ``stacked=True``, bit-identical by
-    test).  Integer mass arithmetic until the final rounded division.
+    carry.  The battery never leaves the row: one narrow Arrow pass
+    computes every n's integer masses per doc — ZERO shuffles, no
+    Generate (plan-pinned); the rejected stacked-explode and
+    run-length-fold forms are recorded in SCALING.md and
+    OPTIMIZATION_r15.md.  Integer mass arithmetic until the final
+    rounded division.
     Rows-only (window full); exact DuckDB parity in
     tests/test_ext.py::test_ngram_repetition_vs_duckdb."""
     from .ext.text import ngram_repetition

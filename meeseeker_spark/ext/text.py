@@ -588,57 +588,19 @@ def corpus_datacard_exact(df: DataFrame, group_cols: tuple[str, ...] =
     )
 
 
-def _ngram_run_stats(gram_col):
-    """(top, dup) char-mass of a gram array in ONE narrow pass: sort the
-    array, then fold run-lengths of equal grams with a struct
-    accumulator — mass of a run is count × gram length, ``top`` the
-    maximal run mass, ``dup`` the summed mass of runs with count ≥ 2.
-    Exact (no hashing, no collision risk) and zero-shuffle: the whole
-    battery stays inside the row."""
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("top"),
-        F.lit(0).cast("long").alias("dup"))
-
-    def merge(acc, g):
-        same = acc["prev"].isNotNull() & (g == acc["prev"])
-        closed = F.coalesce(acc["run"] * F.length(acc["prev"]),
-                            F.lit(0).cast("long"))
-        return F.struct(
-            g.alias("prev"),
-            F.when(same, acc["run"] + F.lit(1).cast("long"))
-            .otherwise(F.lit(1).cast("long")).alias("run"),
-            F.when(same, acc["top"])
-            .otherwise(F.greatest(acc["top"], closed)).alias("top"),
-            F.when(same, acc["dup"])
-            .otherwise(acc["dup"] + F.when(acc["run"] >= 2, closed)
-                       .otherwise(F.lit(0).cast("long"))).alias("dup"))
-
-    def finish(acc):
-        closed = F.coalesce(acc["run"] * F.length(acc["prev"]),
-                            F.lit(0).cast("long"))
-        return F.struct(
-            F.greatest(acc["top"], closed).alias("top"),
-            (acc["dup"] + F.when(acc["run"] >= 2, closed)
-             .otherwise(F.lit(0).cast("long"))).alias("dup"))
-
-    return F.aggregate(F.array_sort(gram_col), init, merge, finish)
-
-
 def _ngram_masses_arrow(top_ns: tuple, dup_ns: tuple):
     """Executor-side mapInArrow body for ``ngram_repetition``: per input
     batch of (_id, _chars, _w tokens) emit the exact integer (top, dup)
     char masses for every n — no gram string is ever built.
 
-    Exactness argument (the contract the catalyst fallback pins):
+    Exactness argument (the DuckDB oracle builds gram strings):
     ``tokens`` yields nonempty ``[a-z0-9]+`` runs only, so (a) token
     code-sequence equality ⟺ space-joined gram STRING equality (no
     token contains the separator), and (b) tokens are pure ASCII, so
     Arrow byte lengths ARE the char lengths Spark's ``length()`` sees;
     a gram's length is its tokens' lengths + (n−1) separators.  Null
     token arrays (null text) flatten to zero tokens → all-zero masses,
-    the same result the fallback's when(size≥n) guard produces.
+    as does any doc shorter than n tokens.
 
     Vectorization: dictionary-encode the batch's flattened tokens ONCE
     (pyarrow, no Python strings), then per (doc, n) one lexsort over
@@ -712,8 +674,6 @@ def ngram_repetition(df: DataFrame, id_col: str = "doc_id",
                      top_ns: tuple[int, ...] = (2, 3, 4),
                      dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
                      round_dp: int = 4,
-                     stacked: bool = False,
-                     arrow: bool = True,
                      spread: bool = True) -> DataFrame:
     """The Gopher n-gram repetition battery (Rae et al. 2021, App. A
     Table A1) — the signals ``gopher_rules``' line family doesn't
@@ -736,40 +696,26 @@ def ngram_repetition(df: DataFrame, id_col: str = "doc_id",
     tie-break the paper doesn't give).  Denominator = document char
     length; docs shorter than n words score 0 for that n.
 
-    Plan (default, ``arrow=True``, r15): the battery is per-DOC, so no
-    gram ever needs to leave its row — the JVM computes the token
-    arrays (tokenization parity with every other consumer of
-    ``tokens``; nothing string-semantic crosses engines), ONE narrow
-    Arrow crossing computes the 18 integer masses per doc with
-    vectorized numpy window counting (dictionary-encode tokens once
-    per batch; per (doc, n) a single C-speed sort over int32 code
-    windows — no gram STRINGS are ever materialized, their char mass
-    is a sliding sum of token lengths + n−1), and the division +
-    ``round(…, dp)`` stay in Spark so every float op is bit-identical
-    to the catalyst forms.  Measured sf0.1: 4.4 s catalyst-narrow
-    execution → ~0.6 s, and the 2.2 s driver BUILD latency of 9×
-    interpreted-HOF expression trees → one mapInArrow node (guide
-    §4.2: batch-vectorized native beats chained JVM expressions;
-    §4.1: only (id, chars, tokens) crosses, masses come back).
-    Catalyst fallback (``arrow=False``): for each n, sort the gram
-    array and fold run-lengths with a struct accumulator
-    (``_ngram_run_stats``): ZERO shuffles, zero joins, one narrow
-    projection for all nine n values; partitions embarrassingly at any
-    corpus size.  The r10-shipped ``stacked=True`` form (ONE explode
-    over the per-n gram arrays stacked as (n, gram) structs — a single
-    corpus-scale shuffle — then two aggregates and a conditional
-    pivot) is kept for the measured variant record (SCALING.md r11):
-    narrow wins at every SF — 5.74 vs 7.48 s at sf0.1, 24.0 vs 31.5 at
-    sf0.5, 44.2 vs 62.4 at sf1 (best-of-2, warm) — a 1.3-1.4× LOCAL
-    win because gram construction dominates both forms on one box; the
-    structural win is the removed corpus-scale exchange of every gram
-    string, which a single-JVM measurement underprices relative to a
-    real cluster's disk+network shuffle.  All three variants are
-    bit-identical (test_ngram_repetition_variants_agree); all integer
-    arithmetic until the final division (rounded, both engines);
-    DuckDB-exact in tests/test_ext.py.
+    Plan (r15): the battery is per-DOC, so no gram ever needs to leave
+    its row — the JVM computes the token arrays (tokenization parity
+    with every other consumer of ``tokens``; nothing string-semantic
+    crosses engines), ONE narrow Arrow crossing computes the 18
+    integer masses per doc with vectorized numpy window counting
+    (dictionary-encode tokens once per batch; per (doc, n) a single
+    C-speed sort over int32 code windows — no gram STRINGS are ever
+    materialized, their char mass is a sliding sum of token lengths +
+    n−1), and the division + ``round(…, dp)`` stay in Spark.  ZERO
+    shuffles, zero joins; partitions embarrassingly at any corpus
+    size.  Measured sf0.1: 4.4 s for the r11 catalyst run-length fold
+    → ~0.6 s, and the 2.2 s driver BUILD latency of 9× interpreted-HOF
+    expression trees → one mapInArrow node (guide §4.2:
+    batch-vectorized native beats chained JVM expressions; §4.1: only
+    (id, chars, tokens) crosses, masses come back).  The r10
+    stacked-explode form (one corpus-scale gram shuffle) lost to the
+    narrow fold at every SF (SCALING.md r11).  All integer arithmetic
+    until the final division (rounded); DuckDB-exact in
+    tests/test_ext.py.
     """
-    all_ns = tuple(top_ns) + tuple(dup_ns)
     src = df.select(F.col(id_col).alias("_id0"), F.col(text_col))
     if spread:
         # guide §2.5: the per-doc battery is heavy NARROW compute — on
@@ -783,81 +729,19 @@ def ngram_repetition(df: DataFrame, id_col: str = "doc_id",
                    F.length(F.coalesce(F.col(text_col), F.lit("")))
                    .alias("_chars"),
                    tokens(F.col(text_col)).alias("_w"))
-    w = F.col("_w")
-
-    if arrow and not stacked:
-        chars_d = F.greatest(F.col("_chars"), F.lit(1)).cast("double")
-        # passthrough columns keep their INPUT types (F.length is int,
-        # ids are whatever the caller has) — declaring them verbatim
-        # avoids an Arrow int32/int64 schema mismatch at runtime
-        id_t = t.schema["_id"].dataType.simpleString()
-        ch_t = t.schema["_chars"].dataType.simpleString()
-        schema = (f"_id {id_t}, _chars {ch_t}, "
-                  + ", ".join(f"_top_{n} long" for n in top_ns) + ", "
-                  + ", ".join(f"_dup_{n} long" for n in dup_ns))
-        masses = t.mapInArrow(
-            _ngram_masses_arrow(tuple(top_ns), tuple(dup_ns)), schema)
-        outcols = [F.round(F.col(f"_top_{n}") / chars_d, round_dp)
-                   .alias(f"top_{n}gram_char_frac") for n in top_ns]
-        outcols += [F.round(F.col(f"_dup_{n}") / chars_d, round_dp)
-                    .alias(f"dup_{n}gram_char_frac") for n in dup_ns]
-        return masses.select(F.col("_id").alias(id_col), *outcols)
-
-    def grams(n: int):
-        g = F.transform(
-            F.sequence(F.lit(0), F.size(w) - n),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(w, i + j + 1) for j in range(n)]))
-        return F.when(F.size(w) >= n, g).otherwise(
-            F.array().cast("array<string>"))
-
-    if not stacked:
-        chars_d = F.greatest(F.col("_chars"), F.lit(1)).cast("double")
-        stats = {n: _ngram_run_stats(grams(n)) for n in all_ns}
-        outcols = [F.round(stats[n]["top"] / chars_d, round_dp)
-                   .alias(f"top_{n}gram_char_frac") for n in top_ns]
-        outcols += [F.round(stats[n]["dup"] / chars_d, round_dp)
-                    .alias(f"dup_{n}gram_char_frac") for n in dup_ns]
-        return t.select(F.col("_id").alias(id_col), *outcols)
-
-    def stack(n: int):
-        # NB single-parameter lambda only: a second parameter (the
-        # ``_n=n`` closure idiom) would receive the array INDEX column
-        # (the r3 MinHash lambda-counter bug, ROUND_NOTES) — the plain
-        # def closure binds the int correctly.
-        return F.transform(
-            grams(n),
-            lambda g: F.struct(F.lit(n).alias("n"), g.alias("g")))
-
-    stacked_grams = F.concat(*[stack(n) for n in all_ns])
-    exploded = (t.select("_id", "_chars",
-                         F.explode(stacked_grams).alias("_x"))
-                .select("_id", "_chars", F.col("_x.n").alias("_n"),
-                        F.col("_x.g").alias("_g")))
-    counts = (exploded.groupBy("_id", "_chars", "_n", "_g")
-              .agg(F.count("*").alias("_c")))
-    mass = F.col("_c") * F.length(F.col("_g"))
-    per_n = (counts.groupBy("_id", "_chars", "_n")
-             .agg(F.max(mass).alias("_top_mass"),
-                  F.sum(F.when(F.col("_c") >= 2, mass).otherwise(0))
-                  .alias("_dup_mass")))
     chars_d = F.greatest(F.col("_chars"), F.lit(1)).cast("double")
-    outcols = []
-    for n in top_ns:
-        outcols.append(F.round(
-            F.coalesce(F.max(F.when(F.col("_n") == n,
-                                    F.col("_top_mass"))), F.lit(0))
-            / chars_d, round_dp).alias(f"top_{n}gram_char_frac"))
-    for n in dup_ns:
-        outcols.append(F.round(
-            F.coalesce(F.max(F.when(F.col("_n") == n,
-                                    F.col("_dup_mass"))), F.lit(0))
-            / chars_d, round_dp).alias(f"dup_{n}gram_char_frac"))
-    scored = per_n.groupBy("_id", "_chars").agg(*outcols)
-    out = (t.select("_id").join(scored, "_id", "left")
-           .drop("_chars"))
-    # docs with zero grams at every n (short/empty text) keep a row of 0s
-    fills = {f"top_{n}gram_char_frac": 0.0 for n in top_ns}
-    fills.update({f"dup_{n}gram_char_frac": 0.0 for n in dup_ns})
-    return (out.fillna(fills)
-            .withColumnRenamed("_id", id_col))
+    # passthrough columns keep their INPUT types (F.length is int,
+    # ids are whatever the caller has) — declaring them verbatim
+    # avoids an Arrow int32/int64 schema mismatch at runtime
+    id_t = t.schema["_id"].dataType.simpleString()
+    ch_t = t.schema["_chars"].dataType.simpleString()
+    schema = (f"_id {id_t}, _chars {ch_t}, "
+              + ", ".join(f"_top_{n} long" for n in top_ns) + ", "
+              + ", ".join(f"_dup_{n} long" for n in dup_ns))
+    masses = t.mapInArrow(
+        _ngram_masses_arrow(tuple(top_ns), tuple(dup_ns)), schema)
+    outcols = [F.round(F.col(f"_top_{n}") / chars_d, round_dp)
+               .alias(f"top_{n}gram_char_frac") for n in top_ns]
+    outcols += [F.round(F.col(f"_dup_{n}") / chars_d, round_dp)
+                .alias(f"dup_{n}gram_char_frac") for n in dup_ns]
+    return masses.select(F.col("_id").alias(id_col), *outcols)

@@ -26,15 +26,14 @@ Protocol:
   no-op (exactly-once without overwrite semantics).
 - TTL EXPIRE: rewrite ONLY the files that contain expired rows (file set
   found via ``input_file_name``); every untouched file is re-referenced,
-  not rewritten — byte-identical, and cheaper than the partition-level
-  rewrite retention.py applies to plain ``chain=``-partitioned stores (a
-  partition with one hot file rewrites one file, not the partition).
+  not rewritten — byte-identical.  The cutoff rule (``_live``) and the
+  ``max_keys`` live count share this module with it.
 - GC: delete data files not referenced by the kept manifest tail.  Safe at
   any time; crashes between commit and gc only leave garbage, never lose
   referenced data.
 
-Single-writer assumption (one maintenance/ingest job at a time), same as
-retention.py — manifest versions make that explicit AND structural: every
+Single-writer assumption (one maintenance/ingest job at a time) —
+manifest versions make that explicit AND structural: every
 write path captures the manifest version it READ and commits v(read+1)
 via an os.link compare-and-swap, so a writer interleaving anywhere in the
 read → stage → commit window collides on the link and raises instead of
@@ -46,21 +45,20 @@ metadata operation, O(files-touched), never O(store).
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 _MANIFEST_DIR = "_manifest"
 _DATA_DIR = "data"
 
 
 def is_manifest_store(path: str) -> bool:
-    """THE layout probe — every reader that dispatches between a manifest
-    store and a plain ``chain=``-partitioned store (OpsStore.write's
-    layout) uses this, so the marker dir name has one home.
+    """THE committed-version probe, so the marker dir name has one home.
 
     A path counts as a manifest store only once a version is COMMITTED
     (a ``v*.json`` exists), not when the marker dir appears (ADVICE r6):
@@ -72,6 +70,56 @@ def is_manifest_store(path: str) -> bool:
         return False
     return any(f.startswith("v") and f.endswith(".json")
                and f[1:-5].isdigit() for f in os.listdir(mdir))
+
+
+def open_committed(spark: SparkSession,
+                   path: str) -> ManifestStore | None:
+    """The store at ``path`` once a version is committed, else None (a
+    missing or never-committed path).  Probes before constructing, so
+    no read creates directories on a path that is not a store.
+
+    Parquet files under ``path`` with no committed manifest (outside a
+    crashed first commit's ``data/`` orphans) are outside input — a
+    plain parquet dump — and raise ValueError instead of being served
+    as an empty store (r15: a silent no-op reset still deleted the
+    HWM)."""
+    if is_manifest_store(path):
+        return ManifestStore(spark, path)
+    skeleton = os.path.isdir(os.path.join(path, _MANIFEST_DIR))
+    for root, dirs, names in os.walk(path):
+        if root == path and skeleton:
+            dirs[:] = [d for d in dirs if d != _DATA_DIR]
+        if any(n.endswith(".parquet") for n in names):
+            raise ValueError(
+                f"{path} holds parquet files but no committed manifest — "
+                "not a manifest store")
+    return None
+
+
+def _epoch_s(ts: dt.datetime) -> int:
+    """Naive datetimes in this API mean UTC (every default is
+    ``datetime.now(timezone.utc)`` stripped naive).  TTL comparisons run
+    on ``ingested_at.cast("long")`` (epoch seconds — a property of the
+    INSTANT) against this value, never on ``F.lit(naive_datetime)`` —
+    a datetime literal converts through the PYTHON PROCESS's OS
+    timezone (PySpark ``TimestampType.toInternal``), so on a non-UTC
+    box the cutoff would skew by the OS offset (r12 hardening, found
+    while chasing the engine-tip-age session-tz bug; the epoch form
+    makes the invariant structural instead of environmental)."""
+    return int(ts.replace(tzinfo=dt.timezone.utc).timestamp())
+
+
+def _live(ttl_s: int, now: dt.datetime | None) -> Column:
+    """THE TTL cutoff rule: a row is live while its ``ingested_at`` is
+    within ``ttl_s`` of ``now`` (epoch-seconds compare, session-tz
+    independent).  NULL ``ingested_at`` means "no recorded ingest
+    time" and is always live — deleting it would be uncounted data
+    loss.  ``~_live(...)`` is exactly the expired set (NULL-safe: the
+    OR is TRUE for NULL rows, so its negation is FALSE)."""
+    now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    cutoff_s = _epoch_s(now - dt.timedelta(seconds=ttl_s))
+    return ((F.col("ingested_at").cast("long") >= F.lit(cutoff_s))
+            | F.col("ingested_at").isNull())
 
 
 class ManifestStore:
@@ -217,33 +265,27 @@ class ManifestStore:
         staged = self._stage(df)
         self._commit(staged, [], base)
 
-    def expire(self, ttl_s: int, now=None) -> int:
+    def expire(self, ttl_s: int, now: dt.datetime | None = None) -> int:
         """TTL retention as a manifest swap: only files CONTAINING expired
         rows are rewritten (live rows re-staged); every other file is
-        re-referenced untouched.  Returns rows removed.  Crash-safe with
-        no recovery protocol at all: before the commit rename readers see
-        the old manifest, after it the new one — there is no intermediate
-        state."""
-        import datetime as dt
-
+        re-referenced untouched.  Returns rows removed; ``ttl_s == -1``
+        disables expiry (reference semantics: keys live forever).
+        Crash-safe with no recovery protocol at all: before the commit
+        rename readers see the old manifest, after it the new one —
+        there is no intermediate state."""
         if ttl_s == -1:
             return 0
-        from .retention import _epoch_s
-        now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        # epoch-seconds compare keeps the cutoff session-tz-independent
-        # (r12 review; see retention._epoch_s)
-        cutoff_s = _epoch_s(now - dt.timedelta(seconds=ttl_s))
         m = self._read_manifest()
         if not m["files"]:
             return 0
         from urllib.parse import unquote, urlparse
 
+        live = _live(ttl_s, now)
         df = self.df().withColumn("_file", F.input_file_name())
-        expired = F.col("ingested_at").cast("long") < F.lit(cutoff_s)
         # ONE job finds the hot files AND the expired row count per file
         # (keyed on the RAW input_file_name URIs — reconstructing them
         # from relative paths is scheme/slash-fragile)
-        per_file = (df.where(expired).groupBy("_file")
+        per_file = (df.where(~live).groupBy("_file")
                     .agg(F.count("*").alias("_n")).collect())
         if not per_file:
             return 0
@@ -252,15 +294,19 @@ class ManifestStore:
         n_removed = sum(r["_n"] for r in per_file)
         # re-stage ONLY the hot files' live rows: the read is a direct
         # scan of those files, never the whole store
-        live = (self.spark.read.parquet(
-                    *[os.path.join(self.path, f) for f in sorted(hot)])
-                .where((F.col("ingested_at").cast("long")
-                        >= F.lit(cutoff_s))
-                       | F.col("ingested_at").isNull()))
-        staged = self._stage(live)
+        staged = self._stage(self.spark.read.parquet(
+            *[os.path.join(self.path, f) for f in sorted(hot)]).where(live))
         keep = [f for f in m["files"] if f not in hot]
         self._commit(keep + staged, m["batch_ids"], m["version"])
         return n_removed
+
+    def live_count(self, ttl_s: int, now: dt.datetime | None = None) -> int:
+        """The ``max_keys`` admission-control probe: rows ``expire``
+        would keep (``ttl_s == -1`` counts every row)."""
+        df = self.df()
+        if ttl_s != -1:
+            df = df.where(_live(ttl_s, now))
+        return df.count()
 
     def compact(self, sort_cols: tuple[str, ...] = (),
                 target_file_bytes: int = 128 * 1024 * 1024) -> int:

@@ -2,12 +2,12 @@
 
 The reference's store is Redis keyed by the composite string; consumers do
 SCAN globs, GETs, and `find block/trx` (README.md:250-309, bin/meeseeker:34).
-Here the store is a parquet table partitioned by ``chain`` with files
-sorted by ``block_num`` — so C1 patterns become partition-pruned, row-group-
-pruned column predicates, and the fat ``value`` column is only read when the
-query projects it (column pruning).
+Here the store is a manifest-committed parquet table (manifest.ManifestStore)
+whose files are range-clustered on (chain, block_num) — so C1 patterns become
+pushed column predicates with min/max row-group pruning, and the fat
+``value`` column is only read when the query projects it (column pruning).
 
-At 100 TB the same layout holds: chain partition + block_num clustering
+At 100 TB the same layout holds: (chain, block_num) clustering
 (Delta/Iceberg z-order or hourly sub-partitions on a real deployment);
 nothing here assumes single-node.
 """
@@ -20,6 +20,11 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .keys import glob_to_filter, parse_key
+from .manifest import ManifestStore, is_manifest_store, open_committed
+
+# range partitions per OpsStore.write: the TOTAL writer count across all
+# chains (a two-chain frame splits these tasks between the chains)
+_WRITERS = 8
 
 
 def newest_by_key(df: DataFrame, key: str,
@@ -51,65 +56,34 @@ class OpsStore:
     # -- write side (S7) ----------------------------------------------------
 
     @staticmethod
-    def write(ops: DataFrame, path: str, mode: str = "overwrite",
-              writers_per_chain: int = 8) -> None:
-        """Partition by chain, cluster files by block_num so C1 scans prune.
-        ``ingested_at`` drives TTL retention (O-3).
+    def write(ops: DataFrame, path: str) -> None:
+        """Replace the store's contents with ``ops`` in one manifest
+        overwrite commit; ``ingested_at`` drives TTL retention (O-3).
 
         The shuffle is a RANGE partition on (chain, block_num), NOT a hash
         on chain alone — a chain-only repartition means ONE writer task
         per chain, a serial choke at any real volume. Range partitioning
         keeps every output file a contiguous block range (min/max
-        row-group pruning stays as sharp as a global sort).
-        ``writers_per_chain`` is the TOTAL range-partition count across
-        all chains (r15 review: the old name read as per-chain — a
-        two-chain frame splits these tasks between the chains, so size
-        it as chains × desired-writers on a multi-chain store).
-        """
+        row-group pruning stays as sharp as a global sort).  Superseded
+        files stay until gc (``compact`` / ``expire --gc``)."""
         if "ingested_at" not in ops.columns:
             ops = ops.withColumn("ingested_at", F.current_timestamp())
-        (
-            ops.repartitionByRange(writers_per_chain, "chain", "block_num")
-            .sortWithinPartitions("block_num", "trx_id", "trx_index")
-            .write.partitionBy("chain")
-            .mode(mode)
-            .parquet(path)
-        )
-
-    @staticmethod
-    def write_bucketed(ops: DataFrame, table: str, buckets: int = 32,
-                       mode: str = "overwrite") -> None:
-        """Bucketed variant of the keyed store (catalog table, not a bare
-        path): hash-bucketed AND sorted by block_num. Any join or
-        aggregation keyed on block_num between two tables bucketed the
-        same way runs WITHOUT a shuffle on either side — at 100 TB this is
-        how the notify-get join (C5) and the reconciliation joins (D1-D3)
-        avoid re-exchanging the big ops table every query. Requires a
-        metastore-backed table (saveAsTable); the path-based writer above
-        stays the hermetic default.
-        """
-        if "ingested_at" not in ops.columns:
-            ops = ops.withColumn("ingested_at", F.current_timestamp())
-        (
-            ops.repartition(buckets, "block_num")
-            .write.bucketBy(buckets, "block_num")
-            .sortBy("block_num")
-            .mode(mode)
-            .saveAsTable(table)
-        )
+        spark = ops.sparkSession
+        ms = open_committed(spark, path) or ManifestStore(spark, path)
+        ms.overwrite(ops.repartitionByRange(_WRITERS, "chain", "block_num")
+                     .sortWithinPartitions("block_num", "trx_id",
+                                           "trx_index"))
 
     def df(self) -> DataFrame:
-        """Layout-aware read (r6): a manifest-committed store (the
-        streaming sink's default layout) reads through its manifest, a
-        chain=-partitioned dump directly — so the whole C1-C6 query
-        surface (scan/get/find/has_block) works against either without
-        a compaction step in between.  On the manifest layout ``chain``
-        is a data column, not a partition dir; key-glob predicates still
-        push down as column filters with min/max row-group pruning."""
-        from .manifest import ManifestStore, is_manifest_store
-        if is_manifest_store(self.path):
-            return ManifestStore(self.spark, self.path).df()
-        return self.spark.read.parquet(self.path)
+        """The committed table.  ``chain`` is a data column; key-glob
+        predicates push down as column filters with min/max row-group
+        pruning.  Raises FileNotFoundError until the first commit and
+        ValueError for a path that is not a manifest store."""
+        ms = open_committed(self.spark, self.path)
+        if ms is None:
+            raise FileNotFoundError(
+                f"{self.path} has no committed manifest version")
+        return ms.df()
 
     # -- C1: key-pattern scan ----------------------------------------------
 
@@ -166,15 +140,12 @@ class OpsStore:
     # -- C4: reset (bulk delete by chain prefix) ------------------------------
 
     def reset(self, chain: str = "all") -> None:
-        """Bulk delete by chain prefix.  ``chain=``-partitioned layout
-        (OpsStore.write): partition drop —
-        the scale-correct delete (no rewrite); `all` truncates the
-        store.  Manifest layout: one atomic overwrite commit of the
-        surviving rows (`all` commits the empty table, which — unlike
-        the dir truncate — keeps the schema readable); recorded batch
-        ids are cleared, matching the reference's reset-then-fresh-sync
-        semantics (a retained checkpoint would otherwise short-circuit
-        the re-ingest of the very keys just deleted).
+        """Bulk delete by chain prefix: one atomic overwrite commit of the
+        surviving rows (`all` commits the empty table, which keeps the
+        schema readable); recorded batch ids are cleared, matching the
+        reference's reset-then-fresh-sync semantics (a retained
+        checkpoint would otherwise short-circuit the re-ingest of the
+        very keys just deleted).
 
         The ``<path>_meta`` HWM sibling and the ``<path>_pending``
         irreversible staging dir are dropped too (r13 review): the
@@ -199,54 +170,23 @@ class OpsStore:
         additive surface outside reset's key-drop contract.
 
         The keep filter is NULL-safe (ADVICE r6): ``chain != 'x'``
-        alone would silently drop NULL-chain rows that the partition
-        drop never touched.  A store with no committed data resets as a
-        no-op, matching the rmtree path.
-
-        An un-partitioned loose-file store is rewritten in place for a
-        CHAIN-specific reset (atomic exchange swap, retention.expire's
-        protocol) instead of a silent nothing-deleted no-op (r15
-        durability review)."""
-        from .manifest import ManifestStore, is_manifest_store
+        alone would silently drop NULL-chain rows.  A missing or
+        never-committed path resets as a no-op; a path holding parquet
+        but no committed manifest raises BEFORE ``_meta`` / ``_pending``
+        are touched (r15 durability review: a silent nothing-deleted
+        no-op that still destroyed the HWM)."""
+        ms = open_committed(self.spark, self.path)
         self._drop_sync_state()
-        if is_manifest_store(self.path):
-            ms = ManifestStore(self.spark, self.path)
-            try:
-                cur = ms.df()
-            except FileNotFoundError:
-                return                     # nothing committed → no-op
-            keep = cur.limit(0) if chain == "all" \
-                else cur.where((F.col("chain") != chain)
-                               | F.col("chain").isNull())
-            ms.overwrite(keep)
-            # one version of grace for concurrent readers of the
-            # pre-reset manifest (see compact_meta's gc note)
-            ms.gc(keep_versions=2)
+        if ms is None:
             return
-        if chain == "all":
-            if os.path.exists(self.path):
-                shutil.rmtree(self.path)
-            os.makedirs(self.path, exist_ok=True)
-            return
-        from .retention import _recover
-        _recover(self.path)   # roll a crashed prior swap forward first
-        part = os.path.join(self.path, f"chain={chain}")
-        if os.path.exists(part):
-            shutil.rmtree(part)
-            return
-        if os.path.isdir(self.path) and any(
-                f.endswith(".parquet") for f in os.listdir(self.path)):
-            # un-partitioned loose-file store (the expire fallback's
-            # layout): rewrite the survivors in place instead of the
-            # old silent nothing-deleted no-op (r15 durability review).
-            # NULL-safe keep filter, same contract as the manifest
-            # branch; atomic renameat2 exchange with the loud
-            # two-rename fallback, same protocol as retention.expire.
-            from .retention import _swap_in
-            keep = self.df().where((F.col("chain") != chain)
-                                   | F.col("chain").isNull())
-            keep.write.mode("overwrite").parquet(self.path + ".tmp")
-            _swap_in(self.path, "chain reset")
+        cur = ms.df()
+        keep = cur.limit(0) if chain == "all" \
+            else cur.where((F.col("chain") != chain)
+                           | F.col("chain").isNull())
+        ms.overwrite(keep)
+        # one version of grace for concurrent readers of the
+        # pre-reset manifest (see compact_meta's gc note)
+        ms.gc(keep_versions=2)
 
     def _drop_sync_state(self) -> None:
         """Delete the HWM (_meta) and irreversible staging (_pending)
@@ -283,7 +223,6 @@ class ScheduleStore:
         self.chain = chain
 
     def df(self) -> DataFrame:
-        from .manifest import ManifestStore, is_manifest_store
         from .schemas import WITNESS_SCHEDULES
         import pyspark.sql.types as T
 
@@ -327,8 +266,8 @@ class ScheduleStore:
 
 class UnifiedStore:
     """One scan/get/find surface over EVERY keyed artifact a deployment
-    writes — mainnet ops and engine ops (both live in one chain-
-    partitioned OpsStore after ``compact``) plus the witness-schedule
+    writes — mainnet ops and engine ops (both live in one manifest
+    OpsStore after ``compact``) plus the witness-schedule
     publish log — ops rows through ``keys.glob_to_filter`` and schedule
     rows through ``keys.schedule_glob_filter`` (VERDICT r3 item 8; the
     per-shape split is r15 — one translator over both shapes dropped

@@ -76,10 +76,10 @@ def streaming_ops(blocks_stream: DataFrame, vops_stream: DataFrame | None,
 
 
 def _recover_pending(pending: str) -> None:
-    """Finish or discard an interrupted pending-dir swap (same rename-aside
-    protocol as retention._recover): ``.old`` without the live dir → the
-    swap lost its final rename, restore it; ``.tmp`` → superseded rewrite,
-    discard."""
+    """Finish or discard an interrupted pending-dir rename-aside swap:
+    ``.old`` without the live dir → the swap lost its final rename,
+    restore it; ``.old`` beside the live dir → only the delete was
+    lost, finish it; ``.tmp`` → superseded rewrite, discard."""
     if os.path.exists(pending + ".old"):
         if os.path.exists(pending):
             shutil.rmtree(pending + ".old")

@@ -3,9 +3,9 @@
 SURVEY §1.2 maps the reference's per-key TTL (redis SET+EXPIRE,
 /root/reference/lib/meeseeker/block_follower_job.rb:55-56) onto two Spark
 disposition paths: retention DELETEs on the materialized store
-(retention.py) — and, in *pure streaming state*, GroupState timeouts.
-This module is the second path: ``applyInPandasWithState`` with an
-event-time timeout per key.
+(manifest.ManifestStore.expire) — and, in *pure streaming state*,
+GroupState timeouts.  This module is the second path:
+``applyInPandasWithState`` with an event-time timeout per key.
 
 Semantics: every key emits a ``live`` row when (re)observed; when the
 watermark passes ``last_seen + ttl`` the key's state times out, emits one

@@ -13,8 +13,8 @@ import pyarrow.parquet as pq
 import pytest
 
 from meeseeker_spark import fixtures
+from meeseeker_spark.manifest import ManifestStore
 from meeseeker_spark.query import OpsStore
-from meeseeker_spark.retention import expire
 from meeseeker_spark.streaming import pipeline as P
 from meeseeker_spark.verify import reconcile_blocks
 
@@ -72,18 +72,19 @@ def test_full_lifecycle(spark, tmp_path_factory):
         F.when(F.col("block_num") % 2 == 0, dt.datetime(2000, 1, 1))
         .otherwise(dt.datetime(2100, 1, 1)))
     OpsStore.write(aged, str(d / "store2"))
-    removed = expire(spark, str(d / "store2"), ttl_s=86_400,
-                     now=dt.datetime(2000, 1, 3))
-    left = spark.read.parquet(str(d / "store2"))
+    removed = ManifestStore(spark, str(d / "store2")).expire(
+        ttl_s=86_400, now=dt.datetime(2000, 1, 3))
+    store2 = OpsStore(spark, str(d / "store2"))
+    left = store2.df()
     assert removed > 0
     assert left.where("block_num % 2 = 0").count() == 0
     assert left.where("block_num % 2 = 1").count() > 0
 
-    # 6. reset drops the chain partition wholesale (directory-level
-    # delete — an emptied store has no schema left to read, by design)
-    store2 = OpsStore(spark, str(d / "store2"))
+    # 6. reset deletes the chain's rows in one commit; the emptied
+    # store keeps its schema readable
     store2.reset("hive")
-    assert not (d / "store2" / "chain=hive").exists()
+    assert store2.df().where("chain = 'hive'").count() == 0
+    assert "key" in store2.df().columns
 
 
 def test_cli_surface(spark, tmp_path_factory, capsys):
@@ -115,7 +116,8 @@ def test_cli_surface(spark, tmp_path_factory, capsys):
                  "--blocks", str(d / "blocks")]) == 0
 
     assert main(["reset", "hive", "--store", str(d / "store")]) == 0
-    assert not (d / "store" / "chain=hive").exists()
+    assert OpsStore(spark, str(d / "store")).df().where(
+        "chain = 'hive'").count() == 0
 
     # --max-blocks (r13, the reference verify tasks' bound): a store
     # holding only the newest 10 blocks' ops fails a full-range verify

@@ -6499,26 +6499,6 @@ def test_screen_replay_vs_duckdb_and_stage_interaction(spark):
     assert any(r[1] >= 10_000_000 for r in exact)
 
 
-def test_ngram_repetition_variants_agree(spark):
-    """The r15 Arrow mass kernel (default), the r11 zero-shuffle
-    catalyst fold and the r10 stacked-explode form are bit-identical on
-    the fixture — the equality that lets the measured-variant swaps
-    keep every existing exactness gate (the division + round stay in
-    Spark in all three, so floats can only differ if the integer
-    masses do)."""
-    from meeseeker_spark.ext.text import ngram_repetition
-    from meeseeker_spark.tables import load
-
-    docs = load(spark, SF, "documents")
-    a = sorted(tuple(r) for r in
-               ngram_repetition(docs).collect())
-    b = sorted(tuple(r) for r in
-               ngram_repetition(docs, arrow=False).collect())
-    c = sorted(tuple(r) for r in
-               ngram_repetition(docs, stacked=True).collect())
-    assert a == b == c and len(a) > 0
-
-
 def test_connected_components_deep_chain(spark):
     """Regression (r11 review): a near-dup CHAIN deeper than the
     iteration cap used to return silently non-minimal labels (plain

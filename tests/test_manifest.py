@@ -240,13 +240,12 @@ def test_compact_folds_commits(spark, tmp_path):
     assert s.compact() == 0           # single file: nothing to fold
 
 
-def test_cli_expire_both_layouts(spark, tmp_path, capsys):
+def test_cli_expire_manifest_store(spark, tmp_path, capsys):
     import datetime as ddt
 
     from meeseeker_spark.__main__ import main
 
     old = ddt.datetime(2020, 1, 1)
-    # manifest layout
     m = ManifestStore(spark, str(tmp_path / "mstore"))
     m.append(_rows(spark, [1], ingested=old).withColumn(
         "block_num", F.lit(7)).coalesce(1))
@@ -257,17 +256,6 @@ def test_cli_expire_both_layouts(spark, tmp_path, capsys):
                  "--gc"]) == 0
     assert "expired 1 rows" in capsys.readouterr().out
     assert sorted(r["id"] for r in m.df().collect()) == [2]
-
-    # chain=-partitioned layout (retention.expire's rename protocol)
-    d = tmp_path / "dstore"
-    df = spark.createDataFrame(
-        [("hive", 1, old), ("hive", 2, None)],
-        "chain string, block_num bigint, ingested_at timestamp")
-    (df.withColumn("trx_id", F.lit("ab")).withColumn("trx_index", F.lit(0))
-     .write.partitionBy("chain").parquet(str(d)))
-    assert main(["expire", "--store", str(d)]) == 0
-    assert "expired 1 rows" in capsys.readouterr().out
-    assert spark.read.parquet(str(d)).count() == 1
 
 
 def test_gc_survives_version_gap(spark, tmp_path):
@@ -393,12 +381,10 @@ def test_time_travel_horizon_after_gc(spark, tmp_path):
 
 
 def test_retention_api_delegates_to_manifest(spark, tmp_path):
-    """retention.expire / live_key_count on a manifest-layout path route
-    through ManifestStore (one protocol owns the graded paths): expired
-    rows leave, no .old/.tmp rename artifacts ever appear, and the
-    committed history advances by exactly one version."""
-    from meeseeker_spark import retention
-
+    """ManifestStore.live_count and expire share one cutoff rule: the
+    live count predicts exactly the rows expire keeps, expired rows
+    leave with no .old/.tmp rename artifacts, and the committed history
+    advances by exactly one version."""
     path = str(tmp_path / "m")
     s = ManifestStore(spark, path)
     now = dt.datetime(2026, 1, 2)
@@ -406,15 +392,17 @@ def test_retention_api_delegates_to_manifest(spark, tmp_path):
     s.append(_rows(spark, [3, 4], ingested=now))
     v_before = s.current_version()
 
-    assert retention.live_key_count(spark, path, ttl_s=86_400, now=now) == 2
-    removed = retention.expire(spark, path, ttl_s=86_400, now=now)
+    assert s.live_count(ttl_s=86_400, now=now) == 2
+    assert s.live_count(ttl_s=-1, now=now) == 4
+    removed = s.expire(ttl_s=86_400, now=now)
     assert removed == 2
     assert sorted(r["id"] for r in s.df().collect()) == [3, 4]
+    assert s.live_count(ttl_s=86_400, now=now) == 2
     assert s.current_version() == v_before + 1
     assert not [d for d in os.listdir(path)
                 if d.startswith((".old", ".tmp"))]
     # ttl=-1 disables expiry through the same API
-    assert retention.expire(spark, path, ttl_s=-1, now=now) == 0
+    assert s.expire(ttl_s=-1, now=now) == 0
 
 
 def test_commit_collision_raises_and_keeps_winner(spark, tmp_path):

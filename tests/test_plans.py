@@ -98,10 +98,9 @@ def test_ops_store_partition_pruning(spark, tmp_path_factory):
     store = OpsStore(spark, path)
 
     plan = explain_str(store.scan("hive:*:vote"))
-    # chain glob segment → partition filter (directory pruning),
-    # op_type segment → pushed data filter
-    assert "PartitionFilters" in plan
-    assert "chain" in plan.split("PartitionFilters", 1)[1][:200]
+    # chain and op_type glob segments → pushed data filters (min/max
+    # row-group pruning on the (chain, block_num)-clustered files)
+    assert "EqualTo(chain,hive)" in plan
     assert "EqualTo(op_type,vote)" in plan
 
     plan2 = explain_str(store.get(store.df().first()["key"]))
@@ -170,41 +169,6 @@ def test_flagship_no_python_udfs(spark):
                  "knn_topk", "text_stats", "lang_id"):
         plan = explain_str(catalog.ENTRIES[name].spark(spark, SF))
         assert "EvalPython" not in plan, name
-
-
-def test_bucketed_join_eliminates_shuffle(spark, tmp_path_factory):
-    """Two tables bucketed on block_num join with ZERO exchanges — the
-    co-located join that keeps D1-D3/C5 shuffle-free at scale."""
-    import pyspark.sql.functions as F
-
-    fx = fixtures.generate(n_blocks=21, seed=3)
-    d = tmp_path_factory.mktemp("bucketed")
-    fixtures.write_parquet(fx, str(d))
-    from meeseeker_spark.schemas import BLOCKS, VIRTUAL_OPS
-    blocks = spark.read.schema(BLOCKS).parquet(str(d / "blocks.parquet"))
-    vops = spark.read.schema(VIRTUAL_OPS).parquet(str(d / "virtual_ops.parquet"))
-    ops = flatten_ops_with_virtual(blocks, vops)
-
-    spark.sql("DROP TABLE IF EXISTS ops_bucketed")
-    spark.sql("DROP TABLE IF EXISTS notif_bucketed")
-    OpsStore.write_bucketed(ops, "ops_bucketed", buckets=8)
-    OpsStore.write_bucketed(
-        ops.select("chain", "block_num", "key"), "notif_bucketed", buckets=8)
-    try:
-        a = spark.table("ops_bucketed")
-        b = spark.table("notif_bucketed").select(
-            F.col("block_num"), F.col("key").alias("notif_key"))
-        # hint("merge") pins SMJ (at test size the planner would broadcast
-        # instead; at real scale neither side is broadcastable and SMJ is
-        # what the planner picks on its own)
-        joined = a.hint("merge").join(b, "block_num")
-        plan = explain_str(joined)
-        assert "Exchange" not in plan, "bucketed join must not shuffle"
-        assert "SortMergeJoin" in plan
-        assert joined.count() > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS ops_bucketed")
-        spark.sql("DROP TABLE IF EXISTS notif_bucketed")
 
 
 def test_contamination_broadcasts_benchmark(spark):
@@ -496,13 +460,10 @@ def test_margin_pairs_no_cartesian(spark):
 
 
 def test_ngram_repetition_plan_shapes(spark):
-    """The default battery never leaves the row: no Generate, no
-    Exchange — one narrow map for all nine n values.  r15: the default
-    rides the Arrow mass kernel (one MapInArrow node, still narrow —
-    no row-at-a-time EvalPython); the catalyst fallback stays a pure
-    projection.  The kept stacked variant must still ride ONE explode
-    (one Generate node): nine separate explodes would shuffle the gram
-    volume nine times."""
+    """The battery never leaves the row: no Generate, no Exchange — one
+    narrow map for all nine n values.  r15: it rides the Arrow mass
+    kernel (one MapInArrow node, still narrow — no row-at-a-time
+    EvalPython)."""
     from meeseeker_spark.ext.text import ngram_repetition
     from meeseeker_spark.tables import load
 
@@ -518,19 +479,6 @@ def test_ngram_repetition_plan_shapes(spark):
     assert "Generate" not in nospread
     assert "Exchange" not in nospread
     assert "MapInArrow" in nospread
-    narrow = explain_str(ngram_repetition(docs0, arrow=False,
-                                          spread=False))
-    assert "Generate" not in narrow
-    assert "Exchange" not in narrow
-    assert "EvalPython" not in narrow and "MapInArrow" not in narrow
-
-    docs = load(spark, SF, "documents")
-    stacked = explain_str(ngram_repetition(docs, stacked=True))
-    # formatted explain mentions a node twice (tree line + detail
-    # section) — one Generate node ⇒ exactly 2 mentions; nine explodes
-    # would show 18
-    assert stacked.count("Generate") == 2
-    assert "EvalPython" not in stacked
 
 
 def test_spread_scan_two_regimes(spark):

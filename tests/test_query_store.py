@@ -1,4 +1,4 @@
-"""OpsStore: write layout, scan/get/find/reset, retention expiry."""
+"""OpsStore: manifest write, scan/get/find/reset, TTL expiry."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from meeseeker_spark import fixtures, retention
+from meeseeker_spark import fixtures
 from meeseeker_spark.flatten import flatten_engine_blocks, flatten_ops_with_virtual
 from meeseeker_spark.manifest import ManifestStore
 from meeseeker_spark.query import OpsStore
@@ -28,12 +28,6 @@ def store(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("ops_store") / "ops")
     OpsStore.write(ops, path)
     return OpsStore(spark, path)
-
-
-def test_partition_layout(store):
-    # chain is a physical partition → scans with chain predicates prune dirs
-    subdirs = {d for d in os.listdir(store.path) if d.startswith("chain=")}
-    assert subdirs == {"chain=hive", "chain=hive_engine"}
 
 
 def test_scan_pattern(store):
@@ -64,10 +58,12 @@ def test_has_block_probe(store):
 
 
 def test_scan_plan_prunes(store):
-    # the C1 predicate must reach the scan: partition filter on chain,
-    # pushed filter on op_type
+    # the C1 predicate must reach the scan: chain and op_type segments
+    # are pushed data filters (min/max row-group pruning)
     plan = store.scan("hive:*:vote")._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan or "pushedfilters" in plan.lower()
+    assert "PushedFilters" in plan
+    assert "EqualTo(chain,hive)" in plan
+    assert "EqualTo(op_type,vote)" in plan
 
 
 def test_retention_expire(spark, store, tmp_path_factory):
@@ -78,129 +74,31 @@ def test_retention_expire(spark, store, tmp_path_factory):
         "ingested_at",
         F.when(F.col("block_num") % 2 == 0, F.lit(old)).otherwise(F.lit(now)))
     OpsStore.write(df, path)
-    total = spark.read.parquet(path).count()
-    removed = retention.expire(spark, path, ttl_s=86_400, now=now)
-    remaining = spark.read.parquet(path).count()
+    st = OpsStore(spark, path)
+    total = st.df().count()
+    removed = ManifestStore(spark, path).expire(ttl_s=86_400, now=now)
     assert removed > 0
-    assert remaining == total - removed
-    assert spark.read.parquet(path).where(
+    assert st.df().count() == total - removed
+    assert st.df().where(
         F.col("ingested_at") < F.lit(now - dt.timedelta(seconds=86_400))
     ).count() == 0
     # ttl -1 disables expiry
-    assert retention.expire(spark, path, ttl_s=-1, now=now) == 0
-
-
-def test_retention_untouched_partition_byte_identical(spark, store,
-                                                      tmp_path_factory):
-    """Only partitions containing expired rows are rewritten: a chain with
-    no expired rows keeps its exact files (names and bytes)."""
-    path = str(tmp_path_factory.mktemp("ttl_prune") / "ops")
-    now = dt.datetime(2024, 6, 1, 12, 0, 0)
-    old = now - dt.timedelta(days=2)
-    df = store.df().withColumn(
-        "ingested_at",
-        F.when(F.col("chain") == "hive", F.lit(old)).otherwise(F.lit(now)))
-    OpsStore.write(df, path)
-
-    eng_dir = os.path.join(path, "chain=hive_engine")
-
-    def snap(d):
-        return {f: open(os.path.join(d, f), "rb").read()
-                for f in sorted(os.listdir(d))
-                if not f.startswith(("_", "."))}
-
-    before = snap(eng_dir)
-    n_hive = spark.read.parquet(path).where("chain = 'hive'").count()
-    removed = retention.expire(spark, path, ttl_s=86_400, now=now)
-    assert removed == n_hive
-    assert snap(eng_dir) == before
-    # the expired chain is gone, the fresh chain fully intact
-    chains = {r["chain"] for r in
-              spark.read.parquet(path).select("chain").distinct().collect()}
-    assert chains == {"hive_engine"}
-
-
-def test_retention_crash_safe_swap(spark, store, tmp_path_factory,
-                                   monkeypatch):
-    """A crash after the swap but before the old copy is deleted loses
-    nothing: the store stays whole, and a re-run recovers the leftovers."""
-    import shutil as _shutil
-
-    path = str(tmp_path_factory.mktemp("ttl_crash") / "ops")
-    now = dt.datetime(2024, 6, 1, 12, 0, 0)
-    old = now - dt.timedelta(days=2)
-    # only 'hive' has expired rows (half of them); hive_engine all fresh
-    df = store.df().withColumn(
-        "ingested_at",
-        F.when((F.col("chain") == "hive") & (F.col("block_num") % 2 == 0),
-               F.lit(old)).otherwise(F.lit(now)))
-    OpsStore.write(df, path)
-    n_total = spark.read.parquet(path).count()
-    n_expired = spark.read.parquet(path).where(
-        F.col("ingested_at") < F.lit(now - dt.timedelta(seconds=86_400))
-    ).count()
-    assert n_expired > 0
-
-    real_rmtree = _shutil.rmtree
-
-    def boom(p, *a, **kw):
-        if ".old_chain=" in str(p):
-            raise RuntimeError("injected crash before old-copy delete")
-        return real_rmtree(p, *a, **kw)
-
-    monkeypatch.setattr("meeseeker_spark.retention.shutil.rmtree", boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        retention.expire(spark, path, ttl_s=86_400, now=now)
-    monkeypatch.undo()
-
-    # the swap already landed: visible store is complete and expired-free
-    # (Spark ignores the dot-prefixed .old_chain= leftover)
-    assert spark.read.parquet(path).count() == n_total - n_expired
-    assert os.path.exists(os.path.join(path, ".old_chain=hive"))
-    # re-run finishes the recovery: leftover gone, nothing more to expire
-    assert retention.expire(spark, path, ttl_s=86_400, now=now) == 0
-    assert not os.path.exists(os.path.join(path, ".old_chain=hive"))
-    assert spark.read.parquet(path).count() == n_total - n_expired
-
-
-def test_retention_recover_restores_interrupted_rename(spark, store,
-                                                       tmp_path_factory):
-    """The harder crash window — between the two renames — leaves the
-    partition aside in .old_chain=; _recover restores it and a re-run
-    completes the expiry with no rows lost."""
-    path = str(tmp_path_factory.mktemp("ttl_crash2") / "ops")
-    now = dt.datetime(2024, 6, 1, 12, 0, 0)
-    old = now - dt.timedelta(days=2)
-    df = store.df().withColumn(
-        "ingested_at",
-        F.when((F.col("chain") == "hive") & (F.col("block_num") % 2 == 0),
-               F.lit(old)).otherwise(F.lit(now)))
-    OpsStore.write(df, path)
-    n_live = spark.read.parquet(path).where(
-        F.col("ingested_at") >= F.lit(now - dt.timedelta(seconds=86_400))
-    ).count()
-
-    # simulate: old renamed aside, tmp write present, second rename lost
-    os.rename(os.path.join(path, "chain=hive"),
-              os.path.join(path, ".old_chain=hive"))
-    os.makedirs(os.path.join(path, ".tmp_chain=hive"))
-
-    removed = retention.expire(spark, path, ttl_s=86_400, now=now)
-    assert removed > 0
-    assert spark.read.parquet(path).count() == n_live
-    assert not os.path.exists(os.path.join(path, ".old_chain=hive"))
-    assert not os.path.exists(os.path.join(path, ".tmp_chain=hive"))
+    assert ManifestStore(spark, path).expire(ttl_s=-1, now=now) == 0
 
 
 def test_reset_partition_drop(spark, store, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("reset") / "ops")
     OpsStore.write(store.df(), path)
     s = OpsStore(spark, path)
+    n_hive = s.df().where("chain = 'hive'").count()
+    assert n_hive > 0
     s.reset("hive_engine")
     chains = {r["chain"] for r in s.df().select("chain").distinct().collect()}
     assert chains == {"hive"}
+    assert s.df().count() == n_hive
     s.reset("all")
-    assert os.listdir(path) == []
+    assert s.df().count() == 0
+    assert "key" in s.df().columns       # the empty table keeps its schema
 
 
 def test_raw_sql_surface(spark):
@@ -248,16 +146,8 @@ def test_sessionize_matches_session_window(spark):
 
 def test_expire_keeps_null_ingested_at(spark, tmp_path_factory):
     """NULL ingested_at = no recorded ingest time → never expires (and is
-    never silently dropped by a partition rewrite)."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from meeseeker_spark import fixtures
+    never silently dropped by a file rewrite)."""
     from meeseeker_spark.flatten import flatten_blocks
-    from meeseeker_spark.query import OpsStore
-    from meeseeker_spark.retention import expire, live_key_count
-    from meeseeker_spark.schemas import BLOCKS
 
     fx = fixtures.generate(n_blocks=21, seed=3)
     d = tmp_path_factory.mktemp("nullttl")
@@ -273,114 +163,14 @@ def test_expire_keeps_null_ingested_at(spark, tmp_path_factory):
     n_null = aged.where("ingested_at IS NULL").count()
     n_old = aged.where("ingested_at IS NOT NULL").count()
 
-    removed = expire(spark, str(d / "store"), ttl_s=86_400,
-                     now=dt.datetime(2000, 1, 3))
-    left = spark.read.parquet(str(d / "store"))
+    ms = ManifestStore(spark, str(d / "store"))
+    removed = ms.expire(ttl_s=86_400, now=dt.datetime(2000, 1, 3))
+    left = OpsStore(spark, str(d / "store")).df()
     assert removed == n_old
     assert left.count() == n_null
     assert left.where("ingested_at IS NOT NULL").count() == 0
-    assert live_key_count(spark, str(d / "store"), ttl_s=86_400,
-                          now=dt.datetime(2000, 1, 3)) == n_null
-
-
-def test_expire_unpartitioned_store(spark, tmp_path_factory):
-    """A store without chain= partition dirs falls back to a whole-store
-    crash-safe swap instead of crashing on the missing partition path."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from meeseeker_spark import fixtures
-    from meeseeker_spark.flatten import flatten_blocks
-    from meeseeker_spark.retention import expire
-    from meeseeker_spark.schemas import BLOCKS
-
-    fx = fixtures.generate(n_blocks=21, seed=3)
-    d = tmp_path_factory.mktemp("flatttl")
-    fixtures.write_parquet(fx, str(d))
-    ops = flatten_blocks(
-        spark.read.schema(BLOCKS).parquet(str(d / "blocks.parquet")))
-    aged = ops.withColumn(
-        "ingested_at",
-        F.when(F.col("block_num") % 2 == 0,
-               F.lit(dt.datetime(2000, 1, 1)))
-        .otherwise(F.lit(dt.datetime(2100, 1, 1))).cast("timestamp"))
-    aged.write.mode("overwrite").parquet(str(d / "flat"))  # NO partitionBy
-
-    removed = expire(spark, str(d / "flat"), ttl_s=86_400,
-                     now=dt.datetime(2000, 1, 3))
-    left = spark.read.parquet(str(d / "flat"))
-    assert removed > 0
-    assert left.where("block_num % 2 = 0").count() == 0
-    assert left.where("block_num % 2 = 1").count() > 0
-    # the primary swap is the atomic exchange: no .old sibling artifact
-    assert not os.path.exists(str(d / "flat") + ".old")
-    assert not os.path.exists(str(d / "flat") + ".tmp")
-
-
-def test_renameat2_exchange_swap(tmp_path):
-    """VERDICT r14 item 4: the whole-store expire swap is an atomic
-    renameat2(RENAME_EXCHANGE) — prove the primitive on this
-    filesystem: both paths exist before AND after, contents swapped, no
-    intermediate ENOENT state possible by construction."""
-    from meeseeker_spark.retention import _exchange
-
-    import pytest as _pytest
-
-    a, b = tmp_path / "a", tmp_path / "b"
-    a.mkdir(), b.mkdir()
-    (a / "x").write_text("old")
-    (b / "x").write_text("new")
-    if not _exchange(str(a), str(b)):
-        # _exchange returning False on VALID operands is the designed
-        # fallback signal (libc/kernel/FS without exchange support) —
-        # expire then uses the loud two-rename path, covered by
-        # test_expire_unpartitioned_fallback_is_loud.  Only the
-        # primitive's presence is environment-dependent, not the code.
-        _pytest.skip("renameat2 exchange unsupported on this filesystem")
-    assert (a / "x").read_text() == "new"
-    assert (b / "x").read_text() == "old"
-    # a missing operand is a REAL error, not a silent fallback signal
-    # (errno ENOENT is outside the unsupported set) — only assertable
-    # where the syscall itself is known supported, hence after the gate
-    with _pytest.raises(OSError):
-        _exchange(str(tmp_path / "nope"), str(a))
-
-
-def test_expire_unpartitioned_fallback_is_loud(spark, tmp_path_factory,
-                                               monkeypatch, capsys):
-    """When the filesystem lacks renameat2 exchange, the whole-store
-    expire falls back to the two-rename swap — correct result, but the
-    reader-visible ENOENT window is announced on stderr instead of
-    silently downgraded."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from meeseeker_spark import fixtures, retention
-    from meeseeker_spark.flatten import flatten_blocks
-    from meeseeker_spark.schemas import BLOCKS
-
-    fx = fixtures.generate(n_blocks=21, seed=3)
-    d = tmp_path_factory.mktemp("flatttl_fb")
-    fixtures.write_parquet(fx, str(d))
-    ops = flatten_blocks(
-        spark.read.schema(BLOCKS).parquet(str(d / "blocks.parquet")))
-    aged = ops.withColumn(
-        "ingested_at",
-        F.when(F.col("block_num") % 2 == 0,
-               F.lit(dt.datetime(2000, 1, 1)))
-        .otherwise(F.lit(dt.datetime(2100, 1, 1))).cast("timestamp"))
-    aged.write.mode("overwrite").parquet(str(d / "flat"))
-
-    monkeypatch.setattr(retention, "_exchange", lambda a, b: False)
-    removed = retention.expire(spark, str(d / "flat"), ttl_s=86_400,
-                               now=dt.datetime(2000, 1, 3))
-    assert removed > 0
-    left = spark.read.parquet(str(d / "flat"))
-    assert left.where("block_num % 2 = 0").count() == 0
-    assert left.where("block_num % 2 = 1").count() > 0
-    assert "two-rename swap" in capsys.readouterr().err
+    assert ms.live_count(ttl_s=86_400,
+                         now=dt.datetime(2000, 1, 3)) == n_null
 
 
 def test_unified_store_schedule_scan(spark, tmp_path_factory, store):
@@ -550,25 +340,16 @@ def test_reset_on_never_committed_manifest_store(spark, tmp_path_factory):
 
 def test_ttl_cutoff_session_tz_independent(spark, tmp_path_factory):
     """r12 hardening: the TTL cutoff used F.lit(naive_datetime), which
-    converts through the PYTHON PROCESS's OS timezone — correct on this
-    UTC container but environmental, not structural (a non-UTC OS box
+    converts through the PYTHON PROCESS's OS timezone — correct on a
+    UTC box but environmental, not structural (a non-UTC OS box
     would skew every cutoff by its offset; PySpark literals are NOT
     session-tz-interpreted, unlike SQL-parsed strings — the engine
     tip-age bug).  The comparison now runs on epoch seconds; this test
-    pins that expire / live_key_count / ManifestStore.expire decisions
-    are identical under any SESSION timezone and that both the live and
-    expired sides of the 24 h boundary behave (23 h old → live, 25 h →
-    expired, all three surfaces agreeing)."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from meeseeker_spark import fixtures
+    pins that ManifestStore.live_count / expire decisions are identical
+    under any SESSION timezone and that both the live and expired sides
+    of the 24 h boundary behave (23 h old → live, 25 h → expired, both
+    surfaces agreeing)."""
     from meeseeker_spark.flatten import flatten_blocks
-    from meeseeker_spark.manifest import ManifestStore
-    from meeseeker_spark.query import OpsStore
-    from meeseeker_spark.retention import expire, live_key_count
-    from meeseeker_spark.schemas import BLOCKS
 
     fx = fixtures.generate(n_blocks=21, seed=5)
     d = tmp_path_factory.mktemp("ttltz")
@@ -580,45 +361,30 @@ def test_ttl_cutoff_session_tz_independent(spark, tmp_path_factory):
         "ingested_at",
         F.lit(dt.datetime(2020, 1, 2, 0, 0, 0)).cast("timestamp"))
     OpsStore.write(aged, str(d / "store"))
-    ms = ManifestStore(spark, str(d / "mstore"))
-    ms.append(aged, batch_id=0)
+    ms = ManifestStore(spark, str(d / "store"))
     n = aged.count()
 
     now = dt.datetime(2020, 1, 2, 23, 0, 0)   # rows are 23 h old
     tz0 = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        assert live_key_count(spark, str(d / "store"),
-                              ttl_s=86_400, now=now) == n
-        assert expire(spark, str(d / "store"), ttl_s=86_400, now=now) == 0
+        assert ms.live_count(ttl_s=86_400, now=now) == n
         assert ms.expire(ttl_s=86_400, now=now) == 0
         # and the decision still flips when the rows genuinely expire
         later = dt.datetime(2020, 1, 3, 1, 0, 0)  # 25 h old
-        assert live_key_count(spark, str(d / "store"),
-                              ttl_s=86_400, now=later) == 0
-        assert expire(spark, str(d / "store"),
-                      ttl_s=86_400, now=later) == n
+        assert ms.live_count(ttl_s=86_400, now=later) == 0
         assert ms.expire(ttl_s=86_400, now=later) == n
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz0)
 
 
 def test_expire_null_chain_partition(spark, tmp_path_factory):
-    """r14 review: an expired row in the NULL-chain partition (Hive's
-    __HIVE_DEFAULT_PARTITION__ dir) crashed the partition rewrite,
-    which built the path "chain=None" from the grouped value.  NULL
+    """r14 review: an expired NULL-chain row crashed the old per-chain
+    rewrite, which built a partition path from the grouped value.  NULL
     chain is a supported corner (reset's keep filter is NULL-safe for
-    exactly these rows): the default partition must rewrite like any
-    other, and non-null partitions must survive untouched."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from meeseeker_spark import fixtures
+    exactly these rows): its expired rows must leave like any other,
+    and live rows of other chains must survive."""
     from meeseeker_spark.flatten import flatten_blocks
-    from meeseeker_spark.query import OpsStore
-    from meeseeker_spark.retention import expire
-    from meeseeker_spark.schemas import BLOCKS
 
     fx = fixtures.generate(n_blocks=21, seed=3)
     d = tmp_path_factory.mktemp("nullchain")
@@ -635,49 +401,63 @@ def test_expire_null_chain_partition(spark, tmp_path_factory):
                F.lit(dt.datetime(2000, 1, 1)).cast("timestamp"))
         .otherwise(F.lit(dt.datetime(2000, 1, 2, 23)).cast("timestamp")))
     OpsStore.write(aged, str(d / "store"))
-    import os as _os
-    assert "chain=__HIVE_DEFAULT_PARTITION__" in _os.listdir(str(d / "store"))
     n_null = aged.where("chain IS NULL").count()
     n_live = aged.where("chain IS NOT NULL").count()
     assert n_null and n_live
 
-    removed = expire(spark, str(d / "store"), ttl_s=86_400,
-                     now=dt.datetime(2000, 1, 3))
+    removed = ManifestStore(spark, str(d / "store")).expire(
+        ttl_s=86_400, now=dt.datetime(2000, 1, 3))
     assert removed == n_null
-    left = spark.read.parquet(str(d / "store"))
+    left = OpsStore(spark, str(d / "store")).df()
     assert left.count() == n_live
     assert left.where("chain IS NULL").count() == 0
-    # no swap remnants
-    assert not [x for x in _os.listdir(str(d / "store"))
-                if x.startswith((".tmp_", ".old_"))]
 
 
-def test_chain_reset_rewrites_unpartitioned_store(spark, tmp_path_factory):
-    """r15 durability review: a chain-specific reset on an
-    un-partitioned loose-file store (the expire fallback's layout) was
-    a silent nothing-deleted no-op that still destroyed the HWM.  It
-    now rewrites the survivors in place — NULL-chain rows kept
-    (NULL-safe filter), target chain gone, no swap remnants."""
-    import os as _os
+def test_loose_parquet_refused_before_sync_state(spark, tmp_path_factory):
+    """Outside input stays guarded: a path holding parquet files but no
+    committed manifest is refused by reset, expire, reads and writes
+    with a clear error — and reset refuses BEFORE the ``_meta`` HWM
+    sibling is touched (a silent no-op that still deleted the HWM was
+    an r15 bug).  A missing path reads as "no commit yet" and no read
+    or no-op reset creates it."""
+    from meeseeker_spark.__main__ import main
+    from meeseeker_spark.manifest import open_committed
 
-    d = tmp_path_factory.mktemp("reset_loose")
+    d = tmp_path_factory.mktemp("loose")
     path = str(d / "store")
-    ddl = ("key string, chain string, block_num long, trx_id string, "
-           "trx_index long")
-    rows = [("hive:1:t:0:vote", "hive", 1, "t", 0),
-            ("steem:2:t:0:vote", "steem", 2, "t", 0),
-            ("x:3:t:0:vote", None, 3, "t", 0)]
-    spark.createDataFrame(rows, ddl).write.parquet(path)
+    ddl = "key string, chain string, block_num long, ingested_at timestamp"
+    rows = [("hive:1:t:0:vote", "hive", 1, dt.datetime(2000, 1, 1))]
+    spark.createDataFrame(rows, ddl).write.partitionBy("chain").parquet(path)
+    ManifestStore(spark, path + "_meta").append(
+        spark.createDataFrame([("hive", 1)], "chain string, last_block_num long"))
 
     st = OpsStore(spark, path)
-    st.reset("hive")
-    left = spark.read.parquet(path)
-    got = sorted((r["chain"] or "~null", r["block_num"])
-                 for r in left.collect())
-    assert got == [("steem", 2), ("~null", 3)]
-    assert left.where("chain = 'hive'").count() == 0
-    assert not _os.path.exists(path + ".tmp")
-    assert not _os.path.exists(path + ".old")
-    # resetting a chain with no rows is a clean no-op rewrite
-    st.reset("hive")
-    assert spark.read.parquet(path).count() == 2
+    with pytest.raises(ValueError, match="not a manifest store"):
+        st.reset("hive")
+    assert os.path.isdir(path + "_meta")
+    with pytest.raises(ValueError, match="not a manifest store"):
+        st.reset("all")
+    assert os.path.isdir(path + "_meta")
+    with pytest.raises(ValueError, match="not a manifest store"):
+        main(["expire", "--store", path])
+    with pytest.raises(ValueError, match="not a manifest store"):
+        st.df()
+    with pytest.raises(ValueError, match="not a manifest store"):
+        OpsStore.write(spark.createDataFrame(rows, ddl), path)
+    # nothing was converted in place: no manifest skeleton appeared
+    assert not os.path.exists(os.path.join(path, "_manifest"))
+    assert spark.read.parquet(path).count() == 1
+
+    # a crashed FIRST commit leaves orphan parquet under data/ beside an
+    # uncommitted _manifest/ — a never-committed store, not loose input
+    crashed = str(d / "crashed")
+    ManifestStore(spark, crashed)._stage(spark.createDataFrame(rows, ddl))
+    assert open_committed(spark, crashed) is None
+    OpsStore(spark, crashed).reset("hive")
+
+    missing = str(d / "nope")
+    with pytest.raises(FileNotFoundError):
+        OpsStore(spark, missing).df()
+    OpsStore(spark, missing).reset("all")
+    assert main(["expire", "--store", missing]) == 0
+    assert not os.path.exists(missing)
