@@ -38,10 +38,10 @@ def _fold_in_place(spark, path: str | None, sort_cols: tuple) -> int:
     grace for readers of the superseded manifest (the leftover version
     goes on the next pass; without gc N cycles kept ~N full copies).
     Returns files folded; 0 for a path with no committed manifest."""
-    from .manifest import ManifestStore, is_manifest_store
-    if not path or not is_manifest_store(path):
+    from .manifest import open_committed
+    ms = open_committed(spark, path) if path else None
+    if ms is None:
         return 0
-    ms = ManifestStore(spark, path)
     n = ms.compact(sort_cols=sort_cols)
     ms.gc(keep_versions=2)
     return n
@@ -438,7 +438,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if a.cmd == "schedule":
-        from .manifest import ManifestStore, is_manifest_store
+        from .manifest import open_committed
         from .streaming import pipeline as P
 
         spark = _spark()
@@ -450,8 +450,8 @@ def main(argv: list[str] | None = None) -> int:
         # a cadence invocation before the first schedule arrives commits
         # nothing — report the (normal) empty run, not a read error
         # (r15 review)
-        n = (ManifestStore(spark, sched_dir).df().count()
-             if is_manifest_store(sched_dir) else 0)
+        ms = open_committed(spark, sched_dir)
+        n = ms.df().count() if ms else 0
         print(f"published {n} schedules")
         return 0
 

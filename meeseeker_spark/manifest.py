@@ -13,6 +13,19 @@ Layout:
     <path>/data/commit-<token>/part-*.parquet     immutable data files
     <path>/_manifest/v{N}.json                    committed versions
 
+Each ``v{N}.json`` holds ``files`` (the table, relative to ``<path>``),
+``batch_ids`` (the replay short-circuit) and ``schema`` (the table's
+``StructType`` as JSON).  The schema is taken from the staged frame at
+commit time — ``overwrite`` records its frame's, ``append``, ``expire``
+and ``fold`` carry the recorded one forward — so a read hands it to
+``spark.read.schema(...)`` and never runs Spark's footer-inference job.
+An ``append`` (or ``fold``) whose columns differ from the recorded
+schema by name or type raises ValueError before anything is staged;
+nullability and column order are ignored, as Spark reads every file
+column nullable and by name.  A version with no ``schema`` key (written
+before schemas were recorded) reads through inference and gets one on
+its next commit.
+
 Protocol:
 
 - WRITE: stage a new commit dir with Spark, list its part files, then
@@ -50,8 +63,10 @@ import json
 import os
 import shutil
 import uuid
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 _MANIFEST_DIR = "_manifest"
 _DATA_DIR = "data"
@@ -122,6 +137,42 @@ def _live(ttl_s: int, now: dt.datetime | None) -> Column:
             | F.col("ingested_at").isNull())
 
 
+def _relaxed(t: T.DataType) -> T.DataType:
+    """``t`` with every nullability flag set and field metadata dropped:
+    the shape a commit's column check compares."""
+    if isinstance(t, T.StructType):
+        return T.StructType([T.StructField(f.name, _relaxed(f.dataType))
+                             for f in t.fields])
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_relaxed(t.elementType))
+    if isinstance(t, T.MapType):
+        return T.MapType(_relaxed(t.keyType), _relaxed(t.valueType))
+    return t
+
+
+def _schema_to_record(m: dict, df: DataFrame) -> dict:
+    """The schema a commit of ``df`` into manifest ``m`` records: the
+    recorded one, after checking ``df`` has its columns by name and type
+    (ValueError naming the differing columns otherwise), or ``df``'s own
+    when ``m`` records none."""
+    if "schema" not in m:
+        return df.schema.jsonValue()
+    want = {f.name: _relaxed(f.dataType)
+            for f in T.StructType.fromJson(m["schema"]).fields}
+    got = {f.name: _relaxed(f.dataType) for f in df.schema.fields}
+    if got != want:
+        missing = sorted(want.keys() - got.keys())
+        extra = sorted(got.keys() - want.keys())
+        retyped = sorted(f"{c} {want[c].simpleString()} -> "
+                         f"{got[c].simpleString()}"
+                         for c in want.keys() & got.keys()
+                         if want[c] != got[c])
+        raise ValueError(
+            "columns differ from the recorded schema: "
+            f"missing {missing}, unexpected {extra}, retyped {retyped}")
+    return m["schema"]
+
+
 class ManifestStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -150,7 +201,7 @@ class ManifestStore:
             return json.load(f)
 
     def _commit(self, files: list[str], batch_ids: list[int],
-                base_version: int) -> int:
+                base_version: int, schema: dict | None = None) -> int:
         """Atomically publish manifest v(base_version+1) — a COMPARE-AND-
         SWAP against the version the caller READ, not whatever is newest
         at link time.  Every write path is read-manifest → long Spark
@@ -162,6 +213,8 @@ class ManifestStore:
         new_v = base_version + 1
         m = {"version": new_v, "files": sorted(files),
              "batch_ids": sorted(set(batch_ids))}
+        if schema is not None:
+            m["schema"] = schema
         tmp = os.path.join(self._mdir(), f".tmp-{uuid.uuid4().hex}.json")
         final = os.path.join(self._mdir(), f"v{new_v}.json")
         with open(tmp, "w") as f:
@@ -210,12 +263,23 @@ class ManifestStore:
             if f.startswith("v") and f.endswith(".json")
             and f[1:-5].isdigit())
 
-    def files(self, version: int | None = None) -> list[str]:
+    def _manifest_at(self, version: int | None) -> dict:
         if version is not None and version not in self.versions():
             raise FileNotFoundError(
                 f"manifest store {self.path} has no version {version} "
                 f"(on disk: {self.versions()}; gc() prunes history)")
-        return list(self._read_manifest(version)["files"])
+        return self._read_manifest(version)
+
+    def files(self, version: int | None = None) -> list[str]:
+        return list(self._manifest_at(version)["files"])
+
+    def _read(self, files: list[str], schema: dict | None) -> DataFrame:
+        """THE parquet read of a file list: with the recorded schema no
+        Spark job runs; a version that records none is inferred."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(T.StructType.fromJson(schema))
+        return reader.parquet(*[os.path.join(self.path, f) for f in files])
 
     def df(self, version: int | None = None) -> DataFrame:
         """The committed table — at ``version`` for time travel (the
@@ -225,7 +289,8 @@ class ManifestStore:
         reclaims files unreferenced by the newest K manifests, which
         bounds how far back is readable; a pruned version raises
         instead of silently returning partial data."""
-        files = self.files(version)
+        m = self._manifest_at(version)
+        files = m["files"]
         if not files:
             raise FileNotFoundError(
                 f"manifest store {self.path} has no committed data"
@@ -240,8 +305,7 @@ class ManifestStore:
                 + ("the CURRENT manifest is broken — files were pruned "
                    "externally" if version is None else
                    "raise gc keep_versions to retain time-travel history"))
-        return self.spark.read.parquet(
-            *[os.path.join(self.path, f) for f in files])
+        return self._read(files, m.get("schema"))
 
     def committed_batch_ids(self) -> set[int]:
         return set(self._read_manifest()["batch_ids"])
@@ -251,19 +315,22 @@ class ManifestStore:
     def append(self, df: DataFrame, batch_id: int | None = None) -> bool:
         """Append df as a new commit.  With ``batch_id``, the append is
         IDEMPOTENT: a batch id already in the manifest is skipped (the
-        foreachBatch retry contract), returning False."""
+        foreachBatch retry contract), returning False.  ``df`` must have
+        the recorded schema's columns (ValueError otherwise)."""
         m = self._read_manifest()
         if batch_id is not None and batch_id in m["batch_ids"]:
             return False
+        schema = _schema_to_record(m, df)
         staged = self._stage(df)
         ids = m["batch_ids"] + ([batch_id] if batch_id is not None else [])
-        self._commit(m["files"] + staged, ids, m["version"])
+        self._commit(m["files"] + staged, ids, m["version"], schema)
         return True
 
     def overwrite(self, df: DataFrame) -> None:
+        """Replace the table with ``df``, recording ``df``'s schema."""
         base = self._read_manifest()["version"]
         staged = self._stage(df)
-        self._commit(staged, [], base)
+        self._commit(staged, [], base, df.schema.jsonValue())
 
     def expire(self, ttl_s: int, now: dt.datetime | None = None) -> int:
         """TTL retention as a manifest swap: only files CONTAINING expired
@@ -294,10 +361,11 @@ class ManifestStore:
         n_removed = sum(r["_n"] for r in per_file)
         # re-stage ONLY the hot files' live rows: the read is a direct
         # scan of those files, never the whole store
-        staged = self._stage(self.spark.read.parquet(
-            *[os.path.join(self.path, f) for f in sorted(hot)]).where(live))
+        kept_rows = self._read(sorted(hot), m.get("schema")).where(live)
+        schema = _schema_to_record(m, kept_rows)
+        staged = self._stage(kept_rows)
         keep = [f for f in m["files"] if f not in hot]
-        self._commit(keep + staged, m["batch_ids"], m["version"])
+        self._commit(keep + staged, m["batch_ids"], m["version"], schema)
         return n_removed
 
     def live_count(self, ttl_s: int, now: dt.datetime | None = None) -> int:
@@ -308,20 +376,14 @@ class ManifestStore:
             df = df.where(_live(ttl_s, now))
         return df.count()
 
-    def compact(self, sort_cols: tuple[str, ...] = (),
-                target_file_bytes: int = 128 * 1024 * 1024) -> int:
-        """Fold the accumulated per-commit small files into one fresh
-        commit (OPTIMIZE in Delta terms).  Output file count is sized
-        from the store's actual bytes (``target_file_bytes`` per file,
-        Delta's default bin size), so a thousand trigger-sized files
-        fold to a handful.  Optional ``sort_cols`` cluster rows within
-        the rewritten files so min/max row-group pruning stays sharp
-        (columns absent from the schema are skipped).  Returns the
-        number of files folded (0 = single file already).  Readers are
-        never disturbed: the swap is one manifest commit, and the old
-        files remain until ``gc()``.
+    def fold(self, fn: Callable[[DataFrame], DataFrame]) -> int:
+        """Commit ``fn(table)`` as the whole table, carrying the recorded
+        schema forward.  Returns the number of files folded; a table of
+        at most one file is left as it is (0).  The base version is read
+        BEFORE ``fn`` sees the table, so a commit landing in between
+        collides on the CAS link instead of being dropped.
 
-        Compaction also PRUNES the recorded batch ids to the replayable
+        A fold also PRUNES the recorded batch ids to the replayable
         tail (r14 review): the list otherwise grows one int per trigger
         forever — a year of 3 s triggers is ~10M ids rewritten into the
         manifest json on EVERY commit, O(stream-age) work on the ingest
@@ -335,19 +397,38 @@ class ManifestStore:
         m = self._read_manifest()
         if len(m["files"]) <= 1:
             return 0
-        total = sum(os.path.getsize(os.path.join(self.path, f))
-                    for f in m["files"])
-        n_out = max(1, -(-total // target_file_bytes))
-        df = self.df().repartition(n_out)
-        present = [c for c in sort_cols if c in df.columns]
-        if present:
-            df = df.sortWithinPartitions(*present)
+        df = fn(self.df())
+        schema = _schema_to_record(m, df)
         staged = self._stage(df)
         ids = m["batch_ids"]
         if ids:
             ids = [i for i in ids if i >= max(ids) - 1]
-        self._commit(staged, ids, m["version"])
+        self._commit(staged, ids, m["version"], schema)
         return len(m["files"])
+
+    def compact(self, sort_cols: tuple[str, ...] = (),
+                target_file_bytes: int = 128 * 1024 * 1024) -> int:
+        """Fold the accumulated per-commit small files into one fresh
+        commit (OPTIMIZE in Delta terms).  Output file count is sized
+        from the store's actual bytes (``target_file_bytes`` per file,
+        Delta's default bin size), so a thousand trigger-sized files
+        fold to a handful.  Optional ``sort_cols`` cluster rows within
+        the rewritten files so min/max row-group pruning stays sharp
+        (columns absent from the schema are skipped).  Returns the
+        number of files folded (0 = single file already).  Readers are
+        never disturbed: the swap is one manifest commit (``fold``, which
+        also prunes the batch ids), and the old files remain until
+        ``gc()``."""
+        total = sum(os.path.getsize(os.path.join(self.path, f))
+                    for f in self.files())
+        n_out = max(1, -(-total // target_file_bytes))
+
+        def _rewrite(df: DataFrame) -> DataFrame:
+            df = df.repartition(n_out)
+            present = [c for c in sort_cols if c in df.columns]
+            return df.sortWithinPartitions(*present) if present else df
+
+        return self.fold(_rewrite)
 
     # -- streaming bridge ---------------------------------------------------
 

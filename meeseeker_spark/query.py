@@ -20,7 +20,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .keys import glob_to_filter, parse_key
-from .manifest import ManifestStore, is_manifest_store, open_committed
+from .manifest import ManifestStore, open_committed
 
 # range partitions per OpsStore.write: the TOTAL writer count across all
 # chains (a two-chain frame splits these tasks between the chains)
@@ -230,15 +230,15 @@ class ScheduleStore:
             [f for f in WITNESS_SCHEDULES.fields
              if f.name in ("id", "next_shuffle_block_num",
                            "current_shuffled_witnesses")])
-        if is_manifest_store(self.path):
+        ms = open_committed(self.spark, self.path)
+        if ms is not None:
             # key-dedup: next_shuffle_block_num is the publish-once
             # boundary, so duplicates can only come from a
             # checkpoint-wiped republish — the reader absorbs it (r14).
             # The survivor is DETERMINISTIC (r15): newest batch_id wins
             # (newest_by_key), the same rule the verify CLI applies, so
             # both surfaces agree on the survivor.
-            raw = newest_by_key(ManifestStore(self.spark, self.path).df(),
-                                "next_shuffle_block_num")
+            raw = newest_by_key(ms.df(), "next_shuffle_block_num")
         else:
             raw = self.spark.createDataFrame([], pub_schema)
         return raw.select(

@@ -32,7 +32,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..channels import block_channels, engine_channels, op_channels
 from ..flatten import flatten_blocks, flatten_engine_blocks, flatten_virtual_ops
-from ..manifest import ManifestStore, is_manifest_store
+from ..manifest import ManifestStore, open_committed
 from ..schemas import BLOCKS, ENGINE_BLOCKS, VIRTUAL_OPS, WITNESS_SCHEDULES
 
 VOP_LATENESS = "18 seconds"   # Σ(retry × BLOCK_INTERVAL), see SURVEY §4.5
@@ -419,10 +419,12 @@ def _commit_outputs(ops: DataFrame, channels: DataFrame, ops_path: str,
 def _committed(spark: SparkSession, path: str) -> DataFrame:
     """The committed table of one sink output.  Probes before opening so
     a reader never creates the store dirs; raises FileNotFoundError
-    until the first commit."""
-    if not is_manifest_store(path):
+    until the first commit and ValueError for a path holding parquet
+    but no committed manifest."""
+    ms = open_committed(spark, path)
+    if ms is None:
         raise FileNotFoundError(f"{path} has no committed manifest version")
-    return ManifestStore(spark, path).df()
+    return ms.df()
 
 
 def ops_view(spark: SparkSession, ops_path: str) -> DataFrame:
@@ -513,26 +515,18 @@ def compact_meta(spark: SparkSession, ops_path: str) -> int:
     after, and a crash mid-cleanup that leaves stale older rows changes
     nothing (monotone max).  Returns files folded (0 = compact already).
 
-    One overwrite commit that KEEPS the replayable batch-id tail (so a
-    checkpointed replay of the newest trigger still short-circuits),
-    then gc."""
-    meta_path = ops_path + "_meta"
-    if not is_manifest_store(meta_path):
+    One ``ManifestStore.fold`` commit, which KEEPS the replayable
+    batch-id tail (so a checkpointed replay of the newest trigger still
+    short-circuits), then gc."""
+    ms = open_committed(spark, ops_path + "_meta")
+    if ms is None:
         return 0
-    ms = ManifestStore(spark, meta_path)
-    n = len(ms.files())
-    if n <= 1:
+    n = ms.fold(lambda df: df.groupBy("chain")
+                .agg(F.max("last_block_num").alias("last_block_num"),
+                     F.max("batch_id").alias("batch_id"))
+                .coalesce(1))
+    if not n:
         return 0
-    folded = (ms.df().groupBy("chain")
-              .agg(F.max("last_block_num").alias("last_block_num"),
-                   F.max("batch_id").alias("batch_id"))
-              .coalesce(1))
-    m = ms._read_manifest()
-    ids = m["batch_ids"]
-    if ids:     # same replayable-tail rule as ManifestStore.compact
-        ids = [i for i in ids if i >= max(ids) - 1]
-    staged = ms._stage(folded)
-    ms._commit(staged, ids, m["version"])
     # keep_versions=2: one version of grace for a reader that resolved
     # the just-superseded manifest before this commit — gc fused to the
     # commit with keep_versions=1 unlinked files a concurrent

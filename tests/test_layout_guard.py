@@ -10,10 +10,16 @@ them from creeping back: outside ``streaming/screen.py`` (whose
 ``out_dir`` is not a chain sink) no module may mention them.  The check
 is textual, so pass a batch id to ``ManifestStore.append``
 positionally; ``chain=`` keyword arguments are fine, a quoted
-``chain=`` path literal is not."""
+``chain=`` path literal is not.
+
+Inside ``manifest.py`` every Spark read goes through the one read helper
+``ManifestStore._read``, which hands Spark the schema each version
+records — a read that skipped it would run the schema-inference job
+again."""
 
 from __future__ import annotations
 
+import ast
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "meeseeker_spark"
@@ -39,3 +45,14 @@ def test_no_chain_partition_store_outside_screen():
     offenders = _offenders(('partitionBy("chain")', "renameat2", "_swap_in",
                             "write_bucketed", '"chain=', "'chain="))
     assert not offenders, "\n".join(offenders)
+
+
+def test_manifest_reads_only_through_read_helper():
+    tree = ast.parse((PKG / "manifest.py").read_text())
+    helper = next(n for n in ast.walk(tree)
+                  if isinstance(n, ast.FunctionDef) and n.name == "_read")
+    inside = {id(n) for n in ast.walk(helper)}
+    offenders = [n.lineno for n in ast.walk(tree)
+                 if isinstance(n, ast.Attribute) and n.attr == "read"
+                 and id(n) not in inside]
+    assert not offenders, f"manifest.py reads outside _read: {offenders}"

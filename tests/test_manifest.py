@@ -556,3 +556,159 @@ def test_maintenance_gc_leaves_one_version_of_grace(spark, tmp_path):
         .withColumn("batch_id", F.lit(9)), batch_id=9)
     compact_meta(spark, meta[:-5])
     assert not any(os.path.exists(f) for f in pre_files)
+
+
+# -- recorded schema ---------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def sink_outputs(spark, tmp_path_factory):
+    """Every chain sink's output, from two streaming triggers each: ops,
+    channels and ``_meta`` from ``start_ingest``, the schedule publish
+    log and the block-channel log."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from meeseeker_spark import fixtures
+    from meeseeker_spark.streaming import pipeline as P
+
+    fx = fixtures.generate(n_blocks=42, seed=3)
+    root = tmp_path_factory.mktemp("sinks")
+    for name, rows in (("blocks", fx.blocks),
+                       ("witness_schedules", fx.witness_schedules)):
+        os.makedirs(root / name)
+        half = len(rows) // 2
+        for i, part in enumerate((rows[:half], rows[half:])):
+            pq.write_table(
+                pa.Table.from_pylist(part,
+                                     schema=fixtures._ARROW_SCHEMAS[name]),
+                str(root / name / f"part-{i}.parquet"))
+    blocks = str(root / "blocks")
+    for q in (
+        P.start_ingest(
+            P.streaming_ops(P.read_block_stream(spark, blocks, 1), None),
+            str(root / "ops"), str(root / "channels"), str(root / "ck1")),
+        P.start_schedule_publisher(
+            P.read_schedule_stream(spark, str(root / "witness_schedules"), 1),
+            str(root / "schedules"), str(root / "ck2")),
+        P.start_block_channel_publisher(
+            P.read_block_stream(spark, blocks, 1), str(root / "blockchan"),
+            str(root / "ck3")),
+    ):
+        q.awaitTermination(120)
+    return root
+
+
+def _copy(src, dst) -> str:
+    import shutil
+    shutil.copytree(src, dst)
+    return str(dst)
+
+
+def _after_compact(spark, root, d):
+    path = _copy(root / "channels", d / "channels")
+    assert ManifestStore(spark, path).compact(("block_num",)) > 1
+    return path
+
+
+def _after_compact_meta(spark, root, d):
+    from meeseeker_spark.streaming.pipeline import compact_meta
+    _copy(root / "ops_meta", d / "ops_meta")
+    assert compact_meta(spark, str(d / "ops")) > 1
+    return str(d / "ops_meta")
+
+
+def _after_expire(spark, root, d):
+    path = _copy(root / "ops", d / "ops")
+    later = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None) \
+        + dt.timedelta(days=1)
+    assert ManifestStore(spark, path).expire(3600, now=later) > 0
+    return path
+
+
+def _after_write(spark, root, d):
+    from meeseeker_spark.query import OpsStore
+    path = str(d / "ops")
+    OpsStore.write(ManifestStore(spark, str(root / "ops")).df()
+                   .drop("ingested_at"), path)
+    return path
+
+
+def _after_reset_all(spark, root, d):
+    from meeseeker_spark.query import OpsStore
+    path = _copy(root / "ops", d / "ops")
+    OpsStore(spark, path).reset("all")
+    assert ManifestStore(spark, path).df().count() == 0
+    return path
+
+
+def _after_schemaless_manifest(spark, root, d):
+    """A version written before schemas were recorded (no ``schema``
+    key) still reads — through inference, which runs a Spark job — and
+    its next commit records one."""
+    path = _copy(root / "channels", d / "channels")
+    s = ManifestStore(spark, path)
+    m = s._read_manifest()
+    n = s.df().count()
+    with open(os.path.join(path, "_manifest",
+                           f"v{m['version'] + 1}.json"), "w") as f:
+        json.dump({"version": m["version"] + 1, "files": m["files"],
+                   "batch_ids": m["batch_ids"]}, f)
+    assert _df_jobs(spark, s) > 0
+    assert s.df().count() == n
+    s.append(s.df().limit(1), batch_id=99)
+    return path
+
+
+def _df_jobs(spark, store) -> int:
+    """Spark jobs launched while ``store.df()`` builds its frame."""
+    sc = spark.sparkContext
+    group = f"df-probe-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, "ManifestStore.df")
+    try:
+        store.df()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("case", [
+    "ops", "channels", "ops_meta", "schedules", "blockchan",
+    _after_compact, _after_compact_meta, _after_expire, _after_write,
+    _after_reset_all, _after_schemaless_manifest,
+], ids=lambda c: c if isinstance(c, str) else c.__name__[1:])
+def test_recorded_schema_matches_inference(spark, sink_outputs, case,
+                                           tmp_path):
+    """Every sink output, and every store after each maintenance commit,
+    records its schema in the manifest; reading with it gives exactly
+    the schema Spark infers from the files, and launches no job."""
+    path = (str(sink_outputs / case) if isinstance(case, str)
+            else case(spark, sink_outputs, tmp_path))
+    s = ManifestStore(spark, path)
+    assert "schema" in s._read_manifest()
+    files = [os.path.join(path, f) for f in s.files()]
+    assert s.df().schema == spark.read.parquet(*files).schema
+    assert _df_jobs(spark, s) == 0
+
+
+def test_append_schema_mismatch_fails_loudly(spark, tmp_path):
+    """An append whose columns differ by name or type from the recorded
+    schema raises before anything is staged; reordered columns and
+    different nullability are the same table."""
+    s = ManifestStore(spark, str(tmp_path / "m"))
+    s.append(_rows(spark, [1]), batch_id=0)
+    recorded = s.df().schema
+    data = os.path.join(s.path, "data")
+    staged = set(os.listdir(data))
+    for ddl, named in (("id bigint, w string", "w"),
+                       ("id int, v string", "id")):
+        bad = spark.createDataFrame([(2, "x")], ddl)
+        with pytest.raises(ValueError, match=named):
+            s.append(bad, batch_id=1)
+        assert set(os.listdir(data)) == staged
+    assert s.current_version() == 1 and s.committed_batch_ids() == {0}
+    s.append(spark.createDataFrame([("v2", 2)], "v string, id bigint"),
+             batch_id=1)
+    s.append(spark.createDataFrame(
+        [(3, "v3")], "id bigint not null, v string not null"), batch_id=2)
+    assert sorted(r["id"] for r in s.df().collect()) == [1, 2, 3]
+    assert s.df().schema == recorded

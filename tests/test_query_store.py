@@ -461,3 +461,36 @@ def test_loose_parquet_refused_before_sync_state(spark, tmp_path_factory):
     OpsStore(spark, missing).reset("all")
     assert main(["expire", "--store", missing]) == 0
     assert not os.path.exists(missing)
+
+
+def test_loose_parquet_meta_and_schedules_refused(spark, tmp_path_factory):
+    """The read-side probes share ``open_committed``'s rule: a loose
+    parquet ``_meta`` or schedules path raises instead of reading as
+    "no commit yet" (a None HWM made ``resolve_stream_start`` treat the
+    store as fresh).  A missing path keeps its empty answer."""
+    from meeseeker_spark.query import ScheduleStore
+    from meeseeker_spark.streaming.pipeline import (compact_meta,
+                                                    last_block_num)
+
+    d = tmp_path_factory.mktemp("loose_probes")
+    ops = str(d / "ops")
+    spark.createDataFrame(
+        [("hive", 5, 0)],
+        "chain string, last_block_num long, batch_id long",
+    ).write.parquet(ops + "_meta")
+    with pytest.raises(ValueError, match="not a manifest store"):
+        last_block_num(spark, ops)
+    with pytest.raises(ValueError, match="not a manifest store"):
+        compact_meta(spark, ops)
+    sched = str(d / "schedules")
+    spark.createDataFrame(
+        [(1, 21, ["w1"])],
+        "id long, next_shuffle_block_num long, "
+        "current_shuffled_witnesses array<string>",
+    ).write.parquet(sched)
+    with pytest.raises(ValueError, match="not a manifest store"):
+        ScheduleStore(spark, sched).df()
+
+    assert last_block_num(spark, str(d / "nope")) is None
+    assert compact_meta(spark, str(d / "nope")) == 0
+    assert ScheduleStore(spark, str(d / "nope")).df().count() == 0
