@@ -3,10 +3,11 @@
 
 Without Delta/Iceberg, this module is the ONE commit protocol every
 per-trigger streaming sink writes through (ops, channels, ``_meta``, the
-witness-schedule publish log, the block-channel publisher).  It rests on
-the one primitive a transactional table actually needs: **readers only
-see files listed in the newest committed manifest, and a manifest commit
-is a single atomic rename**.
+irreversible mode's ``_pending`` set, the witness-schedule publish log,
+the block-channel publisher).  It rests on the one primitive a
+transactional table actually needs: **readers only see files listed in
+the newest committed manifest, and a manifest commit is a single atomic
+link**.
 
 Layout:
 
@@ -15,7 +16,9 @@ Layout:
 
 Each ``v{N}.json`` holds ``files`` (the table, relative to ``<path>``),
 ``batch_ids`` (the replay short-circuit) and ``schema`` (the table's
-``StructType`` as JSON).  The schema is taken from the staged frame at
+``StructType`` as JSON); an ``overwrite`` given a ``stream_id`` also
+records it (the ``_pending`` set's producing stream, read back with
+``recorded_stream_id``).  The schema is taken from the staged frame at
 commit time — ``overwrite`` records its frame's, ``append``, ``expire``
 and ``fold`` carry the recorded one forward — so a read hands it to
 ``spark.read.schema(...)`` and never runs Spark's footer-inference job.
@@ -30,7 +33,7 @@ Protocol:
 
 - WRITE: stage a new commit dir with Spark, list its part files, then
   commit manifest vN+1 = previous files ± changes via write-tmp + atomic
-  ``os.rename``.  A crash before the rename leaves an orphan data dir that
+  ``os.link``.  A crash before the link leaves an orphan data dir that
   no reader ever sees (Spark is never pointed at ``data/`` itself); re-run
   and ``gc()`` clean it.  No ``.old`` roll-back/forward cases remain — the
   store is ALWAYS in exactly the state of its newest manifest.
@@ -201,7 +204,8 @@ class ManifestStore:
             return json.load(f)
 
     def _commit(self, files: list[str], batch_ids: list[int],
-                base_version: int, schema: dict | None = None) -> int:
+                base_version: int, schema: dict | None = None,
+                stream_id: str | None = None) -> int:
         """Atomically publish manifest v(base_version+1) — a COMPARE-AND-
         SWAP against the version the caller READ, not whatever is newest
         at link time.  Every write path is read-manifest → long Spark
@@ -215,6 +219,8 @@ class ManifestStore:
              "batch_ids": sorted(set(batch_ids))}
         if schema is not None:
             m["schema"] = schema
+        if stream_id is not None:
+            m["stream_id"] = stream_id
         tmp = os.path.join(self._mdir(), f".tmp-{uuid.uuid4().hex}.json")
         final = os.path.join(self._mdir(), f"v{new_v}.json")
         with open(tmp, "w") as f:
@@ -310,6 +316,10 @@ class ManifestStore:
     def committed_batch_ids(self) -> set[int]:
         return set(self._read_manifest()["batch_ids"])
 
+    def recorded_stream_id(self) -> str | None:
+        """The stream id the newest version's ``overwrite`` recorded."""
+        return self._read_manifest().get("stream_id")
+
     # -- write side ---------------------------------------------------------
 
     def append(self, df: DataFrame, batch_id: int | None = None) -> bool:
@@ -326,11 +336,15 @@ class ManifestStore:
         self._commit(m["files"] + staged, ids, m["version"], schema)
         return True
 
-    def overwrite(self, df: DataFrame) -> None:
-        """Replace the table with ``df``, recording ``df``'s schema."""
+    def overwrite(self, df: DataFrame, batch_id: int | None = None,
+                  stream_id: str | None = None) -> None:
+        """Replace the table with ``df``, recording ``df``'s schema and,
+        when given, the producing ``batch_id`` and ``stream_id`` (the
+        only ids the new version holds)."""
         base = self._read_manifest()["version"]
         staged = self._stage(df)
-        self._commit(staged, [], base, df.schema.jsonValue())
+        self._commit(staged, [] if batch_id is None else [batch_id], base,
+                     df.schema.jsonValue(), stream_id)
 
     def expire(self, ttl_s: int, now: dt.datetime | None = None) -> int:
         """TTL retention as a manifest swap: only files CONTAINING expired
@@ -338,7 +352,7 @@ class ManifestStore:
         re-referenced untouched.  Returns rows removed; ``ttl_s == -1``
         disables expiry (reference semantics: keys live forever).
         Crash-safe with no recovery protocol at all: before the commit
-        rename readers see the old manifest, after it the new one —
+        link readers see the old manifest, after it the new one —
         there is no intermediate state."""
         if ttl_s == -1:
             return 0

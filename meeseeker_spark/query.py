@@ -46,6 +46,20 @@ def newest_by_key(df: DataFrame, key: str,
                            for c in others]))
 
 
+def _find_block(df: DataFrame, block_num: int,
+                chain: str | None) -> DataFrame:
+    """``find block`` over ``df`` (C3): the block's (key, value) rows."""
+    df = df.where(F.col("block_num") == block_num)
+    if chain:
+        df = df.where(F.col("chain") == chain)
+    return df.select("key", "value")
+
+
+def _has_block(df: DataFrame, block_num: int, chain: str | None) -> bool:
+    """The C6 existence probe over ``df`` (the count prunes every column)."""
+    return bool(_find_block(df, block_num, chain).limit(1).count() > 0)
+
+
 class OpsStore:
     """Keyed op table (the engine's Redis analog; SURVEY §1.2)."""
 
@@ -118,10 +132,7 @@ class OpsStore:
     # -- C3: find block / find trx -------------------------------------------
 
     def find_block(self, block_num: int, chain: str | None = None) -> DataFrame:
-        df = self.df().where(F.col("block_num") == block_num)
-        if chain:
-            df = df.where(F.col("chain") == chain)
-        return df.select("key", "value")
+        return _find_block(self.df(), block_num, chain)
 
     def find_trx(self, trx_id: str, chain: str | None = None) -> DataFrame:
         df = self.df().where(F.col("trx_id") == trx_id)
@@ -132,10 +143,7 @@ class OpsStore:
     # -- C6: existence probe --------------------------------------------------
 
     def has_block(self, block_num: int, chain: str | None = None) -> bool:
-        df = self.df().where(F.col("block_num") == block_num)
-        if chain:
-            df = df.where(F.col("chain") == chain)
-        return bool(df.limit(1).count() > 0)
+        return _has_block(self.df(), block_num, chain)
 
     # -- C4: reset (bulk delete by chain prefix) ------------------------------
 
@@ -148,9 +156,9 @@ class OpsStore:
         very keys just deleted).
 
         The ``<path>_meta`` HWM sibling and the ``<path>_pending``
-        irreversible staging dir are dropped too (r13 review): the
-        reference's reset deletes ``{chain}:*`` (Rakefile:101-126),
-        which INCLUDES ``{chain}:meeseeker:last_block_num``
+        irreversible staging store (both manifest stores) are dropped
+        too (r13 review): the reference's reset deletes ``{chain}:*``
+        (Rakefile:101-126), which INCLUDES ``{chain}:meeseeker:last_block_num``
         (block_follower_job.rb:78) — ``redis.get`` of the dropped key
         then makes the next sync a fresh start (:111).  Leaving our
         _meta in place broke exactly that: resolve_stream_start read
@@ -190,11 +198,9 @@ class OpsStore:
 
     def _drop_sync_state(self) -> None:
         """Delete the HWM (_meta) and irreversible staging (_pending)
-        siblings — reset's key-drop contract (see reset's docstring);
-        _pending's .tmp/.old swap remnants and batch-id stamp go with
-        the dir."""
-        for suffix in ("_meta", "_pending", "_pending.tmp",
-                       "_pending.old"):
+        manifest stores — reset's key-drop contract (see reset's
+        docstring)."""
+        for suffix in ("_meta", "_pending"):
             p = self.path + suffix
             if os.path.exists(p):
                 shutil.rmtree(p)
@@ -313,16 +319,10 @@ class UnifiedStore:
 
     def find_block(self, block_num: int,
                    chain: str | None = None) -> DataFrame:
-        df = self.df().where(F.col("block_num") == block_num)
-        if chain:
-            df = df.where(F.col("chain") == chain)
-        return df.select("key", "value")
+        return _find_block(self.df(), block_num, chain)
 
     def find_trx(self, trx_id: str, chain: str | None = None) -> DataFrame:
         return self.ops.find_trx(trx_id, chain)
 
     def has_block(self, block_num: int, chain: str | None = None) -> bool:
-        df = self.df().where(F.col("block_num") == block_num)
-        if chain:
-            df = df.where(F.col("chain") == chain)
-        return bool(df.limit(1).count() > 0)
+        return _has_block(self.df(), block_num, chain)

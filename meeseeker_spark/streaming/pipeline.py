@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -37,10 +36,6 @@ from ..schemas import BLOCKS, ENGINE_BLOCKS, VIRTUAL_OPS, WITNESS_SCHEDULES
 
 VOP_LATENESS = "18 seconds"   # Σ(retry × BLOCK_INTERVAL), see SURVEY §4.5
 
-# Batch-id stamp written into the pending dir by _irreversible_gate's
-# commit — the replay-after-commit detector (see its docstring).
-_PENDING_STAMP = "_produced_by_batch"
-
 # The file source carries no dgpo, so the irreversible stream mode needs a
 # stand-in for head_block_number − last_irreversible_block_num.  On mainnet
 # finality needs ~3/4 of the 21-witness round to have signed past a block,
@@ -48,20 +43,24 @@ _PENDING_STAMP = "_produced_by_batch"
 REVERSIBLE_LAG_BLOCKS = 21
 
 
-def read_block_stream(spark: SparkSession, blocks_dir: str,
-                      max_files_per_trigger: int | None = None) -> DataFrame:
-    reader = spark.readStream.schema(BLOCKS)
+def _read_stream(spark: SparkSession, schema, path: str,
+                 max_files_per_trigger: int | None) -> DataFrame:
+    """A parquet file stream of ``schema`` rows; ``max_files_per_trigger``
+    is the ``max_keys`` backpressure (admission per micro-batch)."""
+    reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(blocks_dir)
+    return reader.parquet(path)
+
+
+def read_block_stream(spark: SparkSession, blocks_dir: str,
+                      max_files_per_trigger: int | None = None) -> DataFrame:
+    return _read_stream(spark, BLOCKS, blocks_dir, max_files_per_trigger)
 
 
 def read_vop_stream(spark: SparkSession, vops_dir: str,
                     max_files_per_trigger: int | None = None) -> DataFrame:
-    reader = spark.readStream.schema(VIRTUAL_OPS)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(vops_dir)
+    return _read_stream(spark, VIRTUAL_OPS, vops_dir, max_files_per_trigger)
 
 
 def streaming_ops(blocks_stream: DataFrame, vops_stream: DataFrame | None,
@@ -73,20 +72,6 @@ def streaming_ops(blocks_stream: DataFrame, vops_stream: DataFrame | None,
         vops = vops_stream.withWatermark("timestamp", VOP_LATENESS)
         ops = ops.unionByName(flatten_virtual_ops(vops, chain))
     return ops
-
-
-def _recover_pending(pending: str) -> None:
-    """Finish or discard an interrupted pending-dir rename-aside swap:
-    ``.old`` without the live dir → the swap lost its final rename,
-    restore it; ``.old`` beside the live dir → only the delete was
-    lost, finish it; ``.tmp`` → superseded rewrite, discard."""
-    if os.path.exists(pending + ".old"):
-        if os.path.exists(pending):
-            shutil.rmtree(pending + ".old")
-        else:
-            os.rename(pending + ".old", pending)
-    if os.path.exists(pending + ".tmp"):
-        shutil.rmtree(pending + ".tmp")
 
 
 def _hadoop_read_utf8(spark: SparkSession, uri: str) -> str:
@@ -112,11 +97,13 @@ def _hadoop_read_utf8(spark: SparkSession, uri: str) -> str:
 
 def _checkpoint_stream_id(checkpoint: str,
                           spark: SparkSession | None = None) -> str | None:
-    """The stream's identity for the pending-dir stamp: Structured
-    Streaming writes ``<checkpoint>/metadata`` = ``{"id": "<uuid>"}`` at
-    the FIRST start of a query and keeps it across every restart of the
-    same checkpoint — exactly the lifetime of the batch-id sequence the
-    stamp's replay detector compares against.
+    """The stream's identity recorded with each pending commit:
+    Structured Streaming writes ``<checkpoint>/metadata`` =
+    ``{"id": "<uuid>"}`` at the FIRST start of a query and keeps it
+    across every restart of the same checkpoint — exactly the lifetime
+    of the batch-id sequence ``_pending_replayed`` compares against.
+    Read once per irreversible trigger (a 60-byte local open or one JVM
+    call), so a failed read is retried on the next trigger.
 
     Spark accepts the checkpoint as a Hadoop path, so ``file:`` URIs
     are normalized and read with a plain local open() (fast path, no
@@ -124,11 +111,11 @@ def _checkpoint_stream_id(checkpoint: str,
     metadata through the JVM Hadoop FileSystem client — the guard now
     engages on exactly the checkpoints a production cluster uses
     (VERDICT r14 item 2: the local-only read degraded to batch-id-only
-    stamps precisely where deployments run).  ``None`` for a missing
-    metadata file (a non-checkpointed caller, e.g. a unit test driving
-    the gate directly — foreachBatch itself only fires after Spark
-    wrote it), or — said once on stderr instead of silently — for a
-    remote scheme with no live session to reach the JVM client."""
+    checks precisely where deployments run).  ``None`` for a missing
+    metadata file (a non-checkpointed caller — foreachBatch itself only
+    fires after Spark wrote it), or — said on stderr instead of
+    silently — for a remote scheme with no live session to reach the
+    JVM client."""
     from urllib.parse import unquote, urlparse
 
     parsed = urlparse(checkpoint)
@@ -144,7 +131,7 @@ def _checkpoint_stream_id(checkpoint: str,
         print(f"meeseeker_spark: checkpoint {checkpoint} has a remote "
               "scheme and no session was supplied — the stale-pending "
               "stream-identity guard is degraded to batch-id-only "
-              "stamps", file=sys.stderr)
+              "checks", file=sys.stderr)
         return None
     try:
         content = _hadoop_read_utf8(
@@ -158,7 +145,7 @@ def _checkpoint_stream_id(checkpoint: str,
         # first-start case — silent None, same contract as the local
         # fast path.  Anything else (connection refused, auth, ...)
         # means the guard is degrading for an OPERATIONAL reason the
-        # operator should hear about once, not silently.
+        # operator should hear about, not silently.
         jexc = getattr(e, "java_exception", None)
         jname = jexc.getClass().getName() if jexc is not None else ""
         if "FileNotFound" not in jname:
@@ -166,160 +153,112 @@ def _checkpoint_stream_id(checkpoint: str,
             print(f"meeseeker_spark: could not read {checkpoint}/metadata "
                   f"through the Hadoop FileSystem ({jname or type(e).__name__})"
                   " — the stale-pending stream-identity guard is degraded "
-                  "to batch-id-only stamps", file=sys.stderr)
+                  "to batch-id-only checks", file=sys.stderr)
         return None
 
 
-def _irreversible_gate(batch_df: DataFrame, pending: str, lib_lag: int,
-                       batch_id: int | None = None,
-                       stream_id: str | None = None):
-    """Read-committed micro-batch gate (stream mode ``irreversible``,
-    block_follower_job.rb:113-123): the reference simply never fetches past
-    ``last_irreversible_block_num``, and re-polls the held-back range once
-    it becomes final.  A Spark file source can't re-deliver a consumed
-    file, so the equivalent is sink-side: rows younger than
-    ``head − lib_lag`` wait in a ``pending`` dir and fold into the batch
-    that sees the head move past them.
+def _pending_replayed(pending: ManifestStore, batch_id: int,
+                      stream_id: str | None) -> bool:
+    """Whether ``batch_id``'s pending commit already landed — a replay
+    AFTER the commit (crash between it and Structured Streaming's
+    checkpoint commit, the standard at-least-once window), which must
+    skip the whole trigger: the committed pending set no longer holds
+    the rows this batch folded in, so a recomputed split would drop
+    them from the outputs and stage the young rows a second time.  By
+    protocol order every output landed before the pending commit.
 
-    Returns ``(final_df, commit)``.  Both ``final_df`` and the rewritten
-    pending set read the OLD pending dir, so the caller must finish writing
-    ``final_df`` before calling ``commit()``, which swaps the rewritten
-    pending dir in (crash-safe rename-aside).  A batch replayed after a
-    crash BEFORE its commit re-reads the same old pending dir and
-    reproduces the same split.
-
-    A replay AFTER the commit (crash in the window between ``commit()``
-    and Structured Streaming's checkpoint commit — the standard
-    at-least-once window) must NOT recompute: the swapped pending dir no
-    longer holds the rows that were folded into this batch, and a
-    recomputed split would stage this batch's young rows into pending a
-    second time (the output appends themselves short-circuit on their
-    recorded batch id, but the pending swap has no such guard).
-    ``commit()`` therefore stamps the new pending dir with the batch id
-    that produced it; a replay seeing its own stamp returns
-    ``(None, None)`` and the caller skips every output — by protocol
-    order the stamp exists only after all of them landed.
-
-    The stamp also carries the STREAM identity (the checkpoint's query
-    id) so a stale pending dir cannot masquerade as a replay (r13's
-    documented blind spot, now a loud failure instead of silent data
-    loss): a NEW stream restarts its batch ids at 0, so pointed at a
-    store whose ``_pending`` survives from an earlier stream, batch 0's
-    id can EQUAL the stale stamp — the batch-only detector would
-    silently drop real early triggers.  Two guards close it: a stamp
-    whose stream id differs from the running stream's raises, and a
-    stamp whose batch id is AHEAD of the current one (impossible within
-    one checkpoint's monotone sequence, so necessarily stale — also the
-    only signal available for pre-upgrade single-line stamps) raises
-    too.  Recovery is explicit: ``reset`` the store, delete the stale
+    The version json records the producing batch id and the stream
+    identity (the checkpoint's query id), so a stale pending set cannot
+    masquerade as a replay: a NEW stream restarts its batch ids at 0,
+    and pointed at a store whose ``_pending`` survives from an earlier
+    stream, batch 0 can EQUAL the recorded id — trusting it would
+    silently drop a real trigger.  A recorded stream id that differs
+    from this stream's raises, and so does a recorded batch id AHEAD of
+    this one (impossible within one checkpoint's monotone sequence).
+    Recovery is explicit: ``reset`` the store, delete the stale
     ``_pending``, or resume the original checkpoint."""
+    ids = pending.committed_batch_ids()
+    if not ids:
+        return False
+    recorded, recorded_stream = max(ids), pending.recorded_stream_id()
+    if (recorded_stream is not None and stream_id is not None
+            and recorded_stream != stream_id):
+        raise RuntimeError(
+            f"stale pending store: {pending.path} was produced by a "
+            f"different stream (recorded stream id {recorded_stream}, "
+            f"this stream {stream_id}). A fresh checkpoint restarts "
+            "batch ids at 0, so trusting it could silently skip real "
+            "triggers. Reset the store, delete the stale _pending dir, "
+            "or resume the original checkpoint.")
+    if recorded > batch_id:
+        raise RuntimeError(
+            f"stale pending store: {pending.path} records batch "
+            f"{recorded}, ahead of this stream's batch {batch_id} — batch "
+            "ids are monotone within one checkpoint, so this pending set "
+            "belongs to an earlier stream. Reset the store, delete the "
+            "stale _pending dir, or resume the original checkpoint.")
+    return recorded == batch_id
+
+
+def _commit_irreversible(batch_df: DataFrame, ops_path: str,
+                         channels_path: str, batch_id: int, channel_fn,
+                         lib_lag: int, stream_id: str | None) -> None:
+    """Read-committed micro-batch sink (stream mode ``irreversible``,
+    block_follower_job.rb:113-123): the reference simply never fetches
+    past ``last_irreversible_block_num``, and re-polls the held-back
+    range once it becomes final.  A Spark file source can't re-deliver a
+    consumed file, so the equivalent is sink-side: rows younger than
+    ``head − lib_lag`` wait in the ``<ops_path>_pending`` manifest store
+    and fold into the batch that sees the head move past them.
+
+    The outputs commit first (``_commit_outputs``), then one pending
+    ``overwrite`` recording this batch and stream id.  A batch replayed
+    after a crash BEFORE the pending commit re-reads the same pending
+    version and reproduces the same split (every output append
+    short-circuits on its batch id); a replay AFTER it is skipped
+    (``_pending_replayed``)."""
     spark = batch_df.sparkSession
-    _recover_pending(pending)
-    stamp = os.path.join(pending, _PENDING_STAMP)
-    if batch_id is not None and os.path.exists(stamp):
-        with open(stamp) as f:
-            lines = f.read().splitlines()
-        try:
-            stamp_batch = int(lines[0])
-        except (IndexError, ValueError):
-            # empty/garbled stamp (e.g. power loss before the page cache
-            # reached disk): indeterminate — the loud stale-pending stop
-            # with its recovery menu, not a bare parse traceback
-            raise RuntimeError(
-                f"unreadable pending-dir stamp {stamp} "
-                f"(content {lines!r}): cannot decide replay vs stale. "
-                "Reset the store, delete the _pending dir, or restore "
-                "the stamp by hand (line 1 = producing batch id, "
-                "line 2 = checkpoint query id).") from None
-        stamp_stream = lines[1] if len(lines) > 1 and lines[1] else None
-        if (stamp_stream is not None and stream_id is not None
-                and stamp_stream != stream_id):
-            raise RuntimeError(
-                f"stale pending dir: {pending} was produced by a "
-                f"different stream (stamp stream id {stamp_stream}, "
-                f"this stream {stream_id}). A fresh checkpoint restarts "
-                "batch ids at 0, so trusting this stamp could silently "
-                "skip real triggers. Reset the store, delete the stale "
-                "_pending dir, or resume the original checkpoint.")
-        if stamp_batch > batch_id:
-            raise RuntimeError(
-                f"stale pending dir: {pending} is stamped with batch "
-                f"{stamp_batch}, ahead of this stream's batch "
-                f"{batch_id} — batch ids are monotone within one "
-                "checkpoint, so this pending dir belongs to an earlier "
-                "stream. Reset the store, delete the stale _pending "
-                "dir, or resume the original checkpoint.")
-        if stamp_batch == batch_id:
-            if stamp_stream is None and stream_id is not None:
-                # pre-upgrade single-line stamp matching OUR batch id:
-                # indistinguishable between (a) a genuine pre-upgrade
-                # replay-after-commit on the resumed checkpoint and
-                # (b) a fresh checkpoint whose restarted batch 0 collides
-                # with a stale dir — the r13 silent-drop scenario.  Stop
-                # loudly with both recovery paths instead of guessing
-                # (r14 review: the equal-batch case slipped past both
-                # staleness guards).
-                raise RuntimeError(
-                    f"pending dir {pending} carries a pre-upgrade stamp "
-                    f"(batch {stamp_batch}, no stream id) equal to this "
-                    f"stream's batch {batch_id}: cannot tell a genuine "
-                    "replay from a stale dir. If resuming the ORIGINAL "
-                    "checkpoint, append this stream's id as stamp line "
-                    f"2 ({stream_id}) and restart; otherwise reset the "
-                    "store or delete the stale _pending dir.")
-            return None, None      # this batch's commit already landed
+    path = ops_path + "_pending"
+    pending = open_committed(spark, path)
     rows = batch_df
-    if os.path.isdir(pending):
-        rows = rows.unionByName(
-            spark.read.parquet(pending).select(*batch_df.columns))
-    # one materialization for the gate's three consumers (r15 durability
-    # review): the head max-agg, the pending rewrite, and the caller's
-    # output writes each re-derived this union from scratch — re-reading
-    # the trigger's source files AND the pending parquet three times per
-    # trigger on the hot ingest path (the caller's own persist covers
-    # only its final_df).  Unpersisted in commit()/the no-rows path.
+    if pending is not None:
+        if _pending_replayed(pending, batch_id, stream_id):
+            return
+        rows = rows.unionByName(pending.df().select(*batch_df.columns))
+    # one materialization for the head max-agg, the outputs and the
+    # pending commit
     rows = rows.persist()
-    head = rows.agg(F.max("block_num")).first()[0]
-    if head is None:
+    try:
+        head = rows.agg(F.max("block_num")).first()[0]
+        if head is None:      # nothing delivered, nothing pending
+            _commit_outputs(rows, channel_fn(rows), ops_path,
+                            channels_path, batch_id)
+            return
+        lib = head - lib_lag  # resolve_tip(head, lib, "irreversible")
+        final = rows.where(F.col("block_num") <= lib)
+        _commit_outputs(final, channel_fn(final), ops_path, channels_path,
+                        batch_id)
+        pending = pending or ManifestStore(spark, path)
+        pending.overwrite(rows.where(F.col("block_num") > lib), batch_id,
+                          stream_id)
+        # one version of grace, as compact_meta's gc
+        pending.gc(keep_versions=2)
+    finally:
         rows.unpersist()
 
-        def _noop() -> None:
-            return None
-        # every returned commit carries .abort (r15 self-review: the
-        # sink's failure handler calls it unconditionally, and a bare
-        # lambda here turned any write failure on an empty batch into
-        # an AttributeError masking the real cause)
-        _noop.abort = _noop
-        return batch_df, _noop
-    lib = head - lib_lag    # resolve_tip(head, lib, "irreversible") == lib
-    (
-        rows.where(F.col("block_num") > lib)
-        .write.mode("overwrite").parquet(pending + ".tmp")
-    )
-    if batch_id is not None:
-        # stamped INSIDE the tmp dir so it becomes visible atomically
-        # with the swap itself ("_"-prefixed → invisible to the parquet
-        # reader, like _SUCCESS); line 2 is the producing stream's
-        # identity (absent only for direct non-checkpointed callers)
-        with open(os.path.join(pending + ".tmp", _PENDING_STAMP), "w") as f:
-            f.write(str(batch_id) if stream_id is None
-                    else f"{batch_id}\n{stream_id}")
-            f.flush()
-            os.fsync(f.fileno())   # same durability bar as the manifest
-            # commit: the swap must never expose a torn/empty stamp
 
-    def commit() -> None:
-        if os.path.isdir(pending):
-            os.rename(pending, pending + ".old")
-        os.rename(pending + ".tmp", pending)
-        shutil.rmtree(pending + ".old", ignore_errors=True)
-        rows.unpersist()   # the caller's outputs all landed by protocol
-
-    # failure-path twin: a caller whose output write raises must still
-    # release the gate's cache (supervision restarts the query in the
-    # SAME session, so an un-released entry would outlive the trigger)
-    commit.abort = rows.unpersist
-    return rows.where(F.col("block_num") <= lib), commit
+def _start(stream: DataFrame, sink, checkpoint: str,
+           available_now: bool = True,
+           output_mode: str | None = None) -> StreamingQuery:
+    """Start ``stream`` into the foreachBatch ``sink`` on ``checkpoint``."""
+    writer = stream.writeStream
+    if output_mode:
+        writer = writer.outputMode(output_mode)
+    writer = writer.foreachBatch(sink).option("checkpointLocation",
+                                              checkpoint)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def start_ingest(ops_stream: DataFrame, ops_path: str, channels_path: str,
@@ -342,60 +281,29 @@ def start_ingest(ops_stream: DataFrame, ops_path: str, channels_path: str,
     block_follower_job.rb:113-123): ``head`` ingests everything delivered
     (read-uncommitted); ``irreversible`` ingests only blocks at least
     ``lib_lag`` behind the delivered head (read-committed) — younger rows,
-    channels included, wait in ``<ops_path>_pending`` and land in a later
-    batch once final.  Unknown modes abort, matching the reference.
+    channels included, wait in the ``<ops_path>_pending`` manifest store
+    and land in a later batch once final (``_commit_irreversible``).
+    Unknown modes abort, matching the reference.
     """
     from ..resume import STREAM_MODES
     if mode not in STREAM_MODES:
         raise ValueError(f"Unknown stream mode: {mode}")
 
-    stream_id_cache: list[str | None] = []
-
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        commit = None
         if mode == "irreversible":
-            # read once and cache — but only cache a SUCCESSFUL read
-            # (r15 durability review): the id is stable for the query's
-            # lifetime, yet a transient remote-checkpoint read failure
-            # returns None, and pinning that None would silently run
-            # every later trigger with the stale-pending identity guard
-            # degraded even after the checkpoint became reachable again
-            if not stream_id_cache or stream_id_cache[0] is None:
-                sid = _checkpoint_stream_id(
-                    checkpoint, batch_df.sparkSession)
-                if not stream_id_cache:
-                    stream_id_cache.append(sid)
-                else:
-                    stream_id_cache[0] = sid
-            batch_df, commit = _irreversible_gate(
-                batch_df, ops_path + "_pending", lib_lag, batch_id,
-                stream_id=stream_id_cache[0])
-            if batch_df is None:
-                # replay of a batch whose pending commit already landed —
-                # by protocol order every output landed before it, so the
-                # whole trigger is a no-op (recomputing would re-split
-                # against the ALREADY-swapped pending dir)
-                return
+            _commit_irreversible(
+                batch_df, ops_path, channels_path, batch_id, channel_fn,
+                lib_lag, _checkpoint_stream_id(checkpoint,
+                                               batch_df.sparkSession))
+            return
         batch_df = batch_df.persist()
         try:
             _commit_outputs(batch_df, channel_fn(batch_df), ops_path,
                             channels_path, batch_id)
-        except BaseException:
-            if commit is not None:
-                commit.abort()   # release the gate's cache on failure
-            raise
         finally:
             batch_df.unpersist()
-        if commit is not None:   # only after every output landed
-            commit()
 
-    writer = (
-        ops_stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(ops_stream, _sink, checkpoint, available_now)
 
 
 def _commit_outputs(ops: DataFrame, channels: DataFrame, ops_path: str,
@@ -565,10 +473,8 @@ def read_engine_stream(spark: SparkSession, engine_dir: str,
                        max_files_per_trigger: int | None = None) -> DataFrame:
     """Engine block stream (Agent#block poll loop ≅ micro-batch file source;
     the nil-block sleep is the trigger interval)."""
-    reader = spark.readStream.schema(ENGINE_BLOCKS)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(engine_dir)
+    return _read_stream(spark, ENGINE_BLOCKS, engine_dir,
+                        max_files_per_trigger)
 
 
 def start_engine_ingest(engine_stream: DataFrame, ops_path: str,
@@ -596,13 +502,7 @@ def start_engine_ingest(engine_stream: DataFrame, ops_path: str,
         finally:
             ops.unpersist()
 
-    writer = (
-        engine_stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(engine_stream, _sink, checkpoint, available_now)
 
 
 def start_block_channel_publisher(blocks_stream: DataFrame, out_path: str,
@@ -618,15 +518,9 @@ def start_block_channel_publisher(blocks_stream: DataFrame, out_path: str,
     one ManifestStore append recording its batch id; read the log back
     with ``channel_events_view``."""
     channel_rows = block_channels(blocks_stream, chain, include_header)
-    writer = (
-        channel_rows.writeStream
-        .foreachBatch(ManifestStore(channel_rows.sparkSession,
-                                    out_path).sink())
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(channel_rows,
+                  ManifestStore(channel_rows.sparkSession, out_path).sink(),
+                  checkpoint, available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -636,10 +530,8 @@ def start_block_channel_publisher(blocks_stream: DataFrame, out_path: str,
 def read_schedule_stream(spark: SparkSession, sched_dir: str,
                          max_files_per_trigger: int | None = None
                          ) -> DataFrame:
-    reader = spark.readStream.schema(WITNESS_SCHEDULES)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(sched_dir)
+    return _read_stream(spark, WITNESS_SCHEDULES, sched_dir,
+                        max_files_per_trigger)
 
 
 def schedule_publish_once(sched_stream: DataFrame) -> DataFrame:
@@ -668,10 +560,4 @@ def start_schedule_publisher(sched_stream: DataFrame, out_path: str,
             # batch whose state stores never ran, so drain it
             batch_df.write.format("noop").mode("overwrite").save()
 
-    return (
-        deduped.writeStream.outputMode("update")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(deduped, _sink, checkpoint, output_mode="update")

@@ -728,7 +728,7 @@ def test_cli_manifest_round_trip(spark, tmp_path_factory, capsys):
     irr = P.last_block_num(spark, str(d / "out_irr" / "ops"))
     assert f"synced through block {irr}" in capsys.readouterr().out
     assert irr <= tip - 5
-    pending = spark.read.parquet(str(d / "out_irr" / "ops_pending"))
+    pending = ManifestStore(spark, str(d / "out_irr" / "ops_pending")).df()
     assert pending.agg({"block_num": "min"}).first()[0] > tip - 5
 
     assert main(["compact", "--ops", store]) == 0

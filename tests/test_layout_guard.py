@@ -5,8 +5,11 @@ store with its own writer, layout-detecting readers and a
 ``store_impl`` switch, and a plain ``chain=``-partitioned store
 (``OpsStore.write``) whose TTL delete ran a rename protocol of its own
 (``retention.py``: renameat2 exchange, ``_swap_in``, crash recovery),
-plus a metastore-bucketed ``write_bucketed`` table.  These guards keep
-them from creeping back: outside ``streaming/screen.py`` (whose
+plus a metastore-bucketed ``write_bucketed`` table; the irreversible
+mode's ``_pending`` set was a plain parquet dir swapped in by renames,
+with a ``_produced_by_batch`` stamp file and ``_recover_pending`` to
+finish an interrupted swap.  Every store now commits through the
+manifest's ``os.link``.  These guards keep them from creeping back: outside ``streaming/screen.py`` (whose
 ``out_dir`` is not a chain sink) no module may mention them.  The check
 is textual, so pass a batch id to ``ManifestStore.append``
 positionally; ``chain=`` keyword arguments are fine, a quoted
@@ -44,6 +47,12 @@ def test_no_chain_partition_store_outside_screen():
     assert not (PKG / "retention.py").exists()
     offenders = _offenders(('partitionBy("chain")', "renameat2", "_swap_in",
                             "write_bucketed", '"chain=', "'chain="))
+    assert not offenders, "\n".join(offenders)
+
+
+def test_no_rename_commit_outside_screen():
+    offenders = _offenders(("os.rename", "os.replace", "_produced_by_batch",
+                            "_recover_pending"))
     assert not offenders, "\n".join(offenders)
 
 

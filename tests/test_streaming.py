@@ -191,7 +191,8 @@ def test_irreversible_mode_gates_and_folds(spark, fx, tmp_path_factory):
     assert v1.agg({"block_num": "max"}).first()[0] == head1 - LAG
     # the reversible tail is staged, not lost — and the channels publish
     # nothing the store hasn't committed
-    pend = spark.read.parquet(str(d / "ops_pending"))
+    from meeseeker_spark.manifest import ManifestStore
+    pend = ManifestStore(spark, str(d / "ops_pending")).df()
     assert (sorted(r["block_num"] for r in
                    pend.select("block_num").distinct().collect())
             == list(range(head1 - LAG + 1, head1 + 1)))
@@ -222,35 +223,16 @@ def test_irreversible_mode_unknown_rejected(spark, fx, tmp_path_factory):
                        str(d / "ckpt"), mode="laggy")
 
 
-def test_pending_swap_recovery(tmp_path):
-    """An interrupted pending swap self-heals: ``.old`` without the live
-    dir is restored; a stale ``.tmp`` is discarded."""
-    base = str(tmp_path / "pending")
-    os.makedirs(base + ".old")
-    open(os.path.join(base + ".old", "f.parquet"), "w").close()
-    os.makedirs(base + ".tmp")
-    P._recover_pending(base)
-    assert os.path.isdir(base)           # restored from .old
-    assert not os.path.exists(base + ".old")
-    assert not os.path.exists(base + ".tmp")
-
-    # .old alongside a live dir = swap finished, only the delete was lost
-    os.makedirs(base + ".old")
-    P._recover_pending(base)
-    assert os.path.isdir(base) and not os.path.exists(base + ".old")
-
-
 def test_irreversible_replay_after_commit_keeps_folded_rows(
         spark, fx, tmp_path_factory):
-    """Regression (r13 review): a batch replayed AFTER its pending-dir
+    """Regression (r13 review): a batch replayed AFTER its pending
     commit but BEFORE the checkpoint commit (the standard at-least-once
-    window) used to recompute its split against the already-swapped
-    pending dir — the rows folded in from the old pending set vanished
-    from the recomputed final_df.  The commit now stamps the pending
-    dir with its producing batch id and a replay seeing its own stamp
-    skips the whole trigger (the output appends would short-circuit on
-    their recorded batch ids anyway; the stamp also keeps the pending
-    swap from running twice).
+    window) used to recompute its split against the already-committed
+    pending set — the rows folded in from the old pending set vanished
+    from the recomputed outputs.  The pending manifest version records
+    its producing batch id and a replay seeing its own id skips the
+    whole trigger (the output appends would short-circuit on their
+    recorded batch ids anyway; the pending commit must not run twice).
 
     The replay is authentic: after the folding run completes, the
     checkpoint's commits/N marker for the last batch is deleted —
@@ -293,40 +275,42 @@ def test_irreversible_replay_after_commit_keeps_folded_rows(
 
     before = snapshot()
     assert before[0] and before[1] and before[2]   # every sink populated
-    stamp = d / "ops_pending" / "_produced_by_batch"
-    stamp_lines = stamp.read_text().splitlines()
-    assert stamp_lines[0] == "1"
-    # line 2 is the stream identity (the checkpoint's query id) — the
-    # r14 stale-pending guard input
+    pending = ManifestStore(spark, str(d / "ops_pending"))
+    assert pending.committed_batch_ids() == {1}
+    # the stream identity (the checkpoint's query id) — the r14
+    # stale-pending guard input
     import json as _json
     with open(d / "ckpt" / "metadata") as f:
-        assert stamp_lines[1] == _json.load(f)["id"]
+        assert pending.recorded_stream_id() == _json.load(f)["id"]
+    version = pending.current_version()
 
-    # crash window: the pending swap committed, the checkpoint didn't
+    # crash window: the pending commit landed, the checkpoint didn't
     os.remove(d / "ckpt" / "commits" / "1")
     crc = d / "ckpt" / "commits" / ".1.crc"   # hadoop checksum sidecar
     if crc.exists():
         os.remove(crc)
     run()                                    # Spark replays batch 1
     # the replay skips the WHOLE trigger exactly once: ops, channels and
-    # _meta are all byte-identical — nothing lost, nothing doubled
+    # _meta are all byte-identical — nothing lost, nothing doubled — and
+    # the pending set is not committed again
     assert snapshot() == before
+    assert pending.current_version() == version
 
 
 def test_irreversible_replay_before_commit_all_sinks_converge(
         spark, fx, tmp_path_factory, monkeypatch):
     """The other replay window (VERDICT r13 item 1): a crash AFTER every
-    output landed but BEFORE the pending-dir commit — Structured
-    Streaming replays the batch against the UNCHANGED pending dir, so
-    the recomputed split is identical and every output append
+    output landed but BEFORE the pending commit — Structured Streaming
+    replays the batch against the UNCHANGED pending version, so the
+    recomputed split is identical and every output append
     short-circuits on its recorded batch id.  Pin it end-to-end by
     comparing ALL THREE sinks (ops keys, channel rows, _meta rows) of a
     crashed-then-recovered run against a crash-free control run.
 
-    The crash is authentic: the sink's ``commit()`` raises on the
-    designated batch, failing the trigger after the ops/channel/_meta
-    writes completed, exactly the pre-commit half of the at-least-once
-    window."""
+    The crash is authentic: the pending store's ``overwrite`` raises on
+    the designated batch, failing the trigger after the ops/channel/
+    _meta commits completed, exactly the pre-commit half of the
+    at-least-once window."""
     from meeseeker_spark.manifest import ManifestStore
 
     d = tmp_path_factory.mktemp("irrev_precommit")
@@ -353,21 +337,21 @@ def test_irreversible_replay_before_commit_all_sinks_converge(
             os.rename(f, str(root / "blocks" /
                              ("late-" + os.path.basename(f))))
         if crash:
-            real_gate = P._irreversible_gate
+            real_overwrite = ManifestStore.overwrite
 
-            def exploding_gate(batch_df, pending, lib_lag, batch_id=None,
-                               stream_id=None):
-                final_df, commit = real_gate(batch_df, pending, lib_lag,
-                                             batch_id, stream_id=stream_id)
-
-                def exploding_commit():
+            def exploding_overwrite(self, df, batch_id=None,
+                                    stream_id=None):
+                if self.path.endswith("_pending") and batch_id == 1:
                     raise RuntimeError("injected crash before commit")
-                return final_df, exploding_commit
+                real_overwrite(self, df, batch_id, stream_id)
 
-            monkeypatch.setattr(P, "_irreversible_gate", exploding_gate)
+            monkeypatch.setattr(ManifestStore, "overwrite",
+                                exploding_overwrite)
             with pytest.raises(Exception, match="injected crash"):
                 run()                    # outputs landed, commit lost
-            monkeypatch.setattr(P, "_irreversible_gate", real_gate)
+            monkeypatch.setattr(ManifestStore, "overwrite", real_overwrite)
+            assert ManifestStore(spark, str(root / "ops_pending")) \
+                .committed_batch_ids() == {0}
         run()                            # (re)plays batch 1 cleanly
         ops = sorted(r["key"] for r in
                      P.ops_view(spark, str(root / "ops")).collect())
@@ -387,11 +371,13 @@ def test_stale_pending_fresh_checkpoint_raises(spark, fx,
                                                tmp_path_factory):
     """Regression (VERDICT r13 item 2 / ADVICE r13): a NEW stream (fresh
     checkpoint — batch ids restart at 0) pointed at a store with a
-    surviving ``_pending`` dir used to trust the stale stamp: batch 0's
-    id can EQUAL the stamp's, so the replay detector silently skipped a
-    REAL first trigger (silent data drop).  The stamp now carries the
-    producing stream's identity and the gate fails loudly on a
-    mismatch instead."""
+    surviving ``_pending`` set used to trust its recorded batch id:
+    batch 0's id can EQUAL it, so the replay detector silently skipped
+    a REAL first trigger (silent data drop).  The pending version also
+    records the producing stream's identity, and the sink fails loudly
+    on a mismatch instead."""
+    from meeseeker_spark.manifest import ManifestStore
+
     d = tmp_path_factory.mktemp("stale_pending")
     _write_batches(fx.blocks, "blocks", str(d / "blocks"), 1)
 
@@ -402,13 +388,14 @@ def test_stale_pending_fresh_checkpoint_raises(spark, fx,
                            str(ckpt), mode="irreversible", lib_lag=5)
         q.awaitTermination(120)
 
-    run(d / "ckpt1")                     # leaves a stamped _pending
-    stamp = (d / "ops_pending" / "_produced_by_batch").read_text()
-    assert len(stamp.splitlines()) == 2  # batch id + stream id
+    run(d / "ckpt1")                     # leaves a recorded _pending
+    pending = ManifestStore(spark, str(d / "ops_pending"))
+    assert pending.committed_batch_ids() == {0}
+    assert pending.recorded_stream_id() is not None
 
     # the misuse: same store, FRESH checkpoint → its batch 0 matches the
-    # stale stamp's batch 0; without the stream-id line this silently
-    # dropped the trigger — now it must refuse loudly
+    # stale pending batch 0; without the stream id this silently dropped
+    # the trigger — now it must refuse loudly
     with pytest.raises(Exception, match="stale pending"):
         run(d / "ckpt2")
 
@@ -420,60 +407,66 @@ def test_stale_pending_fresh_checkpoint_raises(spark, fx,
 
 def test_stale_pending_legacy_stamp_ahead_raises(spark, fx,
                                                  tmp_path_factory):
-    """Pre-upgrade stamps carry only the batch id; for those the only
-    stale signal is a stamp AHEAD of the current batch (impossible
-    within one checkpoint's monotone sequence).  The gate must raise,
-    not fold or skip."""
-    d = tmp_path_factory.mktemp("stale_pending_legacy")
+    """A pending version recording a batch AHEAD of the current one is
+    stale (impossible within one checkpoint's monotone sequence) — the
+    only stale signal when no stream id was recorded.  The sink must
+    raise, not fold or skip, and commit nothing."""
+    from meeseeker_spark.manifest import ManifestStore
+
+    d = tmp_path_factory.mktemp("stale_pending_ahead")
     _write_batches(fx.blocks[:6], "blocks", str(d / "blocks"), 1)
-    os.makedirs(d / "ops_pending")
-    # a legacy single-line stamp from a long-lived earlier stream
-    (d / "ops_pending" / "_produced_by_batch").write_text("7")
-    df = spark.read.schema(BLOCKS).parquet(str(d / "blocks"))
-    with pytest.raises(RuntimeError, match="ahead of this stream"):
-        P._irreversible_gate(flatten_blocks(df), str(d / "ops_pending"),
-                             5, batch_id=0, stream_id="fresh-stream")
+    blocks = spark.read.schema(BLOCKS).parquet(str(d / "blocks"))
+    # left by a long-lived earlier stream whose id was not recorded
+    ManifestStore(spark, str(d / "ops_pending")).overwrite(
+        flatten_blocks(blocks), batch_id=7)
+    ops = P.streaming_ops(
+        P.read_block_stream(spark, str(d / "blocks")), None)
+    q = P.start_ingest(ops, str(d / "ops"), str(d / "channels"),
+                       str(d / "ckpt"), mode="irreversible", lib_lag=5)
+    with pytest.raises(Exception, match="ahead of this stream"):
+        q.awaitTermination(120)
+    assert not os.path.exists(d / "ops")
 
 
-def test_stale_pending_legacy_stamp_equal_batch_raises(spark, fx,
-                                                       tmp_path_factory):
-    """r14 review: the equal-batch legacy case slipped past BOTH
-    staleness guards — a pre-upgrade single-line stamp reading batch 0
-    against a fresh stream's batch 0 took the silent-skip branch, the
-    exact r13 silent-drop scenario.  With a stream identity in hand and
-    none on the stamp, the gate cannot tell a genuine pre-upgrade
-    replay from a stale dir: it must stop loudly with both recovery
-    paths (append the id for a genuine resume / reset for a stale
-    dir), never guess."""
-    d = tmp_path_factory.mktemp("stale_pending_legacy_eq")
+def test_plain_parquet_pending_refused(spark, fx, tmp_path_factory):
+    """A ``_pending`` dir of plain parquet (the layout before the
+    pending set became a manifest store) is not a store: the first
+    irreversible trigger raises ValueError before any output commits."""
+    from meeseeker_spark.manifest import open_committed
+
+    d = tmp_path_factory.mktemp("plain_pending")
     _write_batches(fx.blocks[:6], "blocks", str(d / "blocks"), 1)
-    os.makedirs(d / "ops_pending")
-    (d / "ops_pending" / "_produced_by_batch").write_text("0")
-    df = spark.read.schema(BLOCKS).parquet(str(d / "blocks"))
-    with pytest.raises(RuntimeError, match="pre-upgrade stamp"):
-        P._irreversible_gate(flatten_blocks(df), str(d / "ops_pending"),
-                             5, batch_id=0, stream_id="fresh-stream")
-    # with NO identity available (direct non-checkpointed caller) the
-    # pre-upgrade semantics are preserved: equal batch = its own replay
-    final_df, commit = P._irreversible_gate(
-        flatten_blocks(df), str(d / "ops_pending"), 5, batch_id=0)
-    assert final_df is None and commit is None
+    blocks = spark.read.schema(BLOCKS).parquet(str(d / "blocks"))
+    flatten_blocks(blocks).write.parquet(str(d / "ops_pending"))
+    ops = P.streaming_ops(
+        P.read_block_stream(spark, str(d / "blocks")), None)
+    q = P.start_ingest(ops, str(d / "ops"), str(d / "channels"),
+                       str(d / "ckpt"), mode="irreversible", lib_lag=5)
+    with pytest.raises(Exception, match="not a manifest store"):
+        q.awaitTermination(120)
+    assert open_committed(spark, str(d / "ops")) is None
+    assert open_committed(spark, str(d / "channels")) is None
 
 
-def test_corrupt_pending_stamp_raises_with_recovery(spark, fx,
-                                                    tmp_path_factory):
-    """r14 review: an empty/truncated stamp (power loss before the
-    page cache hit disk) raised a bare IndexError crash-loop; it now
-    stops with the stale-pending recovery menu.  (New stamps are
-    fsynced before the swap, so this is strictly a legacy-dir path.)"""
-    d = tmp_path_factory.mktemp("corrupt_stamp")
-    _write_batches(fx.blocks[:6], "blocks", str(d / "blocks"), 1)
-    os.makedirs(d / "ops_pending")
-    (d / "ops_pending" / "_produced_by_batch").write_text("")
-    df = spark.read.schema(BLOCKS).parquet(str(d / "blocks"))
-    with pytest.raises(RuntimeError, match="unreadable pending-dir"):
-        P._irreversible_gate(flatten_blocks(df), str(d / "ops_pending"),
-                             5, batch_id=0, stream_id="s")
+def test_pending_store_keeps_two_versions(spark, fx, tmp_path_factory):
+    """Each irreversible trigger commits one pending version and gc
+    keeps two, so the pending store stays bounded however long the
+    stream runs."""
+    d = tmp_path_factory.mktemp("pending_bounded")
+    _write_batches(fx.blocks, "blocks", str(d / "blocks"), 5)
+    ops = P.streaming_ops(
+        P.read_block_stream(spark, str(d / "blocks"),
+                            max_files_per_trigger=1), None)
+    q = P.start_ingest(ops, str(d / "ops"), str(d / "channels"),
+                       str(d / "ckpt"), mode="irreversible", lib_lag=5)
+    q.awaitTermination(120)
+    assert len([p for p in q.recentProgress if p["numInputRows"]]) >= 4
+    pending = d / "ops_pending"
+    assert len([f for f in os.listdir(pending / "_manifest")
+                if f.endswith(".json")]) <= 2
+    assert len(os.listdir(pending / "data")) <= 3
+    assert P.last_block_num(spark, str(d / "ops")) \
+        == fx.blocks[-1]["block_num"] - 5
 
 
 def test_checkpoint_stream_id_uri_handling(tmp_path, capsys):
