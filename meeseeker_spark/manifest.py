@@ -31,11 +31,16 @@ its next commit.
 
 Protocol:
 
-- WRITE: stage a new commit dir with Spark, list its part files, then
+- WRITE: stage a new commit dir — a Spark write of a DataFrame, or a
+  driver-side ``pq.write_table`` of Arrow rows (the one-row ``_meta``
+  HWM, too small to be worth a Spark job) — list its part files, then
   commit manifest vN+1 = previous files ± changes via write-tmp + atomic
-  ``os.link``.  A crash before the link leaves an orphan data dir that
-  no reader ever sees (Spark is never pointed at ``data/`` itself); re-run
-  and ``gc()`` clean it.  No ``.old`` roll-back/forward cases remain — the
+  ``os.link``.  ``append_all`` stages several stores' appends
+  concurrently and commits them in the order given, only once every
+  stage succeeded; ``ManifestStore.append`` is its one-store case.  A
+  crash before the link leaves an orphan data dir that no reader ever
+  sees (Spark is never pointed at ``data/`` itself); re-run and
+  ``gc()`` clean it.  No ``.old`` roll-back/forward cases remain — the
   store is ALWAYS in exactly the state of its newest manifest.
 - IDEMPOTENT APPEND: ``append(df, batch_id)`` records the batch id in the
   manifest; a retried foreachBatch sees its id committed and becomes a
@@ -66,13 +71,22 @@ import json
 import os
 import shutil
 import uuid
-from typing import Callable
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, Sequence, Union
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 _MANIFEST_DIR = "_manifest"
 _DATA_DIR = "data"
+
+# What one append stages: a DataFrame (a Spark write job) or Arrow rows
+# (written from the driver, no job)
+Rows = Union[DataFrame, pa.Table]
 
 
 def is_manifest_store(path: str) -> bool:
@@ -153,16 +167,16 @@ def _relaxed(t: T.DataType) -> T.DataType:
     return t
 
 
-def _schema_to_record(m: dict, df: DataFrame) -> dict:
-    """The schema a commit of ``df`` into manifest ``m`` records: the
-    recorded one, after checking ``df`` has its columns by name and type
-    (ValueError naming the differing columns otherwise), or ``df``'s own
-    when ``m`` records none."""
+def _schema_to_record(m: dict, schema: T.StructType) -> dict:
+    """The schema a commit of rows of ``schema`` into manifest ``m``
+    records: the recorded one, after checking ``schema`` has its columns
+    by name and type (ValueError naming the differing columns
+    otherwise), or ``schema`` itself when ``m`` records none."""
     if "schema" not in m:
-        return df.schema.jsonValue()
+        return schema.jsonValue()
     want = {f.name: _relaxed(f.dataType)
             for f in T.StructType.fromJson(m["schema"]).fields}
-    got = {f.name: _relaxed(f.dataType) for f in df.schema.fields}
+    got = {f.name: _relaxed(f.dataType) for f in schema.fields}
     if got != want:
         missing = sorted(want.keys() - got.keys())
         extra = sorted(got.keys() - want.keys())
@@ -174,6 +188,61 @@ def _schema_to_record(m: dict, df: DataFrame) -> dict:
             "columns differ from the recorded schema: "
             f"missing {missing}, unexpected {extra}, retyped {retyped}")
     return m["schema"]
+
+
+def _concurrently(spark: SparkSession, fns: Sequence[Callable]) -> list:
+    """Run ``fns[0]`` on the calling thread and each other fn on a
+    thread of its own; return their results in order once ALL have
+    finished, re-raising the first failure.  Each thread starts with
+    the caller's Spark local properties, so a foreachBatch thread's job
+    group (what ``StreamingQuery.stop()`` cancels by) and
+    ``sql.streaming.queryId`` reach every job it launches."""
+    if len(fns) == 1:
+        return [fns[0]()]
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=len(fns) - 1) as pool:
+        futures = [pool.submit(inherit(fn)) for fn in fns[1:]]
+        first = fns[0]()
+    return [first] + [f.result() for f in futures]
+
+
+def append_all(lanes: Sequence[Sequence[tuple[ManifestStore,
+                                               Callable[[], Rows]]]],
+               batch_id: int | None = None) -> list[bool]:
+    """Append to several stores as one unit: read every store's
+    manifest (a store already recording ``batch_id`` is skipped — the
+    foreachBatch retry contract), stage each store's rows, then commit
+    every staged store in the order given.  Stores in one lane stage in
+    turn; lanes stage concurrently (``_concurrently``).  Nothing commits
+    until every stage succeeded, so a failed stage re-raises with no
+    new version anywhere — its staged dirs are orphans ``gc()``
+    reclaims.  Returns, per store in commit order, whether it
+    committed."""
+    def stage(lane):
+        out = []
+        for store, rows_fn in lane:
+            m = store._read_manifest()
+            if batch_id is not None and batch_id in m["batch_ids"]:
+                out.append(None)
+                continue
+            rows = rows_fn()
+            schema = _schema_to_record(
+                m, rows.schema if isinstance(rows, DataFrame)
+                else from_arrow_schema(rows.schema))
+            out.append((store, m, store._stage(rows), schema))
+        return out
+
+    spark = lanes[0][0][0].spark
+    staged = _concurrently(spark, [lambda lane=lane: stage(lane)
+                                   for lane in lanes])
+    done = []
+    for item in (x for lane in staged for x in lane):
+        if item is not None:
+            store, m, files, schema = item
+            ids = m["batch_ids"] + ([] if batch_id is None else [batch_id])
+            store._commit(m["files"] + files, ids, m["version"], schema)
+        done.append(item is not None)
+    return done
 
 
 class ManifestStore:
@@ -245,12 +314,19 @@ class ManifestStore:
         os.unlink(tmp)
         return new_v
 
-    def _stage(self, df: DataFrame) -> list[str]:
-        """Write df to a fresh immutable commit dir; return its part files
-        (relative to the store root).  Not yet visible to anyone."""
+    def _stage(self, rows: Rows) -> list[str]:
+        """Write ``rows`` to a fresh immutable commit dir — a DataFrame
+        through Spark, Arrow rows as one file from the driver; return
+        its part files (relative to the store root).  Not yet visible
+        to anyone."""
         token = uuid.uuid4().hex[:12]
         rel = os.path.join(_DATA_DIR, f"commit-{token}")
-        df.write.mode("error").parquet(os.path.join(self.path, rel))
+        if isinstance(rows, DataFrame):
+            rows.write.mode("error").parquet(os.path.join(self.path, rel))
+        else:
+            os.makedirs(os.path.join(self.path, rel))
+            pq.write_table(rows, os.path.join(
+                self.path, rel, f"part-00000-{token}.parquet"))
         out = []
         for root, _, names in os.walk(os.path.join(self.path, rel)):
             for n in names:
@@ -322,19 +398,13 @@ class ManifestStore:
 
     # -- write side ---------------------------------------------------------
 
-    def append(self, df: DataFrame, batch_id: int | None = None) -> bool:
-        """Append df as a new commit.  With ``batch_id``, the append is
-        IDEMPOTENT: a batch id already in the manifest is skipped (the
-        foreachBatch retry contract), returning False.  ``df`` must have
-        the recorded schema's columns (ValueError otherwise)."""
-        m = self._read_manifest()
-        if batch_id is not None and batch_id in m["batch_ids"]:
-            return False
-        schema = _schema_to_record(m, df)
-        staged = self._stage(df)
-        ids = m["batch_ids"] + ([batch_id] if batch_id is not None else [])
-        self._commit(m["files"] + staged, ids, m["version"], schema)
-        return True
+    def append(self, rows: Rows, batch_id: int | None = None) -> bool:
+        """Append ``rows`` as a new commit — ``append_all`` on this one
+        store.  With ``batch_id``, the append is IDEMPOTENT: a batch id
+        already in the manifest is skipped (the foreachBatch retry
+        contract), returning False.  ``rows`` must have the recorded
+        schema's columns (ValueError otherwise)."""
+        return append_all([[(self, lambda: rows)]], batch_id)[0]
 
     def overwrite(self, df: DataFrame, batch_id: int | None = None,
                   stream_id: str | None = None) -> None:
@@ -376,7 +446,7 @@ class ManifestStore:
         # re-stage ONLY the hot files' live rows: the read is a direct
         # scan of those files, never the whole store
         kept_rows = self._read(sorted(hot), m.get("schema")).where(live)
-        schema = _schema_to_record(m, kept_rows)
+        schema = _schema_to_record(m, kept_rows.schema)
         staged = self._stage(kept_rows)
         keep = [f for f in m["files"] if f not in hot]
         self._commit(keep + staged, m["batch_ids"], m["version"], schema)
@@ -412,7 +482,7 @@ class ManifestStore:
         if len(m["files"]) <= 1:
             return 0
         df = fn(self.df())
-        schema = _schema_to_record(m, df)
+        schema = _schema_to_record(m, df.schema)
         staged = self._stage(df)
         ids = m["batch_ids"]
         if ids:

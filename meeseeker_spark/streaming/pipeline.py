@@ -12,13 +12,18 @@ Choices mapped from the reference:
   block_follower_job.rb:197-207) → a second file stream unioned in;
   watermark bound = VOP_LATENESS_S for any stateful op downstream.
 - ``max_keys`` backpressure (:49-53) → maxFilesPerTrigger admission.
-- HWM (:78) → the checkpoint; plus an explicit per-batch _meta row for
-  wire-compat with `find`/resume consumers.
+- HWM (:78, one Redis SET) → the checkpoint; plus an explicit per-batch
+  _meta row for wire-compat with `find`/resume consumers, written from
+  the driver as one Arrow row rather than through a Spark write job.
 - exactly-once: the reference is at-least-once on restart, idempotent only
   by key re-SET. We do the same but better: every per-trigger output is one
   ``manifest.ManifestStore`` commit that records the trigger's batch id, so
   a retried batch short-circuits on its own id (sink idempotence keyed on
   the epoch id, without Delta).  Readers see only committed manifests.
+- per-trigger fixed cost: a trigger's outputs stage concurrently (ops on
+  the foreachBatch thread; channels, then ``_meta``, on one worker) and
+  commit in protocol order — ops, channels, ``_meta`` — only once all
+  staged (``_commit_outputs``).
 """
 
 from __future__ import annotations
@@ -26,12 +31,13 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..channels import block_channels, engine_channels, op_channels
 from ..flatten import flatten_blocks, flatten_engine_blocks, flatten_virtual_ops
-from ..manifest import ManifestStore, open_committed
+from ..manifest import ManifestStore, append_all, open_committed
 from ..schemas import BLOCKS, ENGINE_BLOCKS, VIRTUAL_OPS, WITNESS_SCHEDULES
 
 VOP_LATENESS = "18 seconds"   # Σ(retry × BLOCK_INTERVAL), see SURVEY §4.5
@@ -41,6 +47,12 @@ VOP_LATENESS = "18 seconds"   # Σ(retry × BLOCK_INTERVAL), see SURVEY §4.5
 # finality needs ~3/4 of the 21-witness round to have signed past a block,
 # so the lag is bounded by one full round — the conservative default.
 REVERSIBLE_LAG_BLOCKS = 21
+
+# The ``_meta`` HWM row: one per trigger, (null, null, batch_id) for a
+# trigger with no rows
+_META_ARROW = pa.schema([("chain", pa.string()),
+                         ("last_block_num", pa.int64()),
+                         ("batch_id", pa.int32())])
 
 
 def _read_stream(spark: SparkSession, schema, path: str,
@@ -231,12 +243,12 @@ def _commit_irreversible(batch_df: DataFrame, ops_path: str,
     try:
         head = rows.agg(F.max("block_num")).first()[0]
         if head is None:      # nothing delivered, nothing pending
-            _commit_outputs(rows, channel_fn(rows), ops_path,
-                            channels_path, batch_id)
+            _commit_outputs(rows, channel_fn, ops_path, channels_path,
+                            batch_id)
             return
         lib = head - lib_lag  # resolve_tip(head, lib, "irreversible")
         final = rows.where(F.col("block_num") <= lib)
-        _commit_outputs(final, channel_fn(final), ops_path, channels_path,
+        _commit_outputs(final, channel_fn, ops_path, channels_path,
                         batch_id)
         pending = pending or ManifestStore(spark, path)
         pending.overwrite(rows.where(F.col("block_num") > lib), batch_id,
@@ -267,11 +279,13 @@ def start_ingest(ops_stream: DataFrame, ops_path: str, channels_path: str,
                  lib_lag: int = REVERSIBLE_LAG_BLOCKS) -> StreamingQuery:
     """foreachBatch sink: keyed op append + channel fan-out + _meta HWM.
 
-    Each output is one ``manifest.ManifestStore`` append in protocol
-    order (ops, channels, ``_meta``), each recording the batch id, so a
-    replayed batch short-circuits on every output it already committed
-    instead of writing it twice, and downstream maintenance (TTL, gc,
-    compaction) is a manifest swap with no rename-recovery protocol.
+    Each output is one ``manifest.ManifestStore`` append recording the
+    batch id.  The three stage concurrently and commit in protocol order
+    (ops, channels, ``_meta``) once all have staged (``_commit_outputs``),
+    so a failed stage commits nothing, a replayed batch short-circuits
+    on every output it already committed instead of writing it twice,
+    and downstream maintenance (TTL, gc, compaction) is a manifest swap
+    with no rename-recovery protocol.
 
     ``channel_fn`` derives the fan-out rows from each batch — mainnet
     ``op_channels`` by default; the sidechain ingest passes the fuller
@@ -298,7 +312,7 @@ def start_ingest(ops_stream: DataFrame, ops_path: str, channels_path: str,
             return
         batch_df = batch_df.persist()
         try:
-            _commit_outputs(batch_df, channel_fn(batch_df), ops_path,
+            _commit_outputs(batch_df, channel_fn, ops_path,
                             channels_path, batch_id)
         finally:
             batch_df.unpersist()
@@ -306,22 +320,31 @@ def start_ingest(ops_stream: DataFrame, ops_path: str, channels_path: str,
     return _start(ops_stream, _sink, checkpoint, available_now)
 
 
-def _commit_outputs(ops: DataFrame, channels: DataFrame, ops_path: str,
+def _commit_outputs(ops: DataFrame, channel_fn, ops_path: str,
                     channels_path: str, batch_id: int) -> None:
     """The per-trigger commit shared by the mainnet and engine sinks:
-    ops, channels, then the ``_meta`` HWM row, each one manifest append
-    recording ``batch_id`` — a reader never sees the HWM ahead of the
-    rows it covers."""
+    three manifest appends recording ``batch_id`` (``append_all``).
+    The calling thread stages the key-deduplicated ops while one worker
+    thread stages ``channel_fn(ops)`` and then the ``_meta`` HWM row,
+    computed by one Spark aggregate and written from the driver as
+    Arrow.  They commit only once all three staged, in protocol order —
+    ops, channels, ``_meta`` — so a reader never sees the HWM ahead of
+    the rows it covers, and a failed stage commits nothing.  ``ops``
+    should be persisted: every stage reads it."""
     spark = ops.sparkSession
-    ManifestStore(spark, ops_path).append(
-        ops.dropDuplicates(["key"])
-        .withColumn("ingested_at", F.current_timestamp()), batch_id)
-    ManifestStore(spark, channels_path).append(channels, batch_id)
-    hwm = ops.agg(
-        F.first("chain").alias("chain"),
-        F.max("block_num").alias("last_block_num"),
-    ).withColumn("batch_id", F.lit(batch_id))
-    ManifestStore(spark, ops_path + "_meta").append(hwm, batch_id)
+
+    def hwm() -> pa.Table:
+        chain, last = ops.agg(F.first("chain"), F.max("block_num")).first()
+        return pa.table({"chain": [chain], "last_block_num": [last],
+                         "batch_id": [batch_id]}, schema=_META_ARROW)
+
+    append_all([
+        [(ManifestStore(spark, ops_path),
+          lambda: ops.dropDuplicates(["key"])
+          .withColumn("ingested_at", F.current_timestamp()))],
+        [(ManifestStore(spark, channels_path), lambda: channel_fn(ops)),
+         (ManifestStore(spark, ops_path + "_meta"), hwm)],
+    ], batch_id)
 
 
 def _committed(spark: SparkSession, path: str) -> DataFrame:
@@ -497,7 +520,7 @@ def start_engine_ingest(engine_stream: DataFrame, ops_path: str,
     def _sink(raw_batch: DataFrame, batch_id: int) -> None:
         ops = flatten_engine_blocks(raw_batch, chain).persist()
         try:
-            _commit_outputs(ops, engine_channels(ops), ops_path,
+            _commit_outputs(ops, engine_channels, ops_path,
                             channels_path, batch_id)
         finally:
             ops.unpersist()

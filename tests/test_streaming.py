@@ -1045,6 +1045,193 @@ def test_engine_manifest_store_impl(spark, fx, tmp_path_factory):
         == max(b["blockNumber"] for b in fx.engine_blocks)
 
 
+# -- the per-trigger commit: concurrent staging, protocol-order commits ------
+
+def _orphans(store) -> set[str]:
+    """Commit dirs under ``store``'s data/ that its newest version does
+    not reference."""
+    referenced = {f.split(os.sep)[1] for f in store.files()}
+    return set(os.listdir(os.path.join(store.path, "data"))) - referenced
+
+
+def test_staging_failure_commits_nothing(spark, fx, tmp_path_factory,
+                                         monkeypatch):
+    """A trigger's outputs stage concurrently and commit only once every
+    stage succeeded: a channel stage that raises while the ops stage
+    runs leaves no new ops, channels or ``_meta`` version.  Restarted on
+    the same checkpoint, the stream replays the trigger and converges to
+    the golden key set and channel multiset, and ``gc()`` reclaims the
+    failed trigger's orphan commit dirs."""
+    import collections
+
+    from meeseeker_spark.manifest import ManifestStore
+
+    d = tmp_path_factory.mktemp("stage_fail")
+    _write_batches(fx.blocks, "blocks", str(d / "blocks"), 2)
+    _write_batches(fx.virtual_ops, "virtual_ops", str(d / "vops"), 2)
+    stores = {n: ManifestStore(spark, str(d / n))
+              for n in ("ops", "channels", "ops_meta")}
+
+    def run():
+        ops = P.streaming_ops(
+            P.read_block_stream(spark, str(d / "blocks"), 1),
+            P.read_vop_stream(spark, str(d / "vops"), 1))
+        P.start_ingest(ops, str(d / "ops"), str(d / "channels"),
+                       str(d / "ckpt")).awaitTermination(120)
+
+    real_stage = ManifestStore._stage
+
+    def failing_stage(self, rows):
+        staged = real_stage(self, rows)
+        if (self.path == stores["channels"].path
+                and stores["channels"].current_version() == 1):
+            raise RuntimeError("injected channel staging failure")
+        return staged
+
+    monkeypatch.setattr(ManifestStore, "_stage", failing_stage)
+    with pytest.raises(Exception, match="injected channel staging"):
+        run()                        # batch 0 commits, batch 1 fails
+    monkeypatch.undo()
+    assert {n: s.current_version() for n, s in stores.items()} \
+        == {"ops": 1, "channels": 1, "ops_meta": 1}
+    orphans = {n: _orphans(stores[n]) for n in ("ops", "channels")}
+    assert all(len(o) == 1 for o in orphans.values())
+    assert not _orphans(stores["ops_meta"])
+
+    run()                            # batch 1 replays and commits
+    assert sorted(r["key"] for r in P.ops_view(
+        spark, str(d / "ops")).collect()) \
+        == sorted(o["key"] for o in fx.ops_expected)
+    got = collections.Counter(
+        (r["channel"], r["kind"]) for r in P.channel_events_view(
+            spark, str(d / "channels")).collect())
+    assert got == collections.Counter(
+        (c["channel"], c["kind"]) for c in fx.channels_expected
+        if c["kind"] in ("op", "custom_id"))
+    assert P.last_block_num(spark, str(d / "ops")) \
+        == fx.blocks[-1]["block_num"]
+    for n in ("ops", "channels"):
+        assert stores[n].gc() > 0
+        assert not _orphans(stores[n])
+        assert not orphans[n] & set(os.listdir(
+            os.path.join(stores[n].path, "data")))
+
+
+@pytest.mark.parametrize("mode", ["head", "irreversible", "engine"])
+def test_commit_order(spark, fx, tmp_path_factory, monkeypatch, mode):
+    """However the outputs stage, one trigger commits them in protocol
+    order — ops, channels, ``_meta`` — and the irreversible mode's
+    pending set last, so a reader never sees the HWM ahead of the rows
+    it covers."""
+    from meeseeker_spark.manifest import ManifestStore
+
+    d = tmp_path_factory.mktemp(f"order_{mode}")
+    if mode == "engine":
+        _write_batches(fx.engine_blocks, "engine_blocks",
+                       str(d / "blocks"), 1)
+    else:
+        _write_batches(fx.blocks, "blocks", str(d / "blocks"), 1)
+    committed = []
+    real_commit = ManifestStore._commit
+
+    def recording_commit(self, *args, **kwargs):
+        committed.append(os.path.basename(self.path))
+        return real_commit(self, *args, **kwargs)
+
+    monkeypatch.setattr(ManifestStore, "_commit", recording_commit)
+    args = (str(d / "ops"), str(d / "channels"), str(d / "ckpt"))
+    if mode == "engine":
+        q = P.start_engine_ingest(
+            P.read_engine_stream(spark, str(d / "blocks")), *args)
+    else:
+        q = P.start_ingest(
+            P.streaming_ops(P.read_block_stream(spark, str(d / "blocks")),
+                            None), *args, mode=mode, lib_lag=5)
+    q.awaitTermination(120)
+    assert committed == ["ops", "channels", "ops_meta"] \
+        + (["ops_pending"] if mode == "irreversible" else [])
+
+
+def test_staging_threads_inherit_stream_properties(spark, fx,
+                                                   tmp_path_factory):
+    """The channel frame is built and staged off the foreachBatch
+    thread; that thread's Spark local properties travel with it — the
+    job group ``StreamingQuery.stop()`` cancels by, and the streaming
+    query id."""
+    from meeseeker_spark.channels import op_channels
+
+    d = tmp_path_factory.mktemp("inherit")
+    _write_batches(fx.blocks, "blocks", str(d / "blocks"), 1)
+    seen = []
+
+    def channel_fn(ops):
+        sc = ops.sparkSession.sparkContext
+        seen.append((sc.getLocalProperty("sql.streaming.queryId"),
+                     sc.getLocalProperty("spark.jobGroup.id")))
+        return op_channels(ops)
+
+    q = P.start_ingest(
+        P.streaming_ops(P.read_block_stream(spark, str(d / "blocks")),
+                        None),
+        str(d / "ops"), str(d / "channels"), str(d / "ckpt"),
+        channel_fn=channel_fn)
+    q.awaitTermination(120)
+    assert seen and set(seen) == {(q.id, q.runId)}
+
+
+def test_driver_written_meta_extends_spark_written_store(spark, fx,
+                                                         tmp_path_factory):
+    """A ``_meta`` store whose rows a Spark write job staged (as every
+    store did before the HWM row was written from the driver) accepts
+    driver-written rows under its recorded schema, and
+    ``last_block_num`` and ``compact_meta`` answer exactly as over a
+    store written wholly by Spark.  A trigger with no rows still records
+    its ``(null, null, batch_id)`` row."""
+    from pyspark.sql import functions as F
+
+    from meeseeker_spark.channels import op_channels
+    from meeseeker_spark.manifest import ManifestStore
+
+    d = tmp_path_factory.mktemp("meta_compat")
+    _write_batches(fx.blocks, "blocks", str(d / "blocks"), 3)
+    files = sorted(glob.glob(str(d / "blocks" / "*.parquet")))
+    batches = [flatten_blocks(spark.read.schema(BLOCKS).parquet(f))
+               for f in files]
+    batches.append(batches[0].limit(0))          # a trigger with no rows
+
+    def spark_hwm(ops, batch_id):
+        return ops.agg(F.first("chain").alias("chain"),
+                       F.max("block_num").alias("last_block_num")) \
+            .withColumn("batch_id", F.lit(batch_id))
+
+    old, new = d / "old" / "ops", d / "new" / "ops"
+    for i, ops in enumerate(batches):
+        ManifestStore(spark, str(old) + "_meta").append(
+            spark_hwm(ops, i), i)
+        if i == 0:
+            ManifestStore(spark, str(new) + "_meta").append(
+                spark_hwm(ops, i), i)
+        else:
+            P._commit_outputs(ops.persist(), op_channels, str(new),
+                              str(d / "new" / "channels"), i)
+    old_meta = ManifestStore(spark, str(old) + "_meta")
+    new_meta = ManifestStore(spark, str(new) + "_meta")
+    assert new_meta._read_manifest()["schema"] \
+        == old_meta._read_manifest()["schema"]
+    rows = sorted(tuple(r) for r in new_meta.df().collect()
+                  if r["chain"] is not None)
+    assert sorted(tuple(r) for r in old_meta.df().collect()
+                  if r["chain"] is not None) == rows
+    assert [tuple(r) for r in new_meta.df().collect()
+            if r["chain"] is None] == [(None, None, 3)]
+    assert P.last_block_num(spark, str(new)) \
+        == P.last_block_num(spark, str(old)) == fx.blocks[-1]["block_num"]
+    assert P.compact_meta(spark, str(new)) \
+        == P.compact_meta(spark, str(old)) == 4
+    assert sorted(map(tuple, new_meta.df().collect()), key=str) \
+        == sorted(map(tuple, old_meta.df().collect()), key=str)
+
+
 def test_screen_in_batch_chain_flags_against_survivor(spark):
     """A≈B≈C in ONE batch (review r4): cluster-level dedup admits only A,
     and every flagged corpus_id references the ADMITTED survivor — never
