@@ -51,7 +51,7 @@ def _consume(df) -> None:
     """Force full execution without driver-side materialization costs.
     (r15 review: the old ``save() or df.count()`` fallthrough ran every
     consumed query TWICE — noop save returns None — doubling the work
-    behind each ab_infer_gen timing.)"""
+    behind each timing.)"""
     df.write.mode("overwrite").format("noop").save()
 
 

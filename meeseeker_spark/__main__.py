@@ -285,22 +285,9 @@ def main(argv: list[str] | None = None) -> int:
                      help="stream checkpoint dir (default OUT/_ckpt)")
     psc.add_argument("--threshold", type=float, default=0.5,
                      help="near-dup Jaccard threshold")
-    psc.add_argument("--index-table", default=None,
-                     help="opt-in: keep the band index in a metastore "
-                          "table hash-bucketed by band (index side of "
-                          "the join arrives pre-partitioned)")
     psc.add_argument("--exact-index", action="store_true",
                      help="opt-in Bloom exact-dup prescreen (fpx + "
                           "bloom dirs beside the band index)")
-    # None (not 8192/5) so --rebuild-exact-index can tell "user asked
-    # for a resize" from "use the layout marker" (ADVICE r12); the
-    # screen path applies the 8192/5 defaults at the call site
-    psc.add_argument("--bloom-m-bits", type=int, default=None,
-                     help="bloom bitmap bits (default 8192; with "
-                          "--rebuild-exact-index: RESIZE the index)")
-    psc.add_argument("--bloom-k", type=int, default=None,
-                     help="bloom hash count (default 5; with "
-                          "--rebuild-exact-index: RESIZE the index)")
     psc.add_argument("--drift-baseline", default=None,
                      help="opt-in: parquet of baseline docs (or a "
                           "(token, n) count table) — each batch writes "
@@ -311,7 +298,9 @@ def main(argv: list[str] | None = None) -> int:
                           "exit WITHOUT draining incoming — run after "
                           "retention expires corpus batches (a bloom "
                           "cannot unlearn a key, so the stale bitmap "
-                          "over-flags until this runs)")
+                          "over-flags until this runs; also the "
+                          "recovery for a store built at another bloom "
+                          "sizing)")
 
     a = p.parse_args(argv)
 
@@ -562,11 +551,7 @@ def main(argv: list[str] | None = None) -> int:
         spark = _spark()
         if a.rebuild_exact_index:
             from .streaming.screen import rebuild_exact_index
-            # forward user-passed sizing (the documented CLI resize
-            # path — rebuild rewrites the layout marker to match);
-            # None keeps the marker's layout (ADVICE r12)
-            n = rebuild_exact_index(spark, a.out,
-                                    m_bits=a.bloom_m_bits, k=a.bloom_k)
+            n = rebuild_exact_index(spark, a.out)
             print(f"rebuilt exact index: {n} fingerprints", file=sys.stderr)
             return 0
         drift = (spark.read.parquet(a.drift_baseline)
@@ -575,10 +560,7 @@ def main(argv: list[str] | None = None) -> int:
             spark, a.incoming, a.out,
             a.checkpoint or f"{a.out}/_ckpt",
             threshold=a.threshold,
-            index_table=a.index_table,
             exact_index=a.exact_index,
-            bloom_m_bits=8192 if a.bloom_m_bits is None else a.bloom_m_bits,
-            bloom_k=5 if a.bloom_k is None else a.bloom_k,
             drift_baseline=drift)
         q.awaitTermination()
         try:

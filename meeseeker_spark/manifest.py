@@ -89,6 +89,20 @@ _DATA_DIR = "data"
 Rows = Union[DataFrame, pa.Table]
 
 
+def _version(name: str) -> int | None:
+    """N for a committed version's file name ``v{N}.json``, else None."""
+    if name.startswith("v") and name.endswith(".json") \
+            and name[1:-5].isdigit():
+        return int(name[1:-5])
+    return None
+
+
+def _versions(mdir: str) -> list[int]:
+    """The committed versions in a ``_manifest`` dir, ascending."""
+    return sorted(v for v in map(_version, os.listdir(mdir))
+                  if v is not None)
+
+
 def is_manifest_store(path: str) -> bool:
     """THE committed-version probe, so the marker dir name has one home.
 
@@ -98,10 +112,7 @@ def is_manifest_store(path: str) -> bool:
     marker-dir probe would report a store whose first commit crashed
     (or has not landed yet) as readable."""
     mdir = os.path.join(path, _MANIFEST_DIR)
-    if not os.path.isdir(mdir):
-        return False
-    return any(f.startswith("v") and f.endswith(".json")
-               and f[1:-5].isdigit() for f in os.listdir(mdir))
+    return os.path.isdir(mdir) and bool(_versions(mdir))
 
 
 def open_committed(spark: SparkSession,
@@ -126,6 +137,16 @@ def open_committed(spark: SparkSession,
                 f"{path} holds parquet files but no committed manifest — "
                 "not a manifest store")
     return None
+
+
+def read_committed(spark: SparkSession, path: str) -> DataFrame:
+    """The committed table at ``path``.  Raises FileNotFoundError until
+    the first commit and ValueError for a path holding parquet but no
+    committed manifest (``open_committed``)."""
+    ms = open_committed(spark, path)
+    if ms is None:
+        raise FileNotFoundError(f"{path} has no committed manifest version")
+    return ms.df()
 
 
 def _epoch_s(ts: dt.datetime) -> int:
@@ -258,12 +279,7 @@ class ManifestStore:
         return os.path.join(self.path, _MANIFEST_DIR)
 
     def current_version(self) -> int | None:
-        versions = [
-            int(f[1:-5]) for f in os.listdir(self._mdir())
-            if f.startswith("v") and f.endswith(".json")
-            and f[1:-5].isdigit()
-        ]
-        return max(versions) if versions else None
+        return max(self.versions(), default=None)
 
     def _read_manifest(self, version: int | None = None) -> dict:
         v = self.current_version() if version is None else version
@@ -340,10 +356,7 @@ class ManifestStore:
     def versions(self) -> list[int]:
         """Manifest versions still on disk, ascending.  gc() drops old
         manifest json, so this is also the time-travel horizon."""
-        return sorted(
-            int(f[1:-5]) for f in os.listdir(self._mdir())
-            if f.startswith("v") and f.endswith(".json")
-            and f[1:-5].isdigit())
+        return _versions(self._mdir())
 
     def _manifest_at(self, version: int | None) -> dict:
         if version is not None and version not in self.versions():
@@ -562,8 +575,7 @@ class ManifestStore:
         for f in os.listdir(self._mdir()):
             if f.startswith(".tmp-"):
                 os.unlink(os.path.join(self._mdir(), f))
-            elif (f.startswith("v") and f.endswith(".json")
-                  and f[1:-5].isdigit() and int(f[1:-5]) not in kept):
+            elif (v := _version(f)) is not None and v not in kept:
                 os.unlink(os.path.join(self._mdir(), f))
         return deleted
 

@@ -20,7 +20,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .keys import glob_to_filter, parse_key
-from .manifest import ManifestStore, open_committed
+from .manifest import ManifestStore, open_committed, read_committed
 
 # range partitions per OpsStore.write: the TOTAL writer count across all
 # chains (a two-chain frame splits these tasks between the chains)
@@ -93,11 +93,7 @@ class OpsStore:
         predicates push down as column filters with min/max row-group
         pruning.  Raises FileNotFoundError until the first commit and
         ValueError for a path that is not a manifest store."""
-        ms = open_committed(self.spark, self.path)
-        if ms is None:
-            raise FileNotFoundError(
-                f"{self.path} has no committed manifest version")
-        return ms.df()
+        return read_committed(self.spark, self.path)
 
     # -- C1: key-pattern scan ----------------------------------------------
 

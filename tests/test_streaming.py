@@ -469,86 +469,22 @@ def test_pending_store_keeps_two_versions(spark, fx, tmp_path_factory):
         == fx.blocks[-1]["block_num"] - 5
 
 
-def test_checkpoint_stream_id_uri_handling(tmp_path, capsys):
-    """r14 review + VERDICT r14 item 2: Spark accepts the checkpoint as
-    a Hadoop path, so a ``file:`` URI must still resolve the identity
-    (local fast path, no JVM); a remote scheme WITHOUT a session is the
-    only remaining degradation, and it is LOUD (stderr note)."""
+def test_checkpoint_stream_id_uri_handling(tmp_path):
+    """The screen's stream-identity check reads ``<checkpoint>/metadata``
+    from a local path or a ``file:`` URI (Spark accepts both); a fresh
+    checkpoint (no metadata yet) or a garbled one has no identity."""
     import json as _json
+
+    from meeseeker_spark.streaming.screen import _checkpoint_stream_id
+
     ck = tmp_path / "ckpt"
     os.makedirs(ck)
     (ck / "metadata").write_text(_json.dumps({"id": "q-123"}))
-    assert P._checkpoint_stream_id(str(ck)) == "q-123"
-    assert P._checkpoint_stream_id("file://" + str(ck)) == "q-123"
-    assert P._checkpoint_stream_id(str(tmp_path / "missing")) is None
-    assert P._checkpoint_stream_id("s3a://bucket/ckpt") is None
-    assert "degraded" in capsys.readouterr().err
-
-
-def test_checkpoint_stream_id_hadoop_fs(spark, tmp_path, capsys,
-                                        monkeypatch):
-    """VERDICT r14 item 2: a remote-scheme checkpoint reads its
-    ``metadata`` through the JVM Hadoop FileSystem client, so the
-    stale-pending stream-identity guard engages on every scheme Spark
-    itself can checkpoint to.  The JVM read path is proven end-to-end
-    with a real Hadoop FileSystem open on a ``file:`` URI (the one
-    remote-capable client available in this container); the scheme
-    routing is proven by stubbing the read for an ``s3a:`` URI —
-    together the stderr degradation message is unreachable for any
-    Spark-checkpointable scheme."""
-    import json as _json
-    ck = tmp_path / "ckpt"
-    os.makedirs(ck)
-    (ck / "metadata").write_text(_json.dumps({"id": "q-777"}))
-
-    # the JVM Hadoop client itself, end-to-end (LocalFileSystem)
-    assert _json.loads(P._hadoop_read_utf8(
-        spark, "file://" + str(ck) + "/metadata"))["id"] == "q-777"
-    # a missing file surfaces as a JVM error → mapped to None upstream
-    import py4j.protocol
-    with pytest.raises(py4j.protocol.Py4JJavaError):
-        P._hadoop_read_utf8(spark, "file://" + str(tmp_path) + "/nope")
-
-    # scheme routing: a non-local URI goes through the Hadoop read
-    # (stubbed here — no remote FS in the container) and resolves the
-    # identity instead of degrading
-    seen = []
-
-    def fake_read(s, uri):
-        seen.append(uri)
-        return _json.dumps({"id": "q-remote"})
-
-    monkeypatch.setattr(P, "_hadoop_read_utf8", fake_read)
-    assert P._checkpoint_stream_id("s3a://bucket/ckpt", spark) \
-        == "q-remote"
-    assert seen == ["s3a://bucket/ckpt/metadata"]
-
-    # missing-on-remote (first start, JVM FileNotFound): None, silently
-    # — same contract as the local fast path
-    class _FakeJExc:
-        class _Cls:
-            @staticmethod
-            def getName():
-                return "java.io.FileNotFoundException"
-
-        def getClass(self):
-            return self._Cls
-
-    class _NotFound(Exception):
-        java_exception = _FakeJExc()
-
-    monkeypatch.setattr(
-        P, "_hadoop_read_utf8",
-        lambda s, uri: (_ for _ in ()).throw(_NotFound()))
-    assert P._checkpoint_stream_id("s3a://bucket/ckpt", spark) is None
-    assert "degraded" not in capsys.readouterr().err
-
-    # any OTHER remote failure (connection, auth, ...) degrades LOUDLY
-    monkeypatch.setattr(
-        P, "_hadoop_read_utf8",
-        lambda s, uri: (_ for _ in ()).throw(RuntimeError("conn refused")))
-    assert P._checkpoint_stream_id("s3a://bucket/ckpt", spark) is None
-    assert "degraded" in capsys.readouterr().err
+    assert _checkpoint_stream_id(str(ck)) == "q-123"
+    assert _checkpoint_stream_id("file://" + str(ck)) == "q-123"
+    assert _checkpoint_stream_id(str(tmp_path / "missing")) is None
+    (ck / "metadata").write_text('{"id": ')
+    assert _checkpoint_stream_id(str(ck)) is None
 
 
 def test_reset_drops_hwm_and_pending(spark, fx, tmp_path_factory):
@@ -677,30 +613,6 @@ def test_ttl_keyed_state_never_expire_sentinel(spark, tmp_path_factory):
     assert {r["key"] for r in rows} == {
         "hive:1:a:0:vote", "hive:1:b:0:comment",
         "hive:9:z:0:vote", "hive:99:w:0:vote"}
-
-
-def test_ttl_keyed_state_tws_matches(spark, tmp_path_factory):
-    """The transformWithState TTL op (RocksDB state, first-class timers)
-    reproduces the GroupState path's exact output on the same scenario."""
-    # the TWS state-server protocol is protobuf-based; without the package
-    # the driver worker cannot even open its handle (import gate, not a
-    # behavior difference)
-    pytest.importorskip("google.protobuf.descriptor")
-    from meeseeker_spark.streaming.state import ttl_keyed_state_tws
-
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, "org.apache.spark.sql.execution.streaming."
-                         "state.RocksDBStateStoreProvider")
-    try:
-        rows = _run_ttl_scenario(spark, tmp_path_factory.mktemp("ttltws"),
-                                 ttl_keyed_state_tws)
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
-    _check_ttl_rows(rows)
 
 
 def test_resume_policy_engine():
@@ -1264,83 +1176,6 @@ def test_screen_in_batch_chain_flags_against_survivor(spark):
     assert fl[(3, 1)] < TAU <= fl[(2, 1)]
 
 
-def test_screen_bucketed_index_table(spark, tmp_path_factory):
-    """Opt-in bucketed band-index table: same screening results as the
-    dir layout, and candidate generation reads the index PRE-PARTITIONED
-    — zero Exchange on the index side of the band join (the dir layout
-    pays one per trigger)."""
-    import contextlib
-    import io
-    import time as _time
-
-    from meeseeker_spark.ext.dedup import incremental_candidates
-    from meeseeker_spark.streaming.screen import start_screen
-
-    d = tmp_path_factory.mktemp("screenbkt")
-    incoming, out, ckpt = d / "incoming", d / "out", d / "ckpt"
-    os.makedirs(incoming)
-    TBL = "screen_band_index_test"
-    spark.sql(f"DROP TABLE IF EXISTS {TBL}")
-
-    base = ("the quick brown fox jumps over the lazy dog while the "
-            "cat watches from the warm stone wall near the garden gate")
-    cols = ["doc_id", "text", "lang", "source", "n_chars"]
-
-    def drop(name, rows):
-        tmp = d / ("w_" + name)
-        spark.createDataFrame(rows, cols).coalesce(1).write.parquet(str(tmp))
-        part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
-        os.rename(tmp / part, incoming / f"{name}.parquet")
-
-    try:
-        drop("b1", [(1, base, "en", "web", len(base)),
-                    (3, "completely different words about ships and "
-                        "harbors", "en", "web", 40)])
-        q = start_screen(spark, str(incoming), str(out), str(ckpt),
-                         index_table=TBL)
-        q.awaitTermination(120)
-        _time.sleep(1.1)
-        drop("b2", [(10, base.replace("warm", "cold"), "en", "web", 100),
-                    (11, "fresh unrelated content regarding mountain "
-                         "weather patterns", "en", "web", 60)])
-        q = start_screen(spark, str(incoming), str(out), str(ckpt),
-                         index_table=TBL)
-        q.awaitTermination(120)
-
-        corpus = {r["doc_id"] for r in
-                  spark.read.parquet(str(out / "corpus")).collect()}
-        flagged = {(r["new_id"], r["corpus_id"]) for r in
-                   spark.read.parquet(str(out / "flagged")).collect()}
-        assert corpus == {1, 3, 11}
-        assert flagged == {(10, 1)}
-
-        # plan shape: index side pre-partitioned by the bucketing
-        batch = spark.createDataFrame(
-            [(99, base.replace("dog", "hound"), "en", "web", 100)], cols)
-        bands = spark.table(TBL).drop("batch_id")
-
-        def explain_of(cand_df):
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                cand_df.explain("formatted")
-            return buf.getvalue()
-
-        bucketed_plan = explain_of(
-            incremental_candidates(batch, corpus_bands=bands))
-        bands.write.mode("overwrite").parquet(str(d / "flat_index"))
-        dir_bands = spark.read.parquet(str(d / "flat_index"))
-        flat_plan = explain_of(
-            incremental_candidates(batch, corpus_bands=dir_bands))
-        assert "Bucketed: true" in bucketed_plan
-        # the bucketed read arrives pre-partitioned on the band key, so
-        # the index-side exchange disappears (formatted explain mentions
-        # each node in tree + detail, hence counting, not equality-to-1)
-        assert (bucketed_plan.count("Exchange")
-                < flat_plan.count("Exchange"))
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {TBL}")
-
-
 def test_screen_cross_rejected_survivor_remaps_flags(spark):
     """Review r4 follow-up: when the in-batch cluster survivor is ITSELF
     rejected by the cross-corpus screen, its dependents' flags remap to
@@ -1365,9 +1200,13 @@ def test_screen_cross_rejected_survivor_remaps_flags(spark):
 
 
 def test_screen_index_layout_marker_guard(spark, tmp_path_factory):
-    """Toggling index_table against existing screen state is refused
-    loudly (review r4 follow-up); a stale same-named table without a
-    marker is refused too."""
+    """The band index has one layout (``index/batch_id=N``).  A layout
+    marker an older build wrote for a metastore-table index (non-null
+    ``index_table``) is refused with the recovery — a fresh out_dir —
+    named: this build's index dirs would cover only new batches.  An
+    older marker recording ``index_table: null`` restarts cleanly."""
+    import json as _json
+
     from meeseeker_spark.streaming.screen import start_screen
 
     d = tmp_path_factory.mktemp("screenmarker")
@@ -1383,63 +1222,17 @@ def test_screen_index_layout_marker_guard(spark, tmp_path_factory):
 
     q = start_screen(spark, str(incoming), str(d / "out"), str(d / "ckpt"))
     q.awaitTermination(120)
-    with pytest.raises(RuntimeError, match="index_table"):
-        start_screen(spark, str(incoming), str(d / "out"),
-                     str(d / "ckpt"), index_table="some_table")
+    marker = d / "out" / "_index_layout.json"
+    rec = _json.loads(marker.read_text())
+    assert "index_table" not in rec
 
-    TBL = "stale_screen_index_test"
-    spark.sql(f"DROP TABLE IF EXISTS {TBL}")
-    try:
-        spark.createDataFrame(
-            [(1, "x", 0)], "doc_id bigint, band string, batch_id bigint"
-        ).write.bucketBy(4, "band").format("parquet").saveAsTable(TBL)
-        with pytest.raises(RuntimeError, match="no layout marker"):
-            start_screen(spark, str(incoming), str(d / "out2"),
-                         str(d / "ckpt2"), index_table=TBL)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {TBL}")
+    marker.write_text(_json.dumps(dict(rec, index_table="some_table")))
+    with pytest.raises(RuntimeError, match="fresh out_dir"):
+        start_screen(spark, str(incoming), str(d / "out"), str(d / "ckpt"))
 
-
-def test_rebuild_band_index_clears_duplicates(spark, tmp_path_factory):
-    """rebuild_band_index rewrites the table from the corpus store —
-    retry-appended duplicate band rows disappear, content unchanged."""
-    from pyspark.sql import functions as F
-
-    from meeseeker_spark.streaming.screen import (banded_projection,
-                                                  rebuild_band_index)
-
-    d = tmp_path_factory.mktemp("rebuild")
-    cols = ["doc_id", "text", "lang", "source", "n_chars"]
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon", "en", "w", 30),
-         (2, "zeta eta theta iota kappa", "en", "w", 25)], cols)
-    (docs.write.parquet(str(d / "out" / "corpus" / "batch_id=0")))
-    TBL = "rebuild_band_index_test"
-    spark.sql(f"DROP TABLE IF EXISTS {TBL}")
-    try:
-        proj = banded_projection(docs).withColumn("batch_id", F.lit(0))
-        for _ in range(2):      # simulate a retry double-append
-            (proj.write.mode("append").bucketBy(4, "band").sortBy("band")
-             .format("parquet").saveAsTable(TBL))
-        assert spark.table(TBL).count() == 2 * proj.count()
-        n = rebuild_band_index(spark, str(d / "out"), TBL, index_buckets=4)
-        assert n == proj.count()
-        got = {(r["doc_id"], r["band"]) for r in
-               spark.table(TBL).drop("batch_id").collect()}
-        want = {(r["doc_id"], r["band"]) for r in proj.drop("batch_id")
-                .collect()}
-        assert got == want
-
-        # r15 review (mirrors rebuild_exact_index's ADVICE r10+r11
-        # guard): every corpus batch expired → the rebuild must purge
-        # the stale table to EMPTY, not crash on the empty glob
-        import shutil as _sh
-        _sh.rmtree(str(d / "out" / "corpus" / "batch_id=0"))
-        assert rebuild_band_index(spark, str(d / "out"), TBL,
-                                  index_buckets=4) == 0
-        assert spark.table(TBL).count() == 0
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {TBL}")
+    marker.write_text(_json.dumps(dict(rec, index_table=None)))
+    q = start_screen(spark, str(incoming), str(d / "out"), str(d / "ckpt"))
+    q.awaitTermination(120)
 
 
 def test_screen_quality_gate(spark, tmp_path_factory):
@@ -1965,10 +1758,12 @@ def test_rebuild_exact_index_prunes_expired_batches(spark, tmp_path_factory):
 
 
 def test_screen_bloom_sizing_marker_guard(spark, tmp_path_factory):
-    """The layout marker records bloom_m_bits/bloom_k (ADVICE r11): a
-    restart probing the stored bitmap at different slot parameters
-    would yield false 'provably fresh' verdicts with no guard firing —
-    it must refuse instead; the recorded sizing restarts cleanly."""
+    """The layout marker records the bloom sizing (ADVICE r11): probing
+    a bitmap built at other slot parameters would yield false 'provably
+    fresh' verdicts with no guard firing.  The screen has one sizing,
+    8192/5: a marker recording 4096/3, or an older build's unfinished
+    ``bloom_rebuild_target``, refuses; a marker with no sizing keys
+    counts as 8192/5 and restarts cleanly (and screens correctly)."""
     import json
     import time as _time
 
@@ -1988,36 +1783,34 @@ def test_screen_bloom_sizing_marker_guard(spark, tmp_path_factory):
     txt = "a document about canals and the locks that climb them"
     drop("b1", [(1, txt, "en", "web", len(txt))])
     q = start_screen(spark, str(incoming), str(out), str(ckpt),
-                     exact_index=True, bloom_m_bits=4096, bloom_k=3)
+                     exact_index=True)
     q.awaitTermination(120)
-    with open(out / "_index_layout.json") as f:
-        rec = json.load(f)
-    assert (rec["bloom_m_bits"], rec["bloom_k"]) == (4096, 3)
+    marker = out / "_index_layout.json"
+    rec = json.loads(marker.read_text())
+    assert (rec["bloom_m_bits"], rec["bloom_k"]) == (8192, 5)
 
-    with pytest.raises(RuntimeError, match="mismatched slot positions"):
+    marker.write_text(json.dumps(dict(rec, bloom_m_bits=4096, bloom_k=3)))
+    with pytest.raises(RuntimeError, match="m_bits=4096, k=3"):
         start_screen(spark, str(incoming), str(out), str(ckpt),
-                     exact_index=True, bloom_m_bits=8192, bloom_k=5)
+                     exact_index=True)
+    marker.write_text(json.dumps(
+        dict(rec, bloom_rebuild_target={"m_bits": 16384, "k": 7})))
+    with pytest.raises(RuntimeError, match="unfinished resize"):
+        start_screen(spark, str(incoming), str(out), str(ckpt),
+                     exact_index=True)
 
-    # the recorded sizing restarts cleanly (and screens correctly)
+    # a pre-r11 marker (no sizing keys) was built at 8192/5
+    marker.write_text(json.dumps(
+        {k: v for k, v in rec.items()
+         if k not in ("bloom_m_bits", "bloom_k")}))
     _time.sleep(1.1)
     drop("b2", [(7, txt, "en", "web", len(txt))])  # exact re-post
     q = start_screen(spark, str(incoming), str(out), str(ckpt),
-                     exact_index=True, bloom_m_bits=4096, bloom_k=3)
+                     exact_index=True)
     q.awaitTermination(120)
     flagged = {(r["new_id"], r["corpus_id"]) for r in
                spark.read.parquet(str(out / "flagged")).collect()}
     assert flagged == {(7, 1)}
-
-    # a pre-r11 marker (no sizing keys) means "built at the then
-    # hard-coded defaults": defaults restart, anything else refuses
-    with open(out / "_index_layout.json") as f:
-        rec = json.load(f)
-    del rec["bloom_m_bits"], rec["bloom_k"]
-    with open(out / "_index_layout.json", "w") as f:
-        json.dump(rec, f)
-    with pytest.raises(RuntimeError, match="mismatched slot positions"):
-        start_screen(spark, str(incoming), str(out), str(ckpt),
-                     exact_index=True, bloom_m_bits=4096, bloom_k=3)
 
 
 def test_screen_drift_baseline_unpersisted_on_stop(spark, tmp_path_factory):
@@ -2126,6 +1919,56 @@ def test_replay_screen_matches_streaming(spark, tmp_path_factory):
     assert statuses == {"admitted", "exact", "near"}
 
 
+def test_replay_screen_releases_superseded_generations(spark, monkeypatch):
+    """replay_screen keeps the corpus indexes as lazily-checkpointed
+    generations, each holding the whole index.  A superseded generation
+    is unpersisted once its successor has materialized, and the last
+    ones after the loop, so cached index memory does not grow with the
+    batch count."""
+    from meeseeker_spark.streaming import screen as S
+
+    sc = spark.sparkContext
+    cols = ["doc_id", "text", "lang", "source", "n_chars"]
+    words = ["river", "stone", "wind", "tide", "hill", "forest"]
+    batches = []
+    for b in range(3):
+        rows = [(10 * b + i,
+                 " ".join(f"{words[2 * b + i]}{j}" for j in range(12)),
+                 "en", "w", 80) for i in range(2)]
+        if b:
+            rows.append((10 * b + 9, batches[0][0][1], "en", "w", 80))
+        batches.append(rows)
+
+    gens = []                 # (batch index, rdd id) of each generation
+    live_after = []           # persisted RDD ids after each release pass
+    real_ckpt, real_release = S._checkpoint_rdd, S._release_superseded
+
+    def spy_ckpt(df):
+        r = real_ckpt(df)
+        gens.append((len(live_after) // 2 - 1, r.id()))
+        return r
+
+    def spy_release(g):
+        real_release(g)
+        live_after.append(set(sc._jsc.getPersistentRDDs().keySet()))
+
+    monkeypatch.setattr(S, "_checkpoint_rdd", spy_ckpt)
+    monkeypatch.setattr(S, "_release_superseded", spy_release)
+    out = S.replay_screen([spark.createDataFrame(r, cols) for r in batches],
+                          exact_index=True)
+    by_batch = [{i for b, i in gens if b == n} for n in range(3)]
+    assert [len(g) for g in by_batch] == [2, 2, 2]   # fingerprint + band
+    # batch 2's screen materialized generation 1: generation 0 is gone
+    assert not by_batch[0] & live_after[-1]
+    assert by_batch[1] <= live_after[-1]
+    # after the loop no generation stays persisted
+    assert not (set(sc._jsc.getPersistentRDDs().keySet())
+                & {i for _, i in gens})
+    rows = {(r["batch_id"], r["doc_id"]): r["status"] for r in out.collect()}
+    assert rows[(0, 0)] == "admitted"
+    assert rows[(1, 19)] == rows[(2, 29)] == "exact"
+
+
 def test_rebuild_exact_index_total_expiry(spark, tmp_path_factory):
     """Regression (r11 review): retention that expires EVERY corpus
     batch must still prune the stale fpx/bloom dirs — the old glob-based
@@ -2160,17 +2003,23 @@ def test_rebuild_exact_index_total_expiry(spark, tmp_path_factory):
                    for e in os.listdir(out / "bloom"))
 
 
-def test_rebuild_exact_index_resize_recovery(spark, tmp_path_factory):
-    """Regression (r11 review): the sizing-mismatch refusal must have a
-    working recovery path — rebuild_exact_index(m_bits=..., k=...)
-    rewrites the bitmaps at the NEW sizing AND the marker, after which
-    the resized restart screens correctly."""
+def test_rebuild_exact_index_resize_recovery(spark, tmp_path_factory,
+                                             monkeypatch):
+    """A store an older build left at bloom sizing 4096/3 (bitmaps and
+    marker) is refused with the recovery, ``rebuild_exact_index``,
+    named.  The rebuild rewrites every bitmap at 8192/5 and only then
+    the marker: a crash between two bitmap rewrites leaves 4096/3
+    recorded, so the screen keeps refusing the half-rewritten index,
+    and a re-run finishes the job — after which an exact re-post is
+    flagged."""
+    import json
     import time as _time
 
-    import pytest as _pytest
+    from pyspark.sql import functions as F
 
-    from meeseeker_spark.streaming.screen import (rebuild_exact_index,
-                                                  start_screen)
+    from meeseeker_spark.ext.sketch import bloom_membership
+    from meeseeker_spark.ext.text import fingerprint as _fp
+    from meeseeker_spark.streaming import screen as S
 
     d = tmp_path_factory.mktemp("screen_resize")
     incoming, out, ckpt = d / "incoming", d / "out", d / "ckpt"
@@ -2184,24 +2033,67 @@ def test_rebuild_exact_index_resize_recovery(spark, tmp_path_factory):
         os.rename(tmp / part, incoming / f"{name}.parquet")
 
     txt = "a doc about gliders and the thermals that lift them"
+    other = "a note on lighthouses and the keepers who tended them"
     drop("b1", [(1, txt, "en", "web", len(txt))])
-    q = start_screen(spark, str(incoming), str(out), str(ckpt),
-                     exact_index=True)  # default 8192/5
+    _time.sleep(1.1)
+    drop("b2", [(2, other, "en", "web", len(other))])
+    q = S.start_screen(spark, str(incoming), str(out), str(ckpt),
+                       exact_index=True)
     q.awaitTermination(120)
 
-    with _pytest.raises(RuntimeError, match="rebuild_exact_index"):
-        start_screen(spark, str(incoming), str(out), str(ckpt),
-                     exact_index=True, bloom_m_bits=4096, bloom_k=3)
-    # the prescribed recovery: rebuild under the new sizing
-    rebuild_exact_index(spark, str(out), m_bits=4096, k=3)
+    # the older build's store: every bitmap and the marker at 4096/3
+    for b in (0, 1):
+        fps = spark.read.parquet(str(out / "fpx" / f"batch_id={b}"))
+        (S.bloom_bitmap(fps.select("fp").distinct(), "fp",
+                        m_bits=4096, k=3)
+         .write.mode("overwrite")
+         .parquet(str(out / "bloom" / f"batch_id={b}")))
+    marker = out / "_index_layout.json"
+    rec = json.loads(marker.read_text())
+    marker.write_text(json.dumps(dict(rec, bloom_m_bits=4096, bloom_k=3)))
+    with pytest.raises(RuntimeError, match="rebuild_exact_index"):
+        S.start_screen(spark, str(incoming), str(out), str(ckpt),
+                       exact_index=True)
+
+    # crash after the first bitmap rewrite: batch 0 at 8192/5, batch 1
+    # still at 4096/3, and the marker still says 4096/3
+    real_bitmap, calls = S.bloom_bitmap, []
+
+    def crash_on_second(*a, **kw):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("crash mid-rebuild")
+        return real_bitmap(*a, **kw)
+
+    monkeypatch.setattr(S, "bloom_bitmap", crash_on_second)
+    with pytest.raises(RuntimeError, match="crash mid-rebuild"):
+        S.rebuild_exact_index(spark, str(out))
+    monkeypatch.undo()
+    rec = json.loads(marker.read_text())
+    assert (rec["bloom_m_bits"], rec["bloom_k"]) == (4096, 3)
+    with pytest.raises(RuntimeError, match="rebuild_exact_index"):
+        S.start_screen(spark, str(incoming), str(out), str(ckpt),
+                       exact_index=True)
+
+    # the re-run finishes: every bitmap, then the marker, at 8192/5
+    assert S.rebuild_exact_index(spark, str(out)) == 2
+    rec = json.loads(marker.read_text())
+    assert (rec["bloom_m_bits"], rec["bloom_k"]) == (8192, 5)
+    merged = (spark.read.parquet(str(out / "bloom"))
+              .groupBy("word_idx").agg(F.bit_or("word").alias("word")))
+    probes = spark.createDataFrame([(txt,), (other,)], ["text"]).select(
+        _fp(F.col("text")).alias("fp"))
+    assert all(r["maybe_seen"] for r in
+               bloom_membership(probes, merged, "fp").collect())
+
     _time.sleep(1.1)
-    drop("b2", [(9, txt, "en", "web", len(txt))])  # exact re-post
-    q = start_screen(spark, str(incoming), str(out), str(ckpt),
-                     exact_index=True, bloom_m_bits=4096, bloom_k=3)
+    drop("b3", [(9, txt, "en", "web", len(txt))])  # exact re-post
+    q = S.start_screen(spark, str(incoming), str(out), str(ckpt),
+                       exact_index=True)
     q.awaitTermination(120)
     flagged = {(r["new_id"], r["corpus_id"]) for r in
                spark.read.parquet(str(out / "flagged")).collect()}
-    assert flagged == {(9, 1)}  # resized bitmap probed correctly
+    assert flagged == {(9, 1)}
 
 
 def test_screen_drift_baseline_unpersist_fast_path(spark, tmp_path_factory):
@@ -2430,52 +2322,6 @@ def test_screen_failed_start_releases_baseline_reference(
     finally:
         _BASELINE_REFCOUNT.pop(key, None)
         baseline.unpersist()
-
-
-def test_replay_screen_custom_bloom_sizing(spark, monkeypatch):
-    """ADVICE r11: replay_screen accepts bloom_m_bits/bloom_k and
-    threads them into the bitmap build AND the prescreen probe (a
-    screen started at custom sizing is replayable at matching sizing).
-    Decisions are sizing-invariant (maybe-hits exact-verify against the
-    fingerprint index), so the pin is on the threading itself."""
-    from meeseeker_spark.ext import sketch as _sk
-    from meeseeker_spark.streaming import screen as _scr
-
-    cols = ["doc_id", "text", "lang", "source", "n_chars"]
-    t1 = "first unique document text about mountain rivers and stones"
-    t2 = "second unique document text concerning desert winds entirely"
-    t3 = "third fresh document text on coastal tides and salty air"
-    b0 = spark.createDataFrame(
-        [(1, t1, "en", "web", len(t1)), (2, t2, "en", "web", len(t2))],
-        cols)
-    b1 = spark.createDataFrame(
-        [(11, t1, "en", "web", len(t1)), (3, t3, "en", "web", len(t3))],
-        cols)
-
-    seen_sizes = []
-
-    real_bitmap, real_prescreen = _sk.bloom_bitmap, _sk.exact_prescreen
-
-    def spy_bitmap(df, col, m_bits=8192, k=5):
-        seen_sizes.append(("bitmap", m_bits, k))
-        return real_bitmap(df, col, m_bits=m_bits, k=k)
-
-    def spy_prescreen(batch, fpx, bloom, m_bits=8192, k=5):
-        seen_sizes.append(("prescreen", m_bits, k))
-        return real_prescreen(batch, fpx, bloom, m_bits=m_bits, k=k)
-
-    monkeypatch.setattr(_scr, "bloom_bitmap", spy_bitmap)
-    monkeypatch.setattr(_scr, "exact_prescreen", spy_prescreen)
-
-    out = _scr.replay_screen([b0, b1], exact_index=True,
-                             bloom_m_bits=1024, bloom_k=3)
-    rows = {(r["batch_id"], r["doc_id"]): (r["status"], r["corpus_id"])
-            for r in out.collect()}
-    assert seen_sizes == [("bitmap", 1024, 3), ("prescreen", 1024, 3)]
-    assert rows[(0, 1)] == ("admitted", None)
-    assert rows[(0, 2)] == ("admitted", None)
-    assert rows[(1, 11)] == ("exact", 1)
-    assert rows[(1, 3)] == ("admitted", None)
 
 
 def test_engine_resume_tip_age_session_tz_independent(spark,
@@ -2810,62 +2656,14 @@ def test_screen_marker_torn_and_stream_identity(spark, tmp_path_factory):
         start_screen(spark, str(inc), str(d / "out"), str(d / "ckpt2"))
 
 
-def test_rebuild_exact_index_resize_is_two_phase(spark,
-                                                 tmp_path_factory):
-    """r15 runtime review: a bloom RESIZE crash-window used to leave
-    marker sizing consistent with SOME bitmaps — the sizing-mismatch
-    guard then structurally could not fire and exact dups were
-    admitted.  The resize now declares bloom_rebuild_target first;
-    start_screen refuses mid-resize; a default-sizing re-run ADOPTS the
-    target and finishes."""
-    import json as _json
-
-    from meeseeker_spark.streaming.screen import (rebuild_exact_index,
-                                                  start_screen)
-
-    d = tmp_path_factory.mktemp("resize2phase")
-    inc = d / "incoming"
-    os.makedirs(inc)
-    cols = ["doc_id", "text", "lang", "source", "n_chars"]
-    txt = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    tmp = d / "w"
-    spark.createDataFrame([(1, txt, "en", "web", len(txt))],
-                          cols).coalesce(1).write.parquet(str(tmp))
-    part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
-    os.rename(tmp / part, inc / "b1.parquet")
-    q = start_screen(spark, str(inc), str(d / "out"), str(d / "ckpt"),
-                     exact_index=True)
-    q.awaitTermination(120)
-
-    marker = d / "out" / "_index_layout.json"
-    rec = _json.loads(marker.read_text())
-    assert rec["bloom_m_bits"] == 8192
-
-    # simulate the crash window: phase-1 marker landed, bitmaps did not
-    rec["bloom_rebuild_target"] = {"m_bits": 16384, "k": 7}
-    marker.write_text(_json.dumps(rec))
-    with pytest.raises(RuntimeError, match="UNFINISHED bloom resize"):
-        start_screen(spark, str(inc), str(d / "out"), str(d / "ckpt"),
-                     exact_index=True)
-    # a default-sizing re-run adopts and completes the declared target
-    rebuild_exact_index(spark, str(d / "out"))
-    rec2 = _json.loads(marker.read_text())
-    assert "bloom_rebuild_target" not in rec2
-    assert (rec2["bloom_m_bits"], rec2["bloom_k"]) == (16384, 7)
-    # and the screen restarts at the new sizing
-    q2 = start_screen(spark, str(inc), str(d / "out"), str(d / "ckpt"),
-                      exact_index=True, bloom_m_bits=16384, bloom_k=7)
-    q2.awaitTermination(120)
-
-
 def test_screen_empty_band_index_falls_back_to_corpus(spark,
                                                       tmp_path_factory):
     """r15 runtime review: an EMPTY band index beside a non-empty corpus
-    (the window of a concurrent rebuild_band_index overwrite, or a
-    crashed index write) used to generate zero candidates — near-dups
-    of corpus docs were silently admitted and the checkpoint committed
-    the loss.  The screen now treats empty-bands as bands=None and
-    recomputes the projection from the corpus text."""
+    (a crashed or truncated index write) used to generate zero
+    candidates — near-dups of corpus docs were silently admitted and
+    the checkpoint committed the loss.  The screen treats empty bands
+    as bands=None and recomputes the projection from the corpus
+    text."""
     import time as _time
 
     from meeseeker_spark.streaming.screen import start_screen
@@ -2873,8 +2671,6 @@ def test_screen_empty_band_index_falls_back_to_corpus(spark,
     d = tmp_path_factory.mktemp("screen_emptybands")
     incoming, out, ckpt = d / "incoming", d / "out", d / "ckpt"
     os.makedirs(incoming)
-    TBL = "screen_empty_band_index_test"
-    spark.sql(f"DROP TABLE IF EXISTS {TBL}")
     base = ("the quick brown fox jumps over the lazy dog while the "
             "cat watches from the warm stone wall near the garden gate")
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
@@ -2885,24 +2681,21 @@ def test_screen_empty_band_index_falls_back_to_corpus(spark,
         part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
         os.rename(tmp / part, incoming / f"{name}.parquet")
 
-    try:
-        drop("b1", [(1, base, "en", "web", len(base))])
-        q = start_screen(spark, str(incoming), str(out), str(ckpt),
-                         index_table=TBL)
-        q.awaitTermination(120)
-        # simulate the rebuild window: table exists but holds no rows
-        spark.sql(f"TRUNCATE TABLE {TBL}")
-        assert spark.table(TBL).count() == 0
-        _time.sleep(1.1)
-        drop("b2", [(10, base.replace("warm", "cold"), "en", "web", 100)])
-        q = start_screen(spark, str(incoming), str(out), str(ckpt),
-                         index_table=TBL)
-        q.awaitTermination(120)
-        flagged = {(r["new_id"], r["corpus_id"]) for r in
-                   spark.read.parquet(str(out / "flagged")).collect()}
-        assert (10, 1) in flagged         # near-dup still caught
-        corpus = {r["doc_id"] for r in
-                  spark.read.parquet(str(out / "corpus")).collect()}
-        assert corpus == {1}
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {TBL}")
+    drop("b1", [(1, base, "en", "web", len(base))])
+    q = start_screen(spark, str(incoming), str(out), str(ckpt))
+    q.awaitTermination(120)
+    # the index partition exists but holds no rows
+    index0 = str(out / "index" / "batch_id=0")
+    (spark.createDataFrame([], "doc_id bigint, band string")
+     .write.mode("overwrite").parquet(index0))
+    assert spark.read.parquet(index0).count() == 0
+    _time.sleep(1.1)
+    drop("b2", [(10, base.replace("warm", "cold"), "en", "web", 100)])
+    q = start_screen(spark, str(incoming), str(out), str(ckpt))
+    q.awaitTermination(120)
+    flagged = {(r["new_id"], r["corpus_id"]) for r in
+               spark.read.parquet(str(out / "flagged")).collect()}
+    assert (10, 1) in flagged         # near-dup still caught
+    corpus = {r["doc_id"] for r in
+              spark.read.parquet(str(out / "corpus")).collect()}
+    assert corpus == {1}
