@@ -454,9 +454,11 @@ def main(argv: list[str] | None = None) -> int:
             store = OpsStore(_spark(), a.store)
         if a.cmd == "find":
             if a.what == "block":
-                if not a.ident.isdigit():
+                from .keys import key_int
+                block = key_int(a.ident)
+                if block is None:
                     p.error(f"find block needs a number, got {a.ident!r}")
-                df = store.find_block(int(a.ident), chain=a.chain)
+                df = store.find_block(block, chain=a.chain)
             else:
                 df = store.find_trx(a.ident, chain=a.chain)
             n = _print_rows(df)

@@ -18,7 +18,10 @@ extracted.
 from __future__ import annotations
 
 import fnmatch
+import functools
+import operator
 import re
+from dataclasses import dataclass
 
 from pyspark.sql import Column, functions as F
 
@@ -27,15 +30,26 @@ SIDECHAIN_SEGMENTS = ("chain", "block_num", "trx_id", "trx_index",
                       "contract", "action")
 
 _HEX40 = re.compile(r"^[0-9a-f]{40}$")
+_CANONICAL_INT = re.compile(r"0|[1-9][0-9]*")
 
 
-def _fits_long(digits: str) -> bool:
-    """True when a digit string fits a 64-bit signed column — a larger
-    literal can't equal any bigint/int segment, and passing it through
-    py4j as a Python int raises NumberFormatException server-side (r12
-    review: a 40-digit middle crashed the translator instead of simply
-    not matching numerically)."""
-    return int(digits) <= 0x7FFF_FFFF_FFFF_FFFF
+def key_int(seg: str) -> int | None:
+    """The value a ``block_num``/``trx_index`` key segment literal names,
+    or None when it names none.  Keys render those columns as ASCII
+    ``0`` or ``[1-9][0-9]*`` within int64, so any other literal — a
+    leading zero (``0123``), non-ASCII digits (``١٢٣``, ``²``), an
+    int64-oversized number — equals no stored segment.  (``str.isdigit``
+    accepts all of them, and ``int`` folds ``0123`` and ``١٢٣`` onto
+    123 or raises on ``²``.)  The length check keeps ``int`` off
+    oversized strings, which py4j could not pass as a long anyway."""
+    if len(seg) <= 19 and _CANONICAL_INT.fullmatch(seg) \
+            and int(seg) <= 0x7FFF_FFFF_FFFF_FFFF:
+        return int(seg)
+    return None
+
+
+def _wild(seg: str) -> bool:
+    return any(ch in seg for ch in "*?[")
 
 
 def key_column(sidechain: bool = False) -> Column:
@@ -75,7 +89,7 @@ def _split_segments(pattern: str) -> list[str]:
     dropped every row the glob matches).
 
     Class scanning mirrors ``fnmatch.translate`` exactly — the dialect
-    this module implements (see glob_to_filter's GLOB DIALECT note) —
+    this module implements (see translate_glob's GLOB DIALECT note) —
     because the rlike residual IS fnmatch's regex and a positional
     predicate built from a DIFFERENT parse can contradict it (r15
     second review): in fnmatch a ']' directly after '[' / '[!' / '[^'
@@ -128,7 +142,7 @@ def schedule_glob_filter(pattern: str) -> Column:
     segs = _split_segments(pattern)
     residual = F.col("key").rlike(_glob_to_regex(pattern))
     head = segs[0] if segs else ""
-    if head and not any(ch in head for ch in "*?["):
+    if head and not _wild(head):
         return (F.col("chain") == head) & residual
     return residual
 
@@ -139,8 +153,56 @@ _BACKSLASH_MSG = (
     "mis-translated); rewrite the literal as a [c] class instead")
 
 
-def glob_to_filter(pattern: str) -> Column:
-    """Translate a Redis key glob into a Catalyst predicate.
+Eq = tuple[str, object]
+
+
+@dataclass(frozen=True)
+class Glob:
+    """One parse of a key glob (``translate_glob``).  ``terms`` are ANDed;
+    each is a tuple of ``(column, value)`` equalities ORed together, so a
+    one-equality term is a *binding* every matching key satisfies.
+    ``residual`` is the anchored fnmatch regex on ``key`` that restores
+    glob-exactness, None when the terms alone are exact; ``never`` marks
+    a glob no stored key can match."""
+    terms: tuple[tuple[Eq, ...], ...] = ()
+    residual: str | None = None
+    never: bool = False
+
+    @property
+    def bindings(self) -> dict[str, object]:
+        """``{column: value}`` for every column the glob binds to one
+        value."""
+        return {t[0][0]: t[0][1] for t in self.terms if len(t) == 1}
+
+    @property
+    def exact(self) -> bool:
+        """True when the terms alone select exactly the matching keys."""
+        return self.residual is None
+
+    def column(self) -> Column:
+        """The Catalyst predicate: the terms ANDed with the residual."""
+        if self.never:
+            return F.lit(False)
+        preds = [functools.reduce(operator.or_,
+                                  (F.col(c) == v for c, v in t))
+                 for t in self.terms]
+        if self.residual is not None:
+            preds.append(F.col("key").rlike(self.residual))
+        return functools.reduce(operator.and_, preds) if preds \
+            else F.lit(True)
+
+
+def glob_to_filter(pattern: str | Glob) -> Column:
+    """The Catalyst predicate of a Redis key glob, or of its
+    ``translate_glob`` parse (so a caller that routed on the parse does
+    not translate twice)."""
+    g = pattern if isinstance(pattern, Glob) else translate_glob(pattern)
+    return g.column()
+
+
+def translate_glob(pattern: str) -> Glob:
+    """Translate a Redis key glob into column equalities plus, when
+    they are not exact, an fnmatch residual (``Glob``).
 
     Exact translation when every segment is a literal or a bare ``*``
     (the only shapes the reference README documents); otherwise extracts
@@ -174,17 +236,18 @@ def glob_to_filter(pattern: str) -> Column:
     if "\\" in pattern:
         raise ValueError(_BACKSLASH_MSG)
     segs = _split_segments(pattern)
-    residual = F.col("key").rlike(_glob_to_regex(pattern))
+    residual = Glob(residual=_glob_to_regex(pattern))
+    never = Glob(never=True)
 
     head = segs[0]
-    if any(ch in head for ch in "*?["):
+    if _wild(head):
         return residual
     sidechain = head.endswith("_engine")
     names = SIDECHAIN_SEGMENTS if sidechain else MAINNET_SEGMENTS
     if len(segs) > len(names):
         return residual
 
-    preds: list[Column] = []
+    terms: list[tuple[Eq, ...]] = []
     exact = True
 
     if len(segs) == len(names):
@@ -194,21 +257,18 @@ def glob_to_filter(pattern: str) -> Column:
         for name, seg in zip(names, segs):
             if seg == "*":
                 continue
-            if any(ch in seg for ch in "*?["):
+            if _wild(seg):
                 exact = False
                 continue
-            col = F.col(name)
             if name in ("block_num", "trx_index"):
-                if not seg.isdigit() or not _fits_long(seg):
-                    # numeric key segments are always rendered as digits
-                    # and fit int64, so a non-digit or oversized literal
-                    # here matches NOTHING (found by the unified-surface
-                    # fuzz: int() used to raise; oversized ints crash
-                    # py4j server-side)
-                    return F.lit(False)
-                preds.append(col == int(seg))
-            else:
-                preds.append(col == seg)
+                # numeric key segments are always rendered canonically
+                # (key_int), so any other literal here matches NOTHING
+                # (found by the unified-surface fuzz: int() used to
+                # raise; oversized ints crash py4j server-side)
+                seg = key_int(seg)
+                if seg is None:
+                    return never
+            terms.append(((name, seg),))
     else:
         # fewer segments than the key: only a '*' can absorb the missing
         # ':' separators (Redis MATCH is full-string).  Without one, a
@@ -217,112 +277,88 @@ def glob_to_filter(pattern: str) -> Column:
         # a pure literal can absorb none.
         if not any("*" in s for s in segs):
             if not any(ch in pattern for ch in "?["):
-                return F.lit(False)   # literal with too few segments
+                return never          # literal with too few segments
             return residual           # ?/[..] might still eat a ':'
         # '*' present: anchor literal head/tail segments, classify literal
         # middles by shape.
-        exact = all(s == "*" or not any(ch in s for ch in "*?[") for s in segs)
-        head, tail = segs[0], segs[-1]
-        if head != "*" and not any(ch in head for ch in "*?["):
-            preds.append(F.col("chain") == head)
-        if tail != "*" and not any(ch in tail for ch in "*?["):
-            if sidechain:
-                preds.append(F.col("action") == tail)
-            else:
-                preds.append(F.col("op_type") == tail)
+        exact = all(s == "*" or not _wild(s) for s in segs)
+        terms.append((("chain", head),))
+        lo, hi = 1, len(segs) - 1
+        # a literal segment right after the literal head is anchored at
+        # the string start, and segment values contain no ':', so it IS
+        # block_num — bound exactly, with no residual ('hive:N:*' is a
+        # block-bound request)
+        if not _wild(segs[1]):
+            block = key_int(segs[1])
+            if block is None:
+                return never
+            terms.append((("block_num", block),))
+            lo = 2
+        tail = segs[-1]
+        tail_literal = not _wild(tail)
+        if tail_literal:
+            terms.append((("action" if sidechain else "op_type", tail),))
         # the PENULTIMATE literal is positionally certain — but ONLY when
         # the last segment is itself a literal: then the pattern tail
         # ':<penult>:<tail>' is end-anchored, and since segment values
         # contain no ':', a matching key's second-to-last segment IS the
         # penult — contract on the sidechain (any name: the design is
         # data-derived, new contracts must need no code change,
-        # README.md:351), trx_index on mainnet (always digits; a non-digit
-        # there can't bind positionally and falls to the residual).  A
+        # README.md:351), trx_index on mainnet (always canonical digits:
+        # any other literal there matches nothing — r15 review: a 40-hex
+        # penult fell through to the middle loop, bound trx_id == hex
+        # with NO residual, and returned rows the glob cannot match).  A
         # wildcard tail un-anchors the penult (the '*' may absorb any
-        # number of trailing segments), so it stays a plain middle.
-        middles = segs[1:-1]
-        tail_literal = tail != "*" and not any(ch in tail for ch in "*?[")
-        if len(segs) >= 3 and tail_literal:
+        # number of trailing segments), so it stays a plain middle.  (A
+        # literal head run and a literal penult never share a segment:
+        # with both literal, the '*' must sit between them.)
+        if len(segs) >= 3 and tail_literal and not _wild(segs[-2]):
             penult = segs[-2]
-            if penult != "*" and not any(c in penult for c in "*?["):
-                if sidechain:
-                    preds.append(F.col("contract") == penult)
-                    middles = segs[1:-2]
-                elif penult.isdigit():
-                    if not _fits_long(penult):
-                        # positionally certain trx_index, but no int
-                        # column can hold it: the pattern matches nothing
-                        return F.lit(False)
-                    preds.append(F.col("trx_index") == int(penult))
-                    middles = segs[1:-2]
-                else:
-                    # mainnet penult before a literal tail is
-                    # positionally trx_index, which is ALWAYS digits —
-                    # a literal non-digit here matches nothing (r15
-                    # review: a 40-hex penult fell through to the
-                    # middle loop, bound trx_id == hex with NO residual,
-                    # and returned rows the glob cannot match)
-                    return F.lit(False)
-        for seg in middles:
-            if seg == "*" or any(ch in seg for ch in "*?["):
+            if sidechain:
+                terms.append((("contract", penult),))
+            else:
+                trx_index = key_int(penult)
+                if trx_index is None:
+                    return never
+                terms.append((("trx_index", trx_index),))
+            hi = len(segs) - 2
+        for seg in segs[lo:hi]:
+            if _wild(seg):
                 continue
-            if seg.isdigit():
-                # a bare digit middle is positionally ambiguous — the glob
+            n = key_int(seg)
+            if n is not None:
+                # a numeric middle is positionally ambiguous — the glob
                 # matches it against block_num OR trx_index — so bind the
                 # disjunction (still prunes: both are min/max-tracked) and
-                # let the residual restore exactness; an int64-oversized
-                # literal can't equal either numeric column, so its
-                # disjunct is simply absent
-                pred = F.lit(False)
-                if _fits_long(seg):
-                    pred = (F.col("block_num") == int(seg)) \
-                        | (F.col("trx_index") == int(seg))
-                if _HEX40.match(seg):
-                    # 40 decimal digits is also a syntactically valid
-                    # trx_id (hex with no a-f) — astronomically rare but
-                    # the ANDed pred would DROP such a row, and the
-                    # residual can't restore an over-constrained pred
-                    # (r12 review)
-                    pred = pred | (F.col("trx_id") == seg)
+                # let the residual restore exactness
+                alts: list[Eq] = [("block_num", n), ("trx_index", n)]
                 if sidechain:
                     # contract/action names are DATA-DERIVED (new
                     # contracts must need no code change) — a contract
                     # literally named '123' would collide with the
                     # numeric binding, so the disjunction widens to the
                     # name columns; the residual keeps it glob-exact
-                    pred = pred | (F.col("contract") == seg) \
-                        | (F.col("action") == seg)
-                preds.append(pred)
+                    alts += [("contract", seg), ("action", seg)]
+                terms.append(tuple(alts))
                 exact = False
             elif _HEX40.match(seg):
                 if sidechain:
                     # same data-derived-name hazard: a 40-hex contract/
                     # action name is legal, so the binding is a
                     # disjunction + residual, not a bare trx_id equality
-                    preds.append((F.col("trx_id") == seg)
-                                 | (F.col("contract") == seg)
-                                 | (F.col("action") == seg))
+                    terms.append((("trx_id", seg), ("contract", seg),
+                                  ("action", seg)))
                     exact = False
                 else:
                     # mainnet is provably positional: op_type is a fixed
                     # protocol vocabulary (never 40-hex) and the numeric
-                    # segments render as digits, so a non-all-digit
-                    # 40-hex middle can only equal trx_id
-                    preds.append(F.col("trx_id") == seg)
-        # middles that are neither digits nor hex can't be positionally
-        # resolved → need the residual
-        unresolved = [s for s in middles
-                      if s != "*" and not s.isdigit() and not _HEX40.match(s)
-                      and not any(ch in s for ch in "*?[")]
-        if unresolved:
-            exact = False
+                    # segments render canonically in at most 19 digits,
+                    # so a 40-hex middle (all-digit ones included) can
+                    # only equal trx_id
+                    terms.append((("trx_id", seg),))
+            else:
+                # neither numeric nor hex: not positionally resolvable,
+                # the residual decides
+                exact = False
 
-    if not exact:
-        preds.append(residual)
-
-    if not preds:
-        return F.lit(True)
-    out = preds[0]
-    for p in preds[1:]:
-        out = out & p
-    return out
+    return Glob(tuple(terms), None if exact else residual.residual)

@@ -29,6 +29,24 @@ column nullable and by name.  A version with no ``schema`` key (written
 before schemas were recorded) reads through inference and gets one on
 its next commit.
 
+``file_stats`` maps each data file to its ``block_num`` and ``chain``
+``[min, max]`` (``{<relpath>: {"block_num": [lo, hi], "chain": [lo,
+hi]}}``; a null range: no non-null value), read from the staged file's
+footer when every row group carries statistics for both.  ``files``
+stays a sorted list of strings.  ``append`` and ``expire`` carry
+forward the ranges of every file they re-reference; ``overwrite``,
+``fold`` and ``compact`` record ranges for the files they stage.  A
+file with no ranges — one written before ranges were recorded, or
+without those columns or statistics — is never pruned; the next
+``compact`` records ranges for the files it rewrites.
+
+A read that binds ``block_num`` (``find`` / ``exists``: GET, ``find
+block``, ``has block``, a ``hive:N:*`` scan) prunes to the files whose
+ranges can hold the bindings and reads them with pyarrow on the driver
+— no Spark job; with no such file, no I/O at all.  Any read without
+ranges for every candidate, or of a version without a schema, is the
+Spark read of every file.  Both live in the one read helper, ``_read``.
+
 Protocol:
 
 - WRITE: stage a new commit dir — a Spark write of a DataFrame, or a
@@ -67,7 +85,9 @@ metadata operation, O(files-touched), never O(store).
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import json
+import operator
 import os
 import shutil
 import uuid
@@ -75,18 +95,23 @@ from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, Sequence, Union
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 _MANIFEST_DIR = "_manifest"
 _DATA_DIR = "data"
 
-# What one append stages: a DataFrame (a Spark write job) or Arrow rows
-# (written from the driver, no job)
+# What one append stages, and what a bound read returns: a DataFrame (a
+# Spark job) or Arrow rows (written or read on the driver, no job)
 Rows = Union[DataFrame, pa.Table]
+
+# the columns whose per-file [min, max] a commit records (file_stats)
+_RANGED = ("block_num", "chain")
 
 
 def _version(name: str) -> int | None:
@@ -139,14 +164,14 @@ def open_committed(spark: SparkSession,
     return None
 
 
-def read_committed(spark: SparkSession, path: str) -> DataFrame:
-    """The committed table at ``path``.  Raises FileNotFoundError until
-    the first commit and ValueError for a path holding parquet but no
-    committed manifest (``open_committed``)."""
+def require_committed(spark: SparkSession, path: str) -> ManifestStore:
+    """The store at ``path``.  Raises FileNotFoundError until the first
+    commit and ValueError for a path holding parquet but no committed
+    manifest (``open_committed``)."""
     ms = open_committed(spark, path)
     if ms is None:
         raise FileNotFoundError(f"{path} has no committed manifest version")
-    return ms.df()
+    return ms
 
 
 def _epoch_s(ts: dt.datetime) -> int:
@@ -211,6 +236,44 @@ def _schema_to_record(m: dict, schema: T.StructType) -> dict:
     return m["schema"]
 
 
+def _footer_ranges(path: str) -> dict | None:
+    """``{col: [lo, hi]}`` for the ``_RANGED`` columns of the parquet
+    file at ``path``, from its footer's row-group statistics; ``None``
+    for a column with no non-null value (a file of no rows, say).  None
+    when the file lacks one of the columns or a row group lacks its
+    statistics (or has ones JSON cannot hold): such a file can never be
+    pruned."""
+    md = pq.read_metadata(path)
+    idx = {md.schema.column(i).path: i for i in range(md.num_columns)}
+    if not all(c in idx for c in _RANGED):
+        return None
+    out: dict = {c: None for c in _RANGED}
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        for c in _RANGED:
+            st = rg.column(idx[c]).statistics
+            if st is not None and st.has_min_max \
+                    and isinstance(st.min, (int, str)):
+                lo, hi = out[c] or (st.min, st.max)
+                out[c] = [min(lo, st.min), max(hi, st.max)]
+            elif not (st is not None and st.has_null_count
+                      and st.null_count == rg.num_rows):
+                return None
+    return out
+
+
+def _can_hold(ranges: dict, where: dict) -> bool:
+    """Whether a file with recorded ``ranges`` can hold a row equal to
+    every binding in ``where``.  A None value equals no row (SQL's
+    ``= NULL``); a None range holds no non-null value."""
+    for c, v in where.items():
+        if c in ranges:
+            r = ranges[c]
+            if v is None or r is None or not r[0] <= v <= r[1]:
+                return False
+    return True
+
+
 def _concurrently(spark: SparkSession, fns: Sequence[Callable]) -> list:
     """Run ``fns[0]`` on the calling thread and each other fn on a
     thread of its own; return their results in order once ALL have
@@ -250,7 +313,8 @@ def append_all(lanes: Sequence[Sequence[tuple[ManifestStore,
             schema = _schema_to_record(
                 m, rows.schema if isinstance(rows, DataFrame)
                 else from_arrow_schema(rows.schema))
-            out.append((store, m, store._stage(rows), schema))
+            files = store._stage(rows)
+            out.append((store, m, files, schema, store._ranges(files)))
         return out
 
     spark = lanes[0][0][0].spark
@@ -259,9 +323,10 @@ def append_all(lanes: Sequence[Sequence[tuple[ManifestStore,
     done = []
     for item in (x for lane in staged for x in lane):
         if item is not None:
-            store, m, files, schema = item
+            store, m, files, schema, ranges = item
             ids = m["batch_ids"] + ([] if batch_id is None else [batch_id])
-            store._commit(m["files"] + files, ids, m["version"], schema)
+            store._commit(m["files"] + files, ids, m["version"], schema,
+                          file_stats={**m.get("file_stats", {}), **ranges})
         done.append(item is not None)
     return done
 
@@ -290,7 +355,8 @@ class ManifestStore:
 
     def _commit(self, files: list[str], batch_ids: list[int],
                 base_version: int, schema: dict | None = None,
-                stream_id: str | None = None) -> int:
+                stream_id: str | None = None,
+                file_stats: dict | None = None) -> int:
         """Atomically publish manifest v(base_version+1) — a COMPARE-AND-
         SWAP against the version the caller READ, not whatever is newest
         at link time.  Every write path is read-manifest → long Spark
@@ -298,12 +364,18 @@ class ManifestStore:
         writer that interleaved with another's commit link v(N+2) built
         from the v(N) file list, silently dropping the other commit
         (ADVICE r12).  Pinning new_v to base+1 means ANY intervening
-        commit collides on the link and raises instead of winning."""
+        commit collides on the link and raises instead of winning.
+        ``file_stats`` may hold ranges of files outside ``files``; only
+        the committed files' are recorded."""
         new_v = base_version + 1
         m = {"version": new_v, "files": sorted(files),
              "batch_ids": sorted(set(batch_ids))}
         if schema is not None:
             m["schema"] = schema
+        stats = {f: file_stats[f] for f in m["files"]
+                 if f in (file_stats or {})}
+        if stats:
+            m["file_stats"] = stats
         if stream_id is not None:
             m["stream_id"] = stream_id
         tmp = os.path.join(self._mdir(), f".tmp-{uuid.uuid4().hex}.json")
@@ -351,6 +423,16 @@ class ManifestStore:
                                                self.path))
         return out
 
+    def _ranges(self, files: list[str]) -> dict:
+        """``file_stats`` entries for freshly staged ``files``: the
+        footer ranges of each file that has them."""
+        out = {}
+        for f in files:
+            r = _footer_ranges(os.path.join(self.path, f))
+            if r is not None:
+                out[f] = r
+        return out
+
     # -- read side ----------------------------------------------------------
 
     def versions(self) -> list[int]:
@@ -368,28 +450,55 @@ class ManifestStore:
     def files(self, version: int | None = None) -> list[str]:
         return list(self._manifest_at(version)["files"])
 
-    def _read(self, files: list[str], schema: dict | None) -> DataFrame:
-        """THE parquet read of a file list: with the recorded schema no
-        Spark job runs; a version that records none is inferred."""
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(T.StructType.fromJson(schema))
-        return reader.parquet(*[os.path.join(self.path, f) for f in files])
+    def _read(self, m: dict, where: dict | None = None,
+              version: int | None = None) -> Rows:
+        """THE read of manifest version ``m``'s table (``version`` only
+        names it in errors).  A listed file that gc removed raises
+        FileNotFoundError instead of reading as partial data.
 
-    def df(self, version: int | None = None) -> DataFrame:
-        """The committed table — at ``version`` for time travel (the
-        snapshot-diff/audit read; pair two versions with
-        ext.diff.corpus_diff).  Every version is an immutable file LIST,
-        so old reads cost nothing extra — but gc(keep_versions=K)
-        reclaims files unreferenced by the newest K manifests, which
-        bounds how far back is readable; a pruned version raises
-        instead of silently returning partial data."""
-        m = self._manifest_at(version)
-        files = m["files"]
+        Without ``where``: a Spark read of every file — with the
+        recorded schema no Spark job runs; a version that records none
+        is inferred.  With equality bindings ``where`` (``{column:
+        value}``; a None value equals no row): the matching rows.  When
+        the version records its schema and every file whose recorded
+        ranges can hold the bindings has ranges, they are Arrow rows
+        read on the driver from just those files (none: an empty table,
+        no I/O), every timestamp cast to ``timestamp[us, tz=UTC]`` — a
+        naive one would be taken as session-local time downstream.
+        Otherwise they are the Spark read of every file, filtered."""
+        files, schema = m["files"], m.get("schema")
+        if where is not None and schema is not None:
+            stats = m.get("file_stats", {})
+            hits = [f for f in files
+                    if f not in stats or _can_hold(stats[f], where)]
+            if all(f in stats for f in hits):
+                self._check_present(hits, version)
+                struct = T.StructType.fromJson(schema)
+                target = pa.schema([f.with_nullable(True)
+                                    for f in to_arrow_schema(struct)])
+                if not hits:
+                    return target.empty_table()
+                match = functools.reduce(
+                    operator.and_, (pc.field(c) == v
+                                    for c, v in where.items()))
+                table = pads.dataset(
+                    [os.path.join(self.path, f) for f in hits],
+                    format="parquet").to_table(filter=match)
+                return table.select(struct.names).cast(target)
         if not files:
             raise FileNotFoundError(
                 f"manifest store {self.path} has no committed data"
                 + ("" if version is None else f" at version {version}"))
+        self._check_present(files, version)
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(T.StructType.fromJson(schema))
+        df = reader.parquet(*[os.path.join(self.path, f) for f in files])
+        for c, v in (where or {}).items():
+            df = df.where(F.col(c) == v)
+        return df
+
+    def _check_present(self, files: list[str], version: int | None) -> None:
         missing = [f for f in files
                    if not os.path.exists(os.path.join(self.path, f))]
         if missing:
@@ -400,7 +509,37 @@ class ManifestStore:
                 + ("the CURRENT manifest is broken — files were pruned "
                    "externally" if version is None else
                    "raise gc keep_versions to retain time-travel history"))
-        return self._read(files, m.get("schema"))
+
+    def df(self, version: int | None = None) -> DataFrame:
+        """The committed table — at ``version`` for time travel (the
+        snapshot-diff/audit read; pair two versions with
+        ext.diff.corpus_diff).  Every version is an immutable file LIST,
+        so old reads cost nothing extra — but gc(keep_versions=K)
+        reclaims files unreferenced by the newest K manifests, which
+        bounds how far back is readable; a pruned version raises
+        instead of silently returning partial data."""
+        return self._read(self._manifest_at(version), version=version)
+
+    def find(self, where: dict) -> DataFrame:
+        """The committed rows whose columns equal every value in
+        ``where`` (``{column: value}``, e.g. ``block_num`` and
+        ``chain``).  Bindings the recorded file ranges can answer are
+        read on the driver and handed to Spark as a local relation, so
+        collecting the frame launches no job (``_read``)."""
+        m = self._read_manifest()
+        rows = self._read(m, where)
+        if isinstance(rows, DataFrame):
+            return rows
+        return self.spark.createDataFrame(
+            rows, T.StructType.fromJson(m["schema"]))
+
+    def exists(self, where: dict) -> bool:
+        """Whether ``find(where)`` holds a row — on the driver path the
+        Arrow row count, with no frame at all."""
+        rows = self._read(self._read_manifest(), where)
+        if isinstance(rows, DataFrame):
+            return not rows.isEmpty()
+        return rows.num_rows > 0
 
     def committed_batch_ids(self) -> set[int]:
         return set(self._read_manifest()["batch_ids"])
@@ -427,7 +566,7 @@ class ManifestStore:
         base = self._read_manifest()["version"]
         staged = self._stage(df)
         self._commit(staged, [] if batch_id is None else [batch_id], base,
-                     df.schema.jsonValue(), stream_id)
+                     df.schema.jsonValue(), stream_id, self._ranges(staged))
 
     def expire(self, ttl_s: int, now: dt.datetime | None = None) -> int:
         """TTL retention as a manifest swap: only files CONTAINING expired
@@ -458,11 +597,13 @@ class ManifestStore:
         n_removed = sum(r["_n"] for r in per_file)
         # re-stage ONLY the hot files' live rows: the read is a direct
         # scan of those files, never the whole store
-        kept_rows = self._read(sorted(hot), m.get("schema")).where(live)
+        kept_rows = self._read({**m, "files": sorted(hot)}).where(live)
         schema = _schema_to_record(m, kept_rows.schema)
         staged = self._stage(kept_rows)
         keep = [f for f in m["files"] if f not in hot]
-        self._commit(keep + staged, m["batch_ids"], m["version"], schema)
+        self._commit(keep + staged, m["batch_ids"], m["version"], schema,
+                     file_stats={**m.get("file_stats", {}),
+                                 **self._ranges(staged)})
         return n_removed
 
     def live_count(self, ttl_s: int, now: dt.datetime | None = None) -> int:
@@ -500,7 +641,8 @@ class ManifestStore:
         ids = m["batch_ids"]
         if ids:
             ids = [i for i in ids if i >= max(ids) - 1]
-        self._commit(staged, ids, m["version"], schema)
+        self._commit(staged, ids, m["version"], schema,
+                     file_stats=self._ranges(staged))
         return len(m["files"])
 
     def compact(self, sort_cols: tuple[str, ...] = (),

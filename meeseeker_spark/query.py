@@ -7,6 +7,15 @@ whose files are range-clustered on (chain, block_num) — so C1 patterns become
 pushed column predicates with min/max row-group pruning, and the fat
 ``value`` column is only read when the query projects it (column pruning).
 
+One rule splits the read side: a request that binds ``block_num`` to one
+value — ``get``, ``find_block``, ``has_block``, and a ``scan`` whose glob
+translates exactly with ``block_num`` bound (``hive:N:*``) — is answered
+on the driver from the files whose recorded block range can hold it
+(``ManifestStore.find`` / ``exists``), so it launches no Spark job.
+Every other request (scans with an rlike residual or no block, ``find_trx``)
+runs on Spark over the full file list.  There is no switch: the request
+decides.
+
 At 100 TB the same layout holds: (chain, block_num) clustering
 (Delta/Iceberg z-order or hourly sub-partitions on a real deployment);
 nothing here assumes single-node.
@@ -19,8 +28,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .keys import glob_to_filter, parse_key
-from .manifest import ManifestStore, open_committed, read_committed
+from .keys import glob_to_filter, key_int, parse_key, translate_glob
+from .manifest import ManifestStore, open_committed, require_committed
 
 # range partitions per OpsStore.write: the TOTAL writer count across all
 # chains (a two-chain frame splits these tasks between the chains)
@@ -46,18 +55,17 @@ def newest_by_key(df: DataFrame, key: str,
                            for c in others]))
 
 
+def _block(block_num: int, chain: str | None) -> dict:
+    """The bindings of ``find block`` / ``has block``."""
+    return {"block_num": block_num, **({"chain": chain} if chain else {})}
+
+
 def _find_block(df: DataFrame, block_num: int,
                 chain: str | None) -> DataFrame:
     """``find block`` over ``df`` (C3): the block's (key, value) rows."""
-    df = df.where(F.col("block_num") == block_num)
-    if chain:
-        df = df.where(F.col("chain") == chain)
+    for c, v in _block(block_num, chain).items():
+        df = df.where(F.col(c) == v)
     return df.select("key", "value")
-
-
-def _has_block(df: DataFrame, block_num: int, chain: str | None) -> bool:
-    """The C6 existence probe over ``df`` (the count prunes every column)."""
-    return bool(_find_block(df, block_num, chain).limit(1).count() > 0)
 
 
 class OpsStore:
@@ -88,47 +96,45 @@ class OpsStore:
                      .sortWithinPartitions("block_num", "trx_id",
                                            "trx_index"))
 
+    def _store(self) -> ManifestStore:
+        return require_committed(self.spark, self.path)
+
     def df(self) -> DataFrame:
         """The committed table.  ``chain`` is a data column; key-glob
         predicates push down as column filters with min/max row-group
         pruning.  Raises FileNotFoundError until the first commit and
         ValueError for a path that is not a manifest store."""
-        return read_committed(self.spark, self.path)
+        return self._store().df()
 
     # -- C1: key-pattern scan ----------------------------------------------
 
     def scan(self, pattern: str) -> DataFrame:
-        """SCAN MATCH '<glob>' → predicate-pushed filtered scan."""
-        return self.df().where(glob_to_filter(pattern))
+        """SCAN MATCH '<glob>'.  A glob whose translation is exact and
+        binds ``block_num`` (``hive:N:*``) is a block-bound lookup
+        (``ManifestStore.find``); any other is a predicate-pushed Spark
+        scan."""
+        g = translate_glob(pattern)
+        if g.exact and "block_num" in g.bindings:
+            return self._store().find(g.bindings)
+        return self.df().where(glob_to_filter(g))
 
     # -- C2: point lookup ---------------------------------------------------
 
     def get(self, key: str) -> DataFrame:
-        """GET <key> → at most one row, all segment predicates pushed.
-        A key with a non-numeric block_num/trx_index segment can exist in
-        no store (numeric segments are always rendered as digits), so it
-        returns an empty result like Redis GET on a missing key — never
-        an int() crash."""
-        seg = parse_key(key)
-        df = self.df()
-        from .keys import _fits_long
-        for name, val in seg.items():
-            col = F.col(name)
-            if name in ("block_num", "trx_index"):
-                # oversized digit strings can't equal an int64 column and
-                # crash py4j as Python ints (r12 review) — empty result,
-                # like Redis GET on a missing key
-                if not val.isdigit() or not _fits_long(val):
-                    return df.where(F.lit(False))
-                df = df.where(col == int(val))
-            else:
-                df = df.where(col == val)
-        return df
+        """GET <key> → at most one row, every segment bound.  A key whose
+        block_num/trx_index segment is not a canonical int64 (``key_int``)
+        can exist in no store, so it binds None, which equals no row:
+        an empty result like Redis GET on a missing key."""
+        seg: dict = parse_key(key)
+        for name in ("block_num", "trx_index"):
+            seg[name] = key_int(seg[name])
+        return self._store().find(seg)
 
     # -- C3: find block / find trx -------------------------------------------
 
     def find_block(self, block_num: int, chain: str | None = None) -> DataFrame:
-        return _find_block(self.df(), block_num, chain)
+        return self._store().find(_block(block_num, chain)) \
+            .select("key", "value")
 
     def find_trx(self, trx_id: str, chain: str | None = None) -> DataFrame:
         df = self.df().where(F.col("trx_id") == trx_id)
@@ -139,7 +145,7 @@ class OpsStore:
     # -- C6: existence probe --------------------------------------------------
 
     def has_block(self, block_num: int, chain: str | None = None) -> bool:
-        return _has_block(self.df(), block_num, chain)
+        return self._store().exists(_block(block_num, chain))
 
     # -- C4: reset (bulk delete by chain prefix) ------------------------------
 
@@ -321,4 +327,4 @@ class UnifiedStore:
         return self.ops.find_trx(trx_id, chain)
 
     def has_block(self, block_num: int, chain: str | None = None) -> bool:
-        return _has_block(self.df(), block_num, chain)
+        return not _find_block(self.df(), block_num, chain).isEmpty()

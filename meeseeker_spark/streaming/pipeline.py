@@ -35,7 +35,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..channels import block_channels, engine_channels, op_channels
 from ..flatten import flatten_blocks, flatten_engine_blocks, flatten_virtual_ops
 from ..manifest import (ManifestStore, append_all, open_committed,
-                         read_committed)
+                         require_committed)
 from ..schemas import BLOCKS, ENGINE_BLOCKS, VIRTUAL_OPS, WITNESS_SCHEDULES
 
 VOP_LATENESS = "18 seconds"   # Σ(retry × BLOCK_INTERVAL), see SURVEY §4.5
@@ -267,7 +267,7 @@ def _commit_outputs(ops: DataFrame, channel_fn, ops_path: str,
 def ops_view(spark: SparkSession, ops_path: str) -> DataFrame:
     """Reader view over the streamed store; key-dedup guards the one
     non-idempotent corner (same op in two batches via vop replay)."""
-    return read_committed(spark, ops_path).dropDuplicates(["key"])
+    return require_committed(spark, ops_path).df().dropDuplicates(["key"])
 
 
 def resolve_stream_start(spark: SparkSession, blocks_dir: str, ops_path: str,
@@ -377,13 +377,13 @@ def compact_meta(spark: SparkSession, ops_path: str) -> int:
 def channel_events_view(spark: SparkSession,
                         channels_path: str) -> DataFrame:
     """The committed channel_events table (append-only: no dedup)."""
-    return read_committed(spark, channels_path)
+    return require_committed(spark, channels_path).df()
 
 
 def last_block_num(spark: SparkSession, ops_path: str) -> int | None:
     """The explicit HWM probe (reference: GET {chain}:meeseeker:last_block_num)."""
     try:
-        meta = read_committed(spark, ops_path + "_meta")
+        meta = require_committed(spark, ops_path + "_meta").df()
     except FileNotFoundError:
         return None
     row = meta.agg(F.max("last_block_num").alias("m")).first()

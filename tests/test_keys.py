@@ -126,9 +126,20 @@ def test_glob_sidechain(engine_ops):
         assert _spark_keys(engine_ops, pattern) == _fnmatch_keys(keys, pattern), pattern
 
 
+def _odd_numerals(values):
+    """Literals that str.isdigit() accepts but no key renders: a leading
+    zero and Arabic-Indic digits (both int() to the stored number) and a
+    superscript (int() raises)."""
+    arabic = str.maketrans("0123456789", "٠١٢٣٤٥٦٧٨٩")
+    v = str(sorted(values)[0])
+    return ["0" + v, v.translate(arabic), "²"]
+
+
 def test_glob_hypothesis_fuzz(ops):
     """Property: for ANY glob assembled from segment literals/wildcards/
-    prefix-globs, glob_to_filter == fnmatch over the composite keys."""
+    prefix-globs, glob_to_filter == fnmatch over the composite keys —
+    numeric segments included, in spellings that are digits but not
+    canonical."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
@@ -137,19 +148,21 @@ def test_glob_hypothesis_fuzz(ops):
     keys = [r["key"] for r in rows]
     r0 = rows[0]
 
-    def seg_strategy(values):
+    def seg_strategy(values, odd=()):
         lits = sorted({str(v) for v in values})[:8]
         return st.one_of(
             st.just("*"),
-            st.sampled_from(lits),
+            st.sampled_from(lits + list(odd)),
             st.sampled_from([v[:2] + "*" for v in lits]),
         )
 
+    blocks = [r["block_num"] for r in rows[:20]]
+    trx_indexes = [r["trx_index"] for r in rows[:20]]
     pattern_st = st.tuples(
         seg_strategy([r0["chain"], "steem"]),
-        seg_strategy([r["block_num"] for r in rows[:20]]),
+        seg_strategy(blocks, _odd_numerals(blocks)),
         seg_strategy([r["trx_id"] for r in rows[:20]]),
-        seg_strategy([r["trx_index"] for r in rows[:20]]),
+        seg_strategy(trx_indexes, _odd_numerals(trx_indexes)),
         seg_strategy([r["op_type"] for r in rows[:20]]),
         st.integers(min_value=1, max_value=5),  # how many segments to keep
         st.booleans(),                          # trailing ':*' or bare short
@@ -203,6 +216,17 @@ def test_glob_engine_and_mixed_fuzz(ops, engine_ops):
             pattern = ":".join(segs) + tail
             assert _spark_keys(df, pattern) == _fnmatch_keys(keys, pattern), \
                 pattern
+        # a literal block right after a literal chain is bound
+        # positionally, with no residual: every spelling of it, with
+        # wildcards and literal tails behind it
+        chain = segvals[0][0]
+        for blk in segvals[1][:2] + _odd_numerals(
+                [int(v) for v in segvals[1]]):
+            for rest in ("*", "*:" + segvals[-1][0], "*" + segvals[-1][0],
+                         segvals[2][0] + ":*"):
+                pattern = f"{chain}:{blk}:{rest}"
+                assert _spark_keys(df, pattern) \
+                    == _fnmatch_keys(keys, pattern), pattern
 
 
 def test_glob_unified_surface_fuzz(spark, ops, tmp_path_factory):
@@ -260,6 +284,17 @@ def test_glob_unified_surface_fuzz(spark, ops, tmp_path_factory):
                                          else "mid"]))
         pattern = ":".join(segs)
         assert scan_keys(pattern) == _fnmatch_keys(keys, pattern), pattern
+
+    # OpsStore.scan answers a glob binding block_num exactly from the
+    # driver-read files of that block: still fnmatch-exact
+    o = OpsStore(spark, str(d / "ops"))
+    op_keys = [r["key"] for r in ops.select("key").collect()]
+    block = parse_key(op_keys[0])["block_num"]
+    for blk in [block] + _odd_numerals([int(block)]):
+        for pattern in (f"hive:{blk}:*", f"hive:{blk}:*:vote",
+                        f"hive:{blk}:*:*:*"):
+            assert sorted(r["key"] for r in o.scan(pattern).collect()) \
+                == _fnmatch_keys(op_keys, pattern), pattern
 
 
 def test_glob_redis_class_negation_and_colon_classes(ops):

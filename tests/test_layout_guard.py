@@ -17,10 +17,14 @@ table.  The check is textual, so pass a batch id to ``ManifestStore.append``
 positionally; ``chain=`` keyword arguments are fine, a quoted
 ``chain=`` path literal is not.
 
-Inside ``manifest.py`` every Spark read goes through the one read helper
-``ManifestStore._read``, which hands Spark the schema each version
-records — a read that skipped it would run the schema-inference job
-again."""
+Inside ``manifest.py`` every data read goes through the one read helper
+``ManifestStore._read``: the Spark read, which hands Spark the schema
+each version records (a read that skipped it would run the
+schema-inference job again), and the driver-side Arrow read of a
+block-bound lookup, which casts timestamps to UTC instants (a read that
+skipped it would shift them by the session timezone).  ``query.py``
+reads no parquet itself: every consumer request goes through
+``ManifestStore``."""
 
 from __future__ import annotations
 
@@ -63,12 +67,25 @@ def test_no_rename_commit_outside_screen():
     assert not offenders, "\n".join(offenders)
 
 
+# spark.read, pyarrow.dataset.dataset, pyarrow.parquet.read_table
+_DATA_READS = ("read", "dataset", "read_table")
+
+
 def test_manifest_reads_only_through_read_helper():
     tree = ast.parse((PKG / "manifest.py").read_text())
     helper = next(n for n in ast.walk(tree)
                   if isinstance(n, ast.FunctionDef) and n.name == "_read")
     inside = {id(n) for n in ast.walk(helper)}
     offenders = [n.lineno for n in ast.walk(tree)
-                 if isinstance(n, ast.Attribute) and n.attr == "read"
+                 if isinstance(n, ast.Attribute) and n.attr in _DATA_READS
                  and id(n) not in inside]
     assert not offenders, f"manifest.py reads outside _read: {offenders}"
+    tree = ast.parse((PKG / "query.py").read_text())
+    offenders = [n.lineno for n in ast.walk(tree)
+                 if isinstance(n, ast.Attribute)
+                 and n.attr in _DATA_READS + ("parquet",)
+                 or isinstance(n, ast.Import) and any(
+                     a.name.startswith("pyarrow") for a in n.names)
+                 or isinstance(n, ast.ImportFrom)
+                 and (n.module or "").startswith("pyarrow")]
+    assert not offenders, f"query.py reads parquet itself: {offenders}"

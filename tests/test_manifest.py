@@ -272,11 +272,18 @@ def test_gc_survives_version_gap(spark, tmp_path):
 def test_manifest_random_op_sequences(spark, tmp_path_factory):
     """Property test: any interleaving of append / replayed-append /
     expire / compact / gc leaves the store exactly equal to a trivial
-    in-memory model, and every manifest-referenced file on disk."""
+    in-memory model, and every manifest-referenced file on disk.  After
+    every op, too: each file's recorded block/chain range covers its
+    rows; the same version without ``file_stats`` reads every file; and
+    bound lookups (``find`` / ``exists``) of present, absent and
+    past-head blocks answer what filtering the full table does."""
     from collections import Counter
 
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
+    from pyspark.sql import DataFrame
 
     OLD = dt.datetime(2020, 1, 1)
     NEW = dt.datetime(2030, 5, 31, 12)      # inside ttl of NOW
@@ -292,6 +299,37 @@ def test_manifest_random_op_sequences(spark, tmp_path_factory):
         st.tuples(st.just("compact"), st.just(0), st.just(0)),
     )
 
+    def chain(i):
+        return "hive" if i % 3 else "steem"
+
+    def check_ranges(s, m):
+        for f in m["files"]:
+            t = pq.read_table(os.path.join(s.path, f),
+                              columns=["block_num", "chain"])
+            for c in ("block_num", "chain"):
+                got = m["file_stats"][f][c]
+                if t.column(c).null_count == t.num_rows:
+                    assert got is None, (f, c)
+                else:
+                    mm = pc.min_max(t.column(c))
+                    assert got[0] <= mm["min"].as_py() \
+                        and mm["max"].as_py() <= got[1], (f, c, got)
+
+    def check_lookups(s, m, rows):
+        bare = {k: v for k, v in m.items() if k != "file_stats"}
+        spark_read = s._read(bare, {"block_num": 0})
+        assert isinstance(spark_read, DataFrame)
+        assert len(spark_read.inputFiles()) == len(m["files"])
+        present = sorted({r["block_num"] for r in rows})
+        absent = [b for b in range(21) if b not in present][:1]
+        for b in present[:1] + absent + [26]:
+            want = sorted(r for r in rows if r["block_num"] == b)
+            assert sorted(s.find({"block_num": b}).collect()) == want, b
+            assert s.exists({"block_num": b}) == bool(want), b
+            key = {"block_num": b, "chain": chain(b), "id": b}
+            assert sorted(s.find(key).collect()) == want, b
+            assert not s.exists({**key, "chain": "other"}), b
+
     @settings(max_examples=5, deadline=None, derandomize=True,
               suppress_health_check=list(HealthCheck))
     @given(ops=st.lists(op, min_size=2, max_size=6))
@@ -302,9 +340,11 @@ def test_manifest_random_op_sequences(spark, tmp_path_factory):
         batches: dict[int, list[int]] = {}
 
         def mk(ids):
-            rows = [(i, f"v{i}", OLD if i % 2 else NEW) for i in ids]
+            rows = [(i, f"v{i}", OLD if i % 2 else NEW, i, chain(i))
+                    for i in ids]
             return spark.createDataFrame(
-                rows, "id bigint, v string, ingested_at timestamp")
+                rows, "id bigint, v string, ingested_at timestamp, "
+                      "block_num bigint, chain string")
 
         for kind, a, b in ops:
             if kind == "append":
@@ -327,13 +367,16 @@ def test_manifest_random_op_sequences(spark, tmp_path_factory):
             elif kind == "compact":
                 s.compact(sort_cols=("id",))
             # invariant 1: store == model
-            got = (Counter((r["id"], r["ingested_at"])
-                           for r in s.df().collect())
-                   if model else Counter())
+            rows = s.df().collect() if model else []
+            got = Counter((r["id"], r["ingested_at"]) for r in rows)
             assert got == model, (kind, a, b)
             # invariant 2: every referenced file exists
             for f in s.files():
                 assert os.path.exists(os.path.join(s.path, f)), f
+            if s.current_version() is not None:
+                m = s._read_manifest()
+                check_ranges(s, m)            # invariant 3
+                check_lookups(s, m, rows)     # invariants 4 and 5
 
     run()
 

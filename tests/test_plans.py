@@ -103,9 +103,11 @@ def test_ops_store_partition_pruning(spark, tmp_path_factory):
     assert "EqualTo(chain,hive)" in plan
     assert "EqualTo(op_type,vote)" in plan
 
+    # a GET binds block_num: the recorded file ranges pick the files,
+    # which are read on the driver — the plan scans no file at all
     plan2 = explain_str(store.get(store.df().first()["key"]))
-    assert "PushedFilters" in plan2
-    assert "EqualTo(block_num" in plan2
+    assert "LocalTableScan" in plan2
+    assert "FileScan" not in plan2
 
 
 def test_near_dup_bucket_cap_engaged(spark):

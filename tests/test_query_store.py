@@ -252,10 +252,73 @@ def test_flatten_engine_chain_name_enforced(spark):
 
 
 def test_get_malformed_numeric_segment_is_empty(store):
-    """A key whose block_num segment isn't numeric exists in no store —
-    GET returns empty (Redis nil analog), never an int() crash."""
+    """A key whose block_num/trx_index segment isn't a canonical int64
+    exists in no store — GET returns empty (Redis nil analog), never an
+    int() crash and never another key's row: ``0123`` and the
+    Arabic-Indic ``١٢٣`` both int() to 123, and ``²`` passes isdigit()
+    but int() raises on it."""
     assert store.get("hive:notanumber:" + "a" * 40 + ":0:vote").count() == 0
     assert store.get("hive:12:" + "a" * 40 + ":xyz:vote").count() == 0
+    key = store.df().where("chain = 'hive'").first()["key"]
+    seg = key.split(":")
+    arabic = str.maketrans("0123456789", "٠١٢٣٤٥٦٧٨٩")
+    assert store.get(key).count() == 1
+    for i in (1, 3):                       # block_num, trx_index
+        for bad in ("0" + seg[i], seg[i].translate(arabic), "²"):
+            odd = ":".join(seg[:i] + [bad] + seg[i + 1:])
+            assert store.get(odd).count() == 0, odd
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs launched while ``fn`` runs."""
+    sc = spark.sparkContext
+    group = f"jobs-probe-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, "probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_block_bound_requests_launch_no_job(spark, store):
+    """get, find_block, has_block and a block glob scan bind block_num,
+    so the recorded file ranges pick the files and the rows are read on
+    the driver: collecting the answer launches no Spark job.  A scan
+    that binds no block still runs on Spark."""
+    r = store.df().where("chain = 'hive'").first()
+    b = r["block_num"]
+    assert _jobs(spark, lambda: store.get(r["key"]).collect()) == 0
+    assert _jobs(spark, lambda: store.find_block(b).collect()) == 0
+    assert _jobs(spark, lambda: store.scan(f"hive:{b}:*").collect()) == 0
+    assert _jobs(spark, lambda: (store.has_block(b),
+                                 store.has_block(10**12))) == 0
+    assert _jobs(spark, lambda: store.scan("hive:*:vote").collect()) > 0
+
+
+def test_block_bound_rows_match_spark_under_non_utc_session(spark, store):
+    """The driver-read rows equal the Spark read's, timestamps included,
+    under a non-UTC session timezone.  The files hold INT96 (naive)
+    timestamps; uncast to UTC instants, createDataFrame would take them
+    as session-local wall time and shift them by the zone's offset."""
+    r = store.df().where("chain = 'hive'").first()
+    b = r["block_num"]
+
+    def by_key(rows):
+        return sorted(rows, key=lambda x: x["key"])
+
+    tz0 = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        block = store.df().where(F.col("block_num") == b)
+        assert store.get(r["key"]).collect() \
+            == store.df().where(F.col("key") == r["key"]).collect()
+        assert by_key(store.scan(f"hive:{b}:*").collect()) \
+            == by_key(block.where(F.col("chain") == "hive").collect())
+        assert by_key(store.find_block(b).collect()) \
+            == by_key(block.select("key", "value").collect())
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz0)
 
 
 def test_cli_find_block_non_numeric_errors_cleanly(tmp_path, capsys):
@@ -263,9 +326,10 @@ def test_cli_find_block_non_numeric_errors_cleanly(tmp_path, capsys):
 
     from meeseeker_spark.__main__ import main
 
-    with _pytest.raises(SystemExit):
-        main(["find", "block", "notanumber", "--store", str(tmp_path)])
-    assert "needs a number" in capsys.readouterr().err
+    for ident in ("notanumber", "²"):      # '²' passes str.isdigit()
+        with _pytest.raises(SystemExit):
+            main(["find", "block", ident, "--store", str(tmp_path)])
+        assert "needs a number" in capsys.readouterr().err
 
 
 def test_ops_store_over_manifest_layout(spark, tmp_path_factory):
