@@ -40,12 +40,18 @@ file with no ranges — one written before ranges were recorded, or
 without those columns or statistics — is never pruned; the next
 ``compact`` records ranges for the files it rewrites.
 
-A read that binds ``block_num`` (``find`` / ``exists``: GET, ``find
-block``, ``has block``, a ``hive:N:*`` scan) prunes to the files whose
-ranges can hold the bindings and reads them with pyarrow on the driver
-— no Spark job; with no such file, no I/O at all.  Any read without
-ranges for every candidate, or of a version without a schema, is the
-Spark read of every file.  Both live in the one read helper, ``_read``.
+A read with equality bindings (``find`` / ``exists``: GET, ``find
+block``, ``find trx``, ``has block``, a ``hive:N:*`` or
+``hive:*:<trx>:*`` scan) prunes to the candidate files, those whose
+ranges can hold the bindings (every file for a ``trx_id``, which has no
+range), and reads them with pyarrow on the driver — no Spark job; with
+no candidate, no I/O at all — as long as they total at most
+``_FILE_BYTES`` (128 MiB, the one-file size ``compact`` also writes).
+Past that, or with a candidate lacking ranges, or for a version without
+a schema, Spark reads just the candidate files, filtered.  Both live in
+the one read helper, ``_read``; ``find`` is the one place driver rows
+become a DataFrame, and it drops empty record batches first (PySpark's
+``createDataFrame`` loses a non-empty batch that follows an empty one).
 
 Protocol:
 
@@ -112,6 +118,10 @@ Rows = Union[DataFrame, pa.Table]
 
 # the columns whose per-file [min, max] a commit records (file_stats)
 _RANGED = ("block_num", "chain")
+
+# one compacted file: what ``compact`` sizes its output files to, and
+# the most a bound read takes on the driver (``_read``)
+_FILE_BYTES = 128 * 1024 * 1024
 
 
 def _version(name: str) -> int | None:
@@ -459,48 +469,58 @@ class ManifestStore:
         Without ``where``: a Spark read of every file — with the
         recorded schema no Spark job runs; a version that records none
         is inferred.  With equality bindings ``where`` (``{column:
-        value}``; a None value equals no row): the matching rows.  When
-        the version records its schema and every file whose recorded
-        ranges can hold the bindings has ranges, they are Arrow rows
-        read on the driver from just those files (none: an empty table,
-        no I/O), every timestamp cast to ``timestamp[us, tz=UTC]`` — a
-        naive one would be taken as session-local time downstream.
-        Otherwise they are the Spark read of every file, filtered."""
+        value}``; a None value equals no row): the matching rows of the
+        candidate files, those whose recorded ranges can hold the
+        bindings (a file without ranges is always one).  When the
+        version records its schema, every candidate has ranges and the
+        candidates total at most ``_FILE_BYTES``, they are Arrow rows
+        read on the driver (no candidate: an empty table, no I/O),
+        every timestamp cast to ``timestamp[us, tz=UTC]`` — a naive one
+        would be taken as session-local time downstream.  Otherwise
+        they are the Spark read of the candidate files, filtered."""
         files, schema = m["files"], m.get("schema")
-        if where is not None and schema is not None:
-            stats = m.get("file_stats", {})
-            hits = [f for f in files
-                    if f not in stats or _can_hold(stats[f], where)]
-            if all(f in stats for f in hits):
-                self._check_present(hits, version)
-                struct = T.StructType.fromJson(schema)
-                target = pa.schema([f.with_nullable(True)
-                                    for f in to_arrow_schema(struct)])
-                if not hits:
-                    return target.empty_table()
-                match = functools.reduce(
-                    operator.and_, (pc.field(c) == v
-                                    for c, v in where.items()))
-                table = pads.dataset(
-                    [os.path.join(self.path, f) for f in hits],
-                    format="parquet").to_table(filter=match)
-                return table.select(struct.names).cast(target)
-        if not files:
+        stats = m.get("file_stats", {})
+        if where is not None:
+            files = [f for f in files
+                     if f not in stats or _can_hold(stats[f], where)]
+        size = self._bytes(files, version)
+        if where is not None and schema is not None \
+                and all(f in stats for f in files) and size <= _FILE_BYTES:
+            struct = T.StructType.fromJson(schema)
+            target = pa.schema([f.with_nullable(True)
+                                for f in to_arrow_schema(struct)])
+            if not files:
+                return target.empty_table()
+            match = functools.reduce(
+                operator.and_, (pc.field(c) == v for c, v in where.items()))
+            table = pads.dataset(
+                [os.path.join(self.path, f) for f in files],
+                format="parquet").to_table(filter=match)
+            return table.select(struct.names).cast(target)
+        if not m["files"]:
             raise FileNotFoundError(
                 f"manifest store {self.path} has no committed data"
                 + ("" if version is None else f" at version {version}"))
-        self._check_present(files, version)
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(T.StructType.fromJson(schema))
-        df = reader.parquet(*[os.path.join(self.path, f) for f in files])
+        # no candidate (only with no recorded schema): every file,
+        # filtered to nothing, still gives the table's columns
+        df = reader.parquet(*[os.path.join(self.path, f)
+                              for f in files or m["files"]])
         for c, v in (where or {}).items():
             df = df.where(F.col(c) == v)
         return df
 
-    def _check_present(self, files: list[str], version: int | None) -> None:
-        missing = [f for f in files
-                   if not os.path.exists(os.path.join(self.path, f))]
+    def _bytes(self, files: list[str], version: int | None) -> int:
+        """The total size of ``files``, from one ``os.stat`` each; a
+        file gc removed raises FileNotFoundError."""
+        total, missing = 0, []
+        for f in files:
+            try:
+                total += os.stat(os.path.join(self.path, f)).st_size
+            except FileNotFoundError:
+                missing.append(f)
         if missing:
             eff = self.current_version() if version is None else version
             raise FileNotFoundError(
@@ -509,6 +529,7 @@ class ManifestStore:
                 + ("the CURRENT manifest is broken — files were pruned "
                    "externally" if version is None else
                    "raise gc keep_versions to retain time-travel history"))
+        return total
 
     def df(self, version: int | None = None) -> DataFrame:
         """The committed table — at ``version`` for time travel (the
@@ -530,6 +551,11 @@ class ManifestStore:
         rows = self._read(m, where)
         if isinstance(rows, DataFrame):
             return rows
+        # PySpark drops a non-empty record batch that follows an empty
+        # one past the first (a multi-file filtered scan yields one empty
+        # batch per file without a match), so only non-empty ones go over
+        rows = pa.Table.from_batches(
+            [b for b in rows.to_batches() if b.num_rows], rows.schema)
         return self.spark.createDataFrame(
             rows, T.StructType.fromJson(m["schema"]))
 
@@ -646,7 +672,7 @@ class ManifestStore:
         return len(m["files"])
 
     def compact(self, sort_cols: tuple[str, ...] = (),
-                target_file_bytes: int = 128 * 1024 * 1024) -> int:
+                target_file_bytes: int = _FILE_BYTES) -> int:
         """Fold the accumulated per-commit small files into one fresh
         commit (OPTIMIZE in Delta terms).  Output file count is sized
         from the store's actual bytes (``target_file_bytes`` per file,
@@ -658,8 +684,7 @@ class ManifestStore:
         never disturbed: the swap is one manifest commit (``fold``, which
         also prunes the batch ids), and the old files remain until
         ``gc()``."""
-        total = sum(os.path.getsize(os.path.join(self.path, f))
-                    for f in self.files())
+        total = self._bytes(self.files(), None)
         n_out = max(1, -(-total // target_file_bytes))
 
         def _rewrite(df: DataFrame) -> DataFrame:

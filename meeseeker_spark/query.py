@@ -7,14 +7,21 @@ whose files are range-clustered on (chain, block_num) — so C1 patterns become
 pushed column predicates with min/max row-group pruning, and the fat
 ``value`` column is only read when the query projects it (column pruning).
 
-One rule splits the read side: a request that binds ``block_num`` to one
-value — ``get``, ``find_block``, ``has_block``, and a ``scan`` whose glob
-translates exactly with ``block_num`` bound (``hive:N:*``) — is answered
-on the driver from the files whose recorded block range can hold it
-(``ManifestStore.find`` / ``exists``), so it launches no Spark job.
-Every other request (scans with an rlike residual or no block, ``find_trx``)
-runs on Spark over the full file list.  There is no switch: the request
-decides.
+One rule splits the read side (``_point``): a request that binds
+``block_num`` or ``trx_id`` to one value is a point lookup — ``get``,
+``find_block``, ``has_block``, ``find_trx``, and a ``scan`` whose glob
+translates exactly with one of them bound (``hive:N:*``,
+``hive:*:<trx>:*``).  It goes to ``ManifestStore.find`` / ``exists``,
+which takes the files whose recorded block and chain ranges can hold it
+(``trx_id`` has no range, so a trx lookup keeps every file of its
+chain) and reads them on the driver, with no Spark job, as long as they
+total at most one compacted file's bytes (``manifest._FILE_BYTES``,
+128 MiB); past that, Spark reads just those files.  ``trx_id ==
+VIRTUAL_TRX_ID`` names every virtual op, so it is not a point lookup.
+Every other request (scans with an rlike residual or no bound block or
+trx, ``hive:*:vote``, ``hive:*``) runs on Spark over the full file
+list: its result is unbounded, and a ``limit`` pushes into Spark's
+scan.  There is no switch: the request decides.
 
 At 100 TB the same layout holds: (chain, block_num) clustering
 (Delta/Iceberg z-order or hourly sub-partitions on a real deployment);
@@ -30,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .keys import glob_to_filter, key_int, parse_key, translate_glob
 from .manifest import ManifestStore, open_committed, require_committed
+from .schemas import VIRTUAL_TRX_ID
 
 # range partitions per OpsStore.write: the TOTAL writer count across all
 # chains (a two-chain frame splits these tasks between the chains)
@@ -55,17 +63,23 @@ def newest_by_key(df: DataFrame, key: str,
                            for c in others]))
 
 
-def _block(block_num: int, chain: str | None) -> dict:
-    """The bindings of ``find block`` / ``has block``."""
-    return {"block_num": block_num, **({"chain": chain} if chain else {})}
+def _bound(column: str, value, chain: str | None) -> dict:
+    """The bindings of ``find block/trx`` / ``has block``."""
+    return {column: value, **({"chain": chain} if chain else {})}
 
 
-def _find_block(df: DataFrame, block_num: int,
-                chain: str | None) -> DataFrame:
-    """``find block`` over ``df`` (C3): the block's (key, value) rows."""
-    for c, v in _block(block_num, chain).items():
+def _point(where: dict) -> bool:
+    """THE point-lookup rule: ``where`` binds ``block_num``, or a
+    ``trx_id`` other than the virtual ops' shared one."""
+    return "block_num" in where \
+        or where.get("trx_id", VIRTUAL_TRX_ID) != VIRTUAL_TRX_ID
+
+
+def _filtered(df: DataFrame, where: dict) -> DataFrame:
+    """The rows of ``df`` whose columns equal every value in ``where``."""
+    for c, v in where.items():
         df = df.where(F.col(c) == v)
-    return df.select("key", "value")
+    return df
 
 
 class OpsStore:
@@ -106,15 +120,22 @@ class OpsStore:
         ValueError for a path that is not a manifest store."""
         return self._store().df()
 
+    def _find(self, where: dict) -> DataFrame:
+        """The rows equal to every binding in ``where``: a point lookup
+        through ``ManifestStore.find``, any other a Spark filter."""
+        if _point(where):
+            return self._store().find(where)
+        return _filtered(self.df(), where)
+
     # -- C1: key-pattern scan ----------------------------------------------
 
     def scan(self, pattern: str) -> DataFrame:
         """SCAN MATCH '<glob>'.  A glob whose translation is exact and
-        binds ``block_num`` (``hive:N:*``) is a block-bound lookup
-        (``ManifestStore.find``); any other is a predicate-pushed Spark
-        scan."""
+        is a point lookup (``hive:N:*``, ``hive:*:<trx>:*``) goes
+        through ``ManifestStore.find``; any other — a ``never`` glob
+        binds nothing — is a predicate-pushed Spark scan."""
         g = translate_glob(pattern)
-        if g.exact and "block_num" in g.bindings:
+        if g.exact and _point(g.bindings):
             return self._store().find(g.bindings)
         return self.df().where(glob_to_filter(g))
 
@@ -128,24 +149,22 @@ class OpsStore:
         seg: dict = parse_key(key)
         for name in ("block_num", "trx_index"):
             seg[name] = key_int(seg[name])
-        return self._store().find(seg)
+        return self._find(seg)
 
     # -- C3: find block / find trx -------------------------------------------
 
     def find_block(self, block_num: int, chain: str | None = None) -> DataFrame:
-        return self._store().find(_block(block_num, chain)) \
+        return self._find(_bound("block_num", block_num, chain)) \
             .select("key", "value")
 
     def find_trx(self, trx_id: str, chain: str | None = None) -> DataFrame:
-        df = self.df().where(F.col("trx_id") == trx_id)
-        if chain:
-            df = df.where(F.col("chain") == chain)
-        return df.select("key", "value")
+        return self._find(_bound("trx_id", trx_id, chain)) \
+            .select("key", "value")
 
     # -- C6: existence probe --------------------------------------------------
 
     def has_block(self, block_num: int, chain: str | None = None) -> bool:
-        return self._store().exists(_block(block_num, chain))
+        return self._store().exists(_bound("block_num", block_num, chain))
 
     # -- C4: reset (bulk delete by chain prefix) ------------------------------
 
@@ -321,10 +340,12 @@ class UnifiedStore:
 
     def find_block(self, block_num: int,
                    chain: str | None = None) -> DataFrame:
-        return _find_block(self.df(), block_num, chain)
+        return _filtered(self.df(), _bound("block_num", block_num, chain)) \
+            .select("key", "value")
 
     def find_trx(self, trx_id: str, chain: str | None = None) -> DataFrame:
         return self.ops.find_trx(trx_id, chain)
 
     def has_block(self, block_num: int, chain: str | None = None) -> bool:
-        return not _find_block(self.df(), block_num, chain).isEmpty()
+        return not _filtered(self.df(),
+                             _bound("block_num", block_num, chain)).isEmpty()

@@ -22,7 +22,10 @@ Inside ``manifest.py`` every data read goes through the one read helper
 each version records (a read that skipped it would run the
 schema-inference job again), and the driver-side Arrow read of a
 block-bound lookup, which casts timestamps to UTC instants (a read that
-skipped it would shift them by the session timezone).  ``query.py``
+skipped it would shift them by the session timezone).  Those rows
+reach Spark only in ``ManifestStore.find``, the one ``createDataFrame``
+in the module, which first drops the scan's empty record batches
+(PySpark loses a non-empty batch that follows an empty one).  ``query.py``
 reads no parquet itself: every consumer request goes through
 ``ManifestStore``."""
 
@@ -80,6 +83,14 @@ def test_manifest_reads_only_through_read_helper():
                  if isinstance(n, ast.Attribute) and n.attr in _DATA_READS
                  and id(n) not in inside]
     assert not offenders, f"manifest.py reads outside _read: {offenders}"
+    find = next(n for n in ast.walk(tree)
+                if isinstance(n, ast.FunctionDef) and n.name == "find")
+    inside = {id(n) for n in ast.walk(find)}
+    offenders = [n.lineno for n in ast.walk(tree)
+                 if isinstance(n, ast.Attribute)
+                 and n.attr == "createDataFrame" and id(n) not in inside]
+    assert not offenders, \
+        f"manifest.py hands Arrow rows to Spark outside find: {offenders}"
     tree = ast.parse((PKG / "query.py").read_text())
     offenders = [n.lineno for n in ast.walk(tree)
                  if isinstance(n, ast.Attribute)

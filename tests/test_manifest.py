@@ -275,8 +275,9 @@ def test_manifest_random_op_sequences(spark, tmp_path_factory):
     in-memory model, and every manifest-referenced file on disk.  After
     every op, too: each file's recorded block/chain range covers its
     rows; the same version without ``file_stats`` reads every file; and
-    bound lookups (``find`` / ``exists``) of present, absent and
-    past-head blocks answer what filtering the full table does."""
+    bound lookups (``find`` / ``exists``) of every present block, an
+    absent and a past-head one, by block and by ``id`` (no recorded
+    range, so every file), answer what filtering the full table does."""
     from collections import Counter
 
     import pyarrow.compute as pc
@@ -322,10 +323,14 @@ def test_manifest_random_op_sequences(spark, tmp_path_factory):
         assert len(spark_read.inputFiles()) == len(m["files"])
         present = sorted({r["block_num"] for r in rows})
         absent = [b for b in range(21) if b not in present][:1]
-        for b in present[:1] + absent + [26]:
+        for b in present + absent + [26]:
             want = sorted(r for r in rows if r["block_num"] == b)
             assert sorted(s.find({"block_num": b}).collect()) == want, b
             assert s.exists({"block_num": b}) == bool(want), b
+            # id has no recorded range: every file is read
+            assert sorted(s.find({"id": b}).collect()) == want, b
+        for b in present[:1] + absent + [26]:
+            want = sorted(r for r in rows if r["block_num"] == b)
             key = {"block_num": b, "chain": chain(b), "id": b}
             assert sorted(s.find(key).collect()) == want, b
             assert not s.exists({**key, "chain": "other"}), b

@@ -4,15 +4,17 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
 
-from meeseeker_spark import fixtures
+from meeseeker_spark import fixtures, manifest
 from meeseeker_spark.flatten import flatten_engine_blocks, flatten_ops_with_virtual
 from meeseeker_spark.manifest import ManifestStore
 from meeseeker_spark.query import OpsStore
-from meeseeker_spark.schemas import BLOCKS, ENGINE_BLOCKS, VIRTUAL_OPS
+from meeseeker_spark.schemas import (BLOCKS, ENGINE_BLOCKS, VIRTUAL_OPS,
+                                     VIRTUAL_TRX_ID)
 
 
 @pytest.fixture(scope="module")
@@ -281,19 +283,48 @@ def _jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_block_bound_requests_launch_no_job(spark, store):
-    """get, find_block, has_block and a block glob scan bind block_num,
-    so the recorded file ranges pick the files and the rows are read on
-    the driver: collecting the answer launches no Spark job.  A scan
-    that binds no block still runs on Spark."""
-    r = store.df().where("chain = 'hive'").first()
-    b = r["block_num"]
+def _point_row(store):
+    """A mainnet row with a real (non-virtual) trx id."""
+    return store.df().where((F.col("chain") == "hive")
+                            & (F.col("trx_id") != VIRTUAL_TRX_ID)).first()
+
+
+def test_block_bound_requests_launch_no_job(spark, store, monkeypatch):
+    """Point lookups — get, find_block, has_block, find_trx and a block
+    or trx glob scan — bind block_num or trx_id, so the recorded file
+    ranges pick the files and the rows are read on the driver:
+    collecting the answer launches no Spark job.  A scan that binds
+    neither, and find_trx of the id every virtual op shares, still run
+    on Spark.  Past one compacted file's bytes, a point lookup is the
+    Spark read of just the files that can hold it, with the same rows."""
+    r = _point_row(store)
+    b, trx = r["block_num"], r["trx_id"]
     assert _jobs(spark, lambda: store.get(r["key"]).collect()) == 0
     assert _jobs(spark, lambda: store.find_block(b).collect()) == 0
     assert _jobs(spark, lambda: store.scan(f"hive:{b}:*").collect()) == 0
     assert _jobs(spark, lambda: (store.has_block(b),
                                  store.has_block(10**12))) == 0
+    assert _jobs(spark, lambda: store.find_trx(trx).collect()) == 0
+    assert _jobs(spark, lambda: store.scan(f"hive:*:{trx}:*").collect()) == 0
     assert _jobs(spark, lambda: store.scan("hive:*:vote").collect()) > 0
+    assert _jobs(spark,
+                 lambda: store.find_trx(VIRTUAL_TRX_ID).collect()) > 0
+
+    m = ManifestStore(spark, store.path)._read_manifest()
+    lookups = [(lambda: store.get(r["key"]), {"block_num": b,
+                                              "chain": "hive"}),
+               (lambda: store.find_trx(trx, "hive"), {"trx_id": trx,
+                                                      "chain": "hive"})]
+    local = [sorted(fn().collect()) for fn, _ in lookups]
+    monkeypatch.setattr(manifest, "_FILE_BYTES", 1)
+    for (fn, where), want in zip(lookups, local):
+        assert _jobs(spark, lambda: fn().collect()) > 0
+        files = {f for f in m["files"]
+                 if manifest._can_hold(m["file_stats"][f], where)}
+        assert 0 < len(files) < len(m["files"]), where
+        assert {urlparse(u).path for u in fn().inputFiles()} \
+            == {os.path.join(store.path, f) for f in files}
+        assert sorted(fn().collect()) == want
 
 
 def test_block_bound_rows_match_spark_under_non_utc_session(spark, store):
@@ -301,8 +332,8 @@ def test_block_bound_rows_match_spark_under_non_utc_session(spark, store):
     under a non-UTC session timezone.  The files hold INT96 (naive)
     timestamps; uncast to UTC instants, createDataFrame would take them
     as session-local wall time and shift them by the zone's offset."""
-    r = store.df().where("chain = 'hive'").first()
-    b = r["block_num"]
+    r = _point_row(store)
+    b, trx = r["block_num"], r["trx_id"]
 
     def by_key(rows):
         return sorted(rows, key=lambda x: x["key"])
@@ -317,8 +348,57 @@ def test_block_bound_rows_match_spark_under_non_utc_session(spark, store):
             == by_key(block.where(F.col("chain") == "hive").collect())
         assert by_key(store.find_block(b).collect()) \
             == by_key(block.select("key", "value").collect())
+        by_trx = store.df().where(F.col("trx_id") == trx)
+        assert by_key(store.scan(f"hive:*:{trx}:*").collect()) \
+            == by_key(by_trx.where(F.col("chain") == "hive").collect())
+        assert by_key(store.find_trx(trx).collect()) \
+            == by_key(by_trx.select("key", "value").collect())
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz0)
+
+
+def test_point_lookups_keep_rows_after_empty_batches(spark, tmp_path):
+    """Regression: five appends each hold blocks 0 and 1000 plus one
+    block of their own, so every file's block range holds every lookup
+    and a lookup of one file's block scans four files with no match.
+    The filtered scan yields one record batch per file, empty ones
+    included, and PySpark's ``createDataFrame(pa.Table)`` dropped a
+    non-empty batch that followed an empty batch past the first — so
+    whatever the file order, at least three of the five lookups
+    returned no rows while ``has_block`` said True."""
+    import pyarrow as pa
+
+    path = str(tmp_path / "ops")
+    ms = ManifestStore(spark, path)
+    now = dt.datetime(2030, 1, 1)
+
+    def rows(i: int) -> pa.Table:
+        ops = [(blk, f"{blk:020x}{i:020x}") for blk in (0, 10 + i, 1000)]
+        return pa.table({
+            "chain": ["hive"] * 3,
+            "block_num": pa.array([blk for blk, _ in ops], pa.int64()),
+            "trx_id": [t for _, t in ops],
+            "trx_index": pa.array([0] * 3, pa.int32()),
+            "op_type": ["vote"] * 3,
+            "key": [f"hive:{blk}:{t}:0:vote" for blk, t in ops],
+            "value": [f'{{"i": {i}}}'] * 3,
+            "ingested_at": pa.array([now] * 3, pa.timestamp("us")),
+        })
+
+    for i in range(5):
+        ms.append(rows(i))
+    st = OpsStore(spark, path)
+    for i in range(5):
+        blk = 10 + i
+        trx = f"{blk:020x}{i:020x}"
+        key = f"hive:{blk}:{trx}:0:vote"
+        want = [(key, f'{{"i": {i}}}')]
+        assert st.has_block(blk)
+        assert [tuple(x) for x in st.find_block(blk).collect()] == want, i
+        assert [tuple(x) for x in st.find_trx(trx).collect()] == want, i
+        assert [x["key"] for x in st.get(key).collect()] == [key], i
+        assert [x["key"] for x in st.scan(f"hive:{blk}:*").collect()] \
+            == [key], i
 
 
 def test_cli_find_block_non_numeric_errors_cleanly(tmp_path, capsys):
