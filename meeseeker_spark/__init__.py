@@ -13,7 +13,6 @@ Layout:
               commit protocol, incl. TTL expiry as retention delete (O-3)
   query       consumer query surface over the ops store (C1–C6)
   verify      reconciliation analytics (D1–D5)
-  sinks       foreachBatch keyed-upsert + channel fan-out (S7–S9)
   fixtures    deterministic chain-shaped fixture generator (FIXTURES.md §B)
   streaming   Structured Streaming ingestion (A/B/E streaming semantics)
   ext         LLM-pipeline extensions: dedup, similarity, text, multimodal

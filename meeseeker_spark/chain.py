@@ -10,7 +10,8 @@ ends with ``_CHAIN_ID`` (its leading segment, lowercased), with a warning.
 In Spark this is session-build config resolution, not a plan operator: the
 resolved prefix becomes the ``chain`` literal column the flatten stamps on
 every op (flatten.py).  Pure function over a config mapping → hermetically
-unit-testable; the node probe itself is connector territory (failover.py).
+unit-testable.  The node probe itself is connector territory, and every
+source here is a file stream, so there is no connector to probe.
 """
 
 from __future__ import annotations

