@@ -11,10 +11,15 @@ Layout:
   flatten     block→trx→op flatten pipelines (SURVEY §2 B1–B9)
   manifest    manifest-committed parquet store: the one sink layout and
               commit protocol, incl. TTL expiry as retention delete (O-3)
-  query       consumer query surface over the ops store (C1–C6)
-  verify      reconciliation analytics (D1–D5)
+  query       consumer query surface over the ops store (C1–C6; the
+              CLI's unified surface over ops + schedules is find/scan)
+  verify      reconciliation analytics (D1, D2, D4; D3/D5 are catalog
+              entries)
   fixtures    deterministic chain-shaped fixture generator (FIXTURES.md §B)
-  streaming   Structured Streaming ingestion (A/B/E streaming semantics)
+  channels    data-derived channel fan-out rows (B8/S8)
+  resume      skip-ahead resume policy (B10)
+  streaming   Structured Streaming ingestion (A/B/E streaming semantics),
+              the dedup screen and crash-restart supervision
   ext         LLM-pipeline extensions: dedup, similarity, text, multimodal
 """
 

@@ -334,51 +334,42 @@ def main(argv: list[str] | None = None) -> int:
         spark = _spark()
 
         def run_once():
-            if chain.endswith("_engine"):
-                stream = P.read_engine_stream(spark, a.blocks)
-                if a.at_block is not None:
-                    # reference: an explicit at_block_num bypasses the
-                    # HWM/staleness decision (follower_job.rb:116-117)
-                    print(f"Sync from: {a.at_block}")
-                    from pyspark.sql import functions as F
-                    stream = stream.where(
-                        F.col("blockNumber") >= a.at_block)
-                elif a.resume_policy:
-                    dec = P.resolve_engine_stream_start(
-                        spark, a.blocks, f"{a.out}/ops", ttl_s=a.ttl)
-                    # reference wording: follower_job.rb:139-143
-                    print("Starting new sync." if dec.fresh_sync
-                          else f"Resuming from block {dec.start_block} ...")
-                    from pyspark.sql import functions as F
-                    stream = stream.where(
-                        F.col("blockNumber") >= dec.start_block)
-                q = P.start_engine_ingest(
-                    stream,
-                    f"{a.out}/ops", f"{a.out}/channels", f"{a.out}/ckpt",
-                    chain=chain)
+            from pyspark.sql import functions as F
+
+            engine = chain.endswith("_engine")
+            start_at = None
+            if a.at_block is not None:
+                # reference: an explicit at_block_num bypasses the HWM and
+                # the skip-ahead policy (block_follower_job.rb:106-108,
+                # follower_job.rb:116-117)
+                print(f"Sync from: {a.at_block}")
+                start_at = a.at_block
+            elif a.resume_policy:
+                resolve = (P.resolve_engine_stream_start if engine
+                           else P.resolve_stream_start)
+                dec = resolve(spark, a.blocks, f"{a.out}/ops", ttl_s=a.ttl)
+                # reference wording: block_follower_job.rb:133-137,
+                # follower_job.rb:139-143
+                print("Starting new sync." if dec.fresh_sync
+                      else f"Resuming from block {dec.start_block} ...")
+                start_at = dec.start_block
+            if engine:
+                rows, num_col = (P.read_engine_stream(spark, a.blocks),
+                                 "blockNumber")
             else:
-                start_at = None
-                if a.at_block is not None:
-                    # reference: at_block_num bypasses HWM + policy
-                    # (block_follower_job.rb:106-108)
-                    print(f"Sync from: {a.at_block}")
-                    start_at = a.at_block
-                elif a.resume_policy:
-                    dec = P.resolve_stream_start(
-                        spark, a.blocks, f"{a.out}/ops", ttl_s=a.ttl)
-                    # reference wording: block_follower_job.rb:133-137
-                    print("Starting new sync." if dec.fresh_sync
-                          else f"Resuming from block {dec.start_block} ...")
-                    start_at = dec.start_block
-                ops = P.streaming_ops(
+                rows, num_col = P.streaming_ops(
                     P.read_block_stream(spark, a.blocks),
                     P.read_vop_stream(spark, a.vops) if a.vops else None,
-                    chain=chain)
-                if start_at is not None:
-                    from pyspark.sql import functions as F
-                    ops = ops.where(F.col("block_num") >= start_at)
+                    chain=chain), "block_num"
+            if start_at is not None:
+                rows = rows.where(F.col(num_col) >= start_at)
+            if engine:
+                q = P.start_engine_ingest(
+                    rows, f"{a.out}/ops", f"{a.out}/channels",
+                    f"{a.out}/ckpt", chain=chain)
+            else:
                 q = P.start_ingest(
-                    ops, f"{a.out}/ops", f"{a.out}/channels",
+                    rows, f"{a.out}/ops", f"{a.out}/channels",
                     f"{a.out}/ckpt", mode=a.mode,
                     lib_lag=(P.REVERSIBLE_LAG_BLOCKS if a.lib_lag is None
                              else a.lib_lag))

@@ -2222,9 +2222,9 @@ def quality_logit_scores_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear quality-classifier scoring (ext.classifier) under the
     checked-in distilled weights: one narrow codegen projection —
     features, dot product, sigmoid, keep decision.  The trained-weights
-    provenance and the Spark↔NumPy training parity live in
-    tests/test_ext.py::test_train_quality_logit_matches_numpy; scoring
-    parity in ::test_quality_logit_scores_vs_duckdb."""
+    provenance (a NumPy replay of the training) lives in
+    tests/test_ext.py::test_default_logit_weights_match_numpy_training;
+    scoring parity in ::test_quality_logit_scores_vs_duckdb."""
     from .ext.classifier import quality_logit_scores
     docs = load(spark, sf_dir, "documents")
     return quality_logit_scores(docs)

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, functions as F
 _CUSTOM_TYPES = ("custom", "custom_binary", "custom_json")
 
 
-def op_channels(ops: DataFrame, include_custom_id: bool = True) -> DataFrame:
+def op_channels(ops: DataFrame) -> DataFrame:
     """Per-op channel rows: ``{chain}:op:{op_type}`` (mainnet,
     block_follower_job.rb:83) or ``{chain}:{contract}`` /
     ``{chain}:{contract}:{action}`` (sidechain, follower_job.rb:81-82 —
@@ -35,21 +35,19 @@ def op_channels(ops: DataFrame, include_custom_id: bool = True) -> DataFrame:
         F.to_json(F.struct("key")).alias("payload"),
     )
 
-    if include_custom_id:
-        custom_id = F.get_json_object("value", "$.id")
-        sub = (
-            mainnet.where(
-                F.col("op_type").isin(*_CUSTOM_TYPES)
-                & custom_id.isNotNull() & (custom_id != "")
-            )
-            .select(
-                F.concat_ws(":", "chain", F.lit("op"), "op_type", custom_id)
-                .alias("channel"),
-                F.lit("custom_id").alias("kind"), "key", "block_num",
-                F.to_json(F.struct("key")).alias("payload"),
-            )
+    custom_id = F.get_json_object("value", "$.id")
+    sub = (
+        mainnet.where(
+            F.col("op_type").isin(*_CUSTOM_TYPES)
+            & custom_id.isNotNull() & (custom_id != "")
         )
-        out = out.unionByName(sub)
+        .select(
+            F.concat_ws(":", "chain", F.lit("op"), "op_type", custom_id)
+            .alias("channel"),
+            F.lit("custom_id").alias("kind"), "key", "block_num",
+            F.to_json(F.struct("key")).alias("payload"),
+        )
+    )
 
     per_contract = side.select(
         F.concat_ws(":", "chain", "contract").alias("channel"),
@@ -61,31 +59,8 @@ def op_channels(ops: DataFrame, include_custom_id: bool = True) -> DataFrame:
         F.lit("contract_action").alias("kind"), "key", "block_num",
         F.to_json(F.struct("key")).alias("payload"),
     )
-    return out.unionByName(per_contract).unionByName(per_action)
-
-
-def block_channels(blocks: DataFrame, chain: str = "hive",
-                   include_header: bool = True) -> DataFrame:
-    """One ``{chain}:block`` notification per block.
-
-    ``include_header`` is the reference's ``MEESEEKER_INCLUDE_BLOCK_HEADER``
-    ingest gate (meeseeker.rb:97, default true; block_follower_job.rb:60-76):
-    when on, the header fields ride in the payload; when off, the payload is
-    the bare ``{block_num}`` the reference publishes without the extra
-    ``get_block_header`` round-trip."""
-    payload = (
-        F.to_json(F.struct(
-            "block_num", "previous", "timestamp", "witness",
-            "transaction_merkle_root"))
-        if include_header else F.to_json(F.struct("block_num"))
-    )
-    return blocks.select(
-        F.lit(f"{chain}:block").alias("channel"),
-        F.lit("block").alias("kind"),
-        F.lit(None).cast("string").alias("key"),
-        "block_num",
-        payload.alias("payload"),
-    )
+    return (out.unionByName(sub).unionByName(per_contract)
+            .unionByName(per_action))
 
 
 def engine_transaction_channels(ops: DataFrame) -> DataFrame:
@@ -136,21 +111,3 @@ def engine_channels(ops: DataFrame) -> DataFrame:
         .unionByName(engine_block_channels(ops))
     )
 
-
-def transaction_channels(ops: DataFrame) -> DataFrame:
-    """One ``{chain}:transaction`` notification per real transaction,
-    payload = {block_num, transaction_id, transaction_num}
-    (block_follower_job.rb:26-30). Virtual trxs never publish here."""
-    real = ops.where(F.col("transaction_num").isNotNull())
-    per_trx = real.groupBy("chain", "block_num", "trx_id").agg(
-        F.first("transaction_num").alias("transaction_num"))
-    return per_trx.select(
-        F.concat_ws(":", "chain", F.lit("transaction")).alias("channel"),
-        F.lit("transaction").alias("kind"),
-        F.lit(None).cast("string").alias("key"),
-        "block_num",
-        F.to_json(F.struct(
-            "block_num",
-            F.col("trx_id").alias("transaction_id"),
-            "transaction_num")).alias("payload"),
-    )

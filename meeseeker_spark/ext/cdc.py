@@ -190,17 +190,3 @@ def chunk_dups(chunks: DataFrame, min_docs: int = 2) -> DataFrame:
                 ((F.col("n_occurrences") - 1) * F.col("chunk_bytes"))
                 .alias("dup_bytes"))
     )
-
-
-def dedup_stats(chunks: DataFrame) -> DataFrame:
-    """One-row corpus storage report: total vs unique chunk bytes and
-    the reclaimable ratio.  Two nested aggregates, both partial-agg."""
-    per_hash = (chunks.groupBy("chunk_hash")
-                .agg(F.sum("length").alias("_tot"),
-                     F.min("length").alias("_uniq")))
-    return per_hash.agg(
-        F.sum("_tot").alias("bytes_total"),
-        F.sum("_uniq").alias("bytes_unique"),
-        F.round(F.lit(1) - F.sum("_uniq") / F.sum("_tot"), 4)
-        .alias("dedup_ratio"),
-    )

@@ -4,24 +4,11 @@ extension, same family as SURVEY §2 F — no reference counterpart).
 The workhorse quality filter of the big public corpora (the fastText
 models of CCNet/DCLM, FineWeb-Edu's regressor) is a linear model over
 cheap text features: score every document, keep/weight by the score.
-Both halves map cleanly onto Spark:
-
-- **Scoring** is a narrow projection — features from the token array,
-  one dot product, one sigmoid.  No shuffle at any scale, and the whole
-  expression stays in whole-stage codegen (no Python UDF).
-- **Training** is batch gradient descent where each iteration is ONE
-  map-side-combined aggregate: grad_i = avg((sigmoid(w·x) − y)·x_i),
-  a d-element row collected to the driver, which holds only the weight
-  vector (d doubles).  That is the textbook data-parallel GD layout —
-  the corpus is never collected, never shuffled, and each pass streams
-  the cached feature projection.  Iterations cost one job each; for the
-  few-dozen iterations a d≈5 model needs this beats shipping the corpus
-  to a single-node learner at any scale past toy.
-
-Determinism note: scoring with fixed weights is exactly reproducible
-(and DuckDB-oracle-checked in tests); training sums floats in partition
-order, so trained weights match a NumPy replay to ~1e-9 relative, not
-bit-exact — the parity test pins that tolerance honestly.
+Scoring is a narrow projection — features from the token array, one
+dot product, one sigmoid.  No shuffle at any scale, and the whole
+expression stays in whole-stage codegen (no Python UDF).  Scoring with
+fixed weights is exactly reproducible (and DuckDB-oracle-checked in
+tests).
 """
 
 from __future__ import annotations
@@ -37,13 +24,14 @@ from .text import LANG_STOPWORDS, stopword_hits, tokens
 FEATURE_NAMES = ("bias", "len_norm", "uniq_ratio", "stop_ratio",
                  "chars_per_token_norm")
 
-# Weights trained by ``train_quality_logit`` on the sf0.01 documents
-# fixture, distilling the rules-based ``quality_scores`` teacher at the
-# quality>=0.45 cut (lr=10, 100 iterations, zero init; 0.94 train
-# accuracy — the teacher's min(n,100) kink vs the model's min(n,200)
-# feature bounds it below 1.0).  Checked in so the scoring catalog entry
-# is a fixed, deterministic, oracle-replayable projection; retrain for a
-# real corpus (tests pin the Spark↔NumPy training parity).
+# Weights trained by batch gradient descent on the ``doc_features`` of
+# the sf0.01 documents fixture, distilling the rules-based
+# ``quality_scores`` teacher at the quality>=0.45 cut (lr=10, 100
+# iterations, zero init; 0.94 train accuracy — the teacher's min(n,100)
+# kink vs the model's min(n,200) feature bounds it below 1.0).  Checked
+# in so the scoring catalog entry is a fixed, deterministic,
+# oracle-replayable projection; tests replay the training in NumPy and
+# pin these values.
 DEFAULT_WEIGHTS = (-0.7201, 12.7433, -9.6037, 1.1877, -0.4174)
 
 
@@ -74,52 +62,6 @@ def doc_features(docs: DataFrame, id_col: str = "doc_id",
         id_col, *[f.alias(f"f{i}") for i, f in enumerate(feats)])
 
 
-def _dot_w(weights: Sequence[float]) -> Column:
-    return sum(F.col(f"f{i}") * F.lit(float(w))
-               for i, w in enumerate(weights))
-
-
-def train_quality_logit(docs: DataFrame, label: Column,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        lr: float = 10.0, iters: int = 100,
-                        ) -> list[float]:
-    """Batch-GD logistic regression over ``doc_features``; ``label`` is a
-    0/1 column expression over the input (e.g. a heuristic or a labeled
-    seed set).  Returns the trained weight list.
-
-    One cached feature pass, then ``iters`` single-aggregate jobs; the
-    driver state is the d-double weight vector.  (L-BFGS or mini-batches
-    would cut the pass count — plain GD keeps the replayable-in-NumPy
-    property the parity test wants.)"""
-    feats = docs.select(F.col(id_col),
-                        F.col(text_col).alias("_text"),
-                        tokens(F.col(text_col)).alias("_tok"),
-                        label.cast("double").alias("_y"))
-    fcols = _feature_cols()
-    feats = feats.select(
-        "_y", *[f.alias(f"f{i}") for i, f in enumerate(fcols)]).cache()
-    try:
-        d = len(fcols)
-        w = [0.0] * d
-        for _ in range(iters):
-            z = _dot_w(w)
-            err = F.lit(1.0) / (F.lit(1.0) + F.exp(-z)) - F.col("_y")
-            row = feats.agg(*[
-                F.avg(err * F.col(f"f{i}")).alias(f"g{i}")
-                for i in range(d)]).first()
-            if row[f"g{0}"] is None:
-                # avg over zero usable rows (empty input, or every
-                # label/text NULL) — fail with the cause, not a
-                # float*None TypeError mid-iteration (r15 review)
-                raise ValueError(
-                    "train_quality_logit: no usable training rows "
-                    "(empty input, or labels/text all NULL)")
-            w = [wi - lr * row[f"g{i}"] for i, wi in enumerate(w)]
-        return [round(wi, 4) for wi in w]
-    finally:
-        feats.unpersist()
-
-
 def quality_logit_scores(docs: DataFrame,
                          weights: Sequence[float] = DEFAULT_WEIGHTS,
                          id_col: str = "doc_id", text_col: str = "text",
@@ -136,21 +78,6 @@ def quality_logit_scores(docs: DataFrame,
     return t.select(
         id_col, p.alias("logit_p"),
         (p >= F.lit(float(threshold))).alias("keep"))
-
-
-def numpy_logit_oracle(rows: list[tuple[list[float], float]],
-                       lr: float = 10.0, iters: int = 100) -> list[float]:
-    """Pure-Python/NumPy replay of ``train_quality_logit`` for parity
-    tests: identical math, single-node."""
-    import numpy as np
-
-    x = np.array([r[0] for r in rows], dtype=np.float64)
-    y = np.array([r[1] for r in rows], dtype=np.float64)
-    w = np.zeros(x.shape[1])
-    for _ in range(iters):
-        p = 1.0 / (1.0 + np.exp(-(x @ w)))
-        w = w - lr * ((p - y)[:, None] * x).mean(axis=0)
-    return [round(float(v), 4) for v in w]
 
 
 def sigmoid(z: float) -> float:

@@ -439,16 +439,6 @@ def verify_jaccard(cand: DataFrame, new_df: DataFrame, corpus_df: DataFrame,
     )
 
 
-def minhash_dedup(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", threshold: float = 0.5) -> DataFrame:
-    """Drop near-duplicates: the min-id member of each near-dup pair
-    survives (greedy edge-wise survivor — at true connected-component scale
-    use iterative label propagation; pairs here are the expensive part)."""
-    pairs = near_dup_pairs(df, id_col, text_col, threshold)
-    losers = pairs.select(F.col("doc_b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
-
-
 # Driver-regime bound for connected_components (r15): below this many
 # PAIRS the whole graph fits a driver union-find at trivial cost, same
 # two-regime design as ext.graph's PageRank (its 300k-row crossover is

@@ -14,7 +14,6 @@ Scale shape: each side reduces to (id, 32-hex fingerprint) before the
 join — the full-outer join shuffles two skinny columns per row, never
 document text; with both snapshots bucketed by id on disk (the
 ext.shard / manifest layouts) the join is co-located and shuffle-free.
-The summary is a low-cardinality groupBy over the status column.
 """
 
 from __future__ import annotations
@@ -32,7 +31,7 @@ def corpus_diff(old: DataFrame, new: DataFrame, id_col: str = "doc_id",
     # classify by ROW PRESENCE, not fingerprint nullity (r15 review):
     # fingerprint(NULL text) is NULL, so a NULL-text doc present in both
     # snapshots read as 'added', and one deleted from the new snapshot
-    # read as 'added' too — corrupting diff_summary.  Presence flags +
+    # read as 'added' too — corrupting the status counts.  Presence flags +
     # null-safe fp equality classify every row correctly.
     o = old.select(F.col(id_col).alias("_id"),
                    fingerprint(F.col(text_col)).alias("old_fp"),
@@ -50,11 +49,3 @@ def corpus_diff(old: DataFrame, new: DataFrame, id_col: str = "doc_id",
                   F.lit("unchanged"))
             .otherwise(F.lit("changed")).alias("status"))
     )
-
-
-def diff_summary(old: DataFrame, new: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
-    """(status, n_docs) rollup of ``corpus_diff`` — the four-line answer
-    to "what changed between v1 and v2"."""
-    return (corpus_diff(old, new, id_col, text_col)
-            .groupBy("status").agg(F.count("*").alias("n_docs")))

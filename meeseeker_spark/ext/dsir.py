@@ -76,30 +76,6 @@ def hashed_gram_counts(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def bucket_log_probs(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text",
-                     n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
-    """(bucket, logp, _tot): add-1 smoothed log bucket distribution of
-    a corpus — ln((c_b + 1) / (n + B)).  Output is ≤ B rows (absent
-    buckets are implicitly ln(1/(n+B)); consumers must coalesce).  The
-    total rides in-plan as a cross-joined scalar aggregate.
-
-    Standalone inspection surface; ``dsir_log_weights`` does NOT build
-    on it — the weights path folds both corpora's smoothing into one
-    shared stats row instead of one scalar broadcast per corpus."""
-    counts = (hashed_gram_counts(docs, id_col, text_col, n_buckets)
-              .groupBy("bucket").agg(F.sum("c").alias("_cb")))
-    total = counts.agg(F.sum("_cb").cast("double").alias("_n"))
-    return (
-        counts.crossJoin(F.broadcast(total))
-        .select("bucket",
-                (F.log(F.col("_cb") + F.lit(1.0))
-                 - F.log(F.col("_n") + F.lit(float(n_buckets))))
-                .alias("logp"),
-                F.col("_n").alias("_tot"))
-    )
-
-
 def dsir_log_weights(raw: DataFrame, target: DataFrame,
                      id_col: str = "doc_id", text_col: str = "text",
                      n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:

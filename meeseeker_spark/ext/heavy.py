@@ -92,16 +92,6 @@ def mg_summaries(token_df: DataFrame, budget: int = 4096) -> DataFrame:
     return token_df.mapInPandas(summarize, schema=SUMMARY_SCHEMA)
 
 
-def exact_candidate_counts(token_df: DataFrame,
-                           summaries: DataFrame) -> DataFrame:
-    """Phase 2: exact global counts for the candidate union only — the
-    shuffle carries candidate tokens alone, never the full vocabulary."""
-    cands = (summaries.where(F.col("token").isNotNull())
-             .select("token").distinct())
-    return (token_df.join(F.broadcast(cands), "token")
-            .groupBy("token").agg(F.count("*").alias("n")))
-
-
 def heavy_hitters(docs: DataFrame, k: int = 25, budget: int = 4096,
                   text_col: str = "text") -> DataFrame:
     """Exact top-k tokens, MG-accelerated with a proof-or-fallback gate.

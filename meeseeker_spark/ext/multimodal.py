@@ -1,7 +1,7 @@
 """Multimodal columns (SURVEY §2 F5, driver north star).
 
 Images/audio/video are opaque ``binary`` columns + a typed metadata struct;
-heavy per-item work (decode, resize, frame-sample, feature-extract) runs as
+heavy per-item work (decode, feature-extract, perceptual hash) runs as
 Arrow-batched ``mapInPandas`` — the Spark-side plumbing (schema, batch
 shape, partition sizing) is real and tested.  ``decode_media``'s real path
 needs NO image library: ``parse_image_header`` struct-unpacks PNG / JPEG /
@@ -891,40 +891,6 @@ def decode_media(df: DataFrame, id_col: str = "doc_id",
                            schema=DECODED_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(DECODED_SCHEMA.fields + [
-    T.StructField("out_width", T.IntegerType()),
-    T.StructField("out_height", T.IntegerType()),
-])
-
-
-def resize_media(df: DataFrame, max_side: int = 256,
-                 id_col: str = "doc_id", fake: bool = False) -> DataFrame:
-    """Resize stage: decode → aspect-preserving clamp of the longer side to
-    ``max_side``. The geometry math (the part that decides output tensor
-    shapes downstream) is real; re-encoding pixels is the stubbed codec
-    step. Composes after decode_media, staying in the same narrow plan —
-    no shuffle anywhere in the media pipeline."""
-    decoded = decode_media(df, id_col=id_col, fake=fake)
-    scale = F.least(
-        F.lit(1.0),
-        F.lit(max_side) / F.greatest(F.col("width"), F.col("height"),
-                                     F.lit(1)))
-    # NULL geometry propagates (r15 review): greatest() SKIPS nulls, so
-    # an undecodable blob (width/height NULL) fabricated a "valid" 1×1
-    # output a downstream tensor-sizing consumer would trust; the
-    # poisoned-row contract is NULL out, never invented dimensions
-    has_dims = F.col("width").isNotNull() & F.col("height").isNotNull()
-    return decoded.select(
-        "*",
-        F.when(has_dims,
-               F.greatest(F.round(F.col("width") * scale).cast("int"),
-                          F.lit(1))).alias("out_width"),
-        F.when(has_dims,
-               F.greatest(F.round(F.col("height") * scale).cast("int"),
-                          F.lit(1))).alias("out_height"),
-    )
-
-
 FEATURES_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("features", T.ArrayType(T.FloatType())),
@@ -974,18 +940,6 @@ def extract_features(df: DataFrame, dim: int = 16,
                                 "features": vecs})
 
     return src.mapInPandas(_embed, schema=FEATURES_SCHEMA)
-
-
-def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: one row per sampled frame index.
-    The decode of each frame is the stubbed step; index fan-out + partition
-    shape (explode before decode so frames parallelize) is the real part."""
-    n_frames = (F.octet_length(F.col("media.bytes")) / 1000).cast("int") + 1
-    return df.select(
-        "doc_id", "media",
-        F.explode(F.sequence(F.lit(0), n_frames - 1, F.lit(every_n)))
-        .alias("frame_idx"),
-    )
 
 
 PHASH_SCHEMA = T.StructType([

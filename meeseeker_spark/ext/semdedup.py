@@ -172,17 +172,3 @@ def semantic_dup_pairs(emb: DataFrame, threshold: float = 0.85,
                  .agg(F.min("cell").alias("cell"),
                       F.min("sim").alias("sim")))
     return pairs
-
-
-def semantic_dedup(emb: DataFrame, threshold: float = 0.85,
-                   n_clusters: int = 16, train_iters: int = 0,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   max_cluster: int | None = None,
-                   n_probe: int = 2) -> DataFrame:
-    """Drop semantic duplicates: the min-id member of each pair survives
-    (same greedy edge-wise policy as ext.dedup.minhash_dedup; feed the
-    pairs through connected_components for cluster-level survivors)."""
-    pairs = semantic_dup_pairs(emb, threshold, n_clusters, train_iters,
-                               id_col, vec_col, max_cluster, n_probe)
-    losers = pairs.select(F.col("vec_b").alias(id_col)).distinct()
-    return emb.join(losers, id_col, "left_anti")

@@ -135,23 +135,6 @@ def bloom_merge(*bitmaps: DataFrame) -> DataFrame:
     return merged.groupBy("word_idx").agg(F.bit_or("word").alias("word"))
 
 
-def bloom_screen_docs(corpus: DataFrame, probe: DataFrame,
-                      text_col: str = "text", m_bits: int = 8192,
-                      k: int = 5) -> DataFrame:
-    """Membership screen of probe docs' content fingerprints against a
-    corpus bloom — the continuous-ingest "have we seen this exact text
-    before" prescreen.  Returns (probe_key, maybe_seen); join exact
-    verification downstream only for the maybe_seen=true survivors
-    (the bitmap already proves the false side)."""
-    corpus_keys = corpus.select(
-        fingerprint(F.col(text_col)).alias("key")).distinct()
-    probe_keys = probe.select(
-        fingerprint(F.col(text_col)).alias("key")).distinct()
-    bitmap = bloom_bitmap(corpus_keys, "key", m_bits, k)
-    return (bloom_membership(probe_keys, bitmap, "key", m_bits, k)
-            .withColumnRenamed("key", "probe_key"))
-
-
 def cms_table(token_df: DataFrame, token_col: str = "token",
               depth: int = 4, width: int = 2048) -> DataFrame:
     """Count-Min sketch of the token stream as (depth, pos, n) cell

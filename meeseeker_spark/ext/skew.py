@@ -15,7 +15,7 @@ attempts of one task disagree).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def salted_collect_set(df: DataFrame, key_cols: list[str], value_col: str,
@@ -40,23 +40,4 @@ def salted_collect_set(df: DataFrame, key_cols: list[str], value_col: str,
         .agg(F.array_sort(
             F.array_distinct(F.flatten(F.collect_list("_part"))))
             .alias(out))
-    )
-
-
-def salted_count_distinct(df: DataFrame, key_cols: list[str],
-                          value_col: str, n_salt: int = 8,
-                          out_col: str = "n_distinct") -> DataFrame:
-    """count(DISTINCT value) per key without a hot-key reducer: phase 1
-    dedups (key, salt) partitions, phase 2 sums partial distinct counts —
-    correct because the value-hash salt puts equal values in the SAME
-    sub-group (no double counting across salts)."""
-    salt = F.pmod(F.xxhash64(F.col(value_col)), F.lit(n_salt)).alias("_salt")
-    partial = (
-        df.select(*key_cols, value_col, salt)
-        .groupBy(*key_cols, "_salt")
-        .agg(F.count_distinct(value_col).alias("_n"))
-    )
-    return (
-        partial.groupBy(*key_cols)
-        .agg(F.sum("_n").alias(out_col))
     )

@@ -224,88 +224,6 @@ def lang_id(df: DataFrame, id_col: str = "doc_id",
     return t.select(*cols)
 
 
-def char_ngrams(col: Column, n: int = 3) -> Column:
-    """Distinct character n-grams of the whitespace-normalized lowercased
-    text (the language-ID feature — word tokenizers lose scripts without
-    spaces; char grams do not).  Texts shorter than ``n`` yield an EMPTY
-    array, never a truncated or empty-string gram — degenerate grams
-    would otherwise enter profile training and let empty documents vote
-    instead of falling through to 'unknown'."""
-    t = F.trim(F.regexp_replace(F.lower(col), "\\s+", " "))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(t) - n + 1, F.lit(1))),
-        lambda i: F.substr(t, i, F.lit(n)),
-    )
-    return F.when(F.length(t) >= n, F.array_distinct(grams)) \
-        .otherwise(F.array().cast("array<string>"))
-
-
-def char_ngram_profiles(docs: DataFrame, lang_col: str = "lang",
-                        text_col: str = "text", n: int = 3,
-                        top_k: int = 200) -> DataFrame:
-    """Per-language character-n-gram profile (Cavnar–Trenkle shape):
-    the ``top_k`` most frequent grams per language, ranked.  Training is
-    ONE corpus-sized count aggregate + a per-language top-k window over
-    the (tiny) distinct-gram table; the profile itself is
-    n_langs × top_k rows — broadcastable forever."""
-    from pyspark.sql import Window
-
-    counts = (
-        docs.select(F.col(lang_col).alias("lang"),
-                    F.explode(char_ngrams(F.col(text_col), n)).alias("gram"))
-        .groupBy("lang", "gram").agg(F.count("*").alias("_c"))
-    )
-    w = Window.partitionBy("lang").orderBy(F.col("_c").desc(), "gram")
-    return (
-        counts.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_k)
-        .select("lang", "gram", "rank")
-    )
-
-
-def lang_id_ngram(docs: DataFrame, profiles: DataFrame,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  n: int = 3, top_k: int = 200) -> DataFrame:
-    """Classify by profile overlap: each doc gram found in a language's
-    profile votes with weight (top_k + 1 − rank); argmax language wins,
-    ties broken lexicographically.  The profile side broadcasts; the
-    corpus side is one narrow explode + a per-(doc, lang) partial-agg —
-    no corpus shuffle beyond the doc-keyed reduce.  Returns
-    (doc_id, lang_pred, score)."""
-    from pyspark.sql import Window
-
-    # the weight base must cover the profile's ranks (r15 review): a
-    # profile trained at a larger top_k than this scorer's makes
-    # (top_k + 1 − rank) NEGATIVE for mid-rank grams — matching MORE of
-    # the true language then LOWERS its score.  The profile table is
-    # n_langs × top_k rows, so the probe is a tiny driver action.
-    max_rank = profiles.agg(F.max("rank")).first()[0]
-    if max_rank is not None and max_rank > top_k:
-        raise ValueError(
-            f"profiles carry ranks up to {max_rank} but top_k={top_k}; "
-            "score with the top_k the profiles were trained at")
-
-    grams = docs.select(
-        F.col(id_col).alias("_id"),
-        F.explode(char_ngrams(F.col(text_col), n)).alias("gram"))
-    scored = (
-        grams.join(F.broadcast(profiles), "gram")
-        .groupBy("_id", "lang")
-        .agg(F.sum(F.lit(top_k + 1) - F.col("rank")).alias("score"))
-    )
-    w = Window.partitionBy("_id").orderBy(F.col("score").desc(), "lang")
-    best = (scored.withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") == 1))
-    return (
-        docs.select(F.col(id_col).alias("_id"))
-        .join(best, "_id", "left")
-        .select(F.col("_id").alias(id_col),
-                F.coalesce(F.col("lang"), F.lit("unknown"))
-                .alias("lang_pred"),
-                F.coalesce(F.col("score"), F.lit(0)).alias("score"))
-    )
-
-
 # The PII battery lives in ext/pii.py since r8 (redact_pii_tags /
 # pii_report for the production screen; the driver-oracled scrub trio
 # alongside them) — moved so one module owns every PII pattern.

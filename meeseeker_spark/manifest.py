@@ -3,11 +3,10 @@
 
 Without Delta/Iceberg, this module is the ONE commit protocol every
 per-trigger streaming sink writes through (ops, channels, ``_meta``, the
-irreversible mode's ``_pending`` set, the witness-schedule publish log,
-the block-channel publisher).  It rests on the one primitive a
-transactional table actually needs: **readers only see files listed in
-the newest committed manifest, and a manifest commit is a single atomic
-link**.
+irreversible mode's ``_pending`` set, the witness-schedule publish log).
+It rests on the one primitive a transactional table actually needs:
+**readers only see files listed in the newest committed manifest, and a
+manifest commit is a single atomic link**.
 
 Layout:
 
@@ -445,27 +444,17 @@ class ManifestStore:
     # -- read side ----------------------------------------------------------
 
     def versions(self) -> list[int]:
-        """Manifest versions still on disk, ascending.  gc() drops old
-        manifest json, so this is also the time-travel horizon."""
+        """Manifest versions still on disk, ascending."""
         return _versions(self._mdir())
 
-    def _manifest_at(self, version: int | None) -> dict:
-        if version is not None and version not in self.versions():
-            raise FileNotFoundError(
-                f"manifest store {self.path} has no version {version} "
-                f"(on disk: {self.versions()}; gc() prunes history)")
-        return self._read_manifest(version)
-
-    def files(self, version: int | None = None) -> list[str]:
-        return list(self._manifest_at(version)["files"])
+    def files(self) -> list[str]:
+        return list(self._read_manifest()["files"])
 
     def _read(self, m: dict, where: dict | None = None,
-              version: int | None = None,
               columns: list[str] | None = None) -> Rows:
-        """THE read of manifest version ``m``'s table (``version`` only
-        names it in errors), every column or just ``columns``.  A listed
-        file that gc removed raises FileNotFoundError instead of reading
-        as partial data.
+        """THE read of manifest ``m``'s table, every column or just
+        ``columns``.  A listed file that gc removed raises
+        FileNotFoundError instead of reading as partial data.
 
         Without ``where``: a Spark read of every file — with the
         recorded schema no Spark job runs; a version that records none
@@ -484,7 +473,7 @@ class ManifestStore:
         if where is not None:
             files = [f for f in files
                      if f not in stats or _can_hold(stats[f], where)]
-        size = self._bytes(files, version)
+        size = self._bytes(files)
         if where is not None and schema is not None \
                 and all(f in stats for f in files) and size <= _FILE_BYTES:
             struct = T.StructType.fromJson(schema)
@@ -502,8 +491,7 @@ class ManifestStore:
             return table.cast(target)
         if not m["files"]:
             raise FileNotFoundError(
-                f"manifest store {self.path} has no committed data"
-                + ("" if version is None else f" at version {version}"))
+                f"manifest store {self.path} has no committed data")
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(T.StructType.fromJson(schema))
@@ -515,7 +503,7 @@ class ManifestStore:
             df = df.where(F.col(c) == v)
         return df if columns is None else df.select(*columns)
 
-    def _bytes(self, files: list[str], version: int | None) -> int:
+    def _bytes(self, files: list[str]) -> int:
         """The total size of ``files``, from one ``os.stat`` each; a
         file gc removed raises FileNotFoundError."""
         total, missing = 0, []
@@ -525,24 +513,15 @@ class ManifestStore:
             except FileNotFoundError:
                 missing.append(f)
         if missing:
-            eff = self.current_version() if version is None else version
             raise FileNotFoundError(
-                f"version {eff} references {len(missing)} gc'd "
-                f"file(s) (e.g. {missing[0]}); "
-                + ("the CURRENT manifest is broken — files were pruned "
-                   "externally" if version is None else
-                   "raise gc keep_versions to retain time-travel history"))
+                f"version {self.current_version()} references "
+                f"{len(missing)} gc'd file(s) (e.g. {missing[0]}); the "
+                "CURRENT manifest is broken — files were pruned externally")
         return total
 
-    def df(self, version: int | None = None) -> DataFrame:
-        """The committed table — at ``version`` for time travel (the
-        snapshot-diff/audit read; pair two versions with
-        ext.diff.corpus_diff).  Every version is an immutable file LIST,
-        so old reads cost nothing extra — but gc(keep_versions=K)
-        reclaims files unreferenced by the newest K manifests, which
-        bounds how far back is readable; a pruned version raises
-        instead of silently returning partial data."""
-        return self._read(self._manifest_at(version), version=version)
+    def df(self) -> DataFrame:
+        """The committed table."""
+        return self._read(self._read_manifest())
 
     def find(self, where: dict) -> DataFrame:
         """The committed rows whose columns equal every value in
@@ -667,12 +646,11 @@ class ManifestStore:
                      file_stats=self._ranges(staged))
         return len(m["files"])
 
-    def compact(self, sort_cols: tuple[str, ...] = (),
-                target_file_bytes: int = _FILE_BYTES) -> int:
+    def compact(self, sort_cols: tuple[str, ...] = ()) -> int:
         """Fold the accumulated per-commit small files into one fresh
         commit (OPTIMIZE in Delta terms).  Output file count is sized
-        from the store's actual bytes (``target_file_bytes`` per file,
-        Delta's default bin size), so a thousand trigger-sized files
+        from the store's actual bytes (``_FILE_BYTES`` per file, Delta's
+        default bin size), so a thousand trigger-sized files
         fold to a handful.  Optional ``sort_cols`` cluster rows within
         the rewritten files so min/max row-group pruning stays sharp
         (columns absent from the schema are skipped).  Returns the
@@ -680,8 +658,8 @@ class ManifestStore:
         never disturbed: the swap is one manifest commit (``fold``, which
         also prunes the batch ids), and the old files remain until
         ``gc()``."""
-        total = self._bytes(self.files(), None)
-        n_out = max(1, -(-total // target_file_bytes))
+        total = self._bytes(self.files())
+        n_out = max(1, -(-total // _FILE_BYTES))
 
         def _rewrite(df: DataFrame) -> DataFrame:
             df = df.repartition(n_out)
@@ -689,20 +667,6 @@ class ManifestStore:
             return df.sortWithinPartitions(*present) if present else df
 
         return self.fold(_rewrite)
-
-    # -- streaming bridge ---------------------------------------------------
-
-    def sink(self):
-        """foreachBatch function writing each micro-batch as one manifest
-        commit: a replayed batch (crash after commit, before checkpoint)
-        short-circuits on its recorded batch id, so admission is
-        exactly-once with no overwrite semantics and no recovery scan.
-
-            stream.writeStream.foreachBatch(store.sink())...
-        """
-        def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            self.append(batch_df, batch_id)
-        return _sink
 
     # -- maintenance --------------------------------------------------------
 

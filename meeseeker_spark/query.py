@@ -44,19 +44,18 @@ from .schemas import VIRTUAL_TRX_ID
 _WRITERS = 8
 
 
-def newest_by_key(df: DataFrame, key: str,
-                  batch_col: str = "batch_id") -> DataFrame:
+def newest_by_key(df: DataFrame, key: str) -> DataFrame:
     """Deterministic last-writer-wins key dedup (r15, shared by
     ScheduleStore.df and ``verify --witness``): keep the row with the
-    highest ``batch_col`` per key — the newest publish is the
+    highest ``batch_id`` per key — the newest publish is the
     authoritative one.  Without a batch column (a raw capture), or
     on equal batches, the total struct order over the payload breaks the
     tie, so two readers of the same store always agree — never
     ``dropDuplicates``' partition-order luck.  One shuffle on the key,
     same cost class as dropDuplicates.  All payload columns must be
     orderable types (parquet publish rows are)."""
-    others = [c for c in df.columns if c not in (key, batch_col)]
-    ordered = ([batch_col] if batch_col in df.columns else []) + others
+    others = [c for c in df.columns if c not in (key, "batch_id")]
+    ordered = (["batch_id"] if "batch_id" in df.columns else []) + others
     return (df.groupBy(key)
             .agg(F.max(F.struct(*ordered)).alias("_newest"))
             .select(key, *[F.col(f"_newest.{c}").alias(c)
@@ -292,12 +291,12 @@ class ScheduleStore:
 
 
 class UnifiedStore:
-    """One scan/get/find surface over EVERY keyed artifact a deployment
-    writes — mainnet ops and engine ops (both live in one manifest
-    OpsStore after ``compact``) plus the witness-schedule
-    publish log — ops rows through ``OpsStore`` (so a point lookup is
-    read on the driver) and schedule rows through
-    ``keys.schedule_glob_filter`` (VERDICT r3 item 8; the
+    """One scan/find surface (the CLI's ``find``/``scan --schedules``)
+    over EVERY keyed artifact a deployment writes — mainnet ops and
+    engine ops (both live in one manifest OpsStore after ``compact``)
+    plus the witness-schedule publish log — ops rows through
+    ``OpsStore`` (so a point lookup is read on the driver) and schedule
+    rows through ``keys.schedule_glob_filter`` (VERDICT r3 item 8; the
     per-shape split is r15 — one translator over both shapes dropped
     schedule rows on anchored patterns).  Schedule rows ride the ops row
     shape with NULL trx columns, so ops globs never match them and
@@ -308,13 +307,6 @@ class UnifiedStore:
         self.ops = OpsStore(spark, ops_path)
         self.schedules = (ScheduleStore(spark, schedules_path, chain)
                           if schedules_path else None)
-
-    def df(self) -> DataFrame:
-        df = self.ops.df()
-        if self.schedules is not None:
-            df = df.unionByName(self.schedules.df(),
-                                allowMissingColumns=True)
-        return df
 
     def scan(self, pattern: str) -> DataFrame:
         # per-shape translation (r15 review): the ops translator over
@@ -330,32 +322,15 @@ class UnifiedStore:
         return ops_rows.unionByName(self.schedules.scan(pattern),
                                     allowMissingColumns=True)
 
-    def get(self, key: str) -> DataFrame:
-        parts = key.split(":")
-        if len(parts) == 4 and parts[1:3] == ["witness", "schedule"]:
-            if self.schedules is None:
-                raise ValueError(
-                    f"schedule key {key!r} but no schedules path configured")
-            return self.schedules.df().where(F.col("key") == key)
-        return self.ops.get(key)
-
-    def _schedule_block(self, block_num: int,
-                        chain: str | None) -> DataFrame:
-        return _filtered(self.schedules.df(),
-                         _bound("block_num", block_num, chain))
-
     def find_block(self, block_num: int,
                    chain: str | None = None) -> DataFrame:
         rows = self.ops.find_block(block_num, chain)
         if self.schedules is None:
             return rows
         return rows.unionByName(
-            self._schedule_block(block_num, chain).select("key", "value"))
+            _filtered(self.schedules.df(),
+                      _bound("block_num", block_num, chain))
+            .select("key", "value"))
 
     def find_trx(self, trx_id: str, chain: str | None = None) -> DataFrame:
         return self.ops.find_trx(trx_id, chain)
-
-    def has_block(self, block_num: int, chain: str | None = None) -> bool:
-        return self.ops.has_block(block_num, chain) or (
-            self.schedules is not None
-            and not self._schedule_block(block_num, chain).isEmpty())

@@ -15,8 +15,10 @@ Pure function → unit-testable without a cluster.
 Which "tip" the gap is measured against is the stream-mode policy
 (meeseeker.rb:95 ``MEESEEKER_STREAM_MODE``; block_follower_job.rb:113-123):
 ``head`` reads the not-yet-irreversible chain head (read-uncommitted),
-``irreversible`` waits for finality (read-committed). ``resolve_tip``
-implements exactly that dispatch.
+``irreversible`` waits for finality (read-committed).  The file source
+carries no dgpo, so the gap is measured against the source's max block,
+and the irreversible mode holds young rows back in the ingest sink
+(``streaming.pipeline.start_ingest``).
 """
 
 from __future__ import annotations
@@ -26,18 +28,6 @@ from dataclasses import dataclass
 from .schemas import BLOCK_INTERVAL_S, DEFAULT_TTL_S
 
 STREAM_MODES = ("head", "irreversible")
-
-
-def resolve_tip(head_block_num: int, last_irreversible_block_num: int,
-                mode: str = "head") -> int:
-    """Pick the sync tip per stream mode (block_follower_job.rb:113-123:
-    ``dgpo.head_block_number`` vs ``dgpo.last_irreversible_block_num``;
-    unknown modes abort, matching the reference)."""
-    if mode == "head":
-        return head_block_num
-    if mode == "irreversible":
-        return last_irreversible_block_num
-    raise ValueError(f"Unknown stream mode: {mode}")
 
 
 @dataclass(frozen=True)

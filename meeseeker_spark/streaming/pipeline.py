@@ -32,7 +32,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..channels import block_channels, engine_channels, op_channels
+from ..channels import engine_channels, op_channels
 from ..flatten import flatten_blocks, flatten_engine_blocks, flatten_virtual_ops
 from ..manifest import (ManifestStore, append_all, open_committed,
                          require_committed)
@@ -161,7 +161,7 @@ def _commit_irreversible(batch_df: DataFrame, ops_path: str,
             _commit_outputs(rows, channel_fn, ops_path, channels_path,
                             batch_id)
             return
-        lib = head - lib_lag  # resolve_tip(head, lib, "irreversible")
+        lib = head - lib_lag  # the last irreversible block
         final = rows.where(F.col("block_num") <= lib)
         _commit_outputs(final, channel_fn, ops_path, channels_path,
                         batch_id)
@@ -264,10 +264,13 @@ def _commit_outputs(ops: DataFrame, channel_fn, ops_path: str,
     ], batch_id)
 
 
-def ops_view(spark: SparkSession, ops_path: str) -> DataFrame:
-    """Reader view over the streamed store; key-dedup guards the one
-    non-idempotent corner (same op in two batches via vop replay)."""
-    return require_committed(spark, ops_path).df().dropDuplicates(["key"])
+def _hold_at_hwm(last: int | None):
+    """The start decision for an empty source (files rotated away,
+    nothing delivered yet): there is no tip to measure a gap against,
+    so hold position at the HWM."""
+    from ..resume import StartDecision
+    return StartDecision(0 if last is None else last + 1, last is None,
+                         "empty source; holding at high-water mark")
 
 
 def resolve_stream_start(spark: SparkSession, blocks_dir: str, ops_path: str,
@@ -281,7 +284,7 @@ def resolve_stream_start(spark: SparkSession, blocks_dir: str, ops_path: str,
     Returns the StartDecision; callers apply it as a pushed-down
     ``block_num >= start_block`` predicate on the stream, the declarative
     equivalent of the reference seeking its iterator."""
-    from ..resume import StartDecision, resolve_start_block
+    from ..resume import resolve_start_block
     from ..schemas import DEFAULT_TTL_S
 
     tip = (
@@ -290,11 +293,7 @@ def resolve_stream_start(spark: SparkSession, blocks_dir: str, ops_path: str,
     )
     last = last_block_num(spark, ops_path)
     if tip is None:
-        # empty source (files rotated away / nothing delivered yet): no
-        # tip to measure a gap against — hold position at the HWM
-        start = 0 if last is None else last + 1
-        return StartDecision(start, last is None,
-                             "empty source; holding at high-water mark")
+        return _hold_at_hwm(last)
     return resolve_start_block(
         last, tip, DEFAULT_TTL_S if ttl_s is None else ttl_s)
 
@@ -309,7 +308,7 @@ def resolve_engine_stream_start(spark: SparkSession, engine_dir: str,
     produced."""
     import datetime as dt
 
-    from ..resume import StartDecision, resolve_start_block_engine
+    from ..resume import resolve_start_block_engine
     from ..schemas import DEFAULT_TTL_S
 
     # tip age must be SESSION-TZ-INDEPENDENT (r12 review: to_timestamp
@@ -328,9 +327,7 @@ def resolve_engine_stream_start(spark: SparkSession, engine_dir: str,
     )
     last = last_block_num(spark, ops_path)
     if row["tip"] is None:
-        start = 0 if last is None else last + 1
-        return StartDecision(start, last is None,
-                             "empty source; holding at high-water mark")
+        return _hold_at_hwm(last)
     tip_ts = dt.datetime.strptime(row["tip_ts_str"],
                                   "%Y-%m-%dT%H:%M:%S")
     now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
@@ -372,12 +369,6 @@ def compact_meta(spark: SparkSession, ops_path: str) -> int:
     # so growth stays bounded at one stale version per store.
     ms.gc(keep_versions=2)
     return n
-
-
-def channel_events_view(spark: SparkSession,
-                        channels_path: str) -> DataFrame:
-    """The committed channel_events table (append-only: no dedup)."""
-    return require_committed(spark, channels_path).df()
 
 
 def last_block_num(spark: SparkSession, ops_path: str) -> int | None:
@@ -432,24 +423,6 @@ def start_engine_ingest(engine_stream: DataFrame, ops_path: str,
             ops.unpersist()
 
     return _start(engine_stream, _sink, checkpoint, available_now)
-
-
-def start_block_channel_publisher(blocks_stream: DataFrame, out_path: str,
-                                  checkpoint: str, chain: str = "hive",
-                                  include_header: bool = True,
-                                  available_now: bool = True) -> StreamingQuery:
-    """Per-block ``{chain}:block`` notifications with the ingest-time
-    header-merge gate (MEESEEKER_INCLUDE_BLOCK_HEADER, meeseeker.rb:97;
-    block_follower_job.rb:60-76): header fields ride in the payload when
-    the gate is on, bare {block_num} when off.  The reference pays an extra
-    get_block_header RPC per block for this; here the header is already in
-    the block row, so the gate only shapes the payload.  Each trigger is
-    one ManifestStore append recording its batch id; read the log back
-    with ``channel_events_view``."""
-    channel_rows = block_channels(blocks_stream, chain, include_header)
-    return _start(channel_rows,
-                  ManifestStore(channel_rows.sparkSession, out_path).sink(),
-                  checkpoint, available_now)
 
 
 # ---------------------------------------------------------------------------

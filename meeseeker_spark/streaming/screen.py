@@ -261,20 +261,10 @@ def screen_batch(batch: DataFrame, corpus: DataFrame | None,
 def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
                  checkpoint_dir: str, threshold: float = 0.5,
                  available_now: bool = True,
-                 quality_gate=None,
                  exact_index: bool = False,
                  drift_baseline: DataFrame | None = None) -> StreamingQuery:
     """File stream over ``incoming_dir`` → screened corpus under
     ``out_dir``/corpus + rejection log under ``out_dir``/flagged.
-
-    ``quality_gate`` (opt-in): a ``DataFrame -> DataFrame`` returning
-    the SURVIVING rows of a batch (schema-preserving, deterministic —
-    any of the batch quality screens: gopher_rules keep,
-    quality_logit_scores keep, a stats floor).  It runs BEFORE the
-    dedup screen, so rejected docs never enter the corpus or the band
-    index; they land under ``out_dir``/quality_rejected/batch_id=N with
-    the same per-batch overwrite idempotence as the other sinks (a
-    deterministic gate re-derives the identical reject set on retry).
 
     ``out_dir`` must be a LOCAL filesystem path (the corpus-existence
     probe is os.listdir — same hermetic file-backed-sink scope as the
@@ -422,8 +412,6 @@ def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
             rec["bloom_m_bits"], rec["bloom_k"] = BLOOM_M_BITS, BLOOM_K
         _write_marker(marker, rec)
 
-    quality_rejected_dir = os.path.join(out_dir, "quality_rejected")
-
     # resolve a docs-shaped baseline to its count table ONCE, not per
     # trigger, and persist it — token_counts returns a lazy plan, so
     # without the persist every trigger would re-run the full baseline
@@ -454,14 +442,6 @@ def start_screen(spark: SparkSession, incoming_dir: str, out_dir: str,
              .write.mode("overwrite")
              .parquet(os.path.join(out_dir, "drift",
                                    f"batch_id={batch_id}")))
-        if quality_gate is not None:
-            kept = quality_gate(batch_df)
-            rejected = batch_df.join(
-                kept.select("doc_id").distinct(), "doc_id", "left_anti")
-            (rejected.write.mode("overwrite")
-             .parquet(os.path.join(quality_rejected_dir,
-                                   f"batch_id={batch_id}")))
-            batch_df = kept
         corpus = bands = None
         # EXCLUDE this batch's own partitions everywhere: a retried
         # batch (crash after write, before checkpoint commit) would
@@ -854,13 +834,12 @@ def rebuild_exact_index(spark: SparkSession, out_dir: str) -> int:
 
 def screen_report(spark: SparkSession, out_dir: str) -> DataFrame:
     """Per-batch observability rollup of a screen's output tree:
-    (batch_id, n_admitted, n_flagged, n_quality_rejected), ordered by
+    (batch_id, n_admitted, n_flagged, kl_divergence), ordered by
     batch — the first operational question of a continuous-ingest
     screen ("what did each trigger do?") answered from the idempotent
     batch_id=N layout alone, no extra bookkeeping written on the hot
     path.  Batches whose every row was rejected still appear (counts
-    join FULL OUTER and coalesce to 0); quality_rejected is absent
-    entirely when no quality gate ran; kl_divergence joins in when the
+    join FULL OUTER and coalesce to 0); kl_divergence joins in when the
     drift monitor wrote (NULL when absent — 0 would read as "no
     drift").  Scale: metadata-cheap count aggregates over the
     partition column — column pruning means the text/bytes columns are
@@ -878,12 +857,10 @@ def screen_report(spark: SparkSession, out_dir: str) -> DataFrame:
         raise FileNotFoundError(
             f"{out_dir} has no corpus/batch_id=N output — not a screen "
             f"output tree (or the screen has not committed a batch yet)")
-    out = admitted
-    for sub, alias in (("flagged", "n_flagged"),
-                       ("quality_rejected", "n_quality_rejected")):
-        c = counts(sub, alias)
-        out = (out.join(c, "batch_id", "full_outer") if c is not None
-               else out.withColumn(alias, F.lit(0)))
+    flagged = counts("flagged", "n_flagged")
+    out = (admitted.join(flagged, "batch_id", "full_outer")
+           if flagged is not None
+           else admitted.withColumn("n_flagged", F.lit(0)))
     drift_p = os.path.join(out_dir, "drift")
     if os.path.isdir(drift_p) and any(
             n.startswith("batch_id=") for n in os.listdir(drift_p)):
@@ -896,6 +873,6 @@ def screen_report(spark: SparkSession, out_dir: str) -> DataFrame:
     return out.select(
         "batch_id",
         *[F.coalesce(F.col(a), F.lit(0)).cast("long").alias(a)
-          for a in ("n_admitted", "n_flagged", "n_quality_rejected")],
+          for a in ("n_admitted", "n_flagged")],
         "kl_divergence",
     ).orderBy("batch_id")

@@ -4,9 +4,10 @@ Crash-restart with exponential backoff: the reference wraps its sync task
 in an infinite retry loop, backoff doubling 0.01 s → 30 s cap, reset on
 success (/root/reference/bin/meeseeker:25-33).  A pure driver-side
 policy with an injectable sleep, so it unit-tests without wall-clock
-time.  The reference's ``max_keys`` admission stall (B11) has no second
-implementation here: a stream's intake per trigger is bounded by
-``maxFilesPerTrigger`` (``read_*_stream(max_files_per_trigger=)``).
+time.  ``sync`` is its one caller.  The reference's ``max_keys``
+admission stall (B11) has no second implementation here: a stream's
+intake per trigger is bounded by ``maxFilesPerTrigger``
+(``read_*_stream(max_files_per_trigger=)``).
 """
 
 from __future__ import annotations
@@ -17,16 +18,16 @@ from typing import TypeVar
 
 T = TypeVar("T")
 
+BASE_BACKOFF_S = 0.01
+CAP_S = 30.0
+
 
 def run_with_restarts(fn: Callable[[], T], max_restarts: int | None = None,
-                      base_backoff_s: float = 0.01, cap_s: float = 30.0,
-                      sleep: Callable[[float], None] = time.sleep,
-                      on_error: Callable[[BaseException, float], None] | None = None,
-                      ) -> T:
+                      sleep: Callable[[float], None] = time.sleep) -> T:
     """Run fn until it returns; on exception sleep the current backoff and
-    double it (capped). max_restarts=None → retry forever (the reference's
-    daemon mode); bounded in tests."""
-    backoff = base_backoff_s
+    double it, from ``BASE_BACKOFF_S`` up to ``CAP_S``.  max_restarts=None
+    → retry forever (the reference's daemon mode); bounded in tests."""
+    backoff = BASE_BACKOFF_S
     attempts = 0
     while True:
         try:
@@ -35,12 +36,9 @@ def run_with_restarts(fn: Callable[[], T], max_restarts: int | None = None,
         # `rescue => e` is StandardError — KeyboardInterrupt/SystemExit
         # must kill the daemon, not be swallowed into a silent retry
         # (one Ctrl-C during fn() used to restart the sync loop)
-        except Exception as e:  # noqa: BLE001 - supervision boundary
+        except Exception:  # noqa: BLE001 - supervision boundary
             attempts += 1
             if max_restarts is not None and attempts > max_restarts:
                 raise
-            if on_error:
-                on_error(e, backoff)
             sleep(backoff)
-            backoff = min(backoff * 2, cap_s)
-
+            backoff = min(backoff * 2, CAP_S)

@@ -188,10 +188,6 @@ def warm_tables(spark: SparkSession, sf_dir: str) -> None:
         load(spark, sf_dir, t).count()
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register each table as a temp view for spark.sql queries."""
     for name in TABLES:

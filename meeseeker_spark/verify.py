@@ -1,5 +1,8 @@
-"""Verification analytics (SURVEY §2 D1–D5) — the reference's Rakefile
-``verify:*`` oracle queries, re-expressed as distributed set reconciliation.
+"""Verification analytics (SURVEY §2 D1, D2, D4) — the reference's
+Rakefile ``verify:*`` oracle queries, re-expressed as distributed set
+reconciliation; the CLI's ``verify`` runs them.  The D3 referential join
+and the D5 sample audit run as the catalog's ``d3_ref_join`` and
+``d5_sample_audit``.
 
 The reference collects key sets into Ruby arrays and diffs them in-process
 (/root/reference/Rakefile:229-265,352-396,419-493,552-643); here every diff
@@ -88,38 +91,6 @@ def reconcile_engine_blocks(engine_ops: DataFrame,
     )
 
 
-def referential_join(engine_ops: DataFrame, blocks: DataFrame) -> DataFrame:
-    """D3: sidechain↔mainnet referential check (Rakefile:419-493).
-
-    Groups stored sidechain trxs by their referenced mainnet block and
-    left-joins the mainnet block table; ``ref_exists`` false = a sidechain
-    trx referencing a mainnet block we never saw.  The grouped side is tiny
-    relative to ops (one row per referenced block), and at scale the join
-    keys align with the blocks table's clustering — AQE picks broadcast
-    when the grouped side fits.
-    """
-    refs = (
-        engine_ops.select(
-            F.get_json_object("value", "$.refHiveBlockNumber").cast("long")
-            .alias("ref_block"),
-            "trx_id",
-        )
-        .where(F.col("ref_block").isNotNull())
-        .groupBy("ref_block")
-        .agg(F.collect_set("trx_id").alias("side_trx_ids"))
-    )
-    main = blocks.select("block_num", "transaction_ids")
-    j = refs.join(main, refs.ref_block == main.block_num, "left")
-    return j.select(
-        "ref_block",
-        F.size("side_trx_ids").alias("n_side_trxs"),
-        F.col("block_num").isNotNull().alias("ref_exists"),
-        F.size(F.array_intersect(
-            "side_trx_ids", F.coalesce("transaction_ids", F.array()))
-        ).alias("n_matching_ids"),
-    )
-
-
 def witness_rounds(blocks: DataFrame, schedules: DataFrame) -> DataFrame:
     """D4: witness-round set comparison (Rakefile:552-643).
 
@@ -190,15 +161,3 @@ def witness_rounds(blocks: DataFrame, schedules: DataFrame) -> DataFrame:
                (F.size(missing) == 0) & (F.size(extra) == 0)).alias("ok"),
     )
 
-
-def sample_audit(ops: DataFrame, k: int = 10) -> DataFrame:
-    """D5: deterministic sample-k of (block, trx) pairs for spot audit
-    (reference uses .sample(10); we use a multiplicative hash so the
-    sample is reproducible and oracle-checkable)."""
-    pairs = (
-        ops.where(F.col("trx_id") != VIRTUAL_TRX_ID)
-        .select("block_num", "trx_id").distinct()
-    )
-    mix = F.pmod(
-        F.xxhash64("block_num", "trx_id"), F.lit(2_147_483_647))
-    return pairs.orderBy(mix, "block_num", "trx_id").limit(k)

@@ -43,7 +43,7 @@ def test_full_lifecycle(spark, tmp_path_factory):
     q.awaitTermination(120)
 
     # 2. materialize the keyed store from the streamed sink
-    view = P.ops_view(spark, str(d / "ops"))
+    view = OpsStore(spark, str(d / "ops")).df()
     OpsStore.write(view, str(d / "store"))
     store = OpsStore(spark, str(d / "store"))
     assert store.df().count() == len(fx.ops_expected)
@@ -100,7 +100,7 @@ def test_cli_surface(spark, tmp_path_factory, capsys):
     assert main(["sync", "--blocks", str(d / "blocks"),
                  "--vops", str(d / "vops"), "--out", str(d / "out")]) == 0
     # materialize a store for the query commands
-    view = P.ops_view(spark, str(d / "out" / "ops"))
+    view = OpsStore(spark, str(d / "out" / "ops")).df()
     OpsStore.write(view, str(d / "store"))
 
     blk = str(fx.blocks[0]["block_num"])
@@ -390,7 +390,7 @@ def test_cli_sync_at_block(spark, tmp_path_factory, capsys):
                  "--out", str(d / "out"), "--at-block", str(mid)]) == 0
     assert f"Sync from: {mid}" in capsys.readouterr().out
     got = sorted(r["block_num"] for r in
-                 P.ops_view(spark, str(d / "out" / "ops"))
+                 OpsStore(spark, str(d / "out" / "ops")).df()
                  .select("block_num").distinct().collect())
     # exactly the op-bearing blocks at/after the explicit start (a block
     # with no transactions legitimately contributes no op rows)
@@ -410,7 +410,7 @@ def test_cli_sync_at_block(spark, tmp_path_factory, capsys):
     assert f"Sync from: {late}" in out
     assert "Resuming from block" not in out and "Starting new sync" not in out
     got2 = sorted(r["block_num"] for r in
-                  P.ops_view(spark, str(d / "out2" / "ops"))
+                  OpsStore(spark, str(d / "out2" / "ops")).df()
                   .select("block_num").distinct().collect())
     want2 = sorted({o["block_num"] for o in fx.ops_expected
                     if o["block_num"] >= late
@@ -557,7 +557,7 @@ def test_cli_engine_sync_and_compact(spark, tmp_path_factory, capsys):
     assert main(["sync", "--chain", "auto", "--node-config", str(cfg),
                  "--blocks", str(d / "blocks_main"),
                  "--out", str(d / "out2")]) == 0
-    view = P.ops_view(spark, str(d / "out2" / "ops"))
+    view = OpsStore(spark, str(d / "out2" / "ops")).df()
     assert view.where("chain = 'hive'").count() == view.count() > 0
 
 
@@ -595,7 +595,7 @@ def test_cli_resume_policy(spark, tmp_path_factory, capsys):
     kept = {b["block_num"] for b in fx.blocks[half - 1:]}
     real_kept = [o for o in fx.ops_expected
                  if o["trx_id"] != "0" * 40 and o["block_num"] in kept]
-    view = P.ops_view(spark, str(d / "out" / "ops"))
+    view = OpsStore(spark, str(d / "out" / "ops")).df()
     assert view.count() == len(real_kept)
     # block set matches exactly (empty blocks yield no ops rows)
     assert {r["block_num"] for r in view.select("block_num").collect()} \
@@ -610,7 +610,7 @@ def test_cli_resume_policy(spark, tmp_path_factory, capsys):
     # ttl=3s → max_backfill = 1 block; HWM absent → fresh at tip: nothing
     # below the tip may land, and the store holds exactly the tip block's
     # ops (zero, if the tip block is empty — still a correct fresh sync)
-    view2 = P.ops_view(spark, str(d / "out2" / "ops"))
+    view2 = OpsStore(spark, str(d / "out2" / "ops")).df()
     real_tip = [o for o in fx.ops_expected
                 if o["trx_id"] != "0" * 40 and o["block_num"] == tip]
     assert view2.count() == len(real_tip)
@@ -634,7 +634,7 @@ def test_cli_engine_resume_policy(spark, tmp_path_factory, capsys):
     assert main(["sync", "--chain", "hive_engine", "--blocks", str(d / "eng"),
                  "--out", str(d / "out_stale"), "--resume-policy"]) == 0
     assert "Starting new sync." in capsys.readouterr().out
-    v = P.ops_view(spark, str(d / "out_stale" / "ops"))
+    v = OpsStore(spark, str(d / "out_stale" / "ops")).df()
     assert v.count() == 0
 
     # build an HWM by syncing the first half without the policy (a fresh
@@ -657,7 +657,7 @@ def test_cli_engine_resume_policy(spark, tmp_path_factory, capsys):
                  "--out", str(d / "out"), "--resume-policy",
                  "--ttl", "999999999"]) == 0
     assert f"Resuming from block {hwm + 1}" in capsys.readouterr().out
-    v2 = P.ops_view(spark, str(d / "out" / "ops"))
+    v2 = OpsStore(spark, str(d / "out" / "ops")).df()
     assert v2.count() == len(fx.engine_ops_expected)
 
 
@@ -716,7 +716,7 @@ def test_cli_manifest_round_trip(spark, tmp_path_factory, capsys):
     out = capsys.readouterr().out
     assert f"synced through block {fx.blocks[-1]['block_num']}" in out
     store = str(d / "out" / "ops")
-    view = P.ops_view(spark, store)
+    view = OpsStore(spark, store).df()
     expected_real = [o for o in fx.ops_expected if o["trx_id"] != "0" * 40]
     assert view.count() == len(expected_real)
 
@@ -744,7 +744,7 @@ def test_cli_manifest_round_trip(spark, tmp_path_factory, capsys):
 
     assert main(["expire", "--store", store, "--gc"]) == 0
     assert "expired 0 rows" in capsys.readouterr().out
-    assert P.ops_view(spark, store).count() == len(expected_real)
+    assert OpsStore(spark, store).df().count() == len(expected_real)
 
     assert main(["reset", "hive", "--store", store]) == 0
     assert main(["scan", "hive:*", "--store", store]) == 1   # emptied

@@ -62,15 +62,6 @@ def test_near_dup_finds_planted_pairs(docs):
     assert len(truth) > 10, "fixture should contain planted near-dups"
 
 
-def test_minhash_dedup_removes_losers(docs):
-    pairs = dedup.near_dup_pairs(docs, threshold=0.5)
-    losers = {r["doc_b"] for r in pairs.collect()}
-    kept = dedup.minhash_dedup(docs)
-    kept_ids = {r["doc_id"] for r in kept.select("doc_id").collect()}
-    assert kept_ids.isdisjoint(losers)
-    assert kept.count() == docs.count() - len(losers)
-
-
 def test_simhash_deterministic_and_near_for_dups(docs):
     a = {r["_id"]: r["_sh"] for r in dedup.simhash_table(docs).collect()}
     b = {r["_id"]: r["_sh"] for r in dedup.simhash_table(docs).collect()}
@@ -884,17 +875,6 @@ def test_media_phash_native_jpeg_locality(spark):
     assert dist(got[1], got[5]) >= 15  # unrelated: far away
 
 
-def test_frame_sample_fanout(docs):
-    media = multimodal.attach_media(docs.limit(5))
-    frames = multimodal.frame_sample(media, every_n=1)
-    per_doc = {r["doc_id"]: r["n"] for r in
-               frames.groupBy("doc_id").agg(F.count("*").alias("n")).collect()}
-    meta = {r["doc_id"]: r["n_bytes"] for r in
-            multimodal.media_meta(media).collect()}
-    for did, n in per_doc.items():
-        assert n == meta[did] // 1000 + 1
-
-
 def test_salted_aggs_match_unsalted(spark):
     from pyspark.sql import Row
 
@@ -911,10 +891,6 @@ def test_salted_aggs_match_unsalted(spark):
             df.groupBy("k").agg(F.sort_array(F.collect_set("v")).alias("s"))
             .collect()}
     assert got == want
-
-    got_n = {r["k"]: r["n_distinct"] for r in
-             skew.salted_count_distinct(df, ["k"], "v").collect()}
-    assert got_n == {k: len(v) for k, v in want.items()}
 
 
 def test_winnowing_shared_substring_guarantee(spark):
@@ -972,20 +948,6 @@ def test_cc_dedup_one_survivor_per_cluster(docs):
     # cluster dedup must never keep more than the root
     assert kept.count() == docs.count() - sum(
         len(m) - 1 for m in clusters.values())
-
-
-def test_resize_clamps_longer_side(docs):
-    media = multimodal.attach_media(docs.limit(30))
-    out = multimodal.resize_media(media, max_side=256, fake=True).collect()
-    assert len(out) == 30
-    for r in out:
-        assert max(r["out_width"], r["out_height"]) <= 256
-        if max(r["width"], r["height"]) <= 256:
-            assert (r["out_width"], r["out_height"]) == (r["width"], r["height"])
-        else:  # aspect preserved within rounding
-            in_ratio = r["width"] / max(r["height"], 1)
-            out_ratio = r["out_width"] / max(r["out_height"], 1)
-            assert abs(in_ratio - out_ratio) / max(in_ratio, 1e-9) < 0.15
 
 
 def test_extract_features_contract(docs):
@@ -1189,9 +1151,7 @@ def test_pagerank_empty_edges_both_regimes(spark):
 
 def test_media_phash_and_resize_null_media(spark):
     """r15 review: a NULL media blob must yield a (doc_id, NULL phash)
-    row — not silently vanish from the output — and an undecodable blob
-    (NULL width/height) must propagate NULL out_width/out_height, not a
-    fabricated 1×1 geometry."""
+    row — not silently vanish from the output."""
     df = spark.createDataFrame(
         [(1, ("image/bmp", None)),
          (2, ("text/plain", bytearray(b"not an image at all")))],
@@ -1203,11 +1163,6 @@ def test_media_phash_and_resize_null_media(spark):
     ph_fake = {r["doc_id"]: r["phash"]
                for r in multimodal.media_phash(df, fake=True).collect()}
     assert set(ph_fake) == {1, 2} and ph_fake[1] is None
-
-    rz = {r["doc_id"]: (r["out_width"], r["out_height"])
-          for r in multimodal.resize_media(df, max_side=64,
-                                           fake=False).collect()}
-    assert rz[2] == (None, None)    # undecodable → NULL, never 1×1
 
 
 def test_exact_dedup_tie_survivor_is_partition_independent(spark):
@@ -1304,26 +1259,6 @@ def test_perplexity_buckets_degenerate_counts(docs):
     assert {r["ppl_bucket"] for r in rows} <= {"b0", "na"}
     with _pytest.raises(ValueError):
         perplexity_buckets(small, n_buckets=0)
-
-
-def test_lang_id_ngram_profile_mismatch_is_loud(spark):
-    """r15 review: scoring with a smaller top_k than the profiles were
-    trained at made mid-rank grams vote NEGATIVE — matching more of the
-    true language lowered its score.  Loud error instead."""
-    import pytest as _pytest
-
-    from meeseeker_spark.ext.text import char_ngram_profiles, lang_id_ngram
-
-    df = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog", "en"),
-         (2, "der schnelle braune fuchs springt ueber den hund", "de")],
-        ["doc_id", "text", "lang"])
-    profiles = char_ngram_profiles(df, top_k=50)
-    with _pytest.raises(ValueError, match="top_k"):
-        lang_id_ngram(df, profiles, top_k=10)
-    # matched sizing still classifies
-    assert {r["lang_pred"] for r in
-            lang_id_ngram(df, profiles, top_k=50).collect()} == {"en", "de"}
 
 
 def test_quality_scores_giant_doc_no_overflow(spark):
@@ -1478,12 +1413,10 @@ def test_lines_cdc_classifier_degenerate_inputs(spark, docs):
     """r15 review bundle: strip_frequent_lines(min_df=1) would empty
     EVERY document (each line occurs in >= 1 doc — its own) and now
     refuses; cdc_chunks skips a NULL doc_id instead of killing the task
-    on int(NaN); the logit trainer raises a clear error on an
-    empty/all-NULL training set."""
+    on int(NaN)."""
     import pytest as _pytest
 
     from meeseeker_spark.ext.cdc import cdc_chunks
-    from meeseeker_spark.ext.classifier import train_quality_logit
     from meeseeker_spark.ext.lines import strip_frequent_lines
 
     with _pytest.raises(ValueError, match="min_df"):
@@ -1495,10 +1428,6 @@ def test_lines_cdc_classifier_degenerate_inputs(spark, docs):
     chunks = cdc_chunks(blobs, id_col="doc_id", bytes_col="blob",
                         min_size=64, max_size=128).collect()
     assert chunks and {r["doc_id"] for r in chunks} == {1}
-
-    empty = spark.createDataFrame([], "doc_id long, text string, y int")
-    with _pytest.raises(ValueError, match="usable"):
-        train_quality_logit(empty, F.col("y"), iters=2)
 
 
 def test_minhash_signatures_stable_across_dataframes(docs):
@@ -1903,119 +1832,6 @@ def test_benchmark_coverage_vs_python(docs):
         assert got[r["doc_id"]] == (
             len(g), len(covered), round(len(covered) / len(g), 4),
             len(touching)), r["doc_id"]
-
-
-def test_bpe_training_matches_python_oracle(spark):
-    """Distributed BPE learns the EXACT merge sequence a reference
-    single-machine implementation produces (count desc, lexicographic
-    tie-break), and segmentation round-trips the text."""
-    from collections import Counter
-
-    from meeseeker_spark.ext.bpe import bpe_segment, train_bpe
-
-    rows = [Row(doc_id=i, text=t) for i, t in enumerate([
-        "low lower lowest low low",
-        "new newer newest new newer",
-        "wide wider widest wide",
-        "low newer wide lowest",
-    ])]
-    df = spark.createDataFrame(rows)
-    got = train_bpe(df, n_merges=12)
-
-    # pure-python reference BPE on the same word-frequency table
-    words = Counter()
-    for r in rows:
-        for w in r.text.split():
-            words[w] += 1
-    vocab = {tuple(w): c for w, c in words.items()}
-    expect = []
-    for _ in range(12):
-        pairs = Counter()
-        for sym, c in vocab.items():
-            for i in range(len(sym) - 1):
-                pairs[(sym[i], sym[i + 1])] += c
-        if not pairs:
-            break
-        best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        expect.append(best)
-        new_vocab = {}
-        for sym, c in vocab.items():
-            out, i = [], 0
-            while i < len(sym):
-                if (i + 1 < len(sym) and sym[i] == best[0]
-                        and sym[i + 1] == best[1]):
-                    out.append(sym[i] + sym[i + 1])
-                    i += 2
-                else:
-                    out.append(sym[i])
-                    i += 1
-            new_vocab[tuple(out)] = new_vocab.get(tuple(out), 0) + c
-        vocab = new_vocab
-    assert got == expect
-
-    seg = {r["doc_id"]: r["tokens"]
-           for r in bpe_segment(df, got).collect()}
-    for r in rows:
-        # concatenating a word's tokens reconstructs the word exactly
-        flat = "".join(seg[r.doc_id])
-        assert flat == r.text.replace(" ", "")
-    # merges actually compress: fewer tokens than characters
-    assert all(len(seg[r.doc_id]) < len(r.text.replace(" ", ""))
-               for r in rows)
-
-
-def test_lang_id_ngram_accuracy_and_shape(spark):
-    """Char-trigram profile classifier on genuinely distinct scripts:
-    perfect self-classification, bounded profiles, deterministic reruns.
-    (The parquet fixture's lang labels sit on a shared synthetic
-    vocabulary — a "zh" doc contains English words — so the fixture
-    cannot ground a language-ID accuracy claim; distinct synthetic
-    corpora can.)"""
-    from meeseeker_spark.ext.text import char_ngram_profiles, lang_id_ngram
-
-    corpora = {
-        "en": ["the quick brown fox jumps over the lazy dog",
-               "a stitch in time saves nine every single day",
-               "reading maketh a full man and writing an exact man"],
-        "fr": ["le renard brun saute par dessus le chien paresseux",
-               "il faut cultiver notre jardin chaque jour durant",
-               "la lecture fait un homme complet selon les anciens"],
-        "zh": ["\u5feb\u901f\u7684\u68d5\u8272\u72d0\u72f8\u8df3\u8fc7"
-               "\u61d2\u72d7",
-               "\u4e00\u9488\u53ca\u65f6\u7701\u4e5d\u9488\u6bcf\u5929",
-               "\u9605\u8bfb\u4f7f\u4eba\u5145\u5b9e\u5199\u4f5c\u4f7f"
-               "\u4eba\u7cbe\u786e"],
-    }
-    rows = [Row(doc_id=i * 10 + j, text=t, lang=lang)
-            for i, (lang, texts) in enumerate(sorted(corpora.items()))
-            for j, t in enumerate(texts)]
-    df = spark.createDataFrame(rows)
-
-    profiles = char_ngram_profiles(df, top_k=200)
-    per_lang = {r["lang"]: r["n"] for r in
-                profiles.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert set(per_lang) == {"en", "fr", "zh"}
-    assert all(n <= 200 for n in per_lang.values())
-
-    pred = {r["doc_id"]: r["lang_pred"]
-            for r in lang_id_ngram(df, profiles).collect()}
-    truth = {r.doc_id: r.lang for r in rows}
-    acc = sum(pred[i] == truth[i] for i in truth) / len(truth)
-    assert acc == 1.0, (acc, pred)
-    assert {r["doc_id"]: r["lang_pred"]
-            for r in lang_id_ngram(df, profiles).collect()} == pred
-
-
-def test_char_ngrams_short_text_yields_no_grams(spark):
-    from meeseeker_spark.ext.text import char_ngrams
-
-    rows = [Row(doc_id=1, text=""), Row(doc_id=2, text="a"),
-            Row(doc_id=3, text="  "), Row(doc_id=4, text="abc")]
-    df = spark.createDataFrame(rows)
-    got = {r["doc_id"]: r["g"] for r in
-           df.select("doc_id", char_ngrams(F.col("text")).alias("g")).collect()}
-    assert got[1] == [] and got[2] == [] and got[3] == []
-    assert got[4] == ["abc"]
 
 
 def test_incremental_near_dups_index_equals_recompute(docs):
@@ -2423,18 +2239,6 @@ def test_semantic_pairs_subset_and_recall(emb):
     # boundary-straddling cos≈0.4 pairs — a broken probe or dead cell
     # assignment lands far below 0.7
     assert len(sem) / len(exact) >= 0.7
-
-
-def test_semantic_dedup_drops_losers(emb):
-    from meeseeker_spark.ext import semdedup
-
-    pairs = semdedup.semantic_dup_pairs(emb, threshold=0.35,
-                                        n_clusters=16)
-    losers = {r["vec_b"] for r in pairs.collect()}
-    kept = semdedup.semantic_dedup(emb, threshold=0.35, n_clusters=16)
-    kept_ids = {r["vec_id"] for r in kept.select("vec_id").collect()}
-    assert kept_ids.isdisjoint(losers)
-    assert kept.count() == emb.count() - len(losers)
 
 
 def test_semantic_max_cluster_guard(spark):
@@ -3387,26 +3191,39 @@ def test_quality_logit_scores_vs_duckdb(spark):
     assert s == d
 
 
-def test_train_quality_logit_matches_numpy(spark, docs):
-    """Distributed-GD training parity: the Spark trainer's weights match
-    a single-node NumPy replay of identical math (tolerance covers the
-    partition-order float summation, per the module docstring)."""
-    from meeseeker_spark.ext.classifier import (doc_features,
-                                                numpy_logit_oracle,
-                                                train_quality_logit)
+def numpy_logit_oracle(rows: list[tuple[list[float], float]],
+                       lr: float = 10.0, iters: int = 100) -> list[float]:
+    """Batch-GD logistic regression from zero weights, single-node: the
+    training recipe behind ``classifier.DEFAULT_WEIGHTS``."""
+    import numpy as np
+
+    x = np.array([r[0] for r in rows], dtype=np.float64)
+    y = np.array([r[1] for r in rows], dtype=np.float64)
+    w = np.zeros(x.shape[1])
+    for _ in range(iters):
+        p = 1.0 / (1.0 + np.exp(-(x @ w)))
+        w = w - lr * ((p - y)[:, None] * x).mean(axis=0)
+    return [round(float(v), 4) for v in w]
+
+
+def test_default_logit_weights_match_numpy_training(spark):
+    """Provenance of the checked-in scoring weights: the NumPy replay of
+    their recipe (the ``doc_features`` of the sf0.01 documents, labeled
+    by the ``quality_scores`` teacher at the 0.45 cut, lr=10, 100
+    iterations) reproduces ``DEFAULT_WEIGHTS``."""
+    from meeseeker_spark.ext.classifier import DEFAULT_WEIGHTS, doc_features
     from meeseeker_spark.ext.text import quality_scores
 
-    labeled = docs.join(
-        quality_scores(docs).select("doc_id", "quality"), "doc_id")
-    label = F.col("quality") >= 0.45
-    got = train_quality_logit(labeled, label, lr=10.0, iters=15)
+    from .conftest import SF_CORRECT
 
+    docs = load(spark, SF_CORRECT, "documents")
+    label = (F.col("quality") >= 0.45).cast("double").alias("y")
     feats = doc_features(docs).join(
-        labeled.select("doc_id", label.cast("double").alias("y")), "doc_id")
+        quality_scores(docs).select("doc_id", label), "doc_id")
     rows = [([r[f"f{i}"] for i in range(5)], r["y"])
             for r in feats.collect()]
-    want = numpy_logit_oracle(rows, lr=10.0, iters=15)
-    assert got == pytest.approx(want, abs=1e-3)
+    assert numpy_logit_oracle(rows) == pytest.approx(DEFAULT_WEIGHTS,
+                                                     abs=1e-3)
 
 
 def test_quality_logit_distills_teacher(spark):
@@ -3466,29 +3283,30 @@ def test_prepare_funnel_source_cap_requires_source_col(docs):
 
 
 def test_bucket_log_probs_pins_weights_smoothing(spark, docs):
-    """The standalone inspection surface bucket_log_probs must stay in
-    lockstep with dsir_log_weights' folded smoothing: reconstructing
-    per-doc weights from two bucket_log_probs outputs (coalescing
-    absent buckets to the documented ln(1/(n+B)) floor) reproduces
-    dsir_log_weights to within one 4-dp rounding quantum — so the two
-    paths cannot silently drift apart."""
+    """dsir_log_weights' folded smoothing equals the add-1 smoothed log
+    bucket distribution of each corpus, ln((c_b + 1) / (n + B)),
+    computed here in Python from hashed_gram_counts (an absent bucket is
+    ln(1/(n+B))): per-doc weights agree to within one 4-dp rounding
+    quantum."""
     import math
+    from collections import Counter
 
     from meeseeker_spark.ext.dsir import (DEFAULT_BUCKETS,
-                                          bucket_log_probs,
                                           dsir_log_weights,
                                           hashed_gram_counts)
 
+    def log_probs(corpus):
+        c = Counter()
+        for r in hashed_gram_counts(corpus).collect():
+            c[r["bucket"]] += r["c"]
+        n = sum(c.values())
+        return ({b: math.log(cb + 1.0) - math.log(n + B)
+                 for b, cb in c.items()}, -math.log(n + B))
+
     target = docs.where("lang = 'en'")
     B = float(DEFAULT_BUCKETS)
-    p_rows = bucket_log_probs(target).collect()
-    q_rows = bucket_log_probs(docs).collect()
-    pn = p_rows[0]["_tot"]
-    qn = q_rows[0]["_tot"]
-    p = {r["bucket"]: r["logp"] for r in p_rows}
-    q = {r["bucket"]: r["logp"] for r in q_rows}
-    floor_p = math.log(1.0) - math.log(pn + B)
-    floor_q = math.log(1.0) - math.log(qn + B)
+    p, floor_p = log_probs(target)
+    q, floor_q = log_probs(docs)
 
     want: dict[int, float] = {}
     grams: dict[int, int] = {}
@@ -4248,19 +4066,25 @@ def test_cdc_shift_robustness(spark):
 
 
 def test_cdc_dedup_stats_and_fixture_dups(spark):
-    """dedup_stats accounting identity on a corpus with planted exact
-    dups; the sf0.1 fixture's duplicated docs surface as dup chunks
-    through the catalog entry."""
+    """Two copies of one blob chunk identically: every chunk hash covers
+    both docs, and the unique chunk bytes are half the total; the sf0.1
+    fixture's duplicated docs surface as dup chunks through the catalog
+    entry."""
     from meeseeker_spark import catalog
-    from meeseeker_spark.ext.cdc import cdc_chunks, dedup_stats
+    from meeseeker_spark.ext.cdc import cdc_chunks
 
     blob = _chain_bytes("z", 3000)
     df = spark.createDataFrame(
         [(1, bytearray(blob)), (2, bytearray(blob))],
         "doc_id LONG, b BINARY")
-    st = dedup_stats(cdc_chunks(df, bytes_col="b")).collect()[0]
-    assert st["bytes_total"] == 6000 and st["bytes_unique"] == 3000
-    assert st["dedup_ratio"] == 0.5
+    chunks = cdc_chunks(df, bytes_col="b").collect()
+    assert sum(r["length"] for r in chunks) == 6000
+    per_hash: dict = {}
+    for r in chunks:
+        per_hash.setdefault(r["chunk_hash"], set()).add(
+            (r["doc_id"], r["length"]))
+    assert all({d for d, _ in v} == {1, 2} for v in per_hash.values())
+    assert sum(min(n for _, n in v) for v in per_hash.values()) == 3000
 
     dup = catalog.ENTRIES["cdc_chunk_dups"].spark(
         spark, "/root/testdata/sf0.1")
@@ -4311,7 +4135,7 @@ def test_corpus_diff_vs_duckdb(spark):
 
 
 def test_diff_summary_counts(spark):
-    from meeseeker_spark.ext.diff import corpus_diff, diff_summary
+    from meeseeker_spark.ext.diff import corpus_diff
 
     old = spark.createDataFrame(
         [(1, "same text"), (2, "will change"), (3, "gone")],
@@ -4325,7 +4149,8 @@ def test_diff_summary_counts(spark):
     assert per_doc == {1: "unchanged", 2: "changed", 3: "removed",
                        4: "added"}
     summary = {r["status"]: r["n_docs"]
-               for r in diff_summary(old, new).collect()}
+               for r in corpus_diff(old, new).groupBy("status")
+               .agg(F.count("*").alias("n_docs")).collect()}
     assert summary == {"unchanged": 1, "changed": 1, "removed": 1,
                        "added": 1}
 
@@ -5852,13 +5677,13 @@ def test_pmi_finds_planted_collocation(spark):
 
 
 def test_bloom_screen_docs_no_false_negatives(spark):
-    """The batch-vs-corpus convenience wrapper: every probe doc whose
-    exact fingerprint IS in the corpus must come back maybe_seen=true;
-    fresh texts overwhelmingly come back false (bitmap prunes them
-    without any corpus join)."""
+    """Batch-vs-corpus screen of content fingerprints through a corpus
+    bloom: every probe doc whose exact fingerprint IS in the corpus must
+    come back maybe_seen=true; fresh texts overwhelmingly come back
+    false (the bitmap prunes them without any corpus join)."""
     from pyspark.sql import Row
 
-    from meeseeker_spark.ext.sketch import bloom_screen_docs
+    from meeseeker_spark.ext.sketch import bloom_bitmap, bloom_membership
     from meeseeker_spark.ext.text import fingerprint
     from meeseeker_spark.tables import load
 
@@ -5868,8 +5693,14 @@ def test_bloom_screen_docs_no_false_negatives(spark):
         [Row(text=f"entirely fresh probe text number {i}")
          for i in range(50)])
     probe = seen.unionByName(fresh)
-    out = bloom_screen_docs(corpus, probe)
-    flags = {r["probe_key"]: r["maybe_seen"] for r in out.collect()}
+
+    def keys(df):
+        return df.select(fingerprint(F.col("text")).alias("key")).distinct()
+
+    out = bloom_membership(keys(probe), bloom_bitmap(keys(corpus), "key",
+                                                     8192, 5),
+                           "key", 8192, 5)
+    flags = {r["key"]: r["maybe_seen"] for r in out.collect()}
     seen_keys = {r[0] for r in
                  seen.select(fingerprint(F.col("text"))).collect()}
     fresh_keys = {r[0] for r in

@@ -7,12 +7,16 @@ from __future__ import annotations
 
 from pyspark.sql import Row, functions as F
 
-from meeseeker_spark.ext.heavy import (
-    exact_candidate_counts,
-    heavy_hitters,
-    mg_summaries,
-    token_stream,
-)
+from meeseeker_spark.ext.heavy import heavy_hitters, mg_summaries, token_stream
+
+
+def exact_candidate_counts(token_df, summaries):
+    """Exact global counts of the MG candidate tokens only (the
+    certificate's precondition check)."""
+    cands = (summaries.where(F.col("token").isNotNull())
+             .select("token").distinct())
+    return (token_df.join(F.broadcast(cands), "token")
+            .groupBy("token").agg(F.count("*").alias("n")))
 
 
 def _docs(spark, texts, partitions=8):

@@ -243,7 +243,7 @@ def test_glob_unified_surface_fuzz(spark, ops, tmp_path_factory):
     from pyspark.sql import functions as F
 
     from meeseeker_spark.manifest import ManifestStore
-    from meeseeker_spark.query import OpsStore, UnifiedStore
+    from meeseeker_spark.query import OpsStore, ScheduleStore, UnifiedStore
 
     d = tmp_path_factory.mktemp("unifuzz")
     rows = [(i, 4200 + 21 * i, [f"w{i}", f"w{i+1}"]) for i in range(6)]
@@ -254,7 +254,9 @@ def test_glob_unified_surface_fuzz(spark, ops, tmp_path_factory):
         .withColumn("batch_id", F.lit(0)), 0)
     OpsStore.write(ops, str(d / "ops"))
     u = UnifiedStore(spark, str(d / "ops"), str(d / "sched"))
-    keys = [r["key"] for r in u.df().select("key").collect()]
+    keys = [r["key"] for store in (OpsStore(spark, str(d / "ops")),
+                                   ScheduleStore(spark, str(d / "sched")))
+            for r in store.df().select("key").collect()]
 
     def scan_keys(pattern):
         return sorted(r["key"] for r in u.scan(pattern).collect())

@@ -29,16 +29,25 @@ in the module, which first drops the scan's empty record batches
 reads no parquet itself: every consumer request goes through
 ``ManifestStore``.
 
-Every engine module (``meeseeker_spark/`` and ``meeseeker_spark/streaming/``)
-is reached by the imports of a program entry point: the CLI
+Every module of ``meeseeker_spark/`` (``streaming/`` and ``ext/``
+included) is reached by the imports of a program entry point: the CLI
 (``__main__.py``), the catalog behind ``bench.py``, ``bench.py`` and
-``perfbench/*.py``.  A module only tests import is a second
-implementation or a client for a system the package never connects to.
-``ext/`` is the catalog's operator library and is not checked."""
+``perfbench/*.py``.  So is every top-level function and class: a name
+reached code uses — an ``ast`` name, an attribute, an imported name or
+an identifier inside a string constant — reaches every top-level
+definition of that name in a reached module, and a definition's body is
+reached code once it is.  Module-level statements of reached modules are
+reached code, and so is a definition decorated by a function of its own
+module (the catalog's ``@register`` records it on import).  The match is
+by name alone, so it can only miss an orphan, never flag a used
+definition.  Code only tests use is a second implementation or a client
+for a system the package never connects to; a reference a test compares
+against lives in that test."""
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -144,7 +153,8 @@ def _imported(path: Path) -> set[str]:
             for d in names for i in range(d.count(".") + 1)}
 
 
-def test_every_engine_module_is_reachable():
+def _reached_modules() -> set[Path]:
+    """Every file the imports of the entry points load."""
     todo = [PKG / "__main__.py", PKG / "catalog.py", ROOT / "bench.py",
             *sorted((ROOT / "perfbench").glob("*.py"))]
     reached: set[Path] = set()
@@ -155,6 +165,67 @@ def test_every_engine_module_is_reachable():
         reached.add(path)
         todo.extend(p for p in map(_module_path, _imported(path))
                     if p is not None)
-    engine = [*PKG.glob("*.py"), *(PKG / "streaming").glob("*.py")]
-    orphans = sorted(_module_name(p) for p in engine if p not in reached)
+    return reached
+
+
+def test_every_engine_module_is_reachable():
+    reached = _reached_modules()
+    orphans = sorted(_module_name(p) for p in PKG.rglob("*.py")
+                     if p not in reached)
     assert not orphans, f"no entry point imports {orphans}"
+
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _names(node: ast.AST) -> set[str]:
+    """The names ``node`` uses: names, attributes, imported names and
+    the identifiers inside string constants."""
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, (ast.Import, ast.ImportFrom)):
+            out.update(p for a in n.names for p in a.name.split("."))
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            out.update(re.findall(r"[A-Za-z_]\w*", n.value))
+    return out
+
+
+def _registered(node: ast.AST, local: set[str]) -> bool:
+    """Whether a decorator of ``node`` is a function of its module."""
+    for d in getattr(node, "decorator_list", ()):
+        f = d.func if isinstance(d, ast.Call) else d
+        if isinstance(f, ast.Name) and f.id in local:
+            return True
+    return False
+
+
+def test_every_engine_function_is_reachable():
+    reached_modules = _reached_modules()
+    defs: dict[tuple[Path, str], ast.AST] = {}
+    used: set[str] = set()
+    for path in reached_modules:
+        body = ast.parse(path.read_text()).body
+        local = {n.name for n in body if isinstance(n, _DEFS)}
+        for node in body:
+            if (isinstance(node, _DEFS) and PKG in path.parents
+                    and not _registered(node, local)):
+                defs[path, node.name] = node
+            else:
+                used |= _names(node)
+    reached: set[tuple[Path, str]] = set()
+    while new := [k for k in defs if k not in reached and k[1] in used]:
+        for k in new:
+            reached.add(k)
+            used |= _names(defs[k])
+    orphans = sorted(f"{_module_name(path)}.{name}"
+                     for (path, name) in defs.keys() - reached)
+    for path in sorted(PKG.rglob("*.py")):
+        if path not in reached_modules:
+            orphans += [f"{_module_name(path)}.{n.name}"
+                        for n in ast.parse(path.read_text()).body
+                        if isinstance(n, _DEFS)]
+    assert not orphans, f"no entry point reaches {orphans}"

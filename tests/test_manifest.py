@@ -178,10 +178,10 @@ def test_interleaved_append_raises_instead_of_lost_update(spark, tmp_path):
 
 
 def test_streaming_sink_replay_exactly_once(spark, tmp_path):
-    """The manifest sink in a real Structured Streaming replay: wipe the
-    checkpoint so every batch re-fires — recorded batch ids make the
-    re-delivery a no-op (the dir-overwrite scheme's guarantee, now one
-    manifest line)."""
+    """Batch-id appends as a foreachBatch sink in a real Structured
+    Streaming replay: wipe the checkpoint so every batch re-fires —
+    recorded batch ids make the re-delivery a no-op (the dir-overwrite
+    scheme's guarantee, now one manifest line)."""
     import shutil
 
     incoming = tmp_path / "in"
@@ -202,7 +202,7 @@ def test_streaming_sink_replay_exactly_once(spark, tmp_path):
     def run():
         q = (spark.readStream.schema("id bigint, v string")
              .option("maxFilesPerTrigger", 1).parquet(str(incoming))
-             .writeStream.foreachBatch(s.sink())
+             .writeStream.foreachBatch(lambda df, b: s.append(df, b))
              .option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
         q.awaitTermination(120)
@@ -386,45 +386,21 @@ def test_manifest_random_op_sequences(spark, tmp_path_factory):
     run()
 
 
-def test_time_travel_reads(spark, tmp_path):
-    """df(version=N) reads the immutable snapshot, versions() lists the
-    horizon, and corpus_diff across two store versions reports exactly
-    what an overwrite changed."""
-    from meeseeker_spark.ext.diff import corpus_diff
-
-    s = ManifestStore(spark, str(tmp_path / "m"))
-    s.append(spark.createDataFrame(
-        [(1, "one"), (2, "two")], "doc_id bigint, text string"))      # v1
-    s.append(spark.createDataFrame(
-        [(3, "three")], "doc_id bigint, text string"))                # v2
-    s.overwrite(spark.createDataFrame(
-        [(1, "one"), (3, "three EDITED")],
-        "doc_id bigint, text string"))                                # v3
-    assert s.versions() == [1, 2, 3]
-    assert {r["doc_id"] for r in s.df(version=1).collect()} == {1, 2}
-    assert {r["doc_id"] for r in s.df(version=2).collect()} == {1, 2, 3}
-    assert {r["doc_id"] for r in s.df().collect()} == {1, 3}
-    statuses = {r["doc_id"]: r["status"]
-                for r in corpus_diff(s.df(version=2), s.df()).collect()}
-    assert statuses == {1: "unchanged", 2: "removed", 3: "changed"}
-    with pytest.raises(FileNotFoundError):
-        s.df(version=9)
-
-
 def test_time_travel_horizon_after_gc(spark, tmp_path):
-    """gc prunes manifests outside keep_versions: pruned versions raise
-    loudly instead of silently returning partial data; kept window
-    versions remain fully readable (gc retains their files)."""
+    """gc prunes manifests outside keep_versions and the files only they
+    reference; every file a kept version lists survives on disk (a
+    reader that resolved the superseded manifest can still read it)."""
     s = ManifestStore(spark, str(tmp_path / "m"))
     for i in range(4):
         s.append(_rows(spark, [i]))                # v1..v4
     s.overwrite(_rows(spark, [99]))                # v5 drops v1-v4 files
     s.gc(keep_versions=2)
     assert s.versions() == [4, 5]
-    with pytest.raises(FileNotFoundError):
-        s.df(version=2)
     # v4 is inside the kept window: its files survived gc
-    assert sorted(r["id"] for r in s.df(version=4).collect()) == [0, 1, 2, 3]
+    import pyarrow.parquet as pq
+    v4 = [os.path.join(s.path, f) for f in s._read_manifest(4)["files"]]
+    assert sorted(pq.ParquetDataset(v4).read().column("id").to_pylist()) \
+        == [0, 1, 2, 3]
     assert [r["id"] for r in s.df().collect()] == [99]
 
 
@@ -607,8 +583,8 @@ def test_maintenance_gc_leaves_one_version_of_grace(spark, tmp_path):
 @pytest.fixture(scope="module")
 def sink_outputs(spark, tmp_path_factory):
     """Every chain sink's output, from two streaming triggers each: ops,
-    channels and ``_meta`` from ``start_ingest``, the schedule publish
-    log and the block-channel log."""
+    channels and ``_meta`` from ``start_ingest``, and the schedule
+    publish log."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -634,9 +610,6 @@ def sink_outputs(spark, tmp_path_factory):
         P.start_schedule_publisher(
             P.read_schedule_stream(spark, str(root / "witness_schedules"), 1),
             str(root / "schedules"), str(root / "ck2")),
-        P.start_block_channel_publisher(
-            P.read_block_stream(spark, blocks, 1), str(root / "blockchan"),
-            str(root / "ck3")),
     ):
         q.awaitTermination(120)
     return root
@@ -716,7 +689,7 @@ def _df_jobs(spark, store) -> int:
 
 
 @pytest.mark.parametrize("case", [
-    "ops", "channels", "ops_meta", "schedules", "blockchan",
+    "ops", "channels", "ops_meta", "schedules",
     _after_compact, _after_compact_meta, _after_expire, _after_write,
     _after_reset_all, _after_schemaless_manifest,
 ], ids=lambda c: c if isinstance(c, str) else c.__name__[1:])

@@ -175,7 +175,7 @@ def test_expire_keeps_null_ingested_at(spark, tmp_path_factory):
 
 def test_unified_store_schedule_scan(spark, tmp_path_factory, store):
     """UnifiedStore (VERDICT r3 item 8): schedule publish log answers the
-    same scan/get surface as the ops store through the same glob
+    same scan/find surface as the ops store through the same glob
     translator, and ops globs never match schedule rows."""
     from meeseeker_spark.query import ScheduleStore, UnifiedStore
 
@@ -191,7 +191,7 @@ def test_unified_store_schedule_scan(spark, tmp_path_factory, store):
     got = u.scan("hive:witness:schedule:*").collect()
     assert {r["key"] for r in got} == {"hive:witness:schedule:4200",
                                       "hive:witness:schedule:4221"}
-    one = u.get("hive:witness:schedule:4200").collect()
+    one = u.scan("hive:witness:schedule:4200").collect()
     assert len(one) == 1
     assert '"next_shuffle_block_num":4200' in one[0]["value"]
     # ops globs exclude schedule rows (NULL op_type/trx segments)
@@ -355,10 +355,9 @@ def test_exists_decodes_only_bound_columns(spark, store, monkeypatch):
 
 def test_unified_store_ops_half_goes_through_ops_store(
         spark, store, tmp_path_factory):
-    """UnifiedStore answers its ops half through OpsStore: a block the
-    ops store holds answers ``has_block`` on the driver with no Spark
-    job, and a block lookup or block glob returns OpsStore's rows plus
-    the schedule row published at that block."""
+    """UnifiedStore answers its ops half through OpsStore: a block
+    lookup or block glob returns OpsStore's rows plus the schedule row
+    published at that block."""
     from meeseeker_spark.query import UnifiedStore
 
     b = _point_row(store)["block_num"]
@@ -373,8 +372,6 @@ def test_unified_store_ops_half_goes_through_ops_store(
     def keys(df):
         return sorted(r["key"] for r in df.collect())
 
-    assert _jobs(spark, lambda: u.has_block(b)) == 0
-    assert not u.has_block(10**12)
     assert keys(u.find_block(b)) == sorted(
         keys(store.find_block(b)) + [f"hive:witness:schedule:{b}"])
     assert keys(u.scan(f"hive:{b}:*")) == keys(store.scan(f"hive:{b}:*"))

@@ -17,8 +17,7 @@ def test_restart_backoff_doubles_and_caps():
             raise RuntimeError("boom")
         return "ok"
 
-    out = run_with_restarts(flaky, max_restarts=20, base_backoff_s=0.01,
-                            cap_s=30.0, sleep=sleeps.append)
+    out = run_with_restarts(flaky, max_restarts=20, sleep=sleeps.append)
     assert out == "ok"
     assert sleeps[0] == pytest.approx(0.01)
     assert sleeps[1] == pytest.approx(0.02)

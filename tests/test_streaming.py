@@ -12,6 +12,8 @@ import pytest
 
 from meeseeker_spark import fixtures
 from meeseeker_spark.flatten import flatten_blocks
+from meeseeker_spark.manifest import require_committed
+from meeseeker_spark.query import OpsStore
 from meeseeker_spark.resume import resolve_start_block
 from meeseeker_spark.schemas import BLOCKS, VIRTUAL_OPS
 from meeseeker_spark.streaming import pipeline as P
@@ -45,7 +47,7 @@ def test_stream_matches_batch(spark, fx, tmp_path_factory):
                        str(d / "ckpt"))
     q.awaitTermination(120)
 
-    got = P.ops_view(spark, str(d / "ops"))
+    got = OpsStore(spark, str(d / "ops")).df()
     assert sorted(r["key"] for r in got.collect()) == sorted(
         o["key"] for o in fx.ops_expected)
     # one manifest commit per micro-batch; multiple micro-batches happened
@@ -53,7 +55,7 @@ def test_stream_matches_batch(spark, fx, tmp_path_factory):
     v = ManifestStore(spark, str(d / "ops")).current_version()
     assert v and v > 1
     # channel fan-out landed
-    ch = P.channel_events_view(spark, str(d / "channels"))
+    ch = require_committed(spark, str(d / "channels")).df()
     assert ch.count() > 0
     # HWM matches the last fixture block
     assert P.last_block_num(spark, str(d / "ops")) == fx.blocks[-1]["block_num"]
@@ -72,14 +74,14 @@ def test_checkpoint_resume_no_duplicates(spark, fx, tmp_path_factory):
         q.awaitTermination(120)
 
     run()
-    n1 = P.ops_view(spark, str(d / "ops")).count()
+    n1 = OpsStore(spark, str(d / "ops")).df().count()
 
     # late delivery: second half of the chain arrives, same checkpoint
     _write_batches(fx.blocks[half:], "blocks", str(d / "blocks2"), 2)
     for f in glob.glob(str(d / "blocks2" / "*.parquet")):
         os.rename(f, str(d / "blocks" / ("late-" + os.path.basename(f))))
     run()
-    got = P.ops_view(spark, str(d / "ops"))
+    got = OpsStore(spark, str(d / "ops")).df()
     n2 = got.count()
 
     expected_real = [o for o in fx.ops_expected
@@ -114,7 +116,7 @@ def test_late_vops_join_their_block(spark, fx, tmp_path_factory):
     _write_batches(fx.virtual_ops, "virtual_ops", str(d / "vops"), 1)
     run()
 
-    got = P.ops_view(spark, str(d / "ops"))
+    got = OpsStore(spark, str(d / "ops")).df()
     assert sorted(r["key"] for r in got.collect()) == sorted(
         o["key"] for o in fx.ops_expected)
 
@@ -161,11 +163,9 @@ def test_resume_policy():
 def test_stream_mode_tip():
     # meeseeker.rb:95 / block_follower_job.rb:113-123: head mode reads the
     # chain head, irreversible waits for finality, anything else aborts
-    from meeseeker_spark.resume import resolve_tip
-    assert resolve_tip(1000, 985, "head") == 1000
-    assert resolve_tip(1000, 985, "irreversible") == 985
+    # before a stream starts
     with pytest.raises(ValueError, match="Unknown stream mode"):
-        resolve_tip(1000, 985, "laggy")
+        P.start_ingest(None, "ops", "channels", "ckpt", mode="laggy")
 
 
 def test_irreversible_mode_gates_and_folds(spark, fx, tmp_path_factory):
@@ -187,7 +187,7 @@ def test_irreversible_mode_gates_and_folds(spark, fx, tmp_path_factory):
 
     run()
     head1 = fx.blocks[half - 1]["block_num"]
-    v1 = P.ops_view(spark, str(d / "ops"))
+    v1 = OpsStore(spark, str(d / "ops")).df()
     assert v1.agg({"block_num": "max"}).first()[0] == head1 - LAG
     # the reversible tail is staged, not lost — and the channels publish
     # nothing the store hasn't committed
@@ -196,7 +196,7 @@ def test_irreversible_mode_gates_and_folds(spark, fx, tmp_path_factory):
     assert (sorted(r["block_num"] for r in
                    pend.select("block_num").distinct().collect())
             == list(range(head1 - LAG + 1, head1 + 1)))
-    ch1 = P.channel_events_view(spark, str(d / "channels"))
+    ch1 = require_committed(spark, str(d / "channels")).df()
     assert ch1.agg({"block_num": "max"}).first()[0] == head1 - LAG
 
     # the head moves past the staged rows → they fold into the store
@@ -205,7 +205,7 @@ def test_irreversible_mode_gates_and_folds(spark, fx, tmp_path_factory):
         os.rename(f, str(d / "blocks" / ("late-" + os.path.basename(f))))
     run()
     head2 = fx.blocks[-1]["block_num"]
-    v2 = P.ops_view(spark, str(d / "ops"))
+    v2 = OpsStore(spark, str(d / "ops")).df()
     want = sorted(o["key"] for o in fx.ops_expected
                   if o["block_num"] <= head2 - LAG
                   and o["trx_id"] != "0" * 40)   # no vop stream in this test
@@ -264,10 +264,10 @@ def test_irreversible_replay_after_commit_keeps_folded_rows(
         the replay symmetry claim covers every output of the trigger,
         not just the ops store (VERDICT r13 item 1)."""
         ops = sorted(
-            r["key"] for r in P.ops_view(spark, str(d / "ops")).collect())
+            r["key"] for r in OpsStore(spark, str(d / "ops")).df().collect())
         chans = sorted(
             tuple(r) for r in
-            P.channel_events_view(spark, str(d / "channels")).collect())
+            require_committed(spark, str(d / "channels")).df().collect())
         meta = sorted(
             tuple(r) for r in
             ManifestStore(spark, str(d / "ops") + "_meta").df().collect())
@@ -354,9 +354,9 @@ def test_irreversible_replay_before_commit_all_sinks_converge(
                 .committed_batch_ids() == {0}
         run()                            # (re)plays batch 1 cleanly
         ops = sorted(r["key"] for r in
-                     P.ops_view(spark, str(root / "ops")).collect())
-        chans = sorted(tuple(r) for r in P.channel_events_view(
-            spark, str(root / "channels")).collect())
+                     OpsStore(spark, str(root / "ops")).df().collect())
+        chans = sorted(tuple(r) for r in require_committed(
+            spark, str(root / "channels")).df().collect())
         meta = sorted(tuple(r) for r in ManifestStore(
             spark, str(root / "ops") + "_meta").df().collect())
         return ops, chans, meta
@@ -620,7 +620,7 @@ def test_engine_stream_ingest(spark, fx, tmp_path_factory):
         str(d / "ops"), str(d / "channels"), str(d / "ckpt"))
     q.awaitTermination(120)
 
-    got = P.ops_view(spark, str(d / "ops"))
+    got = OpsStore(spark, str(d / "ops")).df()
     cols = ["chain", "block_num", "trx_id", "trx_index", "contract",
             "action", "transaction_num", "value", "key"]
     got_rows = sorted(
@@ -634,7 +634,7 @@ def test_engine_stream_ingest(spark, fx, tmp_path_factory):
     assert v and v > 1
 
     from pyspark.sql import functions as F
-    ch = P.channel_events_view(spark, str(d / "channels"))
+    ch = require_committed(spark, str(d / "channels")).df()
     names = {r["channel"] for r in ch.select("channel").distinct().collect()}
     # wire-compat: {chain}:{contract} / {chain}:{contract}:{action}, no
     # literal segment between chain and contract (follower_job.rb:81-82)
@@ -653,46 +653,6 @@ def test_engine_stream_ingest(spark, fx, tmp_path_factory):
     # HWM analog of LAST_STEEM_ENGINE_BLOCK_NUM_KEY_SUFFIX (:76)
     assert P.last_block_num(spark, str(d / "ops")) == \
         fx.engine_blocks[-1]["blockNumber"]
-
-
-def test_block_channel_header_gate(spark, fx, tmp_path_factory):
-    """MEESEEKER_INCLUDE_BLOCK_HEADER ingest gate (meeseeker.rb:97,
-    block_follower_job.rb:60-76): header fields ride in the {chain}:block
-    payload when on; bare {block_num} when off.  Each trigger is one
-    manifest commit; a checkpoint-wiped replay short-circuits on the
-    recorded batch ids instead of publishing twice."""
-    import json as _json
-    import shutil
-
-    from meeseeker_spark.manifest import ManifestStore
-
-    d = tmp_path_factory.mktemp("blkchan")
-    _write_batches(fx.blocks, "blocks", str(d / "blocks"), 2)
-
-    for sub, include in (("with_hdr", True), ("no_hdr", False)):
-        def run():
-            q = P.start_block_channel_publisher(
-                P.read_block_stream(spark, str(d / "blocks"),
-                                    max_files_per_trigger=1),
-                str(d / sub), str(d / f"ckpt_{sub}"),
-                include_header=include)
-            q.awaitTermination(120)
-
-        run()
-        v = ManifestStore(spark, str(d / sub)).current_version()
-        # one commit per trigger = per block file
-        assert v == len(glob.glob(str(d / "blocks" / "*.parquet")))
-        shutil.rmtree(d / f"ckpt_{sub}")          # full replay
-        run()
-        assert ManifestStore(spark, str(d / sub)).current_version() == v
-        rows = P.channel_events_view(spark, str(d / sub)).collect()
-        assert len(rows) == len(fx.blocks)
-        payload = _json.loads(rows[0]["payload"])
-        assert rows[0]["channel"] == "hive:block"
-        if include:
-            assert {"block_num", "previous", "witness"} <= payload.keys()
-        else:
-            assert set(payload.keys()) == {"block_num"}
 
 
 def test_streaming_dedup_screen(spark, tmp_path_factory):
@@ -817,7 +777,7 @@ def test_ingest_checkpoint_wipe_replay_short_circuits(spark, fx,
         q.awaitTermination(120)
 
     run()
-    got = P.ops_view(spark, str(d / "ops"))
+    got = OpsStore(spark, str(d / "ops")).df()
     want = sorted(o["key"] for o in fx.ops_expected
                   if not o["key"].split(":")[2].startswith("0000"))
     # vop-less ingest: compare against the real-trx subset via batch path
@@ -827,13 +787,13 @@ def test_ingest_checkpoint_wipe_replay_short_circuits(spark, fx,
             == sorted(r["key"] for r in batch.collect()))
     assert P.last_block_num(spark, str(d / "ops")) \
         == fx.blocks[-1]["block_num"]
-    assert P.channel_events_view(spark, str(d / "channels")).count() > 0
+    assert require_committed(spark, str(d / "channels")).df().count() > 0
     n_versions = ManifestStore(spark, str(d / "ops")).current_version()
     assert n_versions and n_versions > 1     # one commit per micro-batch
 
     shutil.rmtree(str(d / "ckpt"))           # full replay
     run()
-    got2 = P.ops_view(spark, str(d / "ops"))
+    got2 = OpsStore(spark, str(d / "ops")).df()
     assert got2.count() == got.count()       # no duplicates
     assert ManifestStore(spark, str(d / "ops")).current_version() \
         == n_versions                        # every replay short-circuited
@@ -855,7 +815,7 @@ def test_engine_manifest_store_impl(spark, fx, tmp_path_factory):
     from meeseeker_spark.schemas import ENGINE_BLOCKS
     batch = flatten_engine_blocks(
         spark.read.schema(ENGINE_BLOCKS).parquet(str(d / "blocks")))
-    got = P.ops_view(spark, str(d / "ops"))
+    got = OpsStore(spark, str(d / "ops")).df()
     assert (sorted(r["key"] for r in got.collect())
             == sorted(r["key"] for r in batch.collect()))
     assert P.last_block_num(spark, str(d / "ops")) \
@@ -916,12 +876,12 @@ def test_staging_failure_commits_nothing(spark, fx, tmp_path_factory,
     assert not _orphans(stores["ops_meta"])
 
     run()                            # batch 1 replays and commits
-    assert sorted(r["key"] for r in P.ops_view(
-        spark, str(d / "ops")).collect()) \
+    assert sorted(r["key"] for r in OpsStore(
+        spark, str(d / "ops")).df().collect()) \
         == sorted(o["key"] for o in fx.ops_expected)
     got = collections.Counter(
-        (r["channel"], r["kind"]) for r in P.channel_events_view(
-            spark, str(d / "channels")).collect())
+        (r["channel"], r["kind"]) for r in require_committed(
+            spark, str(d / "channels")).df().collect())
     assert got == collections.Counter(
         (c["channel"], c["kind"]) for c in fx.channels_expected
         if c["kind"] in ("op", "custom_id"))
@@ -1140,80 +1100,10 @@ def test_screen_index_layout_marker_guard(spark, tmp_path_factory):
     q.awaitTermination(120)
 
 
-def test_screen_quality_gate(spark, tmp_path_factory):
-    """Opt-in quality gate on the ingest screen: rejected docs land in
-    quality_rejected, never reach the corpus or the band index, and a
-    checkpoint-wipe replay stays idempotent (deterministic gate →
-    identical reject set on retry)."""
-    import shutil
-    import time as _time
-
-    from meeseeker_spark.streaming.screen import start_screen
-
-    d = tmp_path_factory.mktemp("screenqg")
-    incoming, out, ckpt = d / "incoming", d / "out", d / "ckpt"
-    os.makedirs(incoming)
-
-    long_a = " ".join(f"ship{i}" for i in range(30))
-    long_b = " ".join(f"tide{i}" for i in range(30))
-    cols = ["doc_id", "text", "lang", "source", "n_chars"]
-
-    def doc(i, text):
-        return (i, text, "en", "web", len(text))
-
-    def drop(name, rows):
-        tmp = d / ("w_" + name)
-        spark.createDataFrame(rows, cols).coalesce(1).write.parquet(str(tmp))
-        part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
-        os.rename(tmp / part, incoming / f"{name}.parquet")
-
-    def gate(df):
-        # stats-floor gate: ≥10 whitespace words (a gopher_rules-style
-        # screen; any deterministic schema-preserving filter works)
-        from pyspark.sql import functions as SF
-        return df.where(SF.size(SF.split("text", "\\s+")) >= 10)
-
-    drop("b1", [doc(1, long_a), doc(2, "too short to pass")])
-    q = start_screen(spark, str(incoming), str(out), str(ckpt),
-                     quality_gate=gate)
-    q.awaitTermination(120)
-    _time.sleep(1.1)
-    drop("b2", [doc(10, long_b), doc(11, "also tiny"),
-                doc(12, long_a.replace("ship0", "boat0"))])
-    q = start_screen(spark, str(incoming), str(out), str(ckpt),
-                     quality_gate=gate)
-    q.awaitTermination(120)
-
-    corpus = {r["doc_id"] for r in
-              spark.read.parquet(str(out / "corpus")).collect()}
-    rejected = {r["doc_id"] for r in
-                spark.read.parquet(str(out / "quality_rejected")).collect()}
-    flagged = {(r["new_id"], r["corpus_id"]) for r in
-               spark.read.parquet(str(out / "flagged")).collect()}
-    assert corpus == {1, 10}            # 12 = near-dup of 1, screened
-    assert rejected == {2, 11}          # gate rejects, dedup never sees
-    assert flagged == {(12, 1)}
-    # band index only carries gate survivors
-    idx_ids = {r["doc_id"] for r in
-               spark.read.parquet(str(out / "index")).collect()}
-    assert idx_ids == {1, 10}
-
-    # replay after checkpoint wipe: identical end state
-    shutil.rmtree(ckpt)
-    q = start_screen(spark, str(incoming), str(out), str(ckpt),
-                     quality_gate=gate)
-    q.awaitTermination(120)
-    assert {r["doc_id"] for r in
-            spark.read.parquet(str(out / "corpus")).collect()} == {1, 10}
-    assert {r["doc_id"] for r in
-            spark.read.parquet(str(out / "quality_rejected")).collect()} \
-        == {2, 11}
-
-
 def test_screen_report_rollup(spark, tmp_path_factory):
-    """screen_report: per-batch admitted/flagged/quality counts from the
+    """screen_report: per-batch admitted/flagged counts from the
     batch_id=N layout — all-rejected batches still appear at 0 admitted,
-    missing quality dir reads as zeros, no tree → loud error."""
+    no tree → loud error."""
     import pytest as _pytest
 
     from meeseeker_spark.streaming.screen import screen_report
@@ -1238,14 +1128,7 @@ def test_screen_report_rollup(spark, tmp_path_factory):
     got = [tuple(r) for r in screen_report(spark, str(out)).collect()]
     # trailing None: no drift monitor ran (NULL, not 0 — 0 would
     # read as a measured zero-drift batch)
-    assert got == [(0, 2, 0, 0, None), (1, 1, 2, 0, None),
-                   (2, 0, 1, 0, None)]
-
-    # quality_rejected dir present → real counts appear
-    w("quality_rejected", 1, [(9, "junk")], doc_cols)
-    got2 = [tuple(r) for r in screen_report(spark, str(out)).collect()]
-    assert got2 == [(0, 2, 0, 0, None), (1, 1, 2, 1, None),
-                    (2, 0, 1, 0, None)]
+    assert got == [(0, 2, 0, None), (1, 1, 2, None), (2, 0, 1, None)]
 
     with _pytest.raises(FileNotFoundError):
         screen_report(spark, str(d / "nowhere"))
