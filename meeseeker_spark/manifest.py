@@ -39,18 +39,22 @@ file with no ranges — one written before ranges were recorded, or
 without those columns or statistics — is never pruned; the next
 ``compact`` records ranges for the files it rewrites.
 
-A read with equality bindings (``find`` / ``exists``: GET, ``find
-block``, ``find trx``, ``has block``, a ``hive:N:*`` or
-``hive:*:<trx>:*`` scan) prunes to the candidate files, those whose
-ranges can hold the bindings (every file for a ``trx_id``, which has no
-range), and reads them with pyarrow on the driver — no Spark job; with
-no candidate, no I/O at all — as long as they total at most
-``_FILE_BYTES`` (128 MiB, the one-file size ``compact`` also writes).
-Past that, or with a candidate lacking ranges, or for a version without
-a schema, Spark reads just the candidate files, filtered.  Both live in
-the one read helper, ``_read``; ``find`` is the one place driver rows
-become a DataFrame, and it drops empty record batches first (PySpark's
-``createDataFrame`` loses a non-empty batch that follows an empty one).
+A read with equality bindings (``find`` / ``exists``: every consumer
+request — GET, ``find block``, ``find trx``, ``has block`` and every
+SCAN, with the columns its glob binds) prunes to the candidate files,
+those whose ranges can hold the bindings (every file of the chain for a
+``trx_id`` or ``op_type``, which have no range), and reads them with
+pyarrow on the driver — no Spark job; with no candidate, no I/O at all
+— as long as they total at most ``_FILE_BYTES`` (128 MiB, the one-file
+size ``compact`` also writes) and the matching rows stay at most
+``_ROWS``.  The driver reads batch by batch and stops at the batch that
+passes ``_ROWS``; ``exists`` stops at the first non-empty one.  Past
+either bound, or with a candidate lacking ranges, or for a version
+without a schema, Spark reads just the candidate files, filtered.  The
+rule lives in the one read helper, ``_read``, which keeps only non-empty
+record batches (PySpark's ``createDataFrame`` loses a non-empty batch
+that follows an empty one); ``find`` is the one place driver rows
+become a DataFrame.
 
 Protocol:
 
@@ -120,6 +124,11 @@ _RANGED = ("block_num", "chain")
 # one compacted file: what ``compact`` sizes its output files to, and
 # the most a bound read takes on the driver (``_read``)
 _FILE_BYTES = 128 * 1024 * 1024
+
+# the most rows a bound read returns from the driver (``_read``): past
+# it, handing the rows to the JVM (``createDataFrame``) costs more than
+# a Spark job over the candidate files
+_ROWS = 10_000
 
 
 def _version(name: str) -> int | None:
@@ -451,7 +460,8 @@ class ManifestStore:
         return list(self._read_manifest()["files"])
 
     def _read(self, m: dict, where: dict | None = None,
-              columns: list[str] | None = None) -> Rows:
+              columns: list[str] | None = None,
+              enough: int | None = None) -> Rows:
         """THE read of manifest ``m``'s table, every column or just
         ``columns``.  A listed file that gc removed raises
         FileNotFoundError instead of reading as partial data.
@@ -459,36 +469,52 @@ class ManifestStore:
         Without ``where``: a Spark read of every file — with the
         recorded schema no Spark job runs; a version that records none
         is inferred.  With equality bindings ``where`` (``{column:
-        value}``; a None value equals no row): the matching rows of the
-        candidate files, those whose recorded ranges can hold the
-        bindings (a file without ranges is always one).  When the
-        version records its schema, every candidate has ranges and the
-        candidates total at most ``_FILE_BYTES``, they are Arrow rows
-        read on the driver (no candidate: an empty table, no I/O),
-        every timestamp cast to ``timestamp[us, tz=UTC]`` — a naive one
-        would be taken as session-local time downstream.  Otherwise
-        they are the Spark read of the candidate files, filtered."""
+        value}``; a None value equals no row; ``{}`` binds nothing): the
+        matching rows of the candidate files, those whose recorded
+        ranges can hold the bindings (a file without ranges is always
+        one).  When the version records its schema, every candidate has
+        ranges and the candidates total at most ``_FILE_BYTES``, the
+        driver reads them with pyarrow batch by batch and keeps the
+        non-empty batches (no candidate: an empty table, no I/O); if
+        the kept rows stay at most ``_ROWS`` they are the answer, as
+        Arrow rows with every timestamp cast to ``timestamp[us,
+        tz=UTC]`` — a naive one would be taken as session-local time
+        downstream.  The batch that takes them past ``_ROWS`` ends the
+        driver read, and the answer is the Spark read of the candidate
+        files, filtered, as it is when the driver cannot read them.
+        With ``enough``, a caller that needs only that many rows (an
+        existence probe: one) gets the driver's Arrow rows as soon as a
+        batch brings the kept rows to it."""
         files, schema = m["files"], m.get("schema")
         stats = m.get("file_stats", {})
         if where is not None:
             files = [f for f in files
                      if f not in stats or _can_hold(stats[f], where)]
-        size = self._bytes(files)
+        size = self._bytes(files, m["version"])
         if where is not None and schema is not None \
                 and all(f in stats for f in files) and size <= _FILE_BYTES:
             struct = T.StructType.fromJson(schema)
             target = pa.schema([f.with_nullable(True)
                                 for f in to_arrow_schema(struct)
                                 if columns is None or f.name in columns])
-            if not files:
-                return target.empty_table()
-            match = functools.reduce(
-                operator.and_, (pc.field(c) == v for c, v in where.items()))
-            table = pads.dataset(
+            match = functools.reduce(operator.and_, (
+                pc.field(c) == v for c, v in where.items())) if where else None
+            batches = pads.dataset(
                 [os.path.join(self.path, f) for f in files],
-                format="parquet").to_table(columns=target.names,
-                                           filter=match)
-            return table.cast(target)
+                format="parquet").to_batches(columns=target.names,
+                                             filter=match) if files else ()
+            kept, n = [], 0
+            for b in batches:
+                if not b.num_rows:
+                    continue
+                kept.append(b.cast(target))
+                n += b.num_rows
+                if enough is not None and n >= enough:
+                    return pa.Table.from_batches(kept, target)
+                if n > _ROWS:
+                    break
+            else:
+                return pa.Table.from_batches(kept, target)
         if not m["files"]:
             raise FileNotFoundError(
                 f"manifest store {self.path} has no committed data")
@@ -503,9 +529,10 @@ class ManifestStore:
             df = df.where(F.col(c) == v)
         return df if columns is None else df.select(*columns)
 
-    def _bytes(self, files: list[str]) -> int:
-        """The total size of ``files``, from one ``os.stat`` each; a
-        file gc removed raises FileNotFoundError."""
+    def _bytes(self, files: list[str], version: int) -> int:
+        """The total size of ``files``, which manifest ``version``
+        lists, from one ``os.stat`` each; a missing file raises
+        FileNotFoundError naming ``version``."""
         total, missing = 0, []
         for f in files:
             try:
@@ -513,10 +540,14 @@ class ManifestStore:
             except FileNotFoundError:
                 missing.append(f)
         if missing:
+            cur = self.current_version()
+            cause = (f"v{cur} superseded it and gc removed them; re-read "
+                     "the store" if cur != version else
+                     "it is the current version, so they were deleted "
+                     "outside the store")
             raise FileNotFoundError(
-                f"version {self.current_version()} references "
-                f"{len(missing)} gc'd file(s) (e.g. {missing[0]}); the "
-                "CURRENT manifest is broken — files were pruned externally")
+                f"manifest v{version} references {len(missing)} missing "
+                f"file(s) (e.g. {missing[0]}): {cause}")
         return total
 
     def df(self) -> DataFrame:
@@ -526,26 +557,26 @@ class ManifestStore:
     def find(self, where: dict) -> DataFrame:
         """The committed rows whose columns equal every value in
         ``where`` (``{column: value}``, e.g. ``block_num`` and
-        ``chain``).  Bindings the recorded file ranges can answer are
-        read on the driver and handed to Spark as a local relation, so
-        collecting the frame launches no job (``_read``)."""
+        ``chain``; ``{}``: every row).  While the candidate files fit
+        one compacted file and the matches stay at most ``_ROWS``, they
+        are read on the driver and handed to Spark as a local relation,
+        so collecting the frame launches no job; past either bound the
+        frame is the Spark read of the candidate files (``_read``).
+        The driver rows hold no empty record batch: PySpark drops a
+        non-empty batch that follows an empty one past the first."""
         m = self._read_manifest()
         rows = self._read(m, where)
         if isinstance(rows, DataFrame):
             return rows
-        # PySpark drops a non-empty record batch that follows an empty
-        # one past the first (a multi-file filtered scan yields one empty
-        # batch per file without a match), so only non-empty ones go over
-        rows = pa.Table.from_batches(
-            [b for b in rows.to_batches() if b.num_rows], rows.schema)
         return self.spark.createDataFrame(
             rows, T.StructType.fromJson(m["schema"]))
 
     def exists(self, where: dict) -> bool:
-        """Whether ``find(where)`` holds a row — on the driver path the
-        Arrow row count, with no frame at all.  Only the bound columns
-        are decoded."""
-        rows = self._read(self._read_manifest(), where, columns=list(where))
+        """Whether ``find(where)`` holds a row.  On the driver path the
+        read ends at the first non-empty batch, with no frame at all;
+        only the bound columns are decoded."""
+        rows = self._read(self._read_manifest(), where, columns=list(where),
+                          enough=1)
         if isinstance(rows, DataFrame):
             return not rows.isEmpty()
         return rows.num_rows > 0
@@ -658,7 +689,8 @@ class ManifestStore:
         never disturbed: the swap is one manifest commit (``fold``, which
         also prunes the batch ids), and the old files remain until
         ``gc()``."""
-        total = self._bytes(self.files())
+        m = self._read_manifest()
+        total = self._bytes(m["files"], m["version"])
         n_out = max(1, -(-total // _FILE_BYTES))
 
         def _rewrite(df: DataFrame) -> DataFrame:

@@ -7,21 +7,18 @@ whose files are range-clustered on (chain, block_num) — so C1 patterns become
 pushed column predicates with min/max row-group pruning, and the fat
 ``value`` column is only read when the query projects it (column pruning).
 
-One rule splits the read side (``_point``): a request that binds
-``block_num`` or ``trx_id`` to one value is a point lookup — ``get``,
-``find_block``, ``has_block``, ``find_trx``, and a ``scan`` whose glob
-translates exactly with one of them bound (``hive:N:*``,
-``hive:*:<trx>:*``).  It goes to ``ManifestStore.find`` / ``exists``,
-which takes the files whose recorded block and chain ranges can hold it
-(``trx_id`` has no range, so a trx lookup keeps every file of its
-chain) and reads them on the driver, with no Spark job, as long as they
-total at most one compacted file's bytes (``manifest._FILE_BYTES``,
-128 MiB); past that, Spark reads just those files.  ``trx_id ==
-VIRTUAL_TRX_ID`` names every virtual op, so it is not a point lookup.
-Every other request (scans with an rlike residual or no bound block or
-trx, ``hive:*:vote``, ``hive:*``) runs on Spark over the full file
-list: its result is unbounded, and a ``limit`` pushes into Spark's
-scan.  There is no switch: the request decides.
+Every request goes through ``ManifestStore.find`` / ``exists``: ``get``,
+``find_block``, ``find_trx``, ``has_block``, and a ``scan`` with the
+columns its glob binds to one value (``hive:N:*`` binds ``chain`` and
+``block_num``, ``hive:*:vote`` ``chain`` and ``op_type``, ``hive:*``
+only ``chain``).  A glob that translates exactly is answered by those
+rows alone; any other keeps its full predicate, residual included, on
+top of them, and a glob no key can match binds ``chain`` to None, which
+equals no row.  Where the rows are read is decided in one place,
+``ManifestStore._read``: on the driver, with no Spark job, while the
+files whose recorded ranges can hold the bindings total at most one
+compacted file's bytes and the matches stay under a row bound; past
+either, Spark reads just those files.  Nothing in this module routes.
 
 At 100 TB the same layout holds: (chain, block_num) clustering
 (Delta/Iceberg z-order or hourly sub-partitions on a real deployment);
@@ -37,7 +34,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .keys import glob_to_filter, key_int, parse_key, translate_glob
 from .manifest import ManifestStore, open_committed, require_committed
-from .schemas import VIRTUAL_TRX_ID
 
 # range partitions per OpsStore.write: the TOTAL writer count across all
 # chains (a two-chain frame splits these tasks between the chains)
@@ -65,13 +61,6 @@ def newest_by_key(df: DataFrame, key: str) -> DataFrame:
 def _bound(column: str, value, chain: str | None) -> dict:
     """The bindings of ``find block/trx`` / ``has block``."""
     return {column: value, **({"chain": chain} if chain else {})}
-
-
-def _point(where: dict) -> bool:
-    """THE point-lookup rule: ``where`` binds ``block_num``, or a
-    ``trx_id`` other than the virtual ops' shared one."""
-    return "block_num" in where \
-        or where.get("trx_id", VIRTUAL_TRX_ID) != VIRTUAL_TRX_ID
 
 
 def _filtered(df: DataFrame, where: dict) -> DataFrame:
@@ -119,45 +108,40 @@ class OpsStore:
         ValueError for a path that is not a manifest store."""
         return self._store().df()
 
-    def _find(self, where: dict) -> DataFrame:
-        """The rows equal to every binding in ``where``: a point lookup
-        through ``ManifestStore.find``, any other a Spark filter."""
-        if _point(where):
-            return self._store().find(where)
-        return _filtered(self.df(), where)
-
     # -- C1: key-pattern scan ----------------------------------------------
 
     def scan(self, pattern: str) -> DataFrame:
-        """SCAN MATCH '<glob>'.  A glob whose translation is exact and
-        is a point lookup (``hive:N:*``, ``hive:*:<trx>:*``) goes
-        through ``ManifestStore.find``; any other — a ``never`` glob
-        binds nothing — is a predicate-pushed Spark scan."""
+        """SCAN MATCH '<glob>': ``ManifestStore.find`` of the columns the
+        glob binds to one value, which are all of it when the glob
+        translates exactly; otherwise the glob's full predicate filters
+        them.  A glob no key can match binds ``chain`` to None, which
+        equals no row."""
         g = translate_glob(pattern)
-        if g.exact and _point(g.bindings):
-            return self._store().find(g.bindings)
-        return self.df().where(glob_to_filter(g))
+        rows = self._store().find({"chain": None} if g.never
+                                  else g.bindings)
+        return rows if g.exact else rows.where(glob_to_filter(g))
 
     # -- C2: point lookup ---------------------------------------------------
 
     def get(self, key: str) -> DataFrame:
-        """GET <key> → at most one row, every segment bound.  A key whose
-        block_num/trx_index segment is not a canonical int64 (``key_int``)
-        can exist in no store, so it binds None, which equals no row:
-        an empty result like Redis GET on a missing key."""
+        """GET <key> → at most one row: ``ManifestStore.find`` with every
+        segment bound.  A key whose block_num/trx_index segment is not a
+        canonical int64 (``key_int``) can exist in no store, so it binds
+        None, which equals no row: an empty result like Redis GET on a
+        missing key."""
         seg: dict = parse_key(key)
         for name in ("block_num", "trx_index"):
             seg[name] = key_int(seg[name])
-        return self._find(seg)
+        return self._store().find(seg)
 
     # -- C3: find block / find trx -------------------------------------------
 
     def find_block(self, block_num: int, chain: str | None = None) -> DataFrame:
-        return self._find(_bound("block_num", block_num, chain)) \
+        return self._store().find(_bound("block_num", block_num, chain)) \
             .select("key", "value")
 
     def find_trx(self, trx_id: str, chain: str | None = None) -> DataFrame:
-        return self._find(_bound("trx_id", trx_id, chain)) \
+        return self._store().find(_bound("trx_id", trx_id, chain)) \
             .select("key", "value")
 
     # -- C6: existence probe --------------------------------------------------
@@ -295,8 +279,8 @@ class UnifiedStore:
     over EVERY keyed artifact a deployment writes — mainnet ops and
     engine ops (both live in one manifest OpsStore after ``compact``)
     plus the witness-schedule publish log — ops rows through
-    ``OpsStore`` (so a point lookup is read on the driver) and schedule
-    rows through ``keys.schedule_glob_filter`` (VERDICT r3 item 8; the
+    ``OpsStore`` (so they share its ``ManifestStore.find`` read) and
+    schedule rows through ``keys.schedule_glob_filter`` (VERDICT r3 item 8; the
     per-shape split is r15 — one translator over both shapes dropped
     schedule rows on anchored patterns).  Schedule rows ride the ops row
     shape with NULL trx columns, so ops globs never match them and

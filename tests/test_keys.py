@@ -229,7 +229,8 @@ def test_glob_engine_and_mixed_fuzz(ops, engine_ops):
                     == _fnmatch_keys(keys, pattern), pattern
 
 
-def test_glob_unified_surface_fuzz(spark, ops, tmp_path_factory):
+def test_glob_unified_surface_fuzz(spark, ops, tmp_path_factory,
+                                   monkeypatch):
     """The UnifiedStore surface (mainnet ops + 4-segment schedule keys
     with NULL trx columns): for any pattern drawn from mixed segment
     vocabularies, ``UnifiedStore.scan`` == fnmatch over ALL keys in the
@@ -242,6 +243,7 @@ def test_glob_unified_surface_fuzz(spark, ops, tmp_path_factory):
 
     from pyspark.sql import functions as F
 
+    from meeseeker_spark import manifest
     from meeseeker_spark.manifest import ManifestStore
     from meeseeker_spark.query import OpsStore, ScheduleStore, UnifiedStore
 
@@ -278,25 +280,36 @@ def test_glob_unified_surface_fuzz(spark, ops, tmp_path_factory):
                  str(rows[1][1]), "custom_json"],
     }
     rng = random.Random(404)
+    patterns = []
     for _ in range(60):
         n_seg = rng.randint(1, 6)
         segs = [rng.choice(vocab["chain"])]
         for i in range(1, n_seg):
             segs.append(rng.choice(vocab["tail" if i == n_seg - 1
                                          else "mid"]))
-        pattern = ":".join(segs)
-        assert scan_keys(pattern) == _fnmatch_keys(keys, pattern), pattern
+        patterns.append(":".join(segs))
 
-    # OpsStore.scan answers a glob binding block_num exactly from the
-    # driver-read files of that block: still fnmatch-exact
+    # OpsStore.scan answers every glob through ManifestStore.find of its
+    # bindings (block, trx, type and chain globs, residual ones too):
+    # fnmatch-exact whether the rows are read on the driver or, past the
+    # row bound (_ROWS = 0), by Spark from the candidate files
     o = OpsStore(spark, str(d / "ops"))
     op_keys = [r["key"] for r in ops.select("key").collect()]
-    block = parse_key(op_keys[0])["block_num"]
+    first = parse_key(op_keys[0])
+    block = first["block_num"]
+    routed = [f"hive:*:{first['trx_id']}:*", "hive:*:vote", "hive:*",
+              "*:vote", "hive:*:1*:vote"]
     for blk in [block] + _odd_numerals([int(block)]):
-        for pattern in (f"hive:{blk}:*", f"hive:{blk}:*:vote",
-                        f"hive:{blk}:*:*:*"):
+        routed += [f"hive:{blk}:*", f"hive:{blk}:*:vote",
+                   f"hive:{blk}:*:*:*"]
+    for bound in (manifest._ROWS, 0):
+        monkeypatch.setattr(manifest, "_ROWS", bound)
+        for pattern in patterns:
+            assert scan_keys(pattern) == _fnmatch_keys(keys, pattern), \
+                (bound, pattern)
+        for pattern in routed:
             assert sorted(r["key"] for r in o.scan(pattern).collect()) \
-                == _fnmatch_keys(op_keys, pattern), pattern
+                == _fnmatch_keys(op_keys, pattern), (bound, pattern)
 
 
 def test_glob_redis_class_negation_and_colon_classes(ops):

@@ -24,10 +24,10 @@ schema-inference job again), and the driver-side Arrow read of a
 block-bound lookup, which casts timestamps to UTC instants (a read that
 skipped it would shift them by the session timezone).  Those rows
 reach Spark only in ``ManifestStore.find``, the one ``createDataFrame``
-in the module, which first drops the scan's empty record batches
-(PySpark loses a non-empty batch that follows an empty one).  ``query.py``
-reads no parquet itself: every consumer request goes through
-``ManifestStore``.
+in the module; ``_read`` keeps no empty record batch (PySpark loses a
+non-empty batch that follows an empty one).  ``query.py`` reads no
+parquet itself: every consumer request goes through ``ManifestStore``,
+and whether the driver or Spark reads it is ``_read``'s call alone.
 
 Every module of ``meeseeker_spark/`` (``streaming/`` and ``ext/``
 included) is reached by the imports of a program entry point: the CLI
@@ -117,6 +117,28 @@ def test_manifest_reads_only_through_read_helper():
                  or isinstance(n, ast.ImportFrom)
                  and (n.module or "").startswith("pyarrow")]
     assert not offenders, f"query.py reads parquet itself: {offenders}"
+
+
+# what a second routing rule in query.py would name: the driver read's
+# bounds, the virtual ops' trx id, or a Spark filter of the whole table
+_ROUTING = ("_FILE_BYTES", "_ROWS", "VIRTUAL_TRX_ID", ".df().where(")
+
+
+def test_query_routes_only_through_read_helper():
+    """Where an ops request is read — the driver or Spark — is decided
+    only in ``ManifestStore._read``: outside ``ScheduleStore`` and
+    ``UnifiedStore`` (the schedule log is not a manifest lookup),
+    ``query.py`` names neither the read's bounds nor the virtual trx id
+    and filters no whole-table frame."""
+    text = (PKG / "query.py").read_text()
+    exempt = {n for c in ast.walk(ast.parse(text))
+              if isinstance(c, ast.ClassDef)
+              and c.name in ("ScheduleStore", "UnifiedStore")
+              for n in range(c.lineno, c.end_lineno + 1)}
+    offenders = [f"query.py:{n}: {line.strip()}"
+                 for n, line in enumerate(text.splitlines(), 1)
+                 if n not in exempt and any(t in line for t in _ROUTING)]
+    assert not offenders, "\n".join(offenders)
 
 
 def _module_name(path: Path) -> str:

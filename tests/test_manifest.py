@@ -7,10 +7,12 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+from meeseeker_spark import manifest
 from meeseeker_spark.manifest import ManifestStore
 
 
@@ -269,7 +271,8 @@ def test_gc_survives_version_gap(spark, tmp_path):
     assert sorted(r["id"] for r in s.df().collect()) == [0, 1, 2]
 
 
-def test_manifest_random_op_sequences(spark, tmp_path_factory):
+def test_manifest_random_op_sequences(spark, tmp_path_factory,
+                                      monkeypatch):
     """Property test: any interleaving of append / replayed-append /
     expire / compact / gc leaves the store exactly equal to a trivial
     in-memory model, and every manifest-referenced file on disk.  After
@@ -277,7 +280,9 @@ def test_manifest_random_op_sequences(spark, tmp_path_factory):
     rows; the same version without ``file_stats`` reads every file; and
     bound lookups (``find`` / ``exists``) of every present block, an
     absent and a past-head one, by block and by ``id`` (no recorded
-    range, so every file), answer what filtering the full table does."""
+    range, so every file), answer what filtering the full table does,
+    read on the driver and again past the row bound (``_ROWS = 0``, a
+    Spark read)."""
     from collections import Counter
 
     import pyarrow.compute as pc
@@ -286,6 +291,7 @@ def test_manifest_random_op_sequences(spark, tmp_path_factory):
     from hypothesis import strategies as st
     from pyspark.sql import DataFrame
 
+    ROWS = manifest._ROWS
     OLD = dt.datetime(2020, 1, 1)
     NEW = dt.datetime(2030, 5, 31, 12)      # inside ttl of NOW
     NOW = dt.datetime(2030, 6, 1)
@@ -321,6 +327,13 @@ def test_manifest_random_op_sequences(spark, tmp_path_factory):
         spark_read = s._read(bare, {"block_num": 0})
         assert isinstance(spark_read, DataFrame)
         assert len(spark_read.inputFiles()) == len(m["files"])
+        # on the driver, then past the row bound: a Spark read
+        for bound in (ROWS, 0):
+            monkeypatch.setattr(manifest, "_ROWS", bound)
+            check_bound_lookups(s, rows)
+
+    def check_bound_lookups(s, rows):
+        assert sorted(s.find({}).collect()) == sorted(rows)
         present = sorted({r["block_num"] for r in rows})
         absent = [b for b in range(21) if b not in present][:1]
         for b in present + absent + [26]:
@@ -402,6 +415,31 @@ def test_time_travel_horizon_after_gc(spark, tmp_path):
     assert sorted(pq.ParquetDataset(v4).read().column("id").to_pylist()) \
         == [0, 1, 2, 3]
     assert [r["id"] for r in s.df().collect()] == [99]
+
+
+def test_missing_file_error_names_the_version_read(spark, tmp_path):
+    """A read of a version whose files are gone names that version: a
+    reader still holding v1 after two overwrites and ``gc(keep_versions=
+    2)`` is told v3 superseded it, not that the current version is
+    broken; a file deleted from under the current version says so."""
+    s = ManifestStore(spark, str(tmp_path / "m"))
+    s.append(_rows(spark, [0]))                    # v1
+    m = s._read_manifest()
+    s.overwrite(_rows(spark, [1]))                 # v2
+    s.overwrite(_rows(spark, [2]))                 # v3
+    s.gc(keep_versions=2)                          # v1's file goes
+    with pytest.raises(FileNotFoundError) as e:
+        s._read(m)
+    msg = str(e.value)
+    assert re.match(r"manifest v1 references \d+ missing file\(s\)", msg), msg
+    assert "v3 superseded it and gc removed them" in msg, msg
+    assert "current" not in msg.lower(), msg
+    os.unlink(os.path.join(s.path, s.files()[0]))
+    with pytest.raises(FileNotFoundError,
+                       match=r"^manifest v3 references 1 missing file\(s\)"
+                             r".*it is the current version, so they were "
+                             r"deleted outside the store"):
+        s.df()
 
 
 def test_retention_api_delegates_to_manifest(spark, tmp_path):

@@ -10,7 +10,7 @@ import io
 
 import pytest
 
-from meeseeker_spark import catalog, fixtures
+from meeseeker_spark import catalog, fixtures, manifest
 from meeseeker_spark.flatten import flatten_ops_with_virtual
 from meeseeker_spark.query import OpsStore
 from meeseeker_spark.schemas import BLOCKS, VIRTUAL_OPS
@@ -87,7 +87,7 @@ def test_ivf_broadcasts_probe_side(spark):
     assert "Broadcast" in plan  # query/probe side broadcast on the cell join
 
 
-def test_ops_store_partition_pruning(spark, tmp_path_factory):
+def test_ops_store_partition_pruning(spark, tmp_path_factory, monkeypatch):
     fx = fixtures.generate(n_blocks=21, seed=1)
     d = tmp_path_factory.mktemp("planfx")
     fixtures.write_parquet(fx, str(d))
@@ -97,9 +97,14 @@ def test_ops_store_partition_pruning(spark, tmp_path_factory):
     OpsStore.write(flatten_ops_with_virtual(blocks, vops), path)
     store = OpsStore(spark, path)
 
+    # under the row bound a type scan is read on the driver: no file scan
     plan = explain_str(store.scan("hive:*:vote"))
-    # chain and op_type glob segments → pushed data filters (min/max
-    # row-group pruning on the (chain, block_num)-clustered files)
+    assert "LocalTableScan" in plan and "FileScan" not in plan
+    # past it, chain and op_type glob segments → pushed data filters
+    # (min/max row-group pruning on the (chain, block_num)-clustered files)
+    with monkeypatch.context() as mp:
+        mp.setattr(manifest, "_ROWS", 0)
+        plan = explain_str(store.scan("hive:*:vote"))
     assert "EqualTo(chain,hive)" in plan
     assert "EqualTo(op_type,vote)" in plan
 

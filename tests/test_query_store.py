@@ -59,9 +59,11 @@ def test_has_block_probe(store):
     assert not store.has_block(1)
 
 
-def test_scan_plan_prunes(store):
-    # the C1 predicate must reach the scan: chain and op_type segments
+def test_scan_plan_prunes(store, monkeypatch):
+    # past the row bound a scan is a Spark read of its candidate files,
+    # and the C1 predicate must reach it: chain and op_type segments
     # are pushed data filters (min/max row-group pruning)
+    monkeypatch.setattr(manifest, "_ROWS", 0)
     plan = store.scan("hive:*:vote")._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
     assert "EqualTo(chain,hive)" in plan
@@ -288,13 +290,14 @@ def _point_row(store):
 
 
 def test_block_bound_requests_launch_no_job(spark, store, monkeypatch):
-    """Point lookups — get, find_block, has_block, find_trx and a block
-    or trx glob scan — bind block_num or trx_id, so the recorded file
-    ranges pick the files and the rows are read on the driver:
-    collecting the answer launches no Spark job.  A scan that binds
-    neither, and find_trx of the id every virtual op shares, still run
-    on Spark.  Past one compacted file's bytes, a point lookup is the
-    Spark read of just the files that can hold it, with the same rows."""
+    """Every request — get, find_block, has_block, find_trx (the id
+    every virtual op shares included) and block, trx, type and chain
+    glob scans — goes through ManifestStore.find/exists: the recorded
+    file ranges pick the candidate files and, on the fixture store, the
+    rows are read on the driver, so collecting the answer launches no
+    Spark job.  Past one compacted file's bytes, or past ``_ROWS``
+    matching rows, the answer is the Spark read of just the candidate
+    files, with the same rows."""
     r = _point_row(store)
     b, trx = r["block_num"], r["trx_id"]
     assert _jobs(spark, lambda: store.get(r["key"]).collect()) == 0
@@ -304,25 +307,30 @@ def test_block_bound_requests_launch_no_job(spark, store, monkeypatch):
                                  store.has_block(10**12))) == 0
     assert _jobs(spark, lambda: store.find_trx(trx).collect()) == 0
     assert _jobs(spark, lambda: store.scan(f"hive:*:{trx}:*").collect()) == 0
-    assert _jobs(spark, lambda: store.scan("hive:*:vote").collect()) > 0
+    assert _jobs(spark, lambda: store.scan("hive:*:vote").collect()) == 0
+    assert _jobs(spark, lambda: store.scan("hive:*").collect()) == 0
     assert _jobs(spark,
-                 lambda: store.find_trx(VIRTUAL_TRX_ID).collect()) > 0
+                 lambda: store.find_trx(VIRTUAL_TRX_ID).collect()) == 0
 
     m = ManifestStore(spark, store.path)._read_manifest()
-    lookups = [(lambda: store.get(r["key"]), {"block_num": b,
-                                              "chain": "hive"}),
-               (lambda: store.find_trx(trx, "hive"), {"trx_id": trx,
-                                                      "chain": "hive"})]
+    hive = {"chain": "hive"}
+    lookups = [(lambda: store.get(r["key"]), {"block_num": b, **hive}),
+               (lambda: store.find_trx(trx, "hive"), hive),
+               (lambda: store.scan("hive:*:vote"), hive),
+               (lambda: store.find_trx(VIRTUAL_TRX_ID, "hive"), hive)]
     local = [sorted(fn().collect()) for fn, _ in lookups]
-    monkeypatch.setattr(manifest, "_FILE_BYTES", 1)
-    for (fn, where), want in zip(lookups, local):
-        assert _jobs(spark, lambda: fn().collect()) > 0
-        files = {f for f in m["files"]
-                 if manifest._can_hold(m["file_stats"][f], where)}
-        assert 0 < len(files) < len(m["files"]), where
-        assert {urlparse(u).path for u in fn().inputFiles()} \
-            == {os.path.join(store.path, f) for f in files}
-        assert sorted(fn().collect()) == want
+    assert all(local), "every lookup matches rows on the fixture store"
+    for bound in ("_FILE_BYTES", "_ROWS"):
+        with monkeypatch.context() as mp:
+            mp.setattr(manifest, bound, 0)
+            for (fn, where), want in zip(lookups, local):
+                assert _jobs(spark, lambda: fn().collect()) > 0, bound
+                files = {f for f in m["files"]
+                         if manifest._can_hold(m["file_stats"][f], where)}
+                assert 0 < len(files) < len(m["files"]), where
+                assert {urlparse(u).path for u in fn().inputFiles()} \
+                    == {os.path.join(store.path, f) for f in files}
+                assert sorted(fn().collect()) == want, (bound, where)
 
 
 def test_exists_decodes_only_bound_columns(spark, store, monkeypatch):
@@ -338,9 +346,9 @@ def test_exists_decodes_only_bound_columns(spark, store, monkeypatch):
         def __init__(self, *args, **kwargs):
             self.ds = dataset(*args, **kwargs)
 
-        def to_table(self, **kwargs):
+        def to_batches(self, **kwargs):
             decoded.append(kwargs.get("columns"))
-            return self.ds.to_table(**kwargs)
+            return self.ds.to_batches(**kwargs)
 
     monkeypatch.setattr(manifest.pads, "dataset", Spy)
     ms = ManifestStore(spark, store.path)
@@ -451,6 +459,61 @@ def test_point_lookups_keep_rows_after_empty_batches(spark, tmp_path):
             == [key], i
 
 
+def test_bound_reads_stop_at_the_row_bound(spark, tmp_path, monkeypatch):
+    """The driver read ends early.  Six files hold three rows of block 7
+    each and six more hold blocks 0 and 20 around it, so every file is a
+    candidate.  With ``_ROWS`` at 4, ``find`` pulls no batch after the
+    one that takes its matches past 4 and answers with the Spark read of
+    the candidate files, with every row; ``exists`` pulls exactly one
+    non-empty batch."""
+    import pyarrow as pa
+
+    ms = ManifestStore(spark, str(tmp_path / "ops"))
+
+    def rows(blocks: list[int], i: int) -> pa.Table:
+        return pa.table({
+            "chain": ["hive"] * len(blocks),
+            "block_num": pa.array(blocks, pa.int64()),
+            "key": [f"hive:{b}:{i}:{j}" for j, b in enumerate(blocks)]})
+
+    for i in range(6):
+        ms.append(rows([7, 7, 7], i))
+        ms.append(rows([0, 20], i))
+    pulled: list[int] = []
+    dataset = manifest.pads.dataset
+
+    class Spy:
+        def __init__(self, *args, **kwargs):
+            self.ds = dataset(*args, **kwargs)
+
+        def to_batches(self, **kwargs):
+            for b in self.ds.to_batches(**kwargs):
+                pulled.append(b.num_rows)
+                yield b
+
+    monkeypatch.setattr(manifest.pads, "dataset", Spy)
+    where = {"block_num": 7}
+    want = sorted(f"hive:7:{i}:{j}" for i in range(6) for j in range(3))
+    assert sorted(r["key"] for r in ms.find(where).collect()) == want
+    assert sum(pulled) == len(want)            # under the bound: all of it
+
+    monkeypatch.setattr(manifest, "_ROWS", 4)
+    pulled.clear()
+    got = ms.find(where)
+    matched = [n for n in pulled if n]
+    assert pulled[-1] and matched == [3, 3], pulled
+    assert {urlparse(u).path for u in got.inputFiles()} \
+        == {os.path.join(ms.path, f) for f in ms.files()}
+    assert sorted(r["key"] for r in got.collect()) == want
+
+    pulled.clear()
+    assert ms.exists(where)
+    assert pulled[-1] and [n for n in pulled if n] == [3], pulled
+    pulled.clear()
+    assert not ms.exists({"block_num": 8})
+    assert not any(pulled), pulled
+
+
 def test_cli_find_block_non_numeric_errors_cleanly(tmp_path, capsys):
     import pytest as _pytest
 
@@ -462,7 +525,8 @@ def test_cli_find_block_non_numeric_errors_cleanly(tmp_path, capsys):
         assert "needs a number" in capsys.readouterr().err
 
 
-def test_ops_store_over_manifest_layout(spark, tmp_path_factory):
+def test_ops_store_over_manifest_layout(spark, tmp_path_factory,
+                                        monkeypatch):
     """The C1-C6 query surface works DIRECTLY against a manifest-layout
     ops store (the streaming sink's default since r6) — scan globs push
     down as column filters, get/find/has_block answer, and reset is an
@@ -492,9 +556,12 @@ def test_ops_store_over_manifest_layout(spark, tmp_path_factory):
     assert len(st.get(r["key"]).collect()) == 1
     assert st.has_block(r["block_num"]) and not st.has_block(10**9)
     assert st.find_trx(r["trx_id"]).count() >= 1
-    # glob predicates reach the parquet scan even without chain= dirs
-    plan = (st.scan("hive:*:vote")._jdf.queryExecution()
-            .executedPlan().toString())
+    # past the row bound, glob predicates reach the parquet scan even
+    # without chain= dirs
+    with monkeypatch.context() as mp:
+        mp.setattr(manifest, "_ROWS", 0)
+        plan = (st.scan("hive:*:vote")._jdf.queryExecution()
+                .executedPlan().toString())
     assert "PushedFilters" in plan
 
     # reset keeps NULL-chain rows (ADVICE r6: `chain != x` alone would
