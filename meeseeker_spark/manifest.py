@@ -47,10 +47,14 @@ those whose ranges can hold the bindings (every file of the chain for a
 pyarrow on the driver — no Spark job; with no candidate, no I/O at all
 — as long as they total at most ``_FILE_BYTES`` (128 MiB, the one-file
 size ``compact`` also writes) and the matching rows stay at most
-``_ROWS``.  The driver reads batch by batch and stops at the batch that
-passes ``_ROWS``; ``exists`` stops at the first non-empty one.  Past
-either bound, or with a candidate lacking ranges, or for a version
-without a schema, Spark reads just the candidate files, filtered.  The
+``_ROWS``.  When the candidates' footers hold more than ``_ROWS`` rows,
+the driver first counts the matches on the bound columns alone, batch
+by batch, and stops at the batch that passes ``_ROWS``; only a count
+within the bound is read again with every column, so a read handed to
+Spark never decodes the fat ``value`` column on the driver.  ``exists``
+reads the bound columns up to the first match.  Past either bound, or
+with a candidate lacking ranges, or for a version without a schema,
+Spark reads just the candidate files, filtered.  The
 rule lives in the one read helper, ``_read``, which keeps only non-empty
 record batches (PySpark's ``createDataFrame`` loses a non-empty batch
 that follows an empty one); ``find`` is the one place driver rows
@@ -129,6 +133,17 @@ _FILE_BYTES = 128 * 1024 * 1024
 # it, handing the rows to the JVM (``createDataFrame``) costs more than
 # a Spark job over the candidate files
 _ROWS = 10_000
+
+
+def _count(batches) -> int:
+    """The rows of ``batches``, counted up to the first batch that takes
+    them past ``_ROWS``; no later batch is pulled."""
+    n = 0
+    for b in batches:
+        n += b.num_rows
+        if n > _ROWS:
+            break
+    return n
 
 
 def _version(name: str) -> int | None:
@@ -460,8 +475,7 @@ class ManifestStore:
         return list(self._read_manifest()["files"])
 
     def _read(self, m: dict, where: dict | None = None,
-              columns: list[str] | None = None,
-              enough: int | None = None) -> Rows:
+              columns: list[str] | None = None, first: bool = False) -> Rows:
         """THE read of manifest ``m``'s table, every column or just
         ``columns``.  A listed file that gc removed raises
         FileNotFoundError instead of reading as partial data.
@@ -474,17 +488,19 @@ class ManifestStore:
         ranges can hold the bindings (a file without ranges is always
         one).  When the version records its schema, every candidate has
         ranges and the candidates total at most ``_FILE_BYTES``, the
-        driver reads them with pyarrow batch by batch and keeps the
-        non-empty batches (no candidate: an empty table, no I/O); if
-        the kept rows stay at most ``_ROWS`` they are the answer, as
-        Arrow rows with every timestamp cast to ``timestamp[us,
-        tz=UTC]`` — a naive one would be taken as session-local time
-        downstream.  The batch that takes them past ``_ROWS`` ends the
-        driver read, and the answer is the Spark read of the candidate
-        files, filtered, as it is when the driver cannot read them.
-        With ``enough``, a caller that needs only that many rows (an
-        existence probe: one) gets the driver's Arrow rows as soon as a
-        batch brings the kept rows to it."""
+        driver reads them with pyarrow (no candidate: an empty table, no
+        I/O).  When their footers hold more than ``_ROWS`` rows, it
+        first counts the matches, decoding only the bound columns and
+        stopping at the batch that takes the count past ``_ROWS``.  At
+        most ``_ROWS`` matches are read on the driver, their non-empty
+        batches only, as Arrow rows with every timestamp cast to
+        ``timestamp[us, tz=UTC]`` — a naive one would be taken as
+        session-local time downstream.  Past ``_ROWS``, or when the
+        driver cannot read the candidates, the answer is the Spark read
+        of the candidate files, filtered; a read handed to Spark has
+        decoded no unbound column on the driver.  With ``first`` (an
+        existence probe) the driver reads the bound columns up to the
+        first match, and that batch is the answer."""
         files, schema = m["files"], m.get("schema")
         stats = m.get("file_stats", {})
         if where is not None:
@@ -499,22 +515,27 @@ class ManifestStore:
                                 if columns is None or f.name in columns])
             match = functools.reduce(operator.and_, (
                 pc.field(c) == v for c, v in where.items())) if where else None
-            batches = pads.dataset(
+            if not files:
+                return target.empty_table()
+            dataset = pads.dataset(
                 [os.path.join(self.path, f) for f in files],
-                format="parquet").to_batches(columns=target.names,
-                                             filter=match) if files else ()
-            kept, n = [], 0
-            for b in batches:
-                if not b.num_rows:
-                    continue
-                kept.append(b.cast(target))
-                n += b.num_rows
-                if enough is not None and n >= enough:
-                    return pa.Table.from_batches(kept, target)
-                if n > _ROWS:
-                    break
-            else:
-                return pa.Table.from_batches(kept, target)
+                format="parquet")
+            if first:
+                return next((pa.Table.from_batches([b])
+                             for b in dataset.to_batches(
+                                 columns=list(where), filter=match)
+                             if b.num_rows), target.empty_table())
+            # the footers' row counts cost no decoding; candidates holding
+            # more rows than the bound have their matches counted first,
+            # on the bound columns alone
+            if sum(f.metadata.num_rows
+                   for f in dataset.get_fragments()) <= _ROWS \
+                    or _count(dataset.to_batches(
+                        columns=list(where), filter=match)) <= _ROWS:
+                return pa.Table.from_batches(
+                    [b.cast(target) for b in dataset.to_batches(
+                        columns=target.names, filter=match)
+                     if b.num_rows], target)
         if not m["files"]:
             raise FileNotFoundError(
                 f"manifest store {self.path} has no committed data")
@@ -559,11 +580,12 @@ class ManifestStore:
         ``where`` (``{column: value}``, e.g. ``block_num`` and
         ``chain``; ``{}``: every row).  While the candidate files fit
         one compacted file and the matches stay at most ``_ROWS``, they
-        are read on the driver and handed to Spark as a local relation,
-        so collecting the frame launches no job; past either bound the
-        frame is the Spark read of the candidate files (``_read``).
-        The driver rows hold no empty record batch: PySpark drops a
-        non-empty batch that follows an empty one past the first."""
+        are read on the driver, every column, and handed to Spark as a
+        local relation, so collecting the frame launches no job; past
+        either bound the frame is the Spark read of the candidate files,
+        whose columns a projection prunes (``_read``).  The driver rows
+        hold no empty record batch: PySpark drops a non-empty batch
+        that follows an empty one past the first."""
         m = self._read_manifest()
         rows = self._read(m, where)
         if isinstance(rows, DataFrame):
@@ -573,10 +595,10 @@ class ManifestStore:
 
     def exists(self, where: dict) -> bool:
         """Whether ``find(where)`` holds a row.  On the driver path the
-        read ends at the first non-empty batch, with no frame at all;
-        only the bound columns are decoded."""
+        read ends at the first match, with no frame at all; only the
+        bound columns are decoded."""
         rows = self._read(self._read_manifest(), where, columns=list(where),
-                          enough=1)
+                          first=True)
         if isinstance(rows, DataFrame):
             return not rows.isEmpty()
         return rows.num_rows > 0

@@ -4,8 +4,9 @@ The reference's store is Redis keyed by the composite string; consumers do
 SCAN globs, GETs, and `find block/trx` (README.md:250-309, bin/meeseeker:34).
 Here the store is a manifest-committed parquet table (manifest.ManifestStore)
 whose files are range-clustered on (chain, block_num) — so C1 patterns become
-pushed column predicates with min/max row-group pruning, and the fat
-``value`` column is only read when the query projects it (column pruning).
+column predicates with min/max file and row-group pruning.  On a Spark
+read the fat ``value`` column is only read when the query projects it
+(column pruning); a driver answer, bounded in rows, carries every column.
 
 Every request goes through ``ManifestStore.find`` / ``exists``: ``get``,
 ``find_block``, ``find_trx``, ``has_block``, and a ``scan`` with the
@@ -17,8 +18,9 @@ top of them, and a glob no key can match binds ``chain`` to None, which
 equals no row.  Where the rows are read is decided in one place,
 ``ManifestStore._read``: on the driver, with no Spark job, while the
 files whose recorded ranges can hold the bindings total at most one
-compacted file's bytes and the matches stay under a row bound; past
-either, Spark reads just those files.  Nothing in this module routes.
+compacted file's bytes and the matches, counted on the bound columns
+alone, stay under a row bound; past either, Spark reads just those
+files.  Nothing in this module routes.
 
 At 100 TB the same layout holds: (chain, block_num) clustering
 (Delta/Iceberg z-order or hourly sub-partitions on a real deployment);

@@ -346,6 +346,9 @@ def test_exists_decodes_only_bound_columns(spark, store, monkeypatch):
         def __init__(self, *args, **kwargs):
             self.ds = dataset(*args, **kwargs)
 
+        def __getattr__(self, name):
+            return getattr(self.ds, name)
+
         def to_batches(self, **kwargs):
             decoded.append(kwargs.get("columns"))
             return self.ds.to_batches(**kwargs)
@@ -462,10 +465,13 @@ def test_point_lookups_keep_rows_after_empty_batches(spark, tmp_path):
 def test_bound_reads_stop_at_the_row_bound(spark, tmp_path, monkeypatch):
     """The driver read ends early.  Six files hold three rows of block 7
     each and six more hold blocks 0 and 20 around it, so every file is a
-    candidate.  With ``_ROWS`` at 4, ``find`` pulls no batch after the
-    one that takes its matches past 4 and answers with the Spark read of
-    the candidate files, with every row; ``exists`` pulls exactly one
-    non-empty batch."""
+    candidate.  Candidates whose footers hold no more than ``_ROWS``
+    rows are read once, every column.  Past that, ``find`` counts its
+    matches on the bound column first: with ``_ROWS`` at 20 the 18
+    matches are then read on the driver; at 4 the count pulls no batch
+    after the one that takes it past 4, no other column is decoded, and
+    the answer is the Spark read of the candidate files, with every
+    row.  ``exists`` pulls exactly one non-empty batch."""
     import pyarrow as pa
 
     ms = ManifestStore(spark, str(tmp_path / "ops"))
@@ -486,32 +492,49 @@ def test_bound_reads_stop_at_the_row_bound(spark, tmp_path, monkeypatch):
         def __init__(self, *args, **kwargs):
             self.ds = dataset(*args, **kwargs)
 
+        def __getattr__(self, name):
+            return getattr(self.ds, name)
+
         def to_batches(self, **kwargs):
             for b in self.ds.to_batches(**kwargs):
-                pulled.append(b.num_rows)
+                pulled.append((tuple(kwargs["columns"]), b.num_rows))
                 yield b
+
+    def rows_by_columns():
+        out: dict = {}
+        for cols, n in pulled:
+            out[cols] = out.get(cols, 0) + n
+        return out
 
     monkeypatch.setattr(manifest.pads, "dataset", Spy)
     where = {"block_num": 7}
     want = sorted(f"hive:7:{i}:{j}" for i in range(6) for j in range(3))
+    every = ("chain", "block_num", "key")
     assert sorted(r["key"] for r in ms.find(where).collect()) == want
-    assert sum(pulled) == len(want)            # under the bound: all of it
+    assert rows_by_columns() == {every: len(want)}    # 30 rows: no count
+
+    monkeypatch.setattr(manifest, "_ROWS", 20)
+    pulled.clear()
+    assert sorted(r["key"] for r in ms.find(where).collect()) == want
+    assert rows_by_columns() == {("block_num",): len(want),
+                                 every: len(want)}
 
     monkeypatch.setattr(manifest, "_ROWS", 4)
     pulled.clear()
     got = ms.find(where)
-    matched = [n for n in pulled if n]
-    assert pulled[-1] and matched == [3, 3], pulled
+    assert {cols for cols, _ in pulled} == {("block_num",)}, pulled
+    matched = [n for _, n in pulled if n]
+    assert pulled[-1][1] and matched == [3, 3], pulled
     assert {urlparse(u).path for u in got.inputFiles()} \
         == {os.path.join(ms.path, f) for f in ms.files()}
     assert sorted(r["key"] for r in got.collect()) == want
 
     pulled.clear()
     assert ms.exists(where)
-    assert pulled[-1] and [n for n in pulled if n] == [3], pulled
+    assert pulled[-1][1] and [n for _, n in pulled if n] == [3], pulled
     pulled.clear()
     assert not ms.exists({"block_num": 8})
-    assert not any(pulled), pulled
+    assert not any(n for _, n in pulled), pulled
 
 
 def test_cli_find_block_non_numeric_errors_cleanly(tmp_path, capsys):
